@@ -4,19 +4,23 @@ All shapes are shuffle-conscious:
 
 - exact: hash-groupBy on a content digest -- one shuffle, map-side partial
   agg; survivor = min(doc_id) for determinism.
-- MinHash + LSH: signature stage = a zero-shuffle Arrow Karp-Rabin
-  window pass (production default "rolling", operators/rolling.py;
-  JVM flavors: explode -> per-shingle hash -> ONE groupBy with H min()
-  aggregates) -> band keys -> bucket self-join emits candidate pairs
-  -> optional exact Jaccard verify. Band/bucket join is equi-join on the
-  band hash: broadcast-free, AQE handles hot buckets; oversized
-  boilerplate buckets can be capped (max_bucket_size).
-- SimHash: 64-bit signature from token hashes; bit-majority computed with
-  64 JVM-side conditional sums -- no Python in the hot path.
+- MinHash + LSH: signature stage = one zero-shuffle Arrow window pass
+  (``hash_fn="rolling"``: Karp-Rabin window hashes, operators/rolling.py;
+  ``hash_fn="md5"``: md5 window digests, operators/md5win.py) -> band
+  keys -> bucket self-join emits candidate pairs -> optional exact
+  Jaccard verify. Band/bucket join is equi-join on the band hash:
+  broadcast-free, AQE handles hot buckets; oversized boilerplate buckets
+  can be capped (max_bucket_size).
+- SimHash: 64-bit (rolling) or 60-bit (md5) signature from token hashes;
+  the per-bit majority is a numpy pass inside the same Arrow map.
 - n-gram Jaccard: candidate pairs from shared shingles (inverted index),
   Jaccard = |common| / (|a|+|b|-|common|).
 - embedding cosine near-dup: random-hyperplane LSH buckets, exact cosine
   inside buckets.
+
+Every signature operator has two hash flavors: ``"rolling"`` is the
+production default, ``"md5"`` the flavor the DuckDB catalog oracles
+replay bit-identically. Any other ``hash_fn`` raises ``ValueError``.
 
 No reference counterpart (the reference is a spatial engine); these are the
 training-data-pipeline extensions the engine needs at 100 TB.
@@ -68,65 +72,25 @@ def minhash_signatures(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     num_hashes: int = 64, shingle_k: int = 5, hash_fn: str = "rolling",
 ) -> DataFrame:
-    """(id, sig array[num_hashes]) -- min over shingle hashes per seed.
-    One explode + one groupBy with num_hashes min() aggregates (JVM
-    flavors), or a zero-shuffle Arrow window-hash pass ("rolling").
+    """(id, sig array[num_hashes]) -- min over shingle hashes per seed,
+    computed in one zero-shuffle Arrow pass.
 
     hash_fn: "rolling" (no-substring Karp-Rabin window hashes + affine
-    mod-2^64 permutation family -- the scale flavor, see
-    ``_minhash_signatures_rolling``), "xxhash64" (JVM default) or "md5"
-    (the DuckDB-replayable oracle variant): ONE md5 per shingle supplies
-    a 60-bit base hash x (first 15 hex chars), and the seed family is
-    Carter-Wegman universal hashing h_i = (a_i*x + b_i) mod (2^31-1) --
-    textbook-valid for minhash, pure long arithmetic with no overflow
-    under ANSI mode (a_i, x < 2^31), and replayed bit-identically in SQL.
-
-    Round 8: the md5 flavor is computed like the rolling one -- a
-    zero-shuffle Arrow pass (``operators/md5win.py``: numpy window
-    extraction, one ``hashlib.md5`` per globally unique window, vectorized
-    Carter-Wegman mins) replacing explode -> per-shingle md5 expression ->
-    groupBy with ``num_hashes`` min() aggregates. Same values bit-for-bit
-    (oracle-gated); ``hash_fn="md5_jvm"`` keeps the old expression chain
-    for A/B tests. Crucially the JVM flavors' mins aggregate over LONGS:
-    min(string) has no fixed-width agg buffer and silently degrades
-    HashAggregate to SortAggregate (measured 3x slower at sf0.1)."""
+    mod-2^64 permutation family -- the production flavor, see
+    ``_minhash_signatures_rolling``) or "md5" (the DuckDB-replayable
+    oracle flavor): ONE md5 per shingle supplies a 60-bit base hash x
+    (first 15 hex chars), and the seed family is Carter-Wegman universal
+    hashing h_i = (a_i*x + b_i) mod (2^31-1) -- textbook-valid for
+    minhash, exact in 64-bit arithmetic (a_i, x < 2^31), and replayed
+    bit-identically in SQL (``operators/md5win.py``: numpy window
+    extraction, one ``hashlib.md5`` per globally unique window,
+    vectorized Carter-Wegman mins). Docs with no k-char window emit no
+    row."""
     if hash_fn == "rolling":
         return _minhash_signatures_rolling(df, id_col, text_col, num_hashes, shingle_k)
     if hash_fn == "md5":
         return _minhash_signatures_md5(df, id_col, text_col, num_hashes, shingle_k)
-    if hash_fn == "md5_jvm":
-        hash_fn = "md5"
-    sh = df.select(
-        F.col(id_col), F.explode(shingles_col(F.col(text_col), shingle_k)).alias("sh")
-    )
-    if hash_fn == "xxhash64":
-        # hash the STRING once; derive the permutation family by re-hashing
-        # the fixed-width long (8-byte xxhash64 is ~free next to string
-        # hashing; affine mod-2^64 mixing would be cheaper still but ANSI
-        # mode rejects the intentional overflow)
-        sh = sh.withColumn("h0", F.xxhash64("sh"))
-        aggs = [
-            F.min(F.xxhash64(F.col("h0"), F.lit(i))).alias(f"h{i}") for i in range(num_hashes)
-        ]
-    elif hash_fn == "md5":
-        sh = sh.withColumn(
-            "x",
-            F.conv(F.substring(F.md5(F.col("sh").cast("binary")), 1, 15), 16, 10).cast("long")
-            % F.lit(MERSENNE31),
-        )
-        aggs = [
-            F.min(
-                (F.lit(minhash_coeffs(i)[0]) * F.col("x") + F.lit(minhash_coeffs(i)[1]))
-                % F.lit(MERSENNE31)
-            ).alias(f"h{i}")
-            for i in range(num_hashes)
-        ]
-    else:
-        raise ValueError(f"unknown hash_fn {hash_fn!r}")
-    sig = sh.groupBy(id_col).agg(*aggs)
-    return sig.select(
-        id_col, F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("sig")
-    )
+    raise ValueError(f"unknown hash_fn {hash_fn!r}; expected 'rolling' or 'md5'")
 
 
 def _kr_hash_arrays(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
@@ -158,16 +122,11 @@ def _minhash_signatures_rolling(df: DataFrame, id_col: str, text_col: str,
                                 num_hashes: int, shingle_k: int,
                                 bands: int | None = None) -> DataFrame:
     """The no-substring signature stage (``hash_fn="rolling"``): one
-    Karp-Rabin window pass per Arrow batch (operators/rolling.py)
-    replaces explode + hash-per-shingle + groupBy-min ENTIRELY -- a
-    narrow map with ZERO shuffle, where the JVM flavors shuffle every
-    (doc, shingle) row into the aggregate. sig_i = min over the doc's
-    unique window hashes w of A_i*w + B_i mod 2^64 (odd A_i: a
-    bijection on Z_2^64, a textbook permutation family). Same output
-    shape (id, sig array<long>); docs with no window (shorter than k)
-    emit NO row, matching the JVM flavors where empty-shingle docs
-    vanish at the explode. Measured vs the JVM stage at 50k docs in
-    BENCH/NOTES.md.
+    Karp-Rabin window pass per Arrow batch (operators/rolling.py) -- a
+    narrow map with ZERO shuffle and no per-shingle rows. sig_i = min
+    over the doc's unique window hashes w of A_i*w + B_i mod 2^64 (odd
+    A_i: a bijection on Z_2^64, a textbook permutation family). Docs
+    with no window (shorter than k) emit NO row, like the md5 flavor.
 
     Peak memory is bounded regardless of document length: the window x
     seed product matrix is chunked with a running minimum
@@ -190,7 +149,7 @@ def _minhash_signatures_rolling(df: DataFrame, id_col: str, text_col: str,
             flat, off = rolling.batch_window_hash_segments(pdf[text_col], shingle_k)
             nonempty = np.nonzero(np.diff(off) > 0)[0]
             if not nonempty.size:
-                continue  # parity with JVM flavors: no shingles -> no row
+                continue  # no shingles -> no row (same as the md5 flavor)
             sig = rolling.segment_affine_min(flat, off, A, B)[nonempty]
             out = {
                 id_col: pdf[id_col].to_numpy()[nonempty],
@@ -215,14 +174,12 @@ def _minhash_signatures_rolling(df: DataFrame, id_col: str, text_col: str,
 
 def _minhash_signatures_md5(df: DataFrame, id_col: str, text_col: str,
                             num_hashes: int, shingle_k: int) -> DataFrame:
-    """The md5 oracle flavor as ONE zero-shuffle Arrow pass (round 8):
-    distinct k-char window md5 digests per doc (``md5win``), 60-bit base
-    hash x = first 15 hex chars, vectorized Carter-Wegman mins -- value-
-    identical to the old explode -> md5 expression -> groupBy(num_hashes
-    mins) chain, which shuffled every (doc, shingle) row. Docs with no
-    window emit NO row (parity with the explode, where empty-shingle docs
-    vanish). Input is fanned out first (``plans.partitioning.fan_out``):
-    the heavy per-row work must not run on one or two scan splits."""
+    """The md5 oracle flavor as ONE zero-shuffle Arrow pass: distinct
+    k-char window md5 digests per doc (``md5win``), 60-bit base hash x =
+    first 15 hex chars, vectorized Carter-Wegman mins. Docs with no
+    window emit NO row. Input is fanned out first
+    (``plans.partitioning.fan_out``): the heavy per-row work must not
+    run on one or two scan splits."""
     import numpy as np
     import pandas as pd
 
@@ -288,28 +245,17 @@ def minhash_lsh_pairs(
         banded = sig.select(id_col, F.posexplode("bnds").alias("band", "bucket"))
         return _bucket_join_pairs(banded, id_col, max_bucket_size)
     sig = minhash_signatures(df, id_col, text_col, num_hashes, shingle_k, hash_fn)
-    if hash_fn in ("md5", "md5_jvm"):
-        # bucket = the band's hash values joined as a string -- band id is
-        # already a separate join column, so no re-hash is needed (and
-        # DuckDB replays string concatenation exactly)
-        band_arr = F.array(
-            *[
-                F.concat_ws(
-                    "|", *[F.element_at("sig", b * r + i + 1).cast("string") for i in range(r)]
-                )
-                for b in range(bands)
-            ]
-        )
-    else:
-        band_arr = F.array(
-            *[
-                F.xxhash64(
-                    F.concat_ws("|", *[F.element_at("sig", b * r + i + 1).cast("string") for i in range(r)]),
-                    F.lit(b),
-                )
-                for b in range(bands)
-            ]
-        )
+    # md5: bucket = the band's hash values joined as a string -- band id
+    # is already a separate join column, so no re-hash is needed (and
+    # DuckDB replays string concatenation exactly)
+    band_arr = F.array(
+        *[
+            F.concat_ws(
+                "|", *[F.element_at("sig", b * r + i + 1).cast("string") for i in range(r)]
+            )
+            for b in range(bands)
+        ]
+    )
     banded = sig.select(id_col, F.posexplode(band_arr).alias("band", "bucket"))
     return _bucket_join_pairs(banded, id_col, max_bucket_size)
 
@@ -408,7 +354,6 @@ def ngram_jaccard_lsh_pairs(
     shingle_k: int = 5, threshold: float = 0.8,
     num_hashes: int = 64, bands: int = 16, hash_fn: str = "rolling",
     max_bucket_size: int | None = None, verify_on_hashes: bool = False,
-    verify_prefilter: bool = False,
 ) -> DataFrame:
     """Scale path for n-gram Jaccard: MinHash-LSH candidate generation +
     EXACT Jaccard verify on the candidates.
@@ -429,65 +374,36 @@ def ngram_jaccard_lsh_pairs(
     cap affects recall only through pairs with no small-bucket
     collision).
 
-    ``verify_on_hashes`` intersects 64-bit xxhash64 shingle hashes
-    instead of shingle strings: the verify join must carry one shingle
-    array per CANDIDATE through its second merge-join sort, so array
-    bytes -- not pair count -- dominate its shuffle/spill at scale;
-    long arrays halve them (measured at 64x volume). Jaccard stays
-    exact up to within-doc hash collisions (~|S|^2 / 2^64 -- odds of
-    one affected doc per ~10^9 docs), so this is the 100 TB recipe
-    alongside ``max_bucket_size``; default False preserves bit-exact
-    string-set semantics (the oracled flavor).
-
-    ``verify_prefilter`` (round 8, guide §3.2 "reduce the big side before
-    shuffling it"): the exact-verify join only ever reads the shingle
-    sets of docs that appear in a candidate pair, but the old plan built
-    and shuffled one shingle array for EVERY corpus doc through two
-    merge-join sorts. Now the candidate pairs are materialized once
-    (``localCheckpoint`` -- they are near-dup-proportional, the same
-    class the CC operator checkpoints per round), their id set
-    semi-join-prunes the corpus BEFORE any shingle array is built, and
-    only candidate docs' arrays enter the verify joins. Candidate
-    volume, not corpus volume, then drives the verify stage; jaccard
-    values are unchanged (each doc's full shingle set is still computed
-    independently). Default OFF: at bench scale the eager checkpoint +
-    prune joins cost MORE than corpus-wide array building saves
-    (measured +1.2 s at sf0.1); opt in at corpus scale, where shuffling
-    every doc's shingle arrays through two merge-join sorts is the wall
-    (the same measured tradeoff class as ``max_bucket_size``)."""
+    ``verify_on_hashes`` intersects the 64-bit Karp-Rabin window hashes
+    the rolling signatures minimized over instead of shingle strings
+    (no substring materializes anywhere): the verify join must carry one
+    shingle array per CANDIDATE through its second merge-join sort, so
+    array bytes -- not pair count -- dominate its shuffle/spill at
+    scale; long arrays halve them (measured at 64x volume). Jaccard
+    stays exact up to within-doc hash collisions (~|S|^2 / 2^64 -- odds
+    of one affected doc per ~10^9 docs), so this is the 100 TB recipe
+    alongside ``max_bucket_size``. It needs ``hash_fn="rolling"``; the
+    md5 oracle flavor verifies on the shingle strings (default False:
+    bit-exact string-set semantics)."""
+    if verify_on_hashes and hash_fn != "rolling":
+        raise ValueError("verify_on_hashes intersects rolling window hashes; "
+                         "it needs hash_fn='rolling'")
     cands = minhash_lsh_pairs(df, id_col, text_col, num_hashes, bands, shingle_k,
                               hash_fn, max_bucket_size)
-    base = df
-    if verify_prefilter:
-        # eager checkpoint: `cands` feeds the id prune AND the verify
-        # join; without it the whole signature+banding subtree would be
-        # recomputed per consumer. Post-checkpoint size stats are ACTUAL,
-        # so Catalyst broadcasts the id set only when it truly is small.
-        cands = cands.localCheckpoint(eager=True)
-        ids = (
-            cands.select(F.col("a").alias(id_col))
-            .union(cands.select(F.col("b").alias(id_col)))
-            .distinct()
-        )
-        base = df.join(ids, id_col, "left_semi")
-    if verify_on_hashes and hash_fn == "rolling":
-        # the fully substring-free path: verify sets are the SAME
-        # Karp-Rabin window hashes the signatures minimized over
-        sh = _kr_hash_arrays(base, id_col, text_col, shingle_k)
+    if verify_on_hashes:
+        sh = _kr_hash_arrays(df, id_col, text_col, shingle_k)
     else:
         from osm_pbf_convert_spark.plans.partitioning import fan_out
 
-        shs_expr = shingles_col(F.col(text_col), shingle_k)
-        if verify_on_hashes:
-            shs_expr = F.transform(shs_expr, lambda x: F.xxhash64(x))
         # fan out BEFORE the substring materialization: shingles_col is
         # the per-row-heavy step here (guide §2.5 input skew)
-        sh = fan_out(base, key=id_col).select(F.col(id_col), shs_expr.alias("shs"))
-    # merge hints: the shingle-ARRAY side is corpus-sized (candidate-sized
-    # under verify_prefilter, still unbounded); its columnar scan estimate
-    # undershoots the exploded row format by ~100x, so the auto-broadcast
-    # threshold would hash-build it on every executor (measured exit-52
-    # OOM at 16x bench volume, 8 GB executors)
+        sh = fan_out(df, key=id_col).select(
+            F.col(id_col), shingles_col(F.col(text_col), shingle_k).alias("shs")
+        )
+    # merge hints: the shingle-ARRAY side is corpus-sized; its columnar
+    # scan estimate undershoots the exploded row format by ~100x, so the
+    # auto-broadcast threshold would hash-build it on every executor
+    # (measured exit-52 OOM at 16x bench volume, 8 GB executors)
     return (
         cands
         .join(sh.select(F.col(id_col).alias("a"), F.col("shs").alias("sha")).hint("merge"), "a")
@@ -507,13 +423,10 @@ def _simhash_signatures_rolling(df: DataFrame, id_col: str, text_col: str) -> Da
     pass per batch computes every token occurrence's Karp-Rabin Horner
     hash and the per-doc 64-bit majority (``rolling.batch_token_hash_
     segments`` + ``segment_bit_majority``) -- ZERO shuffle and zero
-    per-token rows, where the JVM flavors explode every (doc, token)
-    occurrence through a 64-conditional-sum aggregate (the biggest
-    remaining dedup wall at the 64x rehearsal: 56.9 s / 6.8 GB spill).
-    Tokens split on the ASCII ``\\s`` class exactly like the JVM
-    ``split(lower(text), '\\s+')``; majority ties -> 0, zero-token docs
-    -> 0, both matching the JVM flavors. Deterministic integer math mod
-    2^64 -- replayed by the DuckDB ``simhash_rolling`` oracle entry."""
+    per-token rows. Tokens split on the ASCII ``\\s`` class exactly like
+    Java's ``split(lower(text), '\\s+')``; majority ties -> 0, zero-token
+    docs -> 0. Deterministic integer math mod 2^64 -- replayed by the
+    DuckDB ``simhash_rolling`` oracle entry."""
     import numpy as np
     import pandas as pd
 
@@ -536,14 +449,12 @@ def _simhash_signatures_rolling(df: DataFrame, id_col: str, text_col: str) -> Da
 
 def _simhash_signatures_md5(df: DataFrame, id_col: str, text_col: str,
                             bits: int) -> DataFrame:
-    """The md5 oracle SimHash as ONE zero-shuffle Arrow pass (round 8):
-    60-bit md5 token hashes per occurrence (``md5win``, one real md5 per
-    distinct token per batch) + the shared numpy bit-majority
-    (``rolling.segment_bit_majority``) -- value-identical to the old
-    explode -> md5 expression -> 60-conditional-SUM aggregate ->
-    empties anti-join union, including token-less docs getting 0 (the
+    """The md5 oracle SimHash as ONE zero-shuffle Arrow pass: 60-bit md5
+    token hashes per occurrence (``md5win``, one real md5 per distinct
+    token per batch) + the shared numpy bit-majority
+    (``rolling.segment_bit_majority``); token-less docs get 0 (the
     majority of an empty segment) and ties -> 0. The signature is masked
-    to the low ``bits`` bits, matching the JVM assemble loop's range."""
+    to the low ``bits`` bits."""
     import numpy as np
     import pandas as pd
 
@@ -569,138 +480,29 @@ def _simhash_signatures_md5(df: DataFrame, id_col: str, text_col: str,
 
 def simhash_signatures(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    bits: int = 64, token_pattern: str = r"\s+", hash_fn: str = "rolling",
-    agg_mode: str = "bits",
+    bits: int = 64, hash_fn: str = "rolling",
 ) -> DataFrame:
-    """(id, simhash long) via explode + ONE groupBy with `bits` conditional
-    sums -- each token is hashed once (simhash_col as a single Column
-    expression re-evaluates the token array per bit; use this for bulk).
+    """(id, simhash long): per-bit majority over the token hashes of each
+    doc, tokens = ``lower(text)`` split on Java's ``\\s+``, in one
+    zero-shuffle Arrow pass (no per-token rows).
 
-    hash_fn: "rolling" (production default: zero-shuffle Arrow pass, no
-    per-token rows -- see ``_simhash_signatures_rolling``; requires
-    bits=64 and the default token_pattern), "xxhash64" (JVM flavor,
-    64-bit token hashes) or "md5" (token hash = first 15 hex chars of
-    md5 as a 60-bit long, so bits must be <= 60; DuckDB replays it via
-    CAST('0x'||substr(md5(tok),1,15) AS BIGINT) -- a correctness-oracle
-    variant; the sign bit stays clear, so signed and unsigned shifts
-    agree across engines).
-
-    agg_mode: "bits" aggregates one conditional SUM per bit (`bits`
-    aggregate columns); "packed" packs 4 x 15-bit set-bit counters per
-    long and aggregates bits/4 packed SUMs + COUNT -- 4x fewer aggregate
-    expressions for the codegen stage, exact same majority semantics
-    (sum(+-1) > 0  <=>  2*count_set > n_tokens). 15-bit fields keep the
-    packed SUM below 2^63 under ANSI mode and cap docs at 32767 tokens;
-    longer docs raise at runtime (the guard is exact, not probabilistic).
-    Measured at sf0.1 before choosing the default -- see BENCH/NOTES.md."""
+    hash_fn: "rolling" (production default, 64-bit Karp-Rabin token
+    hashes -- see ``_simhash_signatures_rolling``; requires bits=64) or
+    "md5" (token hash = first 15 hex chars of md5 as a 60-bit long, so
+    bits must be <= 60; DuckDB replays it via
+    CAST('0x'||substr(md5(tok),1,15) AS BIGINT) -- the correctness-oracle
+    flavor; the sign bit stays clear, so signed and unsigned shifts agree
+    across engines)."""
     if hash_fn == "rolling":
-        if bits != 64 or token_pattern != r"\s+":
-            raise ValueError("rolling simhash is 64-bit over \\s+ tokens; "
-                             "pass hash_fn='xxhash64' for other shapes")
+        if bits != 64:
+            raise ValueError("rolling simhash is 64-bit; pass hash_fn='md5' "
+                             "for bits <= 60")
         return _simhash_signatures_rolling(df, id_col, text_col)
-    if hash_fn in ("md5", "md5_jvm") and bits > 60:
-        raise ValueError("md5 variant carries 60 hash bits; pass bits<=60")
-    if hash_fn == "md5" and token_pattern == r"\s+":
-        # round 8: same values from one Arrow pass (md5_jvm = old chain)
+    if hash_fn == "md5":
+        if bits > 60:
+            raise ValueError("md5 variant carries 60 hash bits; pass bits<=60")
         return _simhash_signatures_md5(df, id_col, text_col, bits)
-    if hash_fn == "md5_jvm":
-        hash_fn = "md5"
-    tok = df.select(
-        F.col(id_col),
-        F.explode(
-            F.filter(F.split(F.lower(F.col(text_col)), token_pattern), lambda t: t != "")
-        ).alias("tok"),
-    )
-    if hash_fn == "xxhash64":
-        tok = tok.withColumn("h", F.xxhash64("tok"))
-    elif hash_fn == "md5":
-        tok = tok.withColumn(
-            "h",
-            F.conv(F.substring(F.md5(F.col("tok").cast("binary")), 1, 15), 16, 10).cast("long"),
-        )
-    else:
-        raise ValueError(f"unknown hash_fn {hash_fn!r}")
-    if agg_mode == "bits":
-        aggs = [
-            F.sum(
-                F.when(F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-            ).alias(f"b{i}")
-            for i in range(bits)
-        ]
-        sums = tok.groupBy(id_col).agg(*aggs)
-        acc = None
-        for i in range(bits):
-            bit = F.when(F.col(f"b{i}") > 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(
-                F.lit(0).cast("long")
-            )
-            acc = bit if acc is None else acc.bitwiseOR(bit)
-        sig = sums.select(F.col(id_col), acc.alias("simhash"))
-    elif agg_mode == "packed":
-        # word w packs set-bit counters for bits (4w..4w+3) into 15-bit
-        # fields: per-token contribution = bit<<{0,15,30,45}; the packed
-        # SUM peaks at 32767*(2^45+2^30+2^15+1) < 2^63 (no ANSI overflow)
-        # and fields never carry into each other while n_tokens < 2^15
-        # (enforced below)
-        n_words = (bits + 3) // 4
-        def packed_word(w):
-            parts = []
-            for f_ in range(min(4, bits - 4 * w)):
-                i = 4 * w + f_
-                parts.append(
-                    F.shiftleft(
-                        F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1).cast("long")), 15 * f_
-                    )
-                )
-            acc = parts[0]
-            for p in parts[1:]:
-                acc = acc + p
-            return acc
-
-        aggs = [F.sum(packed_word(w)).alias(f"w{w}") for w in range(n_words)]
-        sums = tok.groupBy(id_col).agg(*aggs, F.count(F.lit(1)).alias("n_tok"))
-        # exact overflow guard: 15-bit counter fields cap docs at 32767
-        # tokens (raise_error keeps the check inside the same job)
-        guard = F.when(
-            F.col("n_tok") >= F.lit(1 << 15),
-            F.raise_error(F.lit("simhash packed: doc exceeds 32767 tokens; use agg_mode='bits'")),
-        ).otherwise(F.col("n_tok"))
-        sums = sums.withColumn("n_tok", guard)
-        acc = None
-        for i in range(bits):
-            w, f_ = divmod(i, 4)
-            cnt = F.shiftright(F.col(f"w{w}"), 15 * f_).bitwiseAND(F.lit(0x7FFF).cast("long"))
-            bit = F.when(
-                cnt * 2 > F.col("n_tok"), F.shiftleft(F.lit(1).cast("long"), i)
-            ).otherwise(F.lit(0).cast("long"))
-            acc = bit if acc is None else acc.bitwiseOR(bit)
-        sig = sums.select(F.col(id_col), acc.alias("simhash"))
-    else:
-        raise ValueError(f"unknown agg_mode {agg_mode!r}")
-    # docs with zero tokens never reach the groupBy: give them simhash 0
-    # (matches simhash_col, where the empty aggregate yields all bit_sum=0)
-    # merge hint: sig is the corpus-sized signature relation (derived ->
-    # underestimated -> auto-broadcast risk, same class as exact_dedup)
-    empties = df.join(sig.select(id_col).hint("merge"), id_col, "left_anti").select(
-        F.col(id_col), F.lit(0).cast("long").alias("simhash")
-    )
-    return sig.unionByName(empties)
-
-
-def simhash_col(text, bits: int = 64, token_pattern: str = r"\s+"):
-    """64-bit SimHash as a LongType column, fully JVM-side:
-    tokens -> xxhash64 -> per-bit majority via conditional sums."""
-    tokens = F.filter(F.split(F.lower(text), token_pattern), lambda t: t != "")
-    hashes = F.transform(tokens, lambda t: F.xxhash64(t))
-    acc = None
-    for i in range(bits):
-        bit_sum = F.aggregate(
-            hashes,
-            F.lit(0),
-            lambda a, h: a + F.when(F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1),
-        )
-        bit = F.when(bit_sum > 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(F.lit(0).cast("long"))
-        acc = bit if acc is None else acc.bitwiseOR(bit)
-    return acc
+    raise ValueError(f"unknown hash_fn {hash_fn!r}; expected 'rolling' or 'md5'")
 
 
 def simhash_hamming_pairs(

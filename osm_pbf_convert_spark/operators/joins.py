@@ -170,58 +170,6 @@ def assemble_relations(
     return assembled
 
 
-def assemble_relations_recursive(
-    rels: DataFrame,
-    nodes: DataFrame,
-    ways_resolved: DataFrame,
-    max_depth: int = 3,
-) -> DataFrame:
-    """Iterative super-relation assembly -- the recursion the reference
-    DEFERS ("Relations will be assembled recursively" TODO,
-    ``RelationsProcessor.cs:250``). Goes beyond the reference: relation-type
-    members fold their child relation's bbox into the parent, iterated to a
-    bounded depth (OSM super-relation nesting is shallow; max_depth bounds
-    the driver loop; cycles terminate because bboxes grow monotonically and
-    the loop is depth-limited).
-
-    Each iteration is one broadcast-or-shuffle join of the (small) bbox
-    table against relation-type members -- the raw member table is scanned
-    once and reused.
-    """
-    base = assemble_relations(rels, nodes, ways_resolved)
-    rel_members = explode_relation_members(rels).filter(F.col("member_type") == 2)
-    bbox = base.select("rel_id", "min_ilat", "max_ilat", "min_ilon", "max_ilon")
-    for _ in range(max_depth):
-        child = bbox.select(
-            F.col("rel_id").alias("ref"),
-            F.col("min_ilat").alias("c_min_ilat"),
-            F.col("max_ilat").alias("c_max_ilat"),
-            F.col("min_ilon").alias("c_min_ilon"),
-            F.col("max_ilon").alias("c_max_ilon"),
-        )
-        contrib = (
-            rel_members.join(child, "ref", "inner")
-            .groupBy("rel_id")
-            .agg(
-                F.min("c_min_ilat").alias("m_min_ilat"),
-                F.max("c_max_ilat").alias("m_max_ilat"),
-                F.min("c_min_ilon").alias("m_min_ilon"),
-                F.max("c_max_ilon").alias("m_max_ilon"),
-            )
-        )
-        bbox = (
-            bbox.join(contrib, "rel_id", "left")
-            .select(
-                "rel_id",
-                F.least("min_ilat", "m_min_ilat").alias("min_ilat"),
-                F.greatest("max_ilat", "m_max_ilat").alias("max_ilat"),
-                F.least("min_ilon", "m_min_ilon").alias("min_ilon"),
-                F.greatest("max_ilon", "m_max_ilon").alias("max_ilon"),
-            )
-        )
-    return base.drop("min_ilat", "max_ilat", "min_ilon", "max_ilon").join(bbox, "rel_id")
-
-
 def join_pages_geo(pages: DataFrame, nodes: DataFrame, how: str = "inner") -> DataFrame:
     """Join geocoded records back to the pages table by url (north rule:
     the `text` column passes through byte-identical -- it is never touched

@@ -1,12 +1,9 @@
 """Batched md5 shingle/token hashing for the DuckDB-replayable md5 oracle
 flavors (minhash/fingerprint/simhash ``hash_fn="md5"``).
 
-Round-8 optimization (guide §4.2): the JVM md5 flavors materialized every
-k-char substring (``shingles_col``), md5-hashed it with per-row expression
-evaluation, and shuffled every (doc, shingle) row into a wide aggregate.
-This module computes the SAME md5 values batch-at-a-time with numpy window
-extraction + one ``hashlib.md5`` call per *globally unique* window -- the
-whole signature stage becomes a zero-shuffle Arrow map, mirroring the
+Computes md5 shingle and token hashes batch-at-a-time with numpy window
+extraction + one ``hashlib.md5`` call per *globally unique* window, so
+every md5 signature stage is a zero-shuffle Arrow map, mirroring the
 rolling (Karp-Rabin) production path in ``operators/rolling.py``.
 
 Exactness contract (the md5 oracle pins hash VALUES, not just equality
@@ -16,15 +13,14 @@ classes):
   DuckDB ``substr`` are character-based).  For pure-ASCII documents byte
   windows equal character windows and everything vectorizes; documents
   containing any non-ASCII character take an exact per-document Python
-  fallback (substring + md5 of the UTF-8 encoding -- bit-identical to the
-  JVM expression chain).  ASCII-ness is detected per document
-  (byte length == char length).
+  fallback (substring + md5 of the UTF-8 encoding).  ASCII-ness is
+  detected per document (byte length == char length).
 - md5 is the real ``hashlib.md5`` (OpenSSL) over the window's UTF-8
   bytes -- identical digests to Spark's ``md5(cast(sh as binary))`` and
   DuckDB's ``md5(sh)``.
-- duplicated windows are hashed once: per-batch global dedupe via uint64
-  keys (k <= 8 bytes packs injectively; NUL bytes are fine because the
-  width is fixed).
+- duplicated windows are hashed once: per-batch global dedupe keyed on
+  each window's k raw bytes (a fixed-width void view, so any k works and
+  NUL bytes are fine).
 
 Shared by ``dedup.minhash_signatures(hash_fn="md5")``,
 ``text.fingerprint(hash_fn="md5")`` and
@@ -54,12 +50,8 @@ def _md5_unique_windows(wins: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarra
     unique windows, inverse index (n,)). One hashlib.md5 per unique window
     (OpenSSL beats a vectorized-numpy md5 ~2.5x on short messages --
     measured in BENCH/NOTES.md r08)."""
-    if k > 8:
-        raise ValueError("uint64 window keys need k <= 8 bytes")
-    key = np.zeros(len(wins), dtype=np.uint64)
-    for j in range(k):
-        key = (key << np.uint64(8)) | wins[:, j].astype(np.uint64)
-    uniq, first_idx, inv = np.unique(key, return_index=True, return_inverse=True)
+    key = np.ascontiguousarray(wins).view(np.dtype((np.void, k))).reshape(-1)
+    _, first_idx, inv = np.unique(key, return_index=True, return_inverse=True)
     ub = wins[first_idx].tobytes()
     md5 = hashlib.md5
     digs = b"".join(md5(ub[i: i + k]).digest() for i in range(0, len(ub), k))

@@ -167,8 +167,8 @@ def batch_token_spans(texts):
     offsets, and the [tok_a, tok_b) byte span of every
     ASCII-whitespace-separated token OCCURRENCE in document order.
     ``offsets`` is the per-row token-count prefix sum. The delimiter
-    class [ \\t\\n\\x0b\\f\\r] is exactly Java's ``\\s`` (the simhash JVM
-    flavors split on ``\\s+``) and RE2's ``\\s`` (the DuckDB oracles'
+    class [ \\t\\n\\x0b\\f\\r] is exactly Java's ``\\s`` (as in
+    ``split(lower(text), '\\s+')``) and RE2's ``\\s`` (the DuckDB oracles'
     ``regexp_split_to_array``); byte-level splitting equals char-level
     splitting for ANY text because ASCII whitespace never occurs inside
     a multi-byte UTF-8 sequence. Shared by the Karp-Rabin token hasher

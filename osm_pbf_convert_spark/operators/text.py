@@ -2,12 +2,13 @@
 scoring, language-ID heuristic, document fingerprinting.
 
 Everything is built-in ``pyspark.sql.functions`` (JVM, codegen) -- no
-Python in the hot path, with ONE deliberate exception: the
-``fingerprint(hash_fn="rolling")`` flavor is an Arrow-batched numpy
-rolling hash, taken because round-4 profiling showed the JVM flavors
-spend ~90% of their time materializing substrings (measured win in
-BENCH/NOTES.md). These are training-data-pipeline extensions (no
-reference counterpart).
+Python in the hot path, with ONE deliberate exception: ``fingerprint``
+is an Arrow-batched numpy pass in both of its flavors ("rolling", the
+production Karp-Rabin window hash, and "md5", the DuckDB-replayable
+oracle), taken because round-4 profiling showed the substring-building
+expression chains spend ~90% of their time materializing substrings
+(measured win in BENCH/NOTES.md). These are training-data-pipeline
+extensions (no reference counterpart).
 """
 
 from __future__ import annotations
@@ -108,44 +109,25 @@ def fingerprint(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     hash_fn flavors (equality contract identical, values differ by hash
     family):
     - "rolling" (production default): Arrow-batched numpy Karp-Rabin --
-      window hashes without substring materialization. 30x faster than
-      the JVM flavors at 50k docs (47.2 s -> 1.56 s median, see
-      BENCH/NOTES.md): round-4 profiling showed ~90% of the JVM cost is
-      `shingles_col` building every k-char substring before hashing.
-    - "xxhash64": substrings + fastest JVM hash, zero Python anywhere.
+      window hashes without substring materialization, a long
+      fingerprint (see ``_fingerprint_rolling``).
     - "md5": hex-string fingerprint, bit-identical in DuckDB -- the
       correctness-oracle flavor (the catalog query pins it)."""
-    from osm_pbf_convert_spark.operators.dedup import shingles_col
-
-    sh = shingles_col(F.col(text_col), shingle_k)
-    if hash_fn == "xxhash64":
-        hashes = F.transform(sh, lambda s: F.xxhash64(s))
-        bottom = F.slice(F.sort_array(hashes), 1, bottom_k)
-        fp = F.xxhash64(F.concat_ws(",", F.transform(bottom, lambda h: h.cast("string"))))
-    elif hash_fn == "md5":
-        # round 8: one Arrow pass computes the identical md5 fingerprints
-        # (md5win digests are already sorted per doc = sort_array of the
-        # hex strings); "md5_jvm" keeps the old expression chain
-        return _fingerprint_md5(df, id_col, text_col, shingle_k, bottom_k)
-    elif hash_fn == "md5_jvm":
-        hashes = F.transform(sh, lambda s: F.md5(s.cast("binary")))
-        bottom = F.slice(F.sort_array(hashes), 1, bottom_k)
-        fp = F.md5(F.concat_ws(",", bottom).cast("binary"))
-    elif hash_fn == "rolling":
+    if hash_fn == "rolling":
         return _fingerprint_rolling(df, id_col, text_col, shingle_k, bottom_k)
-    else:
-        raise ValueError(f"unknown hash_fn {hash_fn!r}")
-    return df.withColumn("fingerprint", fp)
+    if hash_fn == "md5":
+        return _fingerprint_md5(df, id_col, text_col, shingle_k, bottom_k)
+    raise ValueError(f"unknown hash_fn {hash_fn!r}; expected 'rolling' or 'md5'")
 
 
 def _fingerprint_md5(df: DataFrame, id_col: str, text_col: str,
                      shingle_k: int, bottom_k: int) -> DataFrame:
-    """The md5 bottom-k fingerprint as ONE zero-shuffle Arrow pass
-    (round 8): per-doc distinct k-char window md5 digests from
+    """The md5 bottom-k fingerprint as ONE zero-shuffle Arrow pass:
+    per-doc distinct k-char window md5 digests from
     ``operators/md5win.py`` (already sorted by digest bytes, which IS the
     lexicographic order of their hex strings), take the first
-    ``bottom_k``, join the hex forms with ',', md5 again -- byte-identical
-    to the old ``sort_array(transform(shingles, md5))`` expression chain
+    ``bottom_k``, join the hex forms with ',', md5 again -- the value
+    DuckDB's ``md5(array_to_string(list_sort(...)[1:k], ','))`` gives,
     incl. the empty-doc case (fingerprint = md5(''))."""
     import hashlib
 
@@ -188,20 +170,19 @@ def _fingerprint_rolling(df: DataFrame, id_col: str, text_col: str,
     """The true ROLLING-hash fingerprint: Arrow batches in, one numpy
     polynomial pass per batch, zero substring materialization.
 
-    Round-4 profiling pinned ~90% of the JVM flavors' cost on
-    materializing every k-char substring (`shingles_col`) before
-    hashing; this flavor never builds a substring. All of a batch's
+    Round-4 profiling pinned ~90% of a substring-based fingerprint's
+    cost on materializing every k-char substring (`shingles_col`)
+    before hashing; this flavor never builds a substring. All of a batch's
     lower-cased texts are concatenated into ONE uint8 buffer, every
     k-byte window hash is computed as a Karp-Rabin polynomial with
     8 vectorized shifted multiply-adds (mod 2^64 by natural uint64
     wrap), windows crossing document boundaries are masked out, and
     per-doc bottom-k of the UNIQUE window hashes is combined into one
-    long. Semantics match the JVM flavors (distinct shingles ->
-    bottom-k sketch -> combine); values differ by hash family, exactly
-    like the documented xxhash64-vs-md5 split, so equal-text docs get
-    equal fingerprints and the md5 catalog flavor stays the oracle.
+    long. Semantics match the md5 flavor (distinct shingles -> bottom-k
+    sketch -> combine); values differ by hash family, so equal-text docs
+    get equal fingerprints and the md5 catalog flavor stays the oracle.
 
-    Byte-level windows over UTF-8 (the JVM flavors window over
+    Byte-level windows over UTF-8 (the md5 flavor windows over
     CHARACTERS) shift k-gram boundaries only on multi-byte text --
     fingerprint equality, the operator's contract, is unaffected.
 

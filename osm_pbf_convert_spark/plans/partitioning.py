@@ -3,20 +3,16 @@ adaptive KD-tree (`SpatialIndex.cs:25-191`) + external Morton sort
 (`NodesIndexBlobProcessor.cs:36-241`) + spatial block store
 (`SpatialBlock.cs:48-537`).
 
-- ``spatial_sort`` / ``spatial_repartition``: ``repartitionByRange`` on the
-  Morton cell. Spark's range partitioner samples the key distribution --
-  exactly the reference's quickselect-median splits, done by the shuffle
-  machinery with spill (the reference's 10M-key runs + 4-way cascaded
-  merges are an external merge sort, which IS Spark's shuffle sort).
-- ``salt_hot_cells``: explicit skew handling for web-scale inputs where a
-  few cells (cities) dominate (SURVEY.md §4 lists this as the one physical
-  decision Catalyst cannot make alone). Hot cells get a salt column so a
-  downstream repartition/groupBy spreads them across ``salt_buckets``
-  reducers; AQE's skew-join split covers the join side.
 - ``write_spatial_table``: partitioned-Parquet leaf layout keyed by a
-  zoom-z tile prefix -- the analog of KD leaf files, with Parquet
-  row-group min/max stats standing in for the reference's 4KB sparse
-  block indexes (`NodesIndex.cs:113-133`).
+  zoom-z tile prefix -- the analog of KD leaf files (a hash shuffle on
+  the tile plus a per-partition sort on the Morton cell, spilled by
+  Spark's shuffle machinery the way the reference's external merge sort
+  spills its runs), with Parquet row-group min/max stats standing in
+  for the reference's 4KB sparse block indexes (`NodesIndex.cs:113-133`).
+- ``write_bucketed_nodes``: the node table bucketed and sorted on the
+  join key, the durable analog of the reference's clustered node store.
+- ``fan_out``: scale-adaptive repartition of small inputs ahead of
+  per-row-heavy stages.
 """
 
 from __future__ import annotations
@@ -74,56 +70,6 @@ def fan_out(df: DataFrame, key: str | None = None) -> DataFrame:
 
 
 _FAN_OUT_MEMO: dict = {}
-
-
-def spatial_sort(df: DataFrame) -> DataFrame:
-    """Globally order by Morton cell (reference entry point 2: nodes-index).
-    Range shuffle + per-partition sort; spill handled by Spark."""
-    d = df if "cell" in df.columns else with_cell(df)
-    return d.sort("cell")
-
-
-def spatial_repartition(df: DataFrame, num_partitions: int) -> DataFrame:
-    """Range-partition by cell WITHOUT a per-partition sort -- the KD-tree
-    leaf assignment. Neighboring cells land in the same partition (Z-order
-    locality), so downstream per-partition spatial ops stay local."""
-    d = df if "cell" in df.columns else with_cell(df)
-    return d.repartitionByRange(num_partitions, "cell")
-
-
-def hot_cells(df: DataFrame, z: int, threshold: int) -> DataFrame:
-    """Tiles (at zoom z) whose row count exceeds threshold -- the skew set.
-    One cheap aggregate; at 100 TB run it on a sample or reuse the tile
-    pyramid base."""
-    d = df if "cell" in df.columns else with_cell(df)
-    return (
-        d.groupBy(tile_col(F.col("cell"), z).alias("tile"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .filter(F.col("cnt") > threshold)
-        .select("tile")
-    )
-
-
-def salt_hot_cells(
-    df: DataFrame, z: int, threshold: int, salt_buckets: int = 16
-) -> DataFrame:
-    """Add ``salt`` (0 for cold rows, hash-spread for rows in hot tiles).
-
-    Downstream: ``repartition("tile", "salt")`` or group on (tile, salt)
-    with a second cold-side merge -- a hot city tile fans out over
-    ``salt_buckets`` reducers instead of one straggler.
-    """
-    d = df if "cell" in df.columns else with_cell(df)
-    d = d.withColumn("tile", tile_col(F.col("cell"), z))
-    hot = hot_cells(df, z, threshold).withColumn("is_hot", F.lit(True))
-    joined = d.join(F.broadcast(hot), "tile", "left")
-    return joined.withColumn(
-        "salt",
-        F.when(
-            F.col("is_hot").isNotNull(),
-            F.pmod(F.xxhash64(F.col("cell"), F.lit(7)), F.lit(salt_buckets)),
-        ).otherwise(F.lit(0)).cast("int"),
-    ).drop("is_hot")
 
 
 def write_spatial_table(df: DataFrame, path: str, z: int = 6) -> None:

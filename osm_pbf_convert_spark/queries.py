@@ -998,7 +998,7 @@ SELECT CAST(1 AS BIGINT), 'building', COUNT(DISTINCT l_orderkey) FROM lineitem W
 
 # ---------------------------------------------------------------------------
 # dedup family -- md5-variant catalog entries (same banding/verify logic as
-# the xxhash64 production defaults; the hash is swapped for one DuckDB can
+# the rolling production defaults; the hash is swapped for one DuckDB can
 # replay bit-identically, mirroring the fingerprint md5 pattern)
 # ---------------------------------------------------------------------------
 
@@ -1762,8 +1762,8 @@ FROM r
 
 
 def q_fingerprint(spark, sf_dir):
-    # md5 variant: bit-identical in DuckDB (xxhash64 -- the production
-    # default -- has no DuckDB counterpart, so the oracle runs this one)
+    # md5 variant: bit-identical in DuckDB via its md5(); the production
+    # rolling flavor has its own entry (fingerprint_rolling)
     return text.fingerprint(_t(spark, sf_dir, "documents"), hash_fn="md5").select(
         "doc_id", "fingerprint"
     )
@@ -2116,9 +2116,11 @@ WHERE ilat >= -477218588 AND ilat < 0 AND ilon >= -1431655764 AND ilon < -715827
 #        simhash_groups      (pin flavor; simhash_hamming_pairs/_rolling in cap)
 #        pbf_roundtrip_nodes (same oracle as pbf_file_nodes; byte-parity
 #                             roundtrip is pytest-golden-checked)
-#      Each tail entry stays in the catalog, keeps its ORACLES row, and is
-#      re-verified every round by tools/selfcheck.py (run in CI/pytest via
-#      tests) even when the driver cap skips it.
+#      Each tail entry stays in the catalog and keeps its ORACLES row. The
+#      md5 dedup pins (minhash_pairs, simhash_groups, fingerprint,
+#      ngram_jaccard_lsh) are re-verified on every pytest run by
+#      tests/test_catalog_policy.py::TestMd5OracleTail (tools/selfcheck
+#      compare against DuckDB), though they sit past the 50-entry cap.
 #   4. If the catalog grows, rotate another stable pin flavor into the tail
 #      rather than letting a new or never-checked entry fall past the cap.
 QUERIES = {

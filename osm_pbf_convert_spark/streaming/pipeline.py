@@ -205,12 +205,20 @@ def merge_finest_batch(
     Idempotent under foreachBatch's at-least-once retries: update-mode
     rows are cumulative counts keyed by tile, so re-merging the same
     batch produces the identical table.
+
+    Raises ``ValueError`` when ``finest_path`` holds the incremental
+    ``pz=`` layout: merging over it would drop that state.
     """
-    if not updated.take(1):
-        return
     fs, _ = _hadoop_fs(sess, finest_path)
     jvm = sess.sparkContext._jvm
     hpath = jvm.org.apache.hadoop.fs.Path
+    if _pz_dirs(fs, jvm, finest_path):
+        raise ValueError(
+            f"tile merge: {finest_path} holds the incremental pz= layout; "
+            "use merge_finest_batch_incremental on it"
+        )
+    if not updated.take(1):
+        return
     finest_ok = _committed(fs, sess, finest_path)
     if not finest_ok and _committed(fs, sess, tmp_path):
         # crashed mid-swap: tmp IS the committed latest state -- finish
@@ -338,15 +346,22 @@ def merge_finest_batch_incremental(
     ``_recover_partition_swaps`` completes pending renames before the
     retry re-merges. Per-tile idempotence (update-mode rows are
     CUMULATIVE counts) makes re-merging on a partially swapped table
-    yield the identical result. Do not mix with the full-table layout on
-    the same ``out`` dir.
+    yield the identical result. Raises ``ValueError`` when
+    ``finest_path`` holds the full-table layout (a root ``_SUCCESS``):
+    the partition swap would leave that table's files beside the new
+    ``pz=`` dirs.
     """
-    if not updated.take(1):
-        return
-    eff_anchor = min(max(anchor_z, min_z), max_z)
     fs, _ = _hadoop_fs(sess, finest_path)
     jvm = sess.sparkContext._jvm
     hpath = jvm.org.apache.hadoop.fs.Path
+    if _committed(fs, sess, finest_path):
+        raise ValueError(
+            f"tile merge: {finest_path} holds the full-table layout; "
+            "use merge_finest_batch on it"
+        )
+    if not updated.take(1):
+        return
+    eff_anchor = min(max(anchor_z, min_z), max_z)
     finest_tmp = f"{finest_path}__tmp"
     tiles_tmp = f"{tiles_path}__tmp"
     finest_trash = f"{finest_path}__trash"

@@ -9,6 +9,8 @@ the wrong place fails CI instead of failing the evidence chain.
 
 from __future__ import annotations
 
+import pytest
+
 from osm_pbf_convert_spark.queries import ORACLES, QUERIES
 
 DRIVER_CAP = 50
@@ -70,3 +72,26 @@ def test_never_driver_checked_entries_lead():
         "multimodal_features",
     ):
         assert n in first, f"{n} must stay inside the driver correctness cap"
+
+
+@pytest.mark.spark
+class TestMd5OracleTail:
+    """The md5 dedup pins sit past the 50-entry cap, and they are the only
+    DuckDB gate on md5 hash values: run each query and its oracle SQL
+    here and require the selfcheck comparison to pass."""
+
+    MD5_TAIL = ("minhash_pairs", "simhash_groups", "fingerprint", "ngram_jaccard_lsh")
+
+    def test_md5_tail_oracles_match_duckdb(self, spark, sf_dir):
+        import duckdb
+
+        from tools.selfcheck import TABLES, compare
+
+        con = duckdb.connect()
+        for t in TABLES:
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+        for name in self.MD5_TAIL:
+            got = QUERIES[name](spark, sf_dir).toPandas()
+            want = con.execute(ORACLES[name]).fetchdf()
+            assert len(got) > 0, name
+            assert compare(got, want) == "OK", name

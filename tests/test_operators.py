@@ -405,39 +405,6 @@ class TestRasterize:
 
 
 @pytest.mark.spark
-class TestRecursiveRelations:
-    def test_nested_bbox_propagation(self, spark, nodes_df, ways_df):
-        """Three-level nesting: A -> B -> C -> node. The reference defers
-        this recursion (RelationsProcessor.cs:250 TODO); the engine folds
-        child bboxes upward to max_depth."""
-        from osm_pbf_convert_spark.operators.joins import assemble_relations_recursive
-
-        ndf, npdf = nodes_df
-        wdf, _ = ways_df
-        ways_res = resolve_ways(wdf, ndf)
-        rels = spark.createDataFrame(
-            [
-                (100, [(2, 101, "sub")], {}),          # A contains B
-                (101, [(2, 102, "sub")], {}),          # B contains C
-                (102, [(0, 7, "n")], {}),              # C contains node 7
-                (200, [(0, 3, "n"), (2, 102, "sub")], {}),  # own node + child
-            ],
-            schema="id bigint, members array<struct<member_type:int, ref:bigint, role:string>>, tags map<string,string>",
-        )
-        out = assemble_relations_recursive(rels, ndf, ways_res, max_depth=3).toPandas().set_index("rel_id")
-        coords = npdf.set_index("id")
-        n7 = (int(coords.loc[7, "ilat"]), int(coords.loc[7, "ilon"]))
-        n3 = (int(coords.loc[3, "ilat"]), int(coords.loc[3, "ilon"]))
-        # C gets node 7 bbox; B and A inherit it transitively
-        for rid in (102, 101, 100):
-            assert out.loc[rid, "min_ilat"] == n7[0] and out.loc[rid, "max_ilat"] == n7[0]
-        # 200 merges its own node with C's bbox
-        assert out.loc[200, "min_ilat"] == min(n3[0], n7[0])
-        assert out.loc[200, "max_ilat"] == max(n3[0], n7[0])
-        assert out.loc[200, "min_ilon"] == min(n3[1], n7[1])
-
-
-@pytest.mark.spark
 class TestSkewedJoin:
     def test_hot_node_resolves_correctly(self, spark):
         """Skew correctness: thousands of ways all referencing one hot node

@@ -1,6 +1,9 @@
 """Tests for training-data pipeline operators: dedup, text, similarity,
 multimodal plumbing, checkpoint/resume."""
 
+import hashlib
+import re
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -41,13 +44,12 @@ class TestDedup:
         assert (4, 7) not in got and (5, 7) not in got  # unrelated don't
 
     def test_hash_variants_agree_on_labeled_dups(self, docs_df):
-        """The md5 oracle variant and the xxhash64 production default are
+        """The md5 oracle variant and the rolling production default are
         the same algorithm with the hash family swapped: both must find
         the identical pair and the near-dup, and reject unrelated docs;
-        simhash variants must agree on hamming-0 groups. "rolling" (the
-        no-substring production default) joins the same contract."""
+        simhash variants must agree on hamming-0 groups."""
         df, _ = docs_df
-        for fn in ("rolling", "xxhash64", "md5"):
+        for fn in ("rolling", "md5"):
             pairs = dedup.minhash_lsh_pairs(
                 df, num_hashes=32, bands=16, shingle_k=4, hash_fn=fn
             ).toPandas()
@@ -61,26 +63,23 @@ class TestDedup:
         assert any({1, 2} <= set(ids) for ids in g64["ids"])
         assert any({1, 2} <= set(ids) for ids in g60["ids"])
 
-    def test_simhash_packed_identical(self, docs_df, spark):
-        """packed (4x fewer aggregate expressions) must produce
-        bit-identical signatures to the per-bit sums, and its 15-bit
-        counter-field overflow guard must fail loudly, not wrap."""
-        from pyspark.errors.exceptions.captured import SparkRuntimeException
-
+    def test_hash_fn_accepts_only_rolling_and_md5(self, docs_df):
+        """Every public signature entry point takes exactly "rolling" and
+        "md5"; any other flavor name fails at call time, and so does the
+        hash-set verify on the md5 flavor (it intersects rolling hashes)."""
         df, _ = docs_df
-        # pin the JVM flavor: agg_mode is a JVM-aggregate concern (the
-        # rolling production default has no per-token aggregate at all)
-        a = dedup.simhash_signatures(
-            df, hash_fn="xxhash64", agg_mode="bits").orderBy("doc_id").collect()
-        b = dedup.simhash_signatures(
-            df, hash_fn="xxhash64", agg_mode="packed").orderBy("doc_id").collect()
-        assert [tuple(r) for r in a] == [tuple(r) for r in b]
-
-        big = spark.createDataFrame(
-            [(1, "a " * 70000)], schema="doc_id bigint, text string"
+        entry_points = (
+            dedup.minhash_signatures, dedup.minhash_lsh_pairs,
+            dedup.ngram_jaccard_lsh_pairs, dedup.simhash_signatures,
+            dedup.simhash_hamming_pairs, dedup.simhash_dedup_groups,
+            text.fingerprint,
         )
-        with pytest.raises(SparkRuntimeException, match="32767"):
-            dedup.simhash_signatures(big, hash_fn="xxhash64", agg_mode="packed").collect()
+        for fn in entry_points:
+            for bad in ("xxhash64", "sha1"):
+                with pytest.raises(ValueError, match="hash_fn"):
+                    fn(df, hash_fn=bad)
+        with pytest.raises(ValueError, match="verify_on_hashes"):
+            dedup.ngram_jaccard_lsh_pairs(df, hash_fn="md5", verify_on_hashes=True)
 
     def test_ngram_jaccard(self, docs_df):
         df, _ = docs_df
@@ -204,8 +203,7 @@ class TestDedup:
 
     def test_rolling_signature_stage_has_no_shuffle(self, spark):
         """The rolling signature stage is a narrow Arrow map: its plan
-        contains no Exchange (the JVM flavors shuffle every
-        (doc, shingle) row into the groupBy-min)."""
+        contains no Exchange."""
         df = spark.createDataFrame(
             [(1, "some document text body here")], "doc_id long, text string")
         plan = dedup.minhash_signatures(df, num_hashes=16, shingle_k=4)\
@@ -318,60 +316,100 @@ class TestDedup:
             assert signs[p] == want
 
 
+JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")  # Java's \s class
+
+
+def _md5_hex(s: str) -> str:
+    return hashlib.md5(s.encode("utf-8")).hexdigest()
+
+
+def _kgrams(text: str, k: int) -> set:
+    t = text.lower()
+    return {t[i: i + k] for i in range(len(t) - k + 1)}
+
+
+def ref_md5_minhash(text: str, num_hashes: int, k: int):
+    """Per-doc md5 minhash: distinct character k-grams of lower(text),
+    60-bit base hash = first 15 hex chars of md5, Carter-Wegman mins.
+    None when the doc has no k-gram (the operator emits no row)."""
+    p = dedup.MERSENNE31
+    xs = [int(_md5_hex(w)[:15], 16) % p for w in _kgrams(text, k)]
+    if not xs:
+        return None
+    coeffs = [dedup.minhash_coeffs(i) for i in range(num_hashes)]
+    return [min((a * x + b) % p for x in xs) for a, b in coeffs]
+
+
+def ref_md5_simhash(text: str, bits: int) -> int:
+    """Per-doc md5 simhash: tokens of lower(text) split on Java \\s, 60-bit
+    md5 token hash, bit set iff set in a strict majority of tokens."""
+    hs = [int(_md5_hex(t)[:15], 16) for t in JAVA_WS.split(text.lower()) if t]
+    return sum(1 << i for i in range(bits)
+               if 2 * sum((h >> i) & 1 for h in hs) > len(hs))
+
+
+def ref_md5_fingerprint(text: str, k: int, bottom_k: int) -> str:
+    """Per-doc md5 fingerprint: sorted hex digests of the distinct
+    k-grams, bottom-k joined with ',', md5 of that string."""
+    digs = sorted(_md5_hex(w) for w in _kgrams(text, k))
+    return _md5_hex(",".join(digs[:bottom_k]))
+
+
 @pytest.mark.spark
 class TestMd5ArrowParity:
-    """Round-8 rewrite gate: the md5 oracle flavors are now computed in a
-    zero-shuffle Arrow pass (operators/md5win.py); ``hash_fn="md5_jvm"``
-    keeps the original expression chains. The two must agree VALUE-FOR-
-    VALUE (the DuckDB oracle pins hash values, not just equality classes)
-    on a corpus that exercises every edge: exact/near dups, empty text,
-    text shorter than k, non-ASCII scripts (the per-doc fallback path),
-    mixed-case, and every Java-\\s whitespace delimiter."""
+    """The md5 oracle flavors run as zero-shuffle Arrow passes
+    (operators/md5win.py). They must equal a per-document hashlib
+    reference VALUE-FOR-VALUE (the DuckDB oracle pins hash values, not
+    just equality classes) on a corpus that exercises every edge:
+    exact/near dups, empty text, text shorter than k, non-ASCII scripts
+    (the per-doc fallback path), mixed-case, and every Java-\\s
+    whitespace delimiter."""
+
+    ROWS = [
+        (1, "the quick brown fox jumps over the lazy dog"),
+        (2, "the quick brown fox jumps over the lazy dog"),
+        (3, "the quick brown fox jumped over the lazy dog!"),
+        (4, "der schnelle braune fuchs springt über den faulen hund gut"),
+        (5, "це зовсім інший текст про щось не схоже на інші документи"),
+        (6, ""),
+        (7, "ab"),
+        (8, "日本語のテキストです これはテストです 日本語のテキスト"),
+        (9, "MiXeD CaSe TeXt WiTh UPPER and lower"),
+        (10, "tabs\tand\nnewlines\x0bweird\fspaces\r end"),
+        (11, "ASCII with ünïcödé mixed in the middle of things"),
+    ]
 
     @pytest.fixture(scope="class")
     def mixed_df(self, spark):
-        rows = [
-            (1, "the quick brown fox jumps over the lazy dog"),
-            (2, "the quick brown fox jumps over the lazy dog"),
-            (3, "the quick brown fox jumped over the lazy dog!"),
-            (4, "der schnelle braune fuchs springt über den faulen hund gut"),
-            (5, "це зовсім інший текст про щось не схоже на інші документи"),
-            (6, ""),
-            (7, "ab"),
-            (8, "日本語のテキストです これはテストです 日本語のテキスト"),
-            (9, "MiXeD CaSe TeXt WiTh UPPER and lower"),
-            (10, "tabs\tand\nnewlines\x0bweird\fspaces\r end"),
-            (11, "ASCII with ünïcödé mixed in the middle of things"),
-        ]
-        return spark.createDataFrame(rows, schema="doc_id bigint, text string")
-
-    def _assert_equal(self, a, b):
-        pa = a.toPandas().sort_values("doc_id").reset_index(drop=True)
-        pb = b.toPandas().sort_values("doc_id").reset_index(drop=True)
-        assert pa[sorted(pa.columns)].equals(pb[sorted(pb.columns)])
+        return spark.createDataFrame(self.ROWS, schema="doc_id bigint, text string")
 
     def test_minhash_signatures_exact(self, mixed_df):
-        for k, h in ((5, 32), (6, 64), (8, 16)):
-            self._assert_equal(
-                dedup.minhash_signatures(mixed_df, num_hashes=h, shingle_k=k, hash_fn="md5"),
-                dedup.minhash_signatures(mixed_df, num_hashes=h, shingle_k=k, hash_fn="md5_jvm"),
-            )
+        for k, h in ((5, 32), (6, 64), (8, 16), (10, 16)):
+            got = {
+                r["doc_id"]: list(r["sig"])
+                for r in dedup.minhash_signatures(
+                    mixed_df, num_hashes=h, shingle_k=k, hash_fn="md5").collect()
+            }
+            want = {i: ref_md5_minhash(t, h, k) for i, t in self.ROWS}
+            assert got == {i: s for i, s in want.items() if s is not None}, k
 
     def test_simhash_signatures_exact(self, mixed_df):
         for bits in (60, 32):
-            self._assert_equal(
-                dedup.simhash_signatures(mixed_df, bits=bits, hash_fn="md5"),
-                dedup.simhash_signatures(mixed_df, bits=bits, hash_fn="md5_jvm"),
-            )
+            got = {
+                r["doc_id"]: r["simhash"]
+                for r in dedup.simhash_signatures(
+                    mixed_df, bits=bits, hash_fn="md5").collect()
+            }
+            assert got == {i: ref_md5_simhash(t, bits) for i, t in self.ROWS}, bits
 
     def test_fingerprint_exact(self, mixed_df):
-        for k, b in ((8, 8), (5, 3)):
-            self._assert_equal(
-                text.fingerprint(mixed_df, shingle_k=k, bottom_k=b, hash_fn="md5")
-                .select("doc_id", "fingerprint"),
-                text.fingerprint(mixed_df, shingle_k=k, bottom_k=b, hash_fn="md5_jvm")
-                .select("doc_id", "fingerprint"),
-            )
+        for k, b in ((8, 8), (5, 3), (10, 4)):
+            got = {
+                r["doc_id"]: r["fingerprint"]
+                for r in text.fingerprint(
+                    mixed_df, shingle_k=k, bottom_k=b, hash_fn="md5").collect()
+            }
+            assert got == {i: ref_md5_fingerprint(t, k, b) for i, t in self.ROWS}, k
 
 
 @pytest.mark.spark
@@ -407,20 +445,19 @@ class TestText:
         assert out[1] != out[7]
 
     def test_fingerprint_flavors_same_equality_classes(self, docs_df):
-        """rolling / xxhash64 / md5 differ by hash family but must induce
-        the SAME duplicate partition of the corpus (the operator's
-        contract); rolling handles sub-k and empty texts as 0."""
+        """rolling / md5 differ by hash family but must induce the SAME
+        duplicate partition of the corpus (the operator's contract);
+        rolling handles sub-k and empty texts as 0."""
         from itertools import combinations
 
         df, rows = docs_df
         fps = {h: text.fingerprint(df, hash_fn=h).toPandas()
                .set_index("doc_id")["fingerprint"]
-               for h in ("rolling", "xxhash64", "md5")}
+               for h in ("rolling", "md5")}
         ids = [r[0] for r in rows if len(r[1]) >= 8]
         for a, b in combinations(ids, 2):
             dup = fps["md5"][a] == fps["md5"][b]
             assert (fps["rolling"][a] == fps["rolling"][b]) == dup, (a, b)
-            assert (fps["xxhash64"][a] == fps["xxhash64"][b]) == dup, (a, b)
         assert fps["rolling"][8] == 0  # empty text
 
     def test_fingerprint_rolling_batch_boundaries(self, spark):
@@ -846,10 +883,10 @@ class TestSimhashHamming:
         df, _ = docs_df
         got = dedup.simhash_hamming_pairs(df, max_hamming=6).toPandas()
         got_pairs = {(r["a"], r["b"]): r["hamming"] for _, r in got.iterrows()}
-        # brute force oracle over computed signatures
+        # brute force oracle over the same (rolling) signatures
         sigs = (
-            df.select("doc_id", dedup.simhash_col(F.col("text")).alias("s"))
-            .toPandas().set_index("doc_id")["s"].to_dict()
+            dedup.simhash_signatures(df)
+            .toPandas().set_index("doc_id")["simhash"].to_dict()
         )
         ids = sorted(sigs)
         exp = {}

@@ -181,77 +181,6 @@ class TestPlanShape:
 
 @pytest.mark.spark
 class TestSpatialPartitioning:
-    def test_range_partitions_are_disjoint_cell_ranges(self, spark):
-        import numpy as np
-        import pandas as pd
-        from pyspark.sql import functions as F
-
-        from osm_pbf_convert_spark.plans.partitioning import spatial_repartition
-
-        rng = np.random.default_rng(11)
-        pdf = pd.DataFrame(
-            {
-                "ilat": rng.integers(-(2**31), 2**31, 20000).astype(np.int32),
-                "ilon": rng.integers(-(2**31), 2**31, 20000).astype(np.int32),
-            }
-        )
-        df = spatial_repartition(spark.createDataFrame(pdf), 8)
-        parts = (
-            df.withColumn("pid", F.spark_partition_id())
-            .groupBy("pid")
-            .agg(F.min("cell").alias("lo"), F.max("cell").alias("hi"), F.count(F.lit(1)).alias("n"))
-            .toPandas()
-            .sort_values("lo")
-            .reset_index(drop=True)
-        )
-        # ranges must not overlap (KD-leaf property) and sizes roughly even
-        for i in range(len(parts) - 1):
-            assert parts.loc[i, "hi"] <= parts.loc[i + 1, "lo"]
-        assert parts["n"].max() < 4 * parts["n"].min()
-
-    def test_salting_spreads_hot_tile(self, spark):
-        import numpy as np
-        import pandas as pd
-
-        from osm_pbf_convert_spark.plans.partitioning import salt_hot_cells
-
-        # 90% of points in one city tile, 10% spread
-        n_hot, n_cold = 9000, 1000
-        rng = np.random.default_rng(12)
-        pdf = pd.DataFrame(
-            {
-                "ilat": np.concatenate(
-                    [rng.integers(0, 2**20, n_hot), rng.integers(-(2**31), 2**31, n_cold)]
-                ).astype(np.int32),
-                "ilon": np.concatenate(
-                    [rng.integers(0, 2**20, n_hot), rng.integers(-(2**31), 2**31, n_cold)]
-                ).astype(np.int32),
-            }
-        )
-        out = salt_hot_cells(spark.createDataFrame(pdf), z=4, threshold=1000, salt_buckets=8).toPandas()
-        hot_rows = out[out["salt"] > 0]
-        assert len(hot_rows) > n_hot * 0.8  # the city tile got salted
-        # spread across buckets, no bucket > 2x fair share
-        counts = out[out["salt"] >= 0].groupby("salt").size()
-        by_salt = hot_rows.groupby("salt").size()
-        assert by_salt.max() < (n_hot / 8) * 2
-
-    def test_spatial_sort_global_order(self, spark):
-        import numpy as np
-        import pandas as pd
-
-        from osm_pbf_convert_spark.plans.partitioning import spatial_sort
-
-        rng = np.random.default_rng(13)
-        pdf = pd.DataFrame(
-            {
-                "ilat": rng.integers(-(2**31), 2**31, 5000).astype(np.int32),
-                "ilon": rng.integers(-(2**31), 2**31, 5000).astype(np.int32),
-            }
-        )
-        cells = spatial_sort(spark.createDataFrame(pdf)).select("cell").toPandas()["cell"]
-        assert (cells.values[:-1] <= cells.values[1:]).all()
-
     def test_write_spatial_table_layout(self, spark, tmp_path):
         import numpy as np
         import pandas as pd

@@ -410,3 +410,49 @@ class TestCrashSafeMerge:
         (tmp_path / "finest" / "_SUCCESS").unlink()
         self._merge(spark, tmp_path, [(9, 1)])
         assert self._finest(spark, tmp_path) == {(1, 5), (2, 7), (9, 1)}
+
+
+@pytest.mark.spark
+class TestMixedMergeLayouts:
+    """The full-table and the incremental ``pz=`` tile-merge layouts must
+    not be mixed on one finest table: each merge refuses the other's
+    layout instead of silently dropping its accumulated state."""
+
+    def _full(self, spark, tmp_path, rows):
+        from osm_pbf_convert_spark.streaming.pipeline import merge_finest_batch
+
+        merge_finest_batch(
+            spark, spark.createDataFrame(rows, schema="tile long, cnt long"),
+            str(tmp_path / "finest"), str(tmp_path / "tmp"),
+            str(tmp_path / "tiles"), max_z=6, min_z=0,
+        )
+
+    def _incremental(self, spark, tmp_path, rows):
+        from osm_pbf_convert_spark.streaming.pipeline import (
+            merge_finest_batch_incremental,
+        )
+
+        merge_finest_batch_incremental(
+            spark, spark.createDataFrame(rows, schema="tile long, cnt long"),
+            str(tmp_path / "finest"), str(tmp_path / "tiles"),
+            max_z=6, min_z=0, anchor_z=2,
+        )
+
+    def _finest(self, spark, tmp_path):
+        return {
+            (r["tile"], r["cnt"])
+            for r in spark.read.parquet(str(tmp_path / "finest"))
+            .select("tile", "cnt").collect()
+        }
+
+    def test_incremental_merge_rejects_full_table_layout(self, spark, tmp_path):
+        self._full(spark, tmp_path, [(5, 5), (300, 3)])
+        with pytest.raises(ValueError, match="full-table layout"):
+            self._incremental(spark, tmp_path, [(300, 7)])
+        assert self._finest(spark, tmp_path) == {(5, 5), (300, 3)}
+
+    def test_full_merge_rejects_incremental_layout(self, spark, tmp_path):
+        self._incremental(spark, tmp_path, [(5, 5), (300, 3)])
+        with pytest.raises(ValueError, match="incremental pz= layout"):
+            self._full(spark, tmp_path, [(300, 7)])
+        assert self._finest(spark, tmp_path) == {(5, 5), (300, 3)}

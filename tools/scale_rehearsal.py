@@ -71,8 +71,7 @@ def _plan_flags(df):
     }
 
 
-DEDUP_OPS = {"minhash_pairs", "minhash_pairs_rolling", "simhash_hamming_pairs",
-             "simhash_rolling", "ngram_jaccard_lsh", "ngram_lsh_rolling",
+DEDUP_OPS = {"minhash_pairs_rolling", "simhash_rolling", "ngram_lsh_rolling",
              "exact_dedup"}
 
 
@@ -296,16 +295,9 @@ def main():
         results = {}
         for name, df in [
             ("exact_dedup", dedup.exact_dedup(docs)),
-            ("minhash_pairs", dedup.minhash_lsh_pairs(
-                docs, num_hashes=32, bands=8, shingle_k=5, hash_fn="xxhash64")),
             ("minhash_pairs_rolling", dedup.minhash_lsh_pairs(
                 docs, num_hashes=32, bands=8, shingle_k=5)),
-            ("simhash_hamming_pairs", dedup.simhash_hamming_pairs(
-                docs, max_hamming=8, hash_fn="xxhash64")),
             ("simhash_rolling", dedup.simhash_hamming_pairs(docs, max_hamming=8)),
-            ("ngram_jaccard_lsh", dedup.ngram_jaccard_lsh_pairs(
-                docs, shingle_k=6, threshold=0.6, num_hashes=64, bands=16,
-                hash_fn="xxhash64", max_bucket_size=64, verify_on_hashes=True)),
             ("ngram_lsh_rolling", dedup.ngram_jaccard_lsh_pairs(
                 docs, shingle_k=6, threshold=0.6, num_hashes=64, bands=16,
                 max_bucket_size=64, verify_on_hashes=True)),
@@ -421,17 +413,10 @@ def main():
     measured(spark, "heat_map", heat_map(nodes), results)
     e2e = time.time() - t0
 
-    # ---- dedup family at 16x docs (PRODUCTION xxhash64 flavors) ----
+    # ---- dedup family at 16x docs (production rolling flavors) ----
     measured(spark, "exact_dedup", dedup.exact_dedup(docs), results)
-    # xxhash64 kept as the round-over-round continuity sentinel; the
-    # *_rolling rows record the production default (no-substring
-    # Karp-Rabin signature stage) at the same scale
-    measured(spark, "minhash_pairs", dedup.minhash_lsh_pairs(
-        docs, num_hashes=32, bands=8, shingle_k=5, hash_fn="xxhash64"), results)
     measured(spark, "minhash_pairs_rolling", dedup.minhash_lsh_pairs(
         docs, num_hashes=32, bands=8, shingle_k=5), results)
-    measured(spark, "simhash_hamming_pairs", dedup.simhash_hamming_pairs(
-        docs, max_hamming=8, hash_fn="xxhash64"), results)
     measured(spark, "simhash_rolling", dedup.simhash_hamming_pairs(
         docs, max_hamming=8), results)
     # max_bucket_size=64: the LSH-at-scale guard (boilerplate band
@@ -439,14 +424,7 @@ def main():
     # 9x wall at 4x volume without it, and ZERO verified pairs lost
     # with it at 64x -- see BENCH/NOTES.md). NOT a silent cap: the
     # parameter is part of the recorded scale recipe.
-    print("ngram_jaccard_lsh: max_bucket_size=64 + verify_on_hashes (scale recipe)", flush=True)
-    measured(
-        spark, "ngram_jaccard_lsh",
-        dedup.ngram_jaccard_lsh_pairs(docs, shingle_k=6, threshold=0.6, num_hashes=64, bands=16,
-                                      hash_fn="xxhash64", max_bucket_size=64,
-                                      verify_on_hashes=True),
-        results,
-    )
+    print("ngram_lsh_rolling: max_bucket_size=64 + verify_on_hashes (scale recipe)", flush=True)
     measured(
         spark, "ngram_lsh_rolling",
         dedup.ngram_jaccard_lsh_pairs(docs, shingle_k=6, threshold=0.6, num_hashes=64, bands=16,
