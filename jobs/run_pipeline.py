@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import argparse
 
+import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
@@ -101,8 +102,12 @@ def main():
         # partition_id=-1 row, so consumers must MAX/inspect per batch, not
         # SUM across the job. Exact counts, if ever needed, come from
         # per-partition row deltas (lineage n_rows vs input page counts).
+        # built from pandas (Arrow is on): a local relation, where a frame
+        # from a Python list would run a Python task when committed
         metric = spark.createDataFrame(
-            [(-1, 0, "n_bad_payloads_batch_approx", float(bad_acc.value))],
+            pd.DataFrame({"partition_id": [-1], "n_rows": [0],
+                          "metric_name": ["n_bad_payloads_batch_approx"],
+                          "metric_value": [float(bad_acc.value)]}),
             schema="partition_id bigint, n_rows bigint, metric_name string, metric_value double",
         )
         table.commit(spark, f"{args.job_id}-decode", metric)

@@ -18,7 +18,11 @@ metrics"):
   appended to the checkpoint table: (job_id, partition_id, n_rows, metrics,
   attempt) -- the Parquet append of tiny files is cheap and the MAX(attempt)
   row wins on read;
-- resume = anti-join: pending partitions are those not yet committed.
+- resume = a driver-side committed set, collected once per batch (the
+  reference's driver-held offset, per partition): it filters the input and
+  prunes the sink read-back, so resume is O(batch), not O(sink); a null
+  ``partition_id`` is never committed. The lineage counts are collected
+  once and committed from a driver-built Arrow relation.
 
 On a real cluster the checkpoint table would be Iceberg (atomic appends,
 snapshot isolation); in this sandbox it is a Parquet directory with the
@@ -27,9 +31,9 @@ same schema and commit discipline -- the swap is one format string.
 
 from __future__ import annotations
 
-import os
 import time
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -37,6 +41,12 @@ CHECKPOINT_SCHEMA = (
     "job_id string, partition_id bigint, n_rows bigint, "
     "metric_name string, metric_value double, attempt bigint, committed_at double"
 )
+_COLUMNS = [f.split()[0] for f in CHECKPOINT_SCHEMA.split(", ")]
+
+
+def _local_frame(spark: SparkSession, schema: str, **columns: list) -> DataFrame:
+    """Driver-built Arrow frame: a local relation (a Python-list frame runs a Python task)."""
+    return spark.createDataFrame(pa.table(columns), schema=schema)
 
 
 class CheckpointTable:
@@ -62,18 +72,15 @@ class CheckpointTable:
 
     def read(self, spark: SparkSession) -> DataFrame:
         if not self._exists(spark):
-            return spark.createDataFrame([], schema=CHECKPOINT_SCHEMA)
+            return _local_frame(spark, CHECKPOINT_SCHEMA, **{c: [] for c in _COLUMNS})
         return spark.read.schema(CHECKPOINT_SCHEMA).parquet(self.path)
 
-    def completed(self, spark: SparkSession, job_id: str) -> DataFrame:
-        """Distinct committed partition_ids for a job (a DataFrame so the
-        caller can anti-join without collecting to the driver)."""
-        return (
-            self.read(spark)
-            .filter(F.col("job_id") == job_id)
-            .select("partition_id")
-            .distinct()
-        )
+    def completed_ids(self, spark: SparkSession, job_id: str) -> set:
+        """The job's committed partition_ids (no Spark job while no table exists)."""
+        if not self._exists(spark):
+            return set()
+        done = self.metrics(spark, job_id).filter(F.col("partition_id").isNotNull())
+        return {r[0] for r in done.select("partition_id").distinct().collect()}
 
     def commit(
         self,
@@ -94,10 +101,7 @@ class CheckpointTable:
             df.withColumn("job_id", F.lit(job_id))
             .withColumn("attempt", F.lit(attempt).cast("bigint"))
             .withColumn("committed_at", F.lit(time.time()))
-            .select(
-                "job_id", "partition_id", "n_rows", "metric_name", "metric_value",
-                "attempt", "committed_at",
-            )
+            .select(*_COLUMNS)
         )
         df.coalesce(1).write.mode("append").parquet(self.path)
 
@@ -105,19 +109,19 @@ class CheckpointTable:
         return self.read(spark).filter(F.col("job_id") == job_id)
 
 
-def pending_only(
-    spark: SparkSession,
-    input_df: DataFrame,
-    table: CheckpointTable,
-    job_id: str,
-    partition_col: str = "partition_id",
-) -> DataFrame:
-    """Filter the input to partitions without a committed lineage row.
+def _uncommitted(df: DataFrame, partition_col: str, done: set) -> DataFrame:
+    """``df`` without the rows of the ``done`` partitions: a plain filter
+    (none at all for an empty set) that keeps null ids, which never match."""
+    if not done:
+        return df
+    c = F.col(partition_col)
+    return df.filter(c.isNull() | ~c.isin(sorted(done)))
 
-    The anti-join side is the (tiny) checkpoint table -- broadcast, no
-    shuffle on the input."""
-    done = table.completed(spark, job_id).withColumnRenamed("partition_id", partition_col)
-    return input_df.join(F.broadcast(done), partition_col, "left_anti")
+
+def pending_only(spark: SparkSession, input_df: DataFrame, table: CheckpointTable,
+                 job_id: str, partition_col: str = "partition_id") -> DataFrame:
+    """Filter the input to partitions without a committed lineage row."""
+    return _uncommitted(input_df, partition_col, table.completed_ids(spark, job_id))
 
 
 def run_with_checkpoint(
@@ -137,23 +141,19 @@ def run_with_checkpoint(
     repeatedly: committed partitions are skipped; a partition that crashed
     mid-write is re-processed and its output files replaced atomically.
     """
-    pend = pending_only(spark, input_df, table, job_id, partition_col)
-    out = process_fn(pend)
+    done = table.completed_ids(spark, job_id)
+    out = process_fn(_uncommitted(input_df, partition_col, done))
     if partition_col not in out.columns:
         raise ValueError(f"process_fn must preserve the {partition_col} column")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     out.write.mode("overwrite").partitionBy(partition_col).parquet(sink_path)
-    # lineage: per-partition row counts from the just-written sink (reading
-    # back guarantees metrics describe the committed bytes, not a plan rerun)
-    written = spark.read.parquet(sink_path)
-    done_already = table.completed(spark, job_id).withColumnRenamed("partition_id", partition_col)
-    stats = (
-        written.join(F.broadcast(done_already), partition_col, "left_anti")
-        .groupBy(partition_col)
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-        .withColumnRenamed(partition_col, "partition_id")
-    )
-    n = stats.count()
-    if n:
-        table.commit(spark, job_id, stats, attempt=attempt)
-    return n
+    # lineage: per-partition row counts of the just-written sink (the
+    # committed bytes, not a plan rerun), reading only the typed partition
+    # column (no schema inference) and pruning the committed directories
+    written = spark.read.schema(f"`{partition_col}` bigint").parquet(sink_path)
+    stats = _uncommitted(written, partition_col, done).groupBy(partition_col).count().collect()
+    if stats:
+        rows = _local_frame(spark, "partition_id bigint, n_rows bigint",
+                            partition_id=[r[0] for r in stats], n_rows=[r[1] for r in stats])
+        table.commit(spark, job_id, rows, attempt=attempt)
+    return len(stats)

@@ -17,6 +17,8 @@ adaptive KD-tree (`SpatialIndex.cs:25-191`) + external Morton sort
 
 from __future__ import annotations
 
+from collections import OrderedDict
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -49,27 +51,31 @@ def fan_out(df: DataFrame, key: str | None = None) -> DataFrame:
 
     The partition-count probe (``getNumPartitions`` on the planned RDD,
     metadata only) plans the scan on the driver (~0.1 s); it is memoized per
-    semantic plan so repeated constructions of the same query pay it
-    once per session. A memo hit can go stale only if the SAME plan's
-    underlying files change mid-session, and then only the fan-out
-    decision is stale -- never results.
+    session UUID and semantic plan, in an LRU of ``_FAN_OUT_MEMO_MAX``
+    entries, so repeated constructions of the same query pay it once per
+    session. A memo hit can go stale only if the SAME plan's underlying
+    files change mid-session, and then only the fan-out decision is stale
+    -- never results.
     """
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
+    spark = df.sparkSession
+    target = spark.sparkContext.defaultParallelism
     try:
-        memo_key = (id(df.sparkSession), df.semanticHash(), target)
-        n = _FAN_OUT_MEMO.get(memo_key)
+        memo_key = (spark._jsparkSession.sessionUUID(), df.semanticHash(), target)
+        n = _FAN_OUT_MEMO.pop(memo_key, None)
         if n is None:
             n = df.rdd.getNumPartitions()
-            _FAN_OUT_MEMO[memo_key] = n
     except Exception:  # non-queryable plan (e.g. streaming): leave as-is
         return df
+    _FAN_OUT_MEMO[memo_key] = n  # (re)inserted as the most recently used
+    if len(_FAN_OUT_MEMO) > _FAN_OUT_MEMO_MAX:
+        _FAN_OUT_MEMO.popitem(last=False)
     if n >= target:
         return df
     return df.repartition(target, F.col(key)) if key else df.repartition(target)
 
 
-_FAN_OUT_MEMO: dict = {}
+_FAN_OUT_MEMO: OrderedDict = OrderedDict()
+_FAN_OUT_MEMO_MAX = 256
 
 
 def write_spatial_table(df: DataFrame, path: str, z: int = 6) -> None:

@@ -625,19 +625,17 @@ def decode_entities(df: DataFrame, payload_col: str = "html", passthrough: tuple
     full decode's (pytest-pinned).
     """
     pcols = list(passthrough)
-    known = [c for c, _ in _ENTITY_COL_TYPES]
-    if columns is None:
-        sel = tuple(known)
-    else:
-        bad = set(columns) - set(known)
-        if bad:
-            raise ValueError(f"unknown entity columns: {sorted(bad)}")
-        sel = tuple(c for c in known if c in set(columns))
+    types = dict(_ENTITY_COL_TYPES)
+    # the caller's order (duplicates dropped): schema and arrays both follow it
+    sel = tuple(types) if columns is None else tuple(dict.fromkeys(columns))
+    bad = set(sel) - set(types)
+    if bad:
+        raise ValueError(f"unknown entity columns: {sorted(bad)}")
     in_df = df.select(*pcols, payload_col)
     schema_fields = [in_df.schema[c] for c in pcols]
     out_schema = ", ".join(
         [f"{f.name} {f.dataType.simpleString()}" for f in schema_fields]
-        + [f"{c} {t}" for c, t in _ENTITY_COL_TYPES if c in sel]
+        + [f"{c} {types[c]}" for c in sel]
     )
     def fn(batches):
         for batch in batches:

@@ -148,6 +148,22 @@ class TestDecodeEntities:
         got = {tuple(r) for r in ids.collect()}
         assert got == want
 
+    def test_column_subset_keeps_caller_order(self, spark, pages_df):
+        """``columns=`` comes back in the caller's order, in the schema and
+        in the arrays, with the values of the same columns of the full
+        decode."""
+        from osm_pbf_convert_spark.sources.pbf import decode_entities
+
+        cols = ("tags", "ilon", "kind", "id")
+        sub = decode_entities(pages_df, passthrough=("url",), columns=cols)
+        assert sub.columns == ["url", *cols]
+        full = decode_entities(pages_df).select("url", *cols)
+        rows = lambda df: sorted(  # noqa: E731
+            tuple(sorted(v.items()) if isinstance(v, dict) else v for v in r)
+            for r in df.collect()
+        )
+        assert rows(sub) == rows(full)
+
 
 @pytest.mark.spark
 class TestCorruptPayloads:

@@ -693,8 +693,7 @@ class TestCheckpoint:
         rows = spark.createDataFrame([(0, 5)], schema="partition_id bigint, n_rows bigint")
         table.commit(spark, "job-uri", rows)
         assert table._exists(spark)
-        got = table.completed(spark, "job-uri").toPandas()
-        assert got["partition_id"].tolist() == [0]
+        assert table.completed_ids(spark, "job-uri") == {0}
 
     def test_resume_skips_committed(self, spark, tmp_path):
         table = CheckpointTable(str(tmp_path / "ckpt"))
@@ -737,6 +736,95 @@ class TestCheckpoint:
         assert n == 2  # only 2 and 3 processed
         got_parts = {r["partition_id"] for r in spark.read.parquet(sink).select("partition_id").distinct().collect()}
         assert got_parts == {2, 3}
+
+    def test_resume_reads_no_committed_partition(self, spark, tmp_path):
+        """The sink read-back filters on the committed set, so committed
+        partition directories are pruned and never opened: a file that is
+        not Parquet inside one cannot fail the resumed batch."""
+        table = CheckpointTable(str(tmp_path / "ckpt3"))
+        sink = tmp_path / "out3"
+        df = spark.range(40).withColumn("partition_id", F.pmod("id", F.lit(4)))
+        first = df.filter(F.col("partition_id") < 2)
+        assert run_with_checkpoint(spark, first, lambda p: p, str(sink), table, "job3") == 2
+        (sink / "partition_id=0" / "part-99999-corrupt.parquet").write_bytes(b"not parquet")
+        assert run_with_checkpoint(spark, df, lambda p: p, str(sink), table, "job3") == 2
+        lineage = table.metrics(spark, "job3").toPandas()
+        assert sorted(lineage["partition_id"]) == [0, 1, 2, 3]
+        assert lineage["n_rows"].tolist() == [10, 10, 10, 10]
+
+    def test_null_partition_ids_stay_pending(self, spark, tmp_path):
+        """A null partition_id never counts as committed (the anti-join
+        semantics): its rows are re-processed, replaced and re-counted on
+        every run, and they never make the committed ids drop other rows."""
+        table = CheckpointTable(str(tmp_path / "ckpt4"))
+        sink = str(tmp_path / "out4")
+        pid = F.when(F.col("id") < 6, F.lit(None)).otherwise(F.pmod("id", F.lit(3)))
+        df = spark.range(30).withColumn("partition_id", pid.cast("bigint"))
+        assert run_with_checkpoint(spark, df, lambda p: p, sink, table, "job4") == 4
+        assert table.completed_ids(spark, "job4") == {0, 1, 2}
+        assert pending_only(spark, df, table, "job4").count() == 6
+        assert run_with_checkpoint(spark, df, lambda p: p, sink, table, "job4") == 1
+        assert spark.read.parquet(sink).count() == 30
+        null_rows = table.metrics(spark, "job4").filter(F.col("partition_id").isNull())
+        assert [r["n_rows"] for r in null_rows.collect()] == [6, 6]
+
+    def test_pending_plan_is_a_filter(self, spark, tmp_path):
+        """Resume filters on the driver-side committed set: no join and no
+        broadcast, and no filter at all while the table does not exist."""
+        table = CheckpointTable(str(tmp_path / "ckpt5"))
+        df = spark.range(20).withColumn("partition_id", F.pmod("id", F.lit(4)))
+        plan = lambda d: d._jdf.queryExecution().executedPlan().toString()  # noqa: E731
+        fresh = plan(pending_only(spark, df, table, "job5"))
+        assert "Join" not in fresh and "BroadcastExchange" not in fresh
+        assert "Filter" not in fresh
+        table.commit(spark, "job5", df.groupBy("partition_id").count()
+                     .withColumnRenamed("count", "n_rows").filter("partition_id = 1"))
+        resumed = plan(pending_only(spark, df, table, "job5"))
+        assert "Join" not in resumed and "BroadcastExchange" not in resumed
+        assert pending_only(spark, df, table, "job5").count() == 15
+
+    def test_lineage_counts_match_sink(self, spark, tmp_path):
+        """Per-partition lineage n_rows equal the sink's per-partition
+        counts, and a second run appends no lineage row."""
+        table = CheckpointTable(str(tmp_path / "ckpt6"))
+        sink = str(tmp_path / "out6")
+        df = spark.range(200).withColumn("partition_id", F.pmod(F.xxhash64("id"), F.lit(8)))
+        assert run_with_checkpoint(spark, df, lambda p: p, sink, table, "job6") == 8
+        lineage = {r["partition_id"]: r["n_rows"] for r in table.metrics(spark, "job6").collect()}
+        written = spark.read.parquet(sink).groupBy("partition_id").count().collect()
+        assert lineage == {r["partition_id"]: r["count"] for r in written}
+        assert len(set(lineage.values())) > 1  # uneven partitions, not a constant
+        n_lineage = table.read(spark).count()
+        assert run_with_checkpoint(spark, df, lambda p: p, sink, table, "job6") == 0
+        assert table.read(spark).count() == n_lineage
+
+    def test_lineage_commits_a_local_relation(self, spark, tmp_path, monkeypatch):
+        """A batch builds no frame from a Python list (each execution of one
+        runs a Python task), and the committed lineage rows are a driver-side
+        local relation, so the per-partition aggregate is not run again."""
+        from pyspark.sql import SparkSession
+
+        table = CheckpointTable(str(tmp_path / "ckpt7"))
+        sink = str(tmp_path / "out7")
+        df = spark.range(40).withColumn("partition_id", F.pmod("id", F.lit(4)))
+
+        def no_list_frames(*a, **k):
+            raise AssertionError("frame built from a Python list")
+
+        monkeypatch.setattr(SparkSession, "_create_dataframe", no_list_frames)
+        committed, commit = [], table.commit
+
+        def spy(spark_, job_id, rows, attempt=0):
+            committed.append(rows._jdf.queryExecution().optimizedPlan().toString())
+            commit(spark_, job_id, rows, attempt)
+
+        monkeypatch.setattr(table, "commit", spy)
+        assert run_with_checkpoint(spark, df.filter("partition_id < 2"), lambda p: p,
+                                   sink, table, "job7") == 2
+        assert run_with_checkpoint(spark, df, lambda p: p, sink, table, "job7") == 2
+        assert len(committed) == 2
+        for p in committed:
+            assert "LocalRelation" in p and "Aggregate" not in p and "parquet" not in p.lower()
 
 
 @pytest.mark.spark

@@ -30,14 +30,20 @@ class TestNoSlowPath:
         - pipeline.merge_finest_batch_incremental: the DISTINCT changed
           coarse regions of a micro-batch (<= 4^anchor_z ints, 256 at
           the default anchor) -- the partition-pruning key list the
-          driver needs to know WHICH dirs to swap; never data rows.
+          driver needs to know WHICH dirs to swap; never data rows;
+        - checkpoint.CheckpointTable.completed_ids and
+          checkpoint.run_with_checkpoint: a job's committed partition_ids
+          and one batch's (partition_id, count) lineage rows -- at most
+          one row per LOGICAL partition (16 in the benchmark, 4096 in the
+          README example), the driver-side set that filters the input and
+          prunes the sink read-back; never data rows.
 
         .rdd exemption (r8): partitioning.fan_out reads
         getNumPartitions() -- a plan-time METADATA probe (no data ever
         leaves the JVM) deciding whether a tiny scan must be fanned out
         before a per-row-heavy stage."""
         collect_allowed = {"rel_store.py": 1, "tiling.py": 1, "dedup.py": 1,
-                           "pipeline.py": 1}
+                           "pipeline.py": 1, "checkpoint.py": 2}
         rdd_allowed = {"partitioning.py": 1}
         bad = []
         for root, _, files in os.walk(PKG):
@@ -208,6 +214,24 @@ class TestSpatialPartitioning:
         one = back.filter(back["tile"] == int(tiles[0].split("=")[1]))
         plan = one._jdf.queryExecution().executedPlan().toString()
         assert "PartitionFilters: [isnotnull(tile" in plan
+
+    def test_fan_out_memo_is_bounded(self, spark, monkeypatch):
+        """The fan-out partition-count memo is an LRU keyed on the session
+        UUID: more distinct plans than its cap never grow it past the cap,
+        and the most recent plan stays memoized."""
+        from collections import OrderedDict
+
+        from osm_pbf_convert_spark.plans import partitioning as P
+
+        monkeypatch.setattr(P, "_FAN_OUT_MEMO", OrderedDict())
+        cap = P._FAN_OUT_MEMO_MAX
+        for i in range(cap + 20):
+            P.fan_out(spark.range(i + 1))
+            assert len(P._FAN_OUT_MEMO) <= cap
+        assert len(P._FAN_OUT_MEMO) == cap
+        key = (spark._jsparkSession.sessionUUID(), spark.range(cap + 20).semanticHash(),
+               spark.sparkContext.defaultParallelism)
+        assert next(reversed(P._FAN_OUT_MEMO)) == key
 
 
 class TestDriverContract:

@@ -4,6 +4,7 @@ tiles == batch tile_pyramid, distinct dup pairs == batch LSH pairs -- and
 a re-run against the same checkpoint must process nothing new (the
 streaming flavor of the batch job's idempotent resume)."""
 
+import json
 import os
 
 import pytest
@@ -456,3 +457,22 @@ class TestMixedMergeLayouts:
         with pytest.raises(ValueError, match="incremental pz= layout"):
             self._full(spark, tmp_path, [(300, 7)])
         assert self._finest(spark, tmp_path) == {(5, 5), (300, 3)}
+
+
+class TestRehearsalSinkLog:
+    def test_sink_log_counts_only_added_files(self, tmp_path):
+        """The rehearsal's exactly-once gate compares the sink's metadata
+        log with the part files on disk, so only ``"action": "add"`` entries
+        name committed files; a ``delete`` entry must not count."""
+        from tools.stream_pipeline_rehearsal import _sink_log_names
+
+        log = tmp_path / "_spark_metadata"
+        log.mkdir()
+        entry = lambda name, action: json.dumps(  # noqa: E731
+            {"path": f"file:{tmp_path}/{name}", "size": 1, "isDir": False,
+             "modificationTime": 0, "blockReplication": 1, "blockSize": 1,
+             "action": action})
+        (log / "0").write_text("v1\n" + entry("part-a.parquet", "add") + "\n")
+        (log / "1").write_text("v1\n" + entry("part-b.parquet", "add") + "\n"
+                               + entry("part-old.parquet", "delete") + "\n")
+        assert _sink_log_names(str(tmp_path)) == {"part-a.parquet", "part-b.parquet"}

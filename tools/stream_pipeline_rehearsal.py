@@ -116,7 +116,9 @@ def _sink_log_names(sink_dir: str) -> set:
             for line in fh:
                 line = line.strip()
                 if line.startswith("{"):
-                    names.add(os.path.basename(json.loads(line)["path"]))
+                    entry = json.loads(line)
+                    if entry.get("action") == "add":
+                        names.add(os.path.basename(entry["path"]))
     return names
 
 
@@ -217,12 +219,13 @@ def run_continuous(spark, landing, out, ckpt, args, merge_stats):
 
     # gate: the continuous run consumed EVERYTHING -- a follow-up
     # availableNow drain on the same checkpoints must change nothing
+    # (its own merge-stats list: the summary reports the live run's)
     before = _counts_snapshot(spark, out)
     run_streaming_pipeline(
         spark, out=out, checkpoint=ckpt, pages_dir=feed,
         max_z=args.max_zoom, lsh=LSH, timeout=3600,
         source_options={"maxFilesPerTrigger": 1},
-        tile_anchor_z=args.anchor, merge_stats=merge_stats,
+        tile_anchor_z=args.anchor, merge_stats=[],
     )
     after = _counts_snapshot(spark, out)
     if before != after:
