@@ -104,7 +104,7 @@ def main():
     if args.verb == "blob-index":
         # per-blob id min/max/count zone maps (IdsIndexerBlobProcessor.cs:38-113);
         # the page url is the blob identity in the pages layout
-        from osm_pbf_convert_spark.sources.pbf import decode_nodes
+        from osm_pbf_convert_spark.sources.pbf import decode_entities
 
         pay, col = _payloads(spark, args)
         if args.pbf:
@@ -112,22 +112,27 @@ def main():
             # frame gets no record (PbfFileProcessor.cs: `if
             # (blob.Header.Type != "OSMData") continue;` before BlobRead)
             pay = pay.filter(F.col("blob_type") == "OSMData")
-        # ONE payload scan feeds every pass below (the extract is decoded
-        # once per entity kind, not once per aggregate)
+        # ONE payload scan and ONE decode (kind + id only) feed every
+        # aggregate below: a single groupBy with per-kind conditional
+        # aggregates gives the node zone map and the way/rel counts
         pay = pay.persist()
-        nodes = decode_nodes(pay, payload_col=col, on_error="skip")
-        # single decode + single groupBy for count AND min/max
-        ids = nodes.groupBy("url").agg(
-            F.min("id").alias("min_id"), F.max("id").alias("max_id"),
-            F.count(F.lit(1)).alias("cnt"),
-        ).persist()
-        ids.write.mode("overwrite").parquet(f"{out}/blobs")
+        ents = decode_entities(pay, payload_col=col, on_error="skip", columns=("kind", "id"))
+        node_id = F.when(F.col("kind") == 0, F.col("id"))
+        per_kind = [
+            F.min(node_id).alias("min_id"), F.max(node_id).alias("max_id"),
+            F.count(node_id).alias("cnt"),
+        ]
+        if args.dat:
+            per_kind += [F.count(F.when(F.col("kind") == k, 1)).alias(a)
+                         for k, a in ((1, "wc"), (2, "rc"))]
+        ids = ents.groupBy("url").agg(*per_kind).persist()
+        ids.filter(F.col("cnt") > 0).select("url", "min_id", "max_id", "cnt") \
+            .write.mode("overwrite").parquet(f"{out}/blobs")
         if args.dat:
             # the reference's .blobs.dat byte form (BlobIdsInfo.cs:35-51):
             # per-blob node/way/rel counts; node-less blobs keep the C#
             # long.MaxValue/MinValue accumulator sentinels
             from osm_pbf_convert_spark.operators.blob_index_store import write_blobs_dat
-            from osm_pbf_convert_spark.sources.pbf import decode_relations, decode_ways
 
             urls = pay.select("url").distinct()
             if args.pbf:  # url = <path>#<offset>: the true blob offset
@@ -136,15 +141,10 @@ def main():
                 from pyspark.sql import Window
 
                 pos = F.row_number().over(Window.orderBy("url")).cast("long") - 1
-            wc = decode_ways(pay, payload_col=col, on_error="skip") \
-                .groupBy("url").agg(F.count(F.lit(1)).alias("wc"))
-            rc = decode_relations(pay, payload_col=col, on_error="skip") \
-                .groupBy("url").agg(F.count(F.lit(1)).alias("rc"))
-            info = urls.select("url", pos.alias("start_position"))
-            for d in (ids, wc, rc):
-                # one row per blob on BOTH sides, but blob count scales
-                # with corpus size (file_size/16MB): merge, not broadcast
-                info = info.join(d.hint("merge"), "url", "left")
+            # one row per blob on BOTH sides, but blob count scales with
+            # corpus size (file_size/16MB): merge, not broadcast
+            info = urls.select("url", pos.alias("start_position")) \
+                .join(ids.hint("merge"), "url", "left")
             info = info.select(
                 "start_position",
                 F.coalesce("cnt", F.lit(0)).alias("nodes_count"),

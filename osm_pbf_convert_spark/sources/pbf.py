@@ -22,6 +22,20 @@ Spark-first re-expression of the reference's streaming decode pipeline
 The parser layer (``parse_payload``) is pure Python+numpy and reusable
 outside Spark (tests, oracles). The Spark layer never loops per *entity* in
 Python -- only per page/blob, with all packed arrays decoded vectorized.
+
+The Spark layer is ONE ``mapInArrow`` batch loop, ``_decode``: it parses
+only the entity kinds asked for, assembles only the entity columns asked
+for (``_entity_arrays``) and, for the fused decode, the page-local geo
+extent (``_geo_extent``). Its output schema comes from the
+``_ENTITY_COL_TYPES`` and ``_GEO_COL_TYPES`` tables, which the streaming
+pipeline also derives its file-source schemas from. The public decoders
+are thin wrappers over it:
+
+- ``decode_nodes`` / ``decode_ways`` / ``decode_relations``: one kind,
+  its own columns, the other kinds never parsed;
+- ``decode_entities``: the tall kind 0/1/2 union, optionally pruned by
+  ``columns``;
+- ``decode_entities_geo``: the union plus kind=3 page-extent rows.
 """
 
 from __future__ import annotations
@@ -203,24 +217,6 @@ def _decode_tags(keys_span, vals_span, mv, strings) -> dict:
     if k.size == 0:
         return {}
     return dict(zip(strings[k].tolist(), strings[v].tolist()))
-
-
-def _decode_way(mv, span, strings, out: DecodedWays):
-    wid = 0
-    keys_span = vals_span = None
-    refs = np.empty(0, np.int64)
-    for fno, wt, val in _scan_fields(mv, span[0], span[1]):
-        if fno == 1 and wt == _VARINT:
-            wid = val
-        elif fno == 2 and wt == _LEN:
-            keys_span = val
-        elif fno == 3 and wt == _LEN:
-            vals_span = val
-        elif fno == 8 and wt == _LEN:
-            refs = np.cumsum(_packed_s64(mv, val), dtype=np.int64)
-    out.ids.append(wid)
-    out.refs.append(refs)
-    out.tags.append(_decode_tags(keys_span, vals_span, mv, strings))
 
 
 def _decode_ways_batch(mv, spans, strings, out: DecodedWays):
@@ -435,7 +431,7 @@ def _safe_parse(buf, want, on_error: str, bad_counter=None):
 
 
 # ---------------------------------------------------------------------------
-# Spark layer: mapInArrow wrappers
+# Spark layer: one mapInArrow batch loop (``_decode``) and its wrappers
 # ---------------------------------------------------------------------------
 
 
@@ -463,6 +459,38 @@ def _iter_binary(arr: pa.Array):
 
 
 _MAP_T = pa.map_(pa.string(), pa.string())
+_MEMBER_T = pa.struct([("member_type", pa.int32()), ("ref", pa.int64()), ("role", pa.string())])
+
+# The entity union layout, declared once as (name, Spark DDL type, Arrow
+# type): every decoder's output schema, the streaming pipeline's
+# file-source schemas and the PBF writer's input casts are built from
+# this table and _GEO_COL_TYPES.
+_ENTITY_COL_TYPES = (
+    ("kind", "int", pa.int32()),
+    ("id", "bigint", pa.int64()),
+    ("lat", "double", pa.float64()),
+    ("lon", "double", pa.float64()),
+    ("ilat", "int", pa.int32()),
+    ("ilon", "int", pa.int32()),
+    ("tags", "map<string,string>", _MAP_T),
+    ("refs", "array<bigint>", pa.list_(pa.int64())),
+    ("members", "array<struct<member_type:int, ref:bigint, role:string>>", pa.list_(_MEMBER_T)),
+)
+# page-local geo extent, carried by the fused decode's kind=3 rows
+_GEO_COL_TYPES = (
+    ("n_geo", "bigint", pa.int64()),
+    ("min_ilat", "int", pa.int32()),
+    ("max_ilat", "int", pa.int32()),
+    ("min_ilon", "int", pa.int32()),
+    ("max_ilon", "int", pa.int32()),
+)
+# parse_payload's ``want`` name of entity kind 0 / 1 / 2
+_KIND_WANT = ("nodes", "ways", "relations")
+
+
+def _ddl(fields) -> str:
+    """DDL schema string of (name, DDL type, ...) entries."""
+    return ", ".join(f"{f[0]} {f[1]}" for f in fields)
 
 
 def _tags_map_array(counts: np.ndarray, keys: list, vals: list) -> pa.MapArray:
@@ -475,202 +503,30 @@ def _tags_map_array(counts: np.ndarray, keys: list, vals: list) -> pa.MapArray:
     )
 
 
-def _dict_map_array(dicts: list) -> pa.MapArray:
-    counts = np.fromiter((len(d) for d in dicts), dtype=np.int32, count=len(dicts))
-    keys: list = []
-    vals: list = []
-    for d in dicts:
-        keys.extend(d.keys())
-        vals.extend(d.values())
-    return _tags_map_array(counts, keys, vals)
-
-
-def _passthrough_take(batch: pa.RecordBatch, cols: list[str], repeats: np.ndarray) -> list[pa.Array]:
-    idx = pa.array(np.repeat(np.arange(batch.num_rows, dtype=np.int64), repeats))
-    return [batch.column(c).take(idx) for c in cols]
-
-
-def decode_nodes(df: DataFrame, payload_col: str = "html", passthrough: tuple = ("url",), on_error: str = "raise", bad_counter=None) -> DataFrame:
-    """pages -> nodes(passthrough..., id, lat, lon, ilat, ilon, tags).
-
-    ilat/ilon are the reference's exact int32 quantization
-    (Helpers.cs:3-6, C# truncation toward zero).
-    """
-    pcols = list(passthrough)
-    in_df = df.select(*pcols, payload_col)
-
-    schema_fields = [in_df.schema[c] for c in pcols]
-    out_schema = (
-        ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in schema_fields)
-        + ", id bigint, lat double, lon double, ilat int, ilon int, tags map<string,string>"
+def _mask_list(arr: pa.ListArray, keep: np.ndarray) -> pa.ListArray:
+    """Null out list entries where keep is False (empty-vs-null fidelity
+    for the union schema)."""
+    if keep.all():
+        return arr
+    mask = pa.array(~keep)  # True where null
+    return pa.ListArray.from_arrays(
+        arr.offsets, arr.values, mask=mask
     )
 
-    def fn(batches):
-        for batch in batches:
-            per_row: list[DecodedPayload] = [
-                _safe_parse(buf, ("nodes",), on_error, bad_counter)
-                for buf in _iter_binary(batch.column(payload_col))
-            ]
-            repeats = np.fromiter((len(p.nodes.ids) for p in per_row), dtype=np.int64, count=len(per_row))
-            if repeats.sum() == 0:
-                continue
-            ids = np.concatenate([p.nodes.ids for p in per_row])
-            lat = np.concatenate([p.nodes.lat for p in per_row])
-            lon = np.concatenate([p.nodes.lon for p in per_row])
-            counts = np.concatenate([p.nodes.tag_counts for p in per_row])
-            keys: list = []
-            vals: list = []
-            for p in per_row:
-                keys.extend(p.nodes.tag_keys)
-                vals.extend(p.nodes.tag_vals)
-            arrays = _passthrough_take(batch, pcols, repeats)
-            arrays += [
-                pa.array(ids, pa.int64()),
-                pa.array(lat, pa.float64()),
-                pa.array(lon, pa.float64()),
-                pa.array(quantize_np(lat), pa.int32()),
-                pa.array(quantize_np(lon), pa.int32()),
-                _tags_map_array(counts, keys, vals),
-            ]
-            names = pcols + ["id", "lat", "lon", "ilat", "ilon", "tags"]
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
 
-    return in_df.mapInArrow(fn, out_schema)
-
-
-def decode_pages_geo(df: DataFrame, payload_col: str = "html", on_error: str = "raise", bad_counter=None) -> DataFrame:
-    """Page-local geo extent: every non-payload column passes through
-    (``text`` stays byte-identical per the north rule) plus
-    (n_geo, min_ilat, max_ilat, min_ilon, max_ilon) computed from the
-    page's OWN decoded nodes; pages with zero nodes are dropped (the
-    inner-join semantics of ``join_pages_geo``).
-
-    Row-for-row equal to ``join_pages_geo(pages, decode_nodes(pages))``
-    (pytest-pinned) but with ZERO shuffle: a page's nodes come only from
-    its own payload, so the per-url aggregate is batch-local arithmetic
-    inside the decode pass. That also makes it STATELESS and therefore
-    streaming-safe -- the streaming pipeline's pages_geo stage runs this
-    exact function where the batch pipeline joins against the
-    materialized entities table.
-    """
-    pcols = [c for c in df.columns if c != payload_col]
-    in_df = df.select(*pcols, payload_col)
-    schema_fields = [in_df.schema[c] for c in pcols]
-    out_schema = (
-        ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in schema_fields)
-        + ", n_geo bigint, min_ilat int, max_ilat int, min_ilon int, max_ilon int"
-    )
-
-    def fn(batches):
-        for batch in batches:
-            per_row: list[DecodedPayload] = [
-                _safe_parse(buf, ("nodes",), on_error, bad_counter)
-                for buf in _iter_binary(batch.column(payload_col))
-            ]
-            counts = np.fromiter(
-                (len(p.nodes.ids) for p in per_row), dtype=np.int64, count=len(per_row)
-            )
-            keep = counts > 0
-            if not keep.any():
-                continue
-            n_geo, mn_la, mx_la, mn_lo, mx_lo = [], [], [], [], []
-            for p in (pr for pr, k in zip(per_row, keep) if k):
-                ila = quantize_np(p.nodes.lat)
-                ilo = quantize_np(p.nodes.lon)
-                n_geo.append(len(ila))
-                mn_la.append(ila.min())
-                mx_la.append(ila.max())
-                mn_lo.append(ilo.min())
-                mx_lo.append(ilo.max())
-            arrays = _passthrough_take(batch, pcols, keep.astype(np.int64))
-            arrays += [
-                pa.array(np.asarray(n_geo, np.int64), pa.int64()),
-                pa.array(np.asarray(mn_la, np.int32), pa.int32()),
-                pa.array(np.asarray(mx_la, np.int32), pa.int32()),
-                pa.array(np.asarray(mn_lo, np.int32), pa.int32()),
-                pa.array(np.asarray(mx_lo, np.int32), pa.int32()),
-            ]
-            names = pcols + ["n_geo", "min_ilat", "max_ilat", "min_ilon", "max_ilon"]
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
-
-    return in_df.mapInArrow(fn, out_schema)
-
-
-_ENTITY_COL_TYPES = (
-    ("kind", "int"),
-    ("id", "bigint"),
-    ("lat", "double"),
-    ("lon", "double"),
-    ("ilat", "int"),
-    ("ilon", "int"),
-    ("tags", "map<string,string>"),
-    ("refs", "array<bigint>"),
-    ("members", "array<struct<member_type:int, ref:bigint, role:string>>"),
-)
-
-
-def decode_entities(df: DataFrame, payload_col: str = "html", passthrough: tuple = ("url",), on_error: str = "raise", bad_counter=None, columns: tuple | None = None) -> DataFrame:
-    """ONE decode pass over the payloads emitting every entity kind in a
-    tall union schema: kind 0=node, 1=way, 2=relation; node columns null on
-    way rows and vice versa. Use when a pipeline consumes nodes AND ways
-    (e.g. the flagship join): persist this and filter by kind -- halves the
-    decode cost vs calling decode_nodes + decode_ways separately.
-
-    ``columns`` prunes the ARROW ASSEMBLY, not just the projection (round
-    8, guide §5: Catalyst cannot see inside the Python stage, so a
-    downstream ``.select`` alone still pays for coordinate quantization
-    and the refs/members builds): pass the subset of entity columns a
-    consumer needs (e.g. ``("kind", "tags")`` for tag statistics) and
-    only those arrays are built. Emitted values are identical to the
-    full decode's (pytest-pinned).
-    """
-    pcols = list(passthrough)
-    types = dict(_ENTITY_COL_TYPES)
-    # the caller's order (duplicates dropped): schema and arrays both follow it
-    sel = tuple(types) if columns is None else tuple(dict.fromkeys(columns))
-    bad = set(sel) - set(types)
-    if bad:
-        raise ValueError(f"unknown entity columns: {sorted(bad)}")
-    in_df = df.select(*pcols, payload_col)
-    schema_fields = [in_df.schema[c] for c in pcols]
-    out_schema = ", ".join(
-        [f"{f.name} {f.dataType.simpleString()}" for f in schema_fields]
-        + [f"{c} {types[c]}" for c in sel]
-    )
-    def fn(batches):
-        for batch in batches:
-            per_row = [
-                _safe_parse(buf, ("nodes", "ways", "relations"), on_error, bad_counter)
-                for buf in _iter_binary(batch.column(payload_col))
-            ]
-            assembled = _entity_arrays(batch, per_row, pcols, columns=sel)
-            if assembled is None:
-                continue
-            yield pa.RecordBatch.from_arrays(*assembled)
-
-    return in_df.mapInArrow(fn, out_schema)
-
-
-_MEMBER_T = pa.struct([("member_type", pa.int32()), ("ref", pa.int64()), ("role", pa.string())])
-
-
-def _entity_arrays(batch: pa.RecordBatch, per_row: list, pcols: list,
-                   columns: tuple | None = None):
-    """Assemble the tall entity union arrays for one input batch of parsed
-    payloads -- the shared body of ``decode_entities`` and the fused
-    ``decode_entities_geo``. Returns (arrays, names) or None when the
-    batch decodes to zero entities. ``columns`` (an ordered subset of the
-    entity columns) skips the assembly work of everything not requested --
-    coordinate quantization, the tag map build, the refs CSR, the members
-    struct build -- while kind/id (cheap; they define the row layout) are
-    always computed."""
-    sel = (
-        tuple(c for c, _ in _ENTITY_COL_TYPES) if columns is None else tuple(columns)
-    )
-    need_coords = bool({"lat", "lon", "ilat", "ilon"} & set(sel))
-    need_tags = "tags" in sel
-    need_refs = "refs" in sel
-    need_members = "members" in sel
+def _entity_arrays(per_row: list, columns: tuple):
+    """Assemble the tall entity union for one input batch of parsed
+    payloads: kind 0=node, 1=way, 2=relation, each page's nodes first,
+    then its ways, then its relations. Returns (entities per page,
+    {column: array}) or None when the batch decodes to zero entities.
+    Only the entity ``columns`` requested are built -- coordinate
+    quantization, the tag map, the refs CSR and the members structs are
+    skipped when nobody asked for them -- while kind/id (cheap; they
+    define the row layout) are always computed."""
+    need_coords = bool({"lat", "lon", "ilat", "ilon"} & set(columns))
+    need_tags = "tags" in columns
+    need_refs = "refs" in columns
+    need_members = "members" in columns
     n_n = np.fromiter((len(p.nodes.ids) for p in per_row), dtype=np.int64, count=len(per_row))
     n_w = np.fromiter((len(p.ways.ids) for p in per_row), dtype=np.int64, count=len(per_row))
     n_r = np.fromiter((len(p.relations.ids) for p in per_row), dtype=np.int64, count=len(per_row))
@@ -694,11 +550,12 @@ def _entity_arrays(batch: pa.RecordBatch, per_row: list, pcols: list,
             lat_l.append(p.nodes.lat)
             lon_l.append(p.nodes.lon)
         if need_tags:
+            dicts = p.ways.tags + p.relations.tags
             tag_counts.append(p.nodes.tag_counts)
+            tag_counts.append(np.fromiter(map(len, dicts), dtype=np.int32, count=len(dicts)))
             tag_keys.extend(p.nodes.tag_keys)
             tag_vals.extend(p.nodes.tag_vals)
-            for d in p.ways.tags + p.relations.tags:
-                tag_counts.append(np.array([len(d)], np.int32))
+            for d in dicts:
                 tag_keys.extend(d.keys())
                 tag_vals.extend(d.values())
         if need_refs:
@@ -758,195 +615,144 @@ def _entity_arrays(batch: pa.RecordBatch, per_row: list, pcols: list,
             pa.ListArray.from_arrays(pa.array(mem_off, pa.int32()), mem_struct),
             rels_mask,
         )
-    arrays = _passthrough_take(batch, pcols, repeats) + [out[c] for c in sel]
-    names = pcols + list(sel)
-    return arrays, names
+    return repeats, out
+
+
+def _geo_extent(per_row: list):
+    """Page-local geo extent for one input batch: one kind=3 row per page
+    with >= 1 node, (n_geo, min/max ilat, min/max ilon) over the page's
+    OWN decoded nodes -- row-for-row what joining each page to its nodes
+    and aggregating per url gives (``join_pages_geo``), with no shuffle.
+    Returns (rows per page, {column: array}) or None when no page has a
+    node."""
+    counts = np.fromiter((len(p.nodes.ids) for p in per_row), dtype=np.int64, count=len(per_row))
+    keep = counts > 0
+    if not keep.any():
+        return None
+    n_geo = counts[keep]
+    starts = np.zeros(len(n_geo), np.int64)
+    np.cumsum(n_geo[:-1], out=starts[1:])
+    ilat = quantize_np(np.concatenate([p.nodes.lat for p in per_row]))
+    ilon = quantize_np(np.concatenate([p.nodes.lon for p in per_row]))
+    out = {
+        "kind": pa.array(np.full(len(n_geo), 3, np.int32), pa.int32()),
+        "n_geo": pa.array(n_geo, pa.int64()),
+        "min_ilat": pa.array(np.minimum.reduceat(ilat, starts), pa.int32()),
+        "max_ilat": pa.array(np.maximum.reduceat(ilat, starts), pa.int32()),
+        "min_ilon": pa.array(np.minimum.reduceat(ilon, starts), pa.int32()),
+        "max_ilon": pa.array(np.maximum.reduceat(ilon, starts), pa.int32()),
+    }
+    return keep.astype(np.int64), out
+
+
+def _decode(df: DataFrame, payload_col: str, passthrough, on_error: str, bad_counter,
+            kinds=(0, 1, 2), columns: tuple | None = None, geo: bool = False) -> DataFrame:
+    """The one decode pass behind every public decoder: parse each
+    payload once (only the entity ``kinds`` asked for), emit the
+    ``passthrough`` columns followed by the entity ``columns`` (all of
+    them by default, in the caller's order, duplicates dropped). With
+    ``geo`` it also emits one kind=3 page-extent row per page with nodes
+    (``_geo_extent``) and appends the geo columns; geo rows carry every
+    passthrough column, entity rows only the first. Columns a row kind
+    does not carry are null."""
+    pcols = list(passthrough)
+    entity = {f[0]: f for f in _ENTITY_COL_TYPES}
+    sel = tuple(entity) if columns is None else tuple(dict.fromkeys(columns))
+    bad = set(sel) - set(entity)
+    if bad:
+        raise ValueError(f"unknown entity columns: {sorted(bad)}")
+    want = tuple(_KIND_WANT[k] for k in sorted(kinds))
+    in_df = df.select(*pcols, payload_col)
+    computed = [entity[c] for c in sel] + (list(_GEO_COL_TYPES) if geo else [])
+    out_schema = _ddl(
+        [(c, in_df.schema[c].dataType.simpleString()) for c in pcols] + computed
+    )
+    names = pcols + [c for c, _, _ in computed]
+    entity_pcols = pcols[:1] if geo else pcols
+
+    def fn(batches):
+        for batch in batches:
+            per_row = [
+                _safe_parse(buf, want, on_error, bad_counter)
+                for buf in _iter_binary(batch.column(payload_col))
+            ]
+            parts = [(entity_pcols, _entity_arrays(per_row, sel))]
+            if geo:
+                parts.append((pcols, _geo_extent(per_row)))
+            for carried, part in parts:
+                if part is None:
+                    continue
+                repeats, arrays = part
+                idx = pa.array(np.repeat(np.arange(batch.num_rows, dtype=np.int64), repeats))
+                n = len(idx)
+                yield pa.RecordBatch.from_arrays(
+                    [batch.column(c).take(idx) if c in carried
+                     else pa.nulls(n, batch.schema.field(c).type) for c in pcols]
+                    + [arrays[c] if c in arrays else pa.nulls(n, at) for c, _, at in computed],
+                    names=names,
+                )
+
+    return in_df.mapInArrow(fn, out_schema)
+
+
+def decode_nodes(df: DataFrame, payload_col: str = "html", passthrough: tuple = ("url",), on_error: str = "raise", bad_counter=None) -> DataFrame:
+    """pages -> nodes(passthrough..., id, lat, lon, ilat, ilon, tags).
+
+    ilat/ilon are the reference's exact int32 quantization
+    (Helpers.cs:3-6, C# truncation toward zero).
+    """
+    return _decode(df, payload_col, passthrough, on_error, bad_counter, kinds={0},
+                   columns=("id", "lat", "lon", "ilat", "ilon", "tags"))
+
+
+def decode_ways(df: DataFrame, payload_col: str = "html", passthrough: tuple = ("url",), on_error: str = "raise", bad_counter=None) -> DataFrame:
+    """pages -> ways(passthrough..., id, refs, tags)."""
+    return _decode(df, payload_col, passthrough, on_error, bad_counter, kinds={1},
+                   columns=("id", "refs", "tags"))
+
+
+def decode_relations(df: DataFrame, payload_col: str = "html", passthrough: tuple = ("url",), on_error: str = "raise", bad_counter=None) -> DataFrame:
+    """pages -> relations(passthrough..., id, members, tags)."""
+    return _decode(df, payload_col, passthrough, on_error, bad_counter, kinds={2},
+                   columns=("id", "members", "tags"))
+
+
+def decode_entities(df: DataFrame, payload_col: str = "html", passthrough: tuple = ("url",), on_error: str = "raise", bad_counter=None, columns: tuple | None = None) -> DataFrame:
+    """ONE decode pass over the payloads emitting every entity kind in a
+    tall union schema: kind 0=node, 1=way, 2=relation; node columns null on
+    way rows and vice versa. Use when a pipeline consumes nodes AND ways
+    (e.g. the flagship join): persist this and filter by kind -- halves the
+    decode cost vs calling decode_nodes + decode_ways separately.
+
+    ``columns`` prunes the ARROW ASSEMBLY, not just the projection
+    (Catalyst cannot see inside the Python stage, so a downstream
+    ``.select`` alone still pays for coordinate quantization and the
+    refs/members builds): pass the subset of entity columns a consumer
+    needs (e.g. ``("kind", "tags")`` for tag statistics) and only those
+    arrays are built. Emitted values are identical to the full decode's
+    (pytest-pinned).
+    """
+    return _decode(df, payload_col, passthrough, on_error, bad_counter, columns=columns)
 
 
 def decode_entities_geo(
     df: DataFrame, payload_col: str = "html", on_error: str = "raise", bad_counter=None
 ) -> DataFrame:
-    """Fused decode (round 8; VERDICT r7 "fuse the double decode"): ONE
-    parse per payload emits BOTH the entity union rows of
-    ``decode_entities`` (kind 0/1/2) AND the page-local geo-extent rows of
-    ``decode_pages_geo`` as kind=3 rows -- the streaming pipeline
-    previously ran both decoders over the same ``html`` column, re-parsing
-    every payload (~35% extra ingest CPU at the 16x rehearsal).
+    """Fused decode: ONE parse per payload emits BOTH the entity union rows
+    of ``decode_entities`` (kind 0/1/2) AND one page-local geo-extent row
+    per page as kind=3 -- the streaming pipeline's bronze table, so its
+    pages_geo stage is a projection instead of a second parse of every
+    payload.
 
-    Output schema = every non-payload source column (geo rows carry them;
-    entity rows carry only ``url``) + the entity union columns + the geo
-    extent columns. kind=3 rows replicate ``decode_pages_geo`` exactly:
-    one row per page with >= 1 node, extent from the page's OWN nodes,
-    ``text`` passed through byte-identical; zero-node pages emit no geo
-    row (inner-join semantics). Entity rows have the geo columns null and
-    vice versa -- columnar nulls are ~free in the parquet sink.
+    Output schema = every non-payload source column, url first (geo rows
+    carry them; entity rows carry only ``url``) + the entity union columns
+    + the geo extent columns. kind=3 rows: one row per page with >= 1
+    node, extent from the page's OWN nodes, ``text`` passed through
+    byte-identical; zero-node pages emit no geo row (inner-join
+    semantics). Entity rows have the geo columns null and vice versa --
+    columnar nulls are ~free in the parquet sink.
     """
     if "url" not in df.columns:
         raise ValueError("decode_entities_geo needs a url column")
-    # url first so the entity batches' column order matches the schema
     pcols = ["url"] + [c for c in df.columns if c not in (payload_col, "url")]
-    in_df = df.select(*pcols, payload_col)
-    schema_fields = [in_df.schema[c] for c in pcols]
-    out_schema = (
-        ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in schema_fields)
-        + ", kind int, id bigint, lat double, lon double, ilat int, ilon int,"
-        + " tags map<string,string>, refs array<bigint>,"
-        + " members array<struct<member_type:int, ref:bigint, role:string>>,"
-        + " n_geo bigint, min_ilat int, max_ilat int, min_ilon int, max_ilon int"
-    )
-    geo_names = ["n_geo", "min_ilat", "max_ilat", "min_ilon", "max_ilon"]
-    extra_pcols = [c for c in pcols if c != "url"]
-
-    def fn(batches):
-        for batch in batches:
-            per_row = [
-                _safe_parse(buf, ("nodes", "ways", "relations"), on_error, bad_counter)
-                for buf in _iter_binary(batch.column(payload_col))
-            ]
-            assembled = _entity_arrays(batch, per_row, ["url"])
-            if assembled is not None:
-                arrays, names = assembled
-                n = len(arrays[0])
-                # entity rows: extra passthrough + geo columns are null
-                url_pos = names.index("url")
-                full, fnames = [arrays[url_pos]], ["url"]
-                for c in extra_pcols:
-                    full.append(pa.nulls(n, batch.column(c).type))
-                    fnames.append(c)
-                full += arrays[1:]
-                fnames += names[1:]
-                full += [pa.nulls(n, pa.int64())] + [pa.nulls(n, pa.int32())] * 4
-                fnames += geo_names
-                yield pa.RecordBatch.from_arrays(full, names=fnames)
-            # geo rows (kind=3), mirroring decode_pages_geo
-            counts = np.fromiter(
-                (len(p.nodes.ids) for p in per_row), dtype=np.int64, count=len(per_row)
-            )
-            keep = counts > 0
-            if not keep.any():
-                continue
-            n_geo, mn_la, mx_la, mn_lo, mx_lo = [], [], [], [], []
-            for p in (pr for pr, k in zip(per_row, keep) if k):
-                ila = quantize_np(p.nodes.lat)
-                ilo = quantize_np(p.nodes.lon)
-                n_geo.append(len(ila))
-                mn_la.append(ila.min())
-                mx_la.append(ila.max())
-                mn_lo.append(ilo.min())
-                mx_lo.append(ilo.max())
-            g = int(keep.sum())
-            garrays = _passthrough_take(batch, pcols, keep.astype(np.int64))
-            gnames = list(pcols)
-            garrays += [
-                pa.array(np.full(g, 3, np.int32), pa.int32()),           # kind
-                pa.nulls(g, pa.int64()),                                  # id
-                pa.nulls(g, pa.float64()), pa.nulls(g, pa.float64()),     # lat/lon
-                pa.nulls(g, pa.int32()), pa.nulls(g, pa.int32()),         # ilat/ilon
-                pa.nulls(g, _MAP_T),                                      # tags
-                pa.nulls(g, pa.list_(pa.int64())),                        # refs
-                pa.nulls(g, pa.list_(_MEMBER_T)),                         # members
-                pa.array(np.asarray(n_geo, np.int64), pa.int64()),
-                pa.array(np.asarray(mn_la, np.int32), pa.int32()),
-                pa.array(np.asarray(mx_la, np.int32), pa.int32()),
-                pa.array(np.asarray(mn_lo, np.int32), pa.int32()),
-                pa.array(np.asarray(mx_lo, np.int32), pa.int32()),
-            ]
-            gnames += ["kind", "id", "lat", "lon", "ilat", "ilon", "tags",
-                       "refs", "members"] + geo_names
-            yield pa.RecordBatch.from_arrays(garrays, names=gnames)
-
-    return in_df.mapInArrow(fn, out_schema)
-
-
-def _mask_list(arr: pa.ListArray, keep: np.ndarray) -> pa.ListArray:
-    """Null out list entries where keep is False (empty-vs-null fidelity
-    for the union schema)."""
-    if keep.all():
-        return arr
-    mask = pa.array(~keep)  # True where null
-    return pa.ListArray.from_arrays(
-        arr.offsets, arr.values, mask=mask
-    )
-
-
-def decode_ways(df: DataFrame, payload_col: str = "html", passthrough: tuple = ("url",), on_error: str = "raise", bad_counter=None) -> DataFrame:
-    pcols = list(passthrough)
-    in_df = df.select(*pcols, payload_col)
-    schema_fields = [in_df.schema[c] for c in pcols]
-    out_schema = (
-        ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in schema_fields)
-        + ", id bigint, refs array<bigint>, tags map<string,string>"
-    )
-
-    def fn(batches):
-        for batch in batches:
-            per_row = [
-                _safe_parse(buf, ("ways",), on_error, bad_counter)
-                for buf in _iter_binary(batch.column(payload_col))
-            ]
-            repeats = np.fromiter((len(p.ways.ids) for p in per_row), dtype=np.int64, count=len(per_row))
-            if repeats.sum() == 0:
-                continue
-            ids: list = []
-            refs_flat: list = []
-            ref_counts: list = []
-            tags: list = []
-            for p in per_row:
-                ids.extend(p.ways.ids)
-                for r in p.ways.refs:
-                    refs_flat.append(r)
-                    ref_counts.append(len(r))
-                tags.extend(p.ways.tags)
-            offsets = np.zeros(len(ids) + 1, dtype=np.int32)
-            np.cumsum(ref_counts, out=offsets[1:])
-            refs_arr = pa.ListArray.from_arrays(
-                pa.array(offsets, pa.int32()),
-                pa.array(np.concatenate(refs_flat) if refs_flat else np.empty(0, np.int64), pa.int64()),
-            )
-            arrays = _passthrough_take(batch, pcols, repeats)
-            arrays += [pa.array(ids, pa.int64()), refs_arr, _dict_map_array(tags)]
-            yield pa.RecordBatch.from_arrays(arrays, names=pcols + ["id", "refs", "tags"])
-
-    return in_df.mapInArrow(fn, out_schema)
-
-
-def decode_relations(df: DataFrame, payload_col: str = "html", passthrough: tuple = ("url",), on_error: str = "raise", bad_counter=None) -> DataFrame:
-    pcols = list(passthrough)
-    in_df = df.select(*pcols, payload_col)
-    schema_fields = [in_df.schema[c] for c in pcols]
-    out_schema = (
-        ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in schema_fields)
-        + ", id bigint, members array<struct<member_type:int, ref:bigint, role:string>>,"
-        + " tags map<string,string>"
-    )
-    member_t = pa.struct([("member_type", pa.int32()), ("ref", pa.int64()), ("role", pa.string())])
-
-    def fn(batches):
-        for batch in batches:
-            per_row = [
-                _safe_parse(buf, ("relations",), on_error, bad_counter)
-                for buf in _iter_binary(batch.column(payload_col))
-            ]
-            repeats = np.fromiter((len(p.relations.ids) for p in per_row), dtype=np.int64, count=len(per_row))
-            if repeats.sum() == 0:
-                continue
-            ids: list = []
-            members: list = []
-            tags: list = []
-            for p in per_row:
-                ids.extend(p.relations.ids)
-                members.extend(p.relations.members)
-                tags.extend(p.relations.tags)
-            mcounts = np.zeros(len(members) + 1, dtype=np.int32)
-            np.cumsum([len(m) for m in members], out=mcounts[1:])
-            flat = [m for ms in members for m in ms]
-            struct_arr = pa.array(
-                [{"member_type": t, "ref": r, "role": ro} for (t, r, ro) in flat],
-                type=member_t,
-            )
-            members_arr = pa.ListArray.from_arrays(pa.array(mcounts, pa.int32()), struct_arr)
-            arrays = _passthrough_take(batch, pcols, repeats)
-            arrays += [pa.array(ids, pa.int64()), members_arr, _dict_map_array(tags)]
-            yield pa.RecordBatch.from_arrays(arrays, names=pcols + ["id", "members", "tags"])
-
-    return in_df.mapInArrow(fn, out_schema)
+    return _decode(df, payload_col, pcols, on_error, bad_counter, geo=True)

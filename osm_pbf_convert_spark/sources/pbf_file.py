@@ -375,6 +375,7 @@ def pbf_block_frames(
     from pyspark.sql import functions as F
     from pyspark import TaskContext
 
+    from osm_pbf_convert_spark.sources.pbf import _ENTITY_COL_TYPES
     from osm_pbf_convert_spark.sources.pbf_encoder import (
         DenseNodesSpec,
         RelationSpec,
@@ -384,47 +385,21 @@ def pbf_block_frames(
         frame_blob,
     )
 
-    null_refs = None
+    # cast every input to the decoders' entity column types; the columns
+    # a kind does not carry are typed nulls
+    types = {c: t for c, t, _ in _ENTITY_COL_TYPES}
     frames = []
-    if nodes is not None:
+    for kind, src, own in ((0, nodes, ("lat", "lon")), (1, ways, ("refs",)),
+                           (2, relations, ("members",))):
+        if src is None:
+            continue
         frames.append(
-            nodes.select(
-                F.lit(0).alias("kind"), F.col("id").cast("long"),
-                F.col("lat").cast("double"), F.col("lon").cast("double"),
-                F.lit(None).cast("array<bigint>").alias("refs"),
-                F.lit(None).cast(
-                    "array<struct<member_type:int,ref:bigint,role:string>>"
-                ).alias("members"),
-                (F.col("tags") if "tags" in nodes.columns else F.lit(None))
-                .cast("map<string,string>").alias("tags"),
-            )
-        )
-    if ways is not None:
-        frames.append(
-            ways.select(
-                F.lit(1).alias("kind"), F.col("id").cast("long"),
-                F.lit(None).cast("double").alias("lat"),
-                F.lit(None).cast("double").alias("lon"),
-                F.col("refs").cast("array<bigint>"),
-                F.lit(None).cast(
-                    "array<struct<member_type:int,ref:bigint,role:string>>"
-                ).alias("members"),
-                (F.col("tags") if "tags" in ways.columns else F.lit(None))
-                .cast("map<string,string>").alias("tags"),
-            )
-        )
-    if relations is not None:
-        frames.append(
-            relations.select(
-                F.lit(2).alias("kind"), F.col("id").cast("long"),
-                F.lit(None).cast("double").alias("lat"),
-                F.lit(None).cast("double").alias("lon"),
-                F.lit(None).cast("array<bigint>").alias("refs"),
-                F.col("members").cast(
-                    "array<struct<member_type:int,ref:bigint,role:string>>"
-                ),
-                (F.col("tags") if "tags" in relations.columns else F.lit(None))
-                .cast("map<string,string>").alias("tags"),
+            src.select(
+                F.lit(kind).alias("kind"), F.col("id").cast(types["id"]),
+                *[(F.col(c) if c in own else F.lit(None)).cast(types[c]).alias(c)
+                  for c in ("lat", "lon", "refs", "members")],
+                (F.col("tags") if "tags" in src.columns else F.lit(None))
+                .cast(types["tags"]).alias("tags"),
             )
         )
     if not frames:

@@ -6,7 +6,7 @@ The reference processes one extract per invocation
 regional extract drops (Geofabrik-style dailies) and wants them decoded
 as they land. Structured Streaming's ``binaryFile`` source provides
 exactly-once per-file tracking (checkpointed file log), and the
-existing ``sources.pbf`` mapInArrow decoders run UNCHANGED on the
+``sources.pbf`` decoders (one mapInArrow loop) run UNCHANGED on the
 streaming DataFrame -- the whole batch decode stack is reused, so the
 batch DuckDB oracles validate the streaming semantics and the pytest
 checks stream output == batch output under ``availableNow`` replay.
@@ -54,14 +54,3 @@ def stream_decode_nodes(
         payload_col="payload", on_error=on_error,
     )
 
-
-def stream_decode_entities(
-    spark: SparkSession, watch_dir: str, glob: str = "*.osm.pbf",
-    on_error: str = "skip",
-) -> DataFrame:
-    from osm_pbf_convert_spark.sources.pbf import decode_entities
-
-    return decode_entities(
-        pbf_extract_stream(spark, watch_dir, glob),
-        payload_col="payload", on_error=on_error,
-    )

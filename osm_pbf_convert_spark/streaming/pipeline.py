@@ -68,6 +68,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from osm_pbf_convert_spark.operators.tiling import pyramid_from_finest
+from osm_pbf_convert_spark.sources.pbf import _ENTITY_COL_TYPES, _GEO_COL_TYPES, _ddl
 from osm_pbf_convert_spark.streaming.dedup import (
     configure_state_store,
     stream_minhash_pairs,
@@ -75,29 +76,18 @@ from osm_pbf_convert_spark.streaming.dedup import (
 
 # decode_entities output with passthrough=("url",): the schema the tiles
 # stage uses to re-read the entities sink as a stream (file sources do
-# not infer schemas). Extract mode writes this exact shape.
-ENTITY_SCHEMA = (
-    "url string, kind int, id bigint, lat double, lon double, ilat int,"
-    " ilon int, tags map<string,string>, refs array<bigint>,"
-    " members array<struct<member_type:int, ref:bigint, role:string>>"
-)
+# not infer schemas). Extract mode writes this exact shape. The entity
+# and geo column types come from the decoder's own tables.
+ENTITY_SCHEMA = _ddl((("url", "string"),) + _ENTITY_COL_TYPES)
 
 PAGES_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
 )
 
-# pages mode (round 8, fused decode): the bronze table additionally holds
-# kind=3 page-geo rows (decode_entities_geo), so every payload is parsed
-# ONCE -- the old pipeline ran decode_pages_geo as a second full parse of
-# the same html column (~35% extra ingest CPU at the 16x rehearsal).
-# Entity consumers filter kind <= 2; the pages_geo stage is now a
-# stateless kind==3 projection of this table.
-_ENTITY_COLS = (
-    "kind int, id bigint, lat double, lon double, ilat int,"
-    " ilon int, tags map<string,string>, refs array<bigint>,"
-    " members array<struct<member_type:int, ref:bigint, role:string>>"
-)
-_GEO_COLS = "n_geo bigint, min_ilat int, max_ilat int, min_ilon int, max_ilon int"
+# pages mode: the bronze table is decode_entities_geo's output, the
+# entity rows plus kind=3 page-geo rows, so every payload is parsed ONCE.
+# Entity consumers filter kind <= 2; the pages_geo stage is a stateless
+# kind==3 projection of this table.
 
 
 def fused_entity_schema(source: DataFrame, payload_col: str = "html"):
@@ -106,15 +96,13 @@ def fused_entity_schema(source: DataFrame, payload_col: str = "html"):
     url-first column order."""
     fields = {f.name: f for f in source.schema.fields if f.name != payload_col}
     ordered = ["url"] + [n for n in fields if n != "url"]
-    pass_cols = ", ".join(
-        f"{n} {fields[n].dataType.simpleString()}" for n in ordered
-    )
-    return f"{pass_cols}, {_ENTITY_COLS}, {_GEO_COLS}", ordered
+    pass_fields = tuple((n, fields[n].dataType.simpleString()) for n in ordered)
+    return _ddl(pass_fields + _ENTITY_COL_TYPES + _GEO_COL_TYPES), ordered
 
 
-FUSED_ENTITY_SCHEMA = (
-    "url string, warc_ts timestamp, text string, lang string,"
-    f" {_ENTITY_COLS}, {_GEO_COLS}"
+FUSED_ENTITY_SCHEMA = _ddl(
+    (("url", "string"), ("warc_ts", "timestamp"), ("text", "string"), ("lang", "string"))
+    + _ENTITY_COL_TYPES + _GEO_COL_TYPES
 )
 
 
@@ -510,16 +498,15 @@ def pages_geo_query(
     pass_cols: tuple = ("url", "warc_ts", "text", "lang"),
 ):
     """Start the pages_geo query: project the fused bronze table's kind=3
-    rows (page-local geo extents computed inside the ONE decode pass --
-    round 8; previously this stage re-parsed every html payload with
-    ``decode_pages_geo``). Reads ``{out}/entities`` as a stream, so the
-    sink->source handoff stays exactly-once; text passes through
+    rows (page-local geo extents computed inside the ONE decode pass, so
+    no payload is parsed twice). Reads ``{out}/entities`` as a stream, so
+    the sink->source handoff stays exactly-once; text passes through
     byte-identical."""
     geo = (
         spark.readStream.schema(entity_schema)
         .parquet(f"{out}/entities")
         .filter(F.col("kind") == 3)
-        .select(*pass_cols, "n_geo", "min_ilat", "max_ilat", "min_ilon", "max_ilon")
+        .select(*pass_cols, *(c for c, _, _ in _GEO_COL_TYPES))
     )
     w = (
         geo.writeStream.format("parquet")

@@ -165,6 +165,43 @@ class TestDecodeEntities:
         assert rows(sub) == rows(full)
 
 
+_MEMBERS = "array<struct<member_type:int,ref:bigint,role:string>>"
+_ENTITY = (
+    "kind:int,id:bigint,lat:double,lon:double,ilat:int,ilon:int,"
+    f"tags:map<string,string>,refs:array<bigint>,members:{_MEMBERS}"
+)
+
+
+@pytest.mark.spark
+@pytest.mark.parametrize("decoder, kwargs, wide, expected", [
+    ("decode_nodes", {}, False,
+     "struct<url:string,id:bigint,lat:double,lon:double,ilat:int,ilon:int,"
+     "tags:map<string,string>>"),
+    ("decode_ways", {}, False,
+     "struct<url:string,id:bigint,refs:array<bigint>,tags:map<string,string>>"),
+    ("decode_relations", {}, False,
+     f"struct<url:string,id:bigint,members:{_MEMBERS},tags:map<string,string>>"),
+    ("decode_entities", {}, False, f"struct<url:string,{_ENTITY}>"),
+    ("decode_entities", {"columns": ("kind", "id")}, False,
+     "struct<url:string,kind:int,id:bigint>"),
+    ("decode_entities_geo", {}, True,
+     f"struct<url:string,warc_ts:timestamp,text:string,lang:string,{_ENTITY},"
+     "n_geo:bigint,min_ilat:int,max_ilat:int,min_ilon:int,max_ilon:int>"),
+])
+def test_decoder_output_schema_pinned(spark, decoder, kwargs, wide, expected):
+    """Every public decoder's output schema, pinned as a string: the
+    decoders share one loop and one column table, and none of them may
+    change its schema through it."""
+    from osm_pbf_convert_spark.sources import pbf
+
+    cols = {"url": ["u"], "html": [b""]}
+    if wide:  # the pages layout; the geo decode passes every column through
+        cols = {"url": ["u"], "warc_ts": pd.to_datetime(["2024-01-01"]),
+                "html": [b""], "text": ["t"], "lang": ["en"]}
+    df = getattr(pbf, decoder)(spark.createDataFrame(pd.DataFrame(cols)), **kwargs)
+    assert df.schema.simpleString() == expected
+
+
 @pytest.mark.spark
 class TestCorruptPayloads:
     def test_default_raises_like_reference(self, spark):

@@ -159,6 +159,7 @@ class TestPbfWriteSink:
         circle: ids, bit-exact coordinates, tags, way refs, relation
         members all survive (multiple blocks per kind, compressed)."""
         from osm_pbf_convert_spark.sources.pbf_file import (
+            read_pbf_entities,
             read_pbf_ways,
             read_pbf_relations,
             write_pbf_file,
@@ -194,6 +195,13 @@ class TestPbfWriteSink:
         ra = {r["id"]: [tuple(m) for m in r["members"]] for r in r0.collect()}
         rb = {r["id"]: [tuple(m) for m in r["members"]] for r in r1.collect()}
         assert ra == rb
+
+        # the single-pass entity reader sees the same entities, kind by kind
+        for src, per_kind in ((path, (n0, w0, r0)), (out, (n1, w1, r1))):
+            ents = read_pbf_entities(spark, src).select("kind", "id").collect()
+            for kind, df in enumerate(per_kind):
+                got = sorted(r["id"] for r in ents if r["kind"] == kind)
+                assert got == sorted(r["id"] for r in df.select("id").collect())
 
     def test_written_file_has_header_and_ordering(self, spark, tmp_path):
         from osm_pbf_convert_spark.sources.pbf_file import write_pbf_file

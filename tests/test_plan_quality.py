@@ -93,16 +93,20 @@ class TestPlanShape:
         assert "PushedFilters: [IsNotNull(l_orderkey), EqualTo(l_orderkey,42)" in plan
         assert "ReadSchema: struct<l_orderkey:bigint,l_quantity:double>" in plan
 
-    def test_decode_prunes_page_columns(self, spark):
-        """decode_nodes over a wide pages table must only read url+html."""
+    # decode_entities_geo passes every page column through by contract
+    @pytest.mark.parametrize(
+        "decoder", ["decode_nodes", "decode_ways", "decode_relations", "decode_entities"]
+    )
+    def test_decode_prunes_page_columns(self, spark, decoder):
+        """A decoder over a wide pages table must only read url+html."""
         import pandas as pd
 
-        from osm_pbf_convert_spark.sources.pbf import decode_nodes
+        from osm_pbf_convert_spark.sources import pbf
 
         pages = spark.createDataFrame(
             pd.DataFrame({"url": ["u"], "html": [b""], "text": ["t" * 100], "lang": ["en"]})
         )
-        plan = decode_nodes(pages)._jdf.queryExecution().optimizedPlan().toString()
+        plan = getattr(pbf, decoder)(pages)._jdf.queryExecution().optimizedPlan().toString()
         assert "text" not in plan and "lang" not in plan
 
     def test_tag_dict_broadcasts(self, spark):
