@@ -47,6 +47,11 @@ def _spark(app: str) -> SparkSession:
         SparkSession.builder.appName(f"osm-pbf-convert-spark-{app}")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # verbs persist aggregates they read twice (blob-index's per-blob
+        # ids); without this, AQE may not coalesce a cached plan's shuffle,
+        # so the cache keeps spark.sql.shuffle.partitions (200) partitions
+        # and every join against it runs 200-task stages on a few rows
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .getOrCreate()
     )
 

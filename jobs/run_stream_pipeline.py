@@ -49,12 +49,6 @@ def main():
                          "None = exact whole-corpus semantics)")
     ap.add_argument("--timeout", type=int, default=3600,
                     help="availableNow drain bound per stage, seconds")
-    ap.add_argument("--tile-anchor", type=int, default=None,
-                    help="incremental tile merge: partition the finest "
-                         "table and pyramid by the zoom-N Morton prefix "
-                         "and rewrite only the regions each micro-batch "
-                         "touched (per-batch bytes proportional to changed "
-                         "tiles; choose once per --out dir)")
     args = ap.parse_args()
     if bool(args.pages_stream) == bool(args.watch):
         ap.error("exactly one of --pages-stream / --watch is required")
@@ -83,7 +77,6 @@ def main():
         available_now=not args.continuous,
         trigger_seconds=args.trigger_seconds,
         timeout=args.timeout,
-        tile_anchor_z=args.tile_anchor,
     )
     if args.continuous:
         print("stream pipeline running: " + ", ".join(n for n, _ in result))

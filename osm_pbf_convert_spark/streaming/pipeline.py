@@ -31,8 +31,11 @@ streaming sink's transaction log:
    tile aggregate, never the node stream). The merge is idempotent
    (cumulative counts keyed by tile), so foreachBatch's at-least-once
    retry contract still yields exactly-once table contents. With plain
-   parquet the upsert rewrites the finest table (bounded by tile count);
-   on a lakehouse deployment the same fn is one Delta/Iceberg MERGE.
+   parquet the upsert rewrites the whole finest table (bounded by tile
+   count) and swaps it in by write-then-rename, so the committed table
+   is always the old or the new one, never a blend
+   (``merge_finest_batch``); on a lakehouse deployment the same fn is
+   one Delta/Iceberg MERGE.
 3. **pages_geo** (pages mode only): a stateless kind==3 projection of
    the fused bronze table (the extent was computed PAGE-LOCALLY inside
    the decode pass -- a page's nodes come only from its own payload, so
@@ -70,6 +73,7 @@ from pyspark.sql import functions as F
 from osm_pbf_convert_spark.operators.tiling import pyramid_from_finest
 from osm_pbf_convert_spark.sources.pbf import _ENTITY_COL_TYPES, _GEO_COL_TYPES, _ddl
 from osm_pbf_convert_spark.streaming.dedup import (
+    PAIR_SCHEMA,
     configure_state_store,
     stream_minhash_pairs,
 )
@@ -194,21 +198,26 @@ def merge_finest_batch(
     rows are cumulative counts keyed by tile, so re-merging the same
     batch produces the identical table.
 
-    Raises ``ValueError`` when ``finest_path`` holds the incremental
-    ``pz=`` layout: merging over it would drop that state.
+    Raises ``ValueError`` when ``finest_path`` exists uncommitted and no
+    committed ``tmp`` is there to recover from. The swap never leaves
+    that state (a crashed delete always leaves a committed ``tmp``; the
+    first batch has no finest directory yet), so the directory was
+    written by something else -- e.g. an older partitioned layout --
+    and overwriting it would silently drop its state.
     """
     fs, _ = _hadoop_fs(sess, finest_path)
     jvm = sess.sparkContext._jvm
     hpath = jvm.org.apache.hadoop.fs.Path
-    if _pz_dirs(fs, jvm, finest_path):
+    finest_ok = _committed(fs, sess, finest_path)
+    tmp_ok = _committed(fs, sess, tmp_path)
+    if not finest_ok and not tmp_ok and fs.exists(hpath(finest_path)):
         raise ValueError(
-            f"tile merge: {finest_path} holds the incremental pz= layout; "
-            "use merge_finest_batch_incremental on it"
+            f"tile merge: {finest_path} exists but is not a committed "
+            "finest table (no _SUCCESS, no committed tmp to recover from)"
         )
     if not updated.take(1):
         return
-    finest_ok = _committed(fs, sess, finest_path)
-    if not finest_ok and _committed(fs, sess, tmp_path):
+    if not finest_ok and tmp_ok:
         # crashed mid-swap: tmp IS the committed latest state -- finish
         # the rename before merging this batch on top of it
         if fs.exists(hpath(finest_path)):
@@ -236,202 +245,6 @@ def merge_finest_batch(
     ).write.mode("overwrite").parquet(tiles_path)
 
 
-def _pz_dirs(fs, jvm, root: str) -> dict:
-    """``{pz value: hadoop Path}`` of a table root's partition dirs."""
-    hpath = jvm.org.apache.hadoop.fs.Path
-    p = hpath(root)
-    if not fs.exists(p):
-        return {}
-    out = {}
-    for st in fs.listStatus(p):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("pz="):
-            out[int(name[3:])] = st.getPath()
-    return out
-
-
-def _recover_partition_swaps(fs, jvm, table_root: str, tmp_root: str) -> None:
-    """Complete any partition swap a crash interrupted: a COMMITTED tmp
-    (root ``_SUCCESS``) whose ``pz=k`` dir is absent from the table root
-    is the authoritative latest state for that partition (the old dir was
-    already moved aside; renames are per-dir atomic, so a table partition
-    dir, when present, is always complete)."""
-    hpath = jvm.org.apache.hadoop.fs.Path
-    if not fs.exists(hpath(f"{tmp_root}/_SUCCESS")):
-        return
-    fs.mkdirs(hpath(table_root))
-    present = _pz_dirs(fs, jvm, table_root)
-    for pz, path in _pz_dirs(fs, jvm, tmp_root).items():
-        if pz not in present:
-            if not fs.rename(path, hpath(f"{table_root}/pz={pz}")):
-                raise IOError(
-                    f"tile merge: swap recovery rename failed for "
-                    f"{table_root}/pz={pz}"
-                )
-
-
-def _swap_partitions(fs, jvm, table_root: str, tmp_root: str, trash_root: str,
-                     pzs) -> int:
-    """Swap the listed ``pz`` partition dirs from tmp into the table:
-    old dir moves aside to trash (atomic rename -- never a recursive
-    delete inside the table root, which a crash could tear), new dir
-    renames in (atomic). Returns bytes swapped in. A crash between the
-    two renames leaves the committed tmp holding that partition's latest
-    state -- ``_recover_partition_swaps`` completes it on retry."""
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs.mkdirs(hpath(table_root))
-    fs.mkdirs(hpath(trash_root))
-    nbytes = 0
-    for pz in pzs:
-        src = hpath(f"{tmp_root}/pz={pz}")
-        if not fs.exists(src):
-            continue  # zero rows planned for this partition in this batch
-        nbytes += fs.getContentSummary(src).getLength()
-        dst = hpath(f"{table_root}/pz={pz}")
-        if fs.exists(dst):
-            aside = hpath(f"{trash_root}/pz={pz}")
-            if fs.exists(aside):
-                fs.delete(aside, True)
-            if not fs.rename(dst, aside):
-                raise IOError(f"tile merge: move-aside failed for {dst}")
-        if not fs.rename(src, dst):
-            raise IOError(f"tile merge: rename {src} -> {dst} failed")
-    return nbytes
-
-
-def merge_finest_batch_incremental(
-    sess: SparkSession,
-    updated: DataFrame,
-    finest_path: str,
-    tiles_path: str,
-    max_z: int,
-    min_z: int,
-    anchor_z: int,
-    stats: list | None = None,
-) -> None:
-    """Incremental flavor of ``merge_finest_batch`` (round 8; VERDICT r7
-    item 3): per-batch WORK AND BYTES WRITTEN are proportional to the
-    tiles the batch actually changed, not to the accumulated table size.
-
-    Both tables are laid out as parquet partition dirs keyed by the
-    changed tile's ancestor at ``anchor_z`` (``pz = tile >> 2*(max_z -
-    anchor_z)``, <= 4^anchor_z dirs):
-
-    - **finest**: only partitions containing a changed tile are merged
-      (partition-pruned read) and rewritten; untouched regions are not
-      read, not written.
-    - **pyramid**: a tile at zoom z >= anchor_z descends from exactly one
-      ``pz`` region, so the changed partitions' [anchor_z..max_z] levels
-      are re-derived from just the merged finest partitions; the coarse
-      head [min_z..anchor_z) (< 4^anchor_z rows total) is re-aggregated
-      from the anchor level and lives in the sentinel dir ``pz=-1``.
-
-    Crash safety is the same committed-or-old contract as the full-table
-    swap, at partition granularity: the batch's output commits in tmp as
-    ONE write (root ``_SUCCESS``), each partition then swaps in by
-    atomic renames (old aside to trash, new in); a crash mid-swap leaves
-    every partition either old or new, never torn, and
-    ``_recover_partition_swaps`` completes pending renames before the
-    retry re-merges. Per-tile idempotence (update-mode rows are
-    CUMULATIVE counts) makes re-merging on a partially swapped table
-    yield the identical result. Raises ``ValueError`` when
-    ``finest_path`` holds the full-table layout (a root ``_SUCCESS``):
-    the partition swap would leave that table's files beside the new
-    ``pz=`` dirs.
-    """
-    fs, _ = _hadoop_fs(sess, finest_path)
-    jvm = sess.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    if _committed(fs, sess, finest_path):
-        raise ValueError(
-            f"tile merge: {finest_path} holds the full-table layout; "
-            "use merge_finest_batch on it"
-        )
-    if not updated.take(1):
-        return
-    eff_anchor = min(max(anchor_z, min_z), max_z)
-    finest_tmp = f"{finest_path}__tmp"
-    tiles_tmp = f"{tiles_path}__tmp"
-    finest_trash = f"{finest_path}__trash"
-    tiles_trash = f"{tiles_path}__trash"
-    # 1. finish anything a crashed swap left pending, then clear debris
-    _recover_partition_swaps(fs, jvm, finest_path, finest_tmp)
-    _recover_partition_swaps(fs, jvm, tiles_path, tiles_tmp)
-    for trash in (finest_trash, tiles_trash):
-        fs.delete(hpath(trash), True)
-
-    shift = 2 * (max_z - eff_anchor)
-    upd = updated.withColumn("pz", F.shiftrightunsigned("tile", shift))
-    changed = sorted(r["pz"] for r in upd.select("pz").distinct().collect())
-    # 2. merge ONLY the changed partitions of the finest table
-    existing = _pz_dirs(fs, jvm, finest_path)
-    read_dirs = [str(existing[pz]) for pz in changed if pz in existing]
-    if read_dirs:
-        old = sess.read.option("basePath", finest_path).parquet(*read_dirs)
-        merged = (
-            old.join(upd.select("tile"), "tile", "left_anti")
-            .select("tile", "cnt", "pz")
-            .unionByName(upd.select("tile", "cnt", "pz"))
-        )
-    else:
-        merged = upd.select("tile", "cnt", "pz")
-    # one shuffle task per changed region (capped at the core count) ->
-    # exactly one data file per partition dir, no 200-task micro-stages
-    n_tasks = max(1, min(len(changed), sess.sparkContext.defaultParallelism))
-    merged.repartition(n_tasks, "pz").write.partitionBy("pz").mode(
-        "overwrite"
-    ).parquet(finest_tmp)
-    nbytes = _swap_partitions(fs, jvm, finest_path, finest_tmp, finest_trash, changed)
-    sess.catalog.refreshByPath(finest_path)
-    # 3. re-derive the pyramid for the changed regions only: tail levels
-    # [eff_anchor..max_z] from the just-committed finest partitions ...
-    changed_dirs = [f"{finest_path}/pz={pz}" for pz in changed]
-    mc = (
-        sess.read.option("basePath", finest_path)
-        .parquet(*changed_dirs)
-        .select("tile", "cnt")
-    )
-    tail = pyramid_from_finest(mc, max_z, eff_anchor).withColumn(
-        "pz", F.expr(f"shiftrightunsigned(tile, 2 * (z - {eff_anchor}))")
-    )
-    swap_pzs = list(changed)
-    out_df = tail
-    if min_z < eff_anchor:
-        # ... plus the coarse head [min_z..eff_anchor), re-aggregated from
-        # the GLOBAL anchor level (changed regions from the new tail,
-        # unchanged regions from the committed pyramid; < 4^anchor rows)
-        anchor_parts = [tail.filter(F.col("z") == eff_anchor).select("tile", "cnt")]
-        unchanged_dirs = [
-            str(p)
-            for pz, p in _pz_dirs(fs, jvm, tiles_path).items()
-            if pz not in changed and pz != -1
-        ]
-        if unchanged_dirs:
-            anchor_parts.append(
-                sess.read.option("basePath", tiles_path)
-                .parquet(*unchanged_dirs)
-                .filter(F.col("z") == eff_anchor)
-                .select("tile", "cnt")
-            )
-        anchor_level = anchor_parts[0]
-        for part in anchor_parts[1:]:
-            anchor_level = anchor_level.unionByName(part)
-        head = (
-            pyramid_from_finest(anchor_level, eff_anchor, min_z)
-            .filter(F.col("z") < eff_anchor)
-            .withColumn("pz", F.lit(-1))
-        )
-        out_df = tail.unionByName(head)
-        swap_pzs.append(-1)
-    out_df.repartition(n_tasks, "pz").write.partitionBy("pz").mode(
-        "overwrite"
-    ).parquet(tiles_tmp)
-    nbytes += _swap_partitions(fs, jvm, tiles_path, tiles_tmp, tiles_trash, swap_pzs)
-    sess.catalog.refreshByPath(tiles_path)
-    if stats is not None:
-        stats.append({"changed_pz": len(changed), "bytes_written": nbytes})
-
-
 def tile_rollup_query(
     spark: SparkSession,
     out: str,
@@ -441,14 +254,10 @@ def tile_rollup_query(
     available_now: bool = True,
     trigger_seconds: int = 30,
     entity_schema: str | None = None,
-    anchor_z: int | None = None,
-    merge_stats: list | None = None,
 ):
     """Start the silver tile query: entities stream -> running finest-tile
-    counts -> merged finest table + derived pyramid (crash-safe merge:
-    ``merge_finest_batch``; with ``anchor_z`` set, the INCREMENTAL
-    partition-pruned merge ``merge_finest_batch_incremental`` -- per-batch
-    bytes written proportional to changed tiles, not table size)."""
+    counts -> merged finest table + derived pyramid, each micro-batch
+    through the crash-safe full-table swap ``merge_finest_batch``."""
     from osm_pbf_convert_spark.functions.cells import morton_cell_col, tile_col
 
     nodes = (
@@ -465,17 +274,10 @@ def tile_rollup_query(
     tmp_path = f"{out}/_tiles_finest_tmp"
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        if anchor_z is not None:
-            merge_finest_batch_incremental(
-                batch_df.sparkSession, batch_df.select("tile", "cnt"),
-                finest_path, tiles_path, max_z, min_z, anchor_z,
-                stats=merge_stats,
-            )
-        else:
-            merge_finest_batch(
-                batch_df.sparkSession, batch_df.select("tile", "cnt"),
-                finest_path, tmp_path, tiles_path, max_z, min_z,
-            )
+        merge_finest_batch(
+            batch_df.sparkSession, batch_df.select("tile", "cnt"),
+            finest_path, tmp_path, tiles_path, max_z, min_z,
+        )
 
     w = (
         finest.writeStream.foreachBatch(merge)
@@ -583,18 +385,10 @@ def run_streaming_pipeline(
     trigger_seconds: int = 30,
     timeout: int = 600,
     source_options: dict | None = None,
-    tile_anchor_z: int | None = None,
-    merge_stats: list | None = None,
 ):
     """Run the composed pipeline. Exactly one of ``pages_dir`` (crawl
     pages parquet stream; enables the dedup stage) / ``watch_dir``
     (``.osm.pbf`` extract drops; no text, so no dedup stage).
-
-    ``tile_anchor_z`` switches the tile merge to the incremental
-    partition-pruned layout (``merge_finest_batch_incremental``): per
-    micro-batch, only the <= 4^anchor_z coarse regions a batch touched
-    are read and rewritten. Choose it once per ``out`` dir (the table
-    layouts differ).
 
     ``available_now=True`` drains each stage sequentially and returns a
     summary dict -- the replay mode (idempotently resumable: re-running
@@ -620,7 +414,6 @@ def run_streaming_pipeline(
 
     prev_provider = configure_state_store(spark, "rocksdb")
     stage_walls: dict[str, float] = {}
-    merge_stats = [] if merge_stats is None else merge_stats
     try:
         queries = []
         t0 = time.time()
@@ -637,8 +430,7 @@ def run_streaming_pipeline(
         q2 = tile_rollup_query(
             spark, out, checkpoint, max_z=max_z, min_z=min_z,
             available_now=available_now, trigger_seconds=trigger_seconds,
-            entity_schema=entity_schema, anchor_z=tile_anchor_z,
-            merge_stats=merge_stats,
+            entity_schema=entity_schema,
         )
         queries.append(("tiles", q2))
         if available_now:
@@ -681,31 +473,27 @@ def run_streaming_pipeline(
 
     summary = {"out": out, "stages": [n for n, _ in queries],
                "stage_walls": stage_walls}
-    if merge_stats:
-        summary["tile_merge"] = {
-            "batches": len(merge_stats),
-            "changed_pz": [s["changed_pz"] for s in merge_stats],
-            "bytes_written": [s["bytes_written"] for s in merge_stats],
-        }
-    try:
-        # fused bronze (pages mode) holds kind=3 geo rows too: count only
-        # the entity rows, matching the batch decode
-        summary["n_entities"] = (
-            spark.read.parquet(f"{out}/entities").filter(F.col("kind") <= 2).count()
-        )
-        summary["n_tile_rows"] = spark.read.parquet(f"{out}/tiles").count()
-    except Exception:
-        summary["n_entities"] = 0
-        summary["n_tile_rows"] = 0
+    # each sink is read with the schema its query writes, so an empty sink
+    # counts 0 and any other read error propagates; the fused bronze
+    # (pages mode) holds kind=3 geo rows too: count only the entity rows,
+    # matching the batch decode
+    entities = spark.read.schema(entity_schema).parquet(f"{out}/entities")
+    summary["n_entities"] = entities.filter(F.col("kind") <= 2).count()
+    # the tile tables appear with the first merged batch
+    fs, _ = _hadoop_fs(spark, out)
+    summary["n_tile_rows"] = (
+        spark.read.parquet(f"{out}/tiles").count()
+        if _committed(fs, spark, f"{out}/tiles") else 0
+    )
     if pages_dir:
-        try:
-            summary["n_pages_geo"] = spark.read.parquet(f"{out}/pages_geo").count()
-        except Exception:
-            summary["n_pages_geo"] = 0
-        try:
-            summary["n_dup_pairs_distinct"] = (
-                spark.read.parquet(f"{out}/dup_pairs").select("a", "b").distinct().count()
-            )
-        except Exception:
-            summary["n_dup_pairs_distinct"] = 0
+        geo_schema = entities.select(
+            *pass_cols, *(c for c, _, _ in _GEO_COL_TYPES)
+        ).schema
+        summary["n_pages_geo"] = (
+            spark.read.schema(geo_schema).parquet(f"{out}/pages_geo").count()
+        )
+        summary["n_dup_pairs_distinct"] = (
+            spark.read.schema(PAIR_SCHEMA).parquet(f"{out}/dup_pairs")
+            .select("a", "b").distinct().count()
+        )
     return summary

@@ -27,10 +27,6 @@ class TestNoSlowPath:
         - dedup._hyperplane_sign_matrix: planes x dim +-1 normals
           (~1 KB at the defaults), literalized once for the Arrow
           bucketing pass;
-        - pipeline.merge_finest_batch_incremental: the DISTINCT changed
-          coarse regions of a micro-batch (<= 4^anchor_z ints, 256 at
-          the default anchor) -- the partition-pruning key list the
-          driver needs to know WHICH dirs to swap; never data rows;
         - checkpoint.CheckpointTable.completed_ids and
           checkpoint.run_with_checkpoint: a job's committed partition_ids
           and one batch's (partition_id, count) lineage rows -- at most
@@ -43,7 +39,7 @@ class TestNoSlowPath:
         leaves the JVM) deciding whether a tiny scan must be fanned out
         before a per-row-heavy stage."""
         collect_allowed = {"rel_store.py": 1, "tiling.py": 1, "dedup.py": 1,
-                           "pipeline.py": 1, "checkpoint.py": 2}
+                           "checkpoint.py": 2}
         rdd_allowed = {"partitioning.py": 1}
         bad = []
         for root, _, files in os.walk(PKG):

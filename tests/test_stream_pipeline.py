@@ -152,6 +152,19 @@ class TestStreamPipeline:
         assert summary2["n_entities"] == before
         assert ents() == before
 
+    def test_empty_landing_counts_zero(self, spark, tmp_path):
+        """Every summary count reads its sink with the schema the stage
+        writes, so a drain over nothing reports zeros with no read error
+        to swallow."""
+        landing = tmp_path / "landing"
+        landing.mkdir()
+        summary = run_streaming_pipeline(
+            spark, out=str(tmp_path / "out"), checkpoint=str(tmp_path / "ckpt"),
+            pages_dir=str(landing), max_z=MAX_Z, lsh=LSH, timeout=300,
+        )
+        counts = ("n_entities", "n_tile_rows", "n_pages_geo", "n_dup_pairs_distinct")
+        assert {k: summary[k] for k in counts} == dict.fromkeys(counts, 0)
+
 
 @pytest.mark.spark
 class TestStreamPipelineExtracts:
@@ -192,166 +205,6 @@ class TestStreamPipelineExtracts:
 
 
 @pytest.mark.spark
-class TestStreamPipelineIncrementalTiles:
-    def test_extract_mode_incremental(self, spark, sf_dir, tmp_path):
-        """The composed pipeline with ``tile_anchor_z`` set must land the
-        identical pyramid through the partition-pruned merge, and the
-        summary must report the per-batch changed-region/bytes stats."""
-        import shutil
-
-        from osm_pbf_convert_spark.queries import _pbf_file
-        from osm_pbf_convert_spark.sources.pbf_file import pbf_blob_frames
-
-        watch = tmp_path / "drops"
-        watch.mkdir()
-        src = _pbf_file(spark, sf_dir)
-        shutil.copy(src, watch / "extract.osm.pbf")
-        out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-        summary = run_streaming_pipeline(
-            spark, out=out, checkpoint=ckpt, watch_dir=str(watch),
-            max_z=MAX_Z, timeout=300, tile_anchor_z=2,
-        )
-        batch = decode_entities(
-            pbf_blob_frames(spark, src).select("url", F.col("payload").alias("html"))
-        )
-        want = {
-            (r["z"], r["tile"], r["cnt"])
-            for r in tile_pyramid(
-                batch.filter(F.col("kind") == 0), max_z=MAX_Z, min_z=0
-            ).collect()
-        }
-        got = {
-            (r["z"], r["tile"], r["cnt"])
-            for r in spark.read.parquet(f"{out}/tiles")
-            .select("z", "tile", "cnt").collect()
-        }
-        assert got == want
-        tm = summary["tile_merge"]
-        assert tm["batches"] >= 1
-        assert all(b > 0 for b in tm["bytes_written"])
-        assert all(1 <= c <= 4 ** 2 for c in tm["changed_pz"])
-
-
-@pytest.mark.spark
-class TestIncrementalMerge:
-    """Round-8 incremental tile merge (VERDICT r7 item 3): per-batch
-    reads and writes touch only the ``pz`` regions the batch changed,
-    the accumulated tables stay identical to the full-table merge, and
-    the partition-granular swap survives the same crash windows."""
-
-    MAX_Z, MIN_Z, ANCHOR = 6, 0, 2
-    # pz = tile >> 2*(6-2) = tile >> 8
-    R0A, R0B, R1, R3 = 5, 17, 300, 1000  # regions 0, 0, 1, 3
-
-    def _merge(self, spark, tmp_path, rows, stats=None):
-        from osm_pbf_convert_spark.streaming.pipeline import (
-            merge_finest_batch_incremental,
-        )
-
-        upd = spark.createDataFrame(rows, schema="tile long, cnt long")
-        merge_finest_batch_incremental(
-            spark, upd, str(tmp_path / "finest"), str(tmp_path / "tiles"),
-            max_z=self.MAX_Z, min_z=self.MIN_Z, anchor_z=self.ANCHOR,
-            stats=stats,
-        )
-
-    def _finest(self, spark, tmp_path):
-        return {
-            (r["tile"], r["cnt"])
-            for r in spark.read.parquet(str(tmp_path / "finest"))
-            .select("tile", "cnt").collect()
-        }
-
-    def _tiles(self, spark, tmp_path):
-        return {
-            (r["z"], r["tile"], r["cnt"])
-            for r in spark.read.parquet(str(tmp_path / "tiles"))
-            .select("z", "tile", "cnt").collect()
-        }
-
-    def _want_tiles(self, spark, finest_rows):
-        from osm_pbf_convert_spark.operators.tiling import pyramid_from_finest
-
-        df = spark.createDataFrame(list(finest_rows), "tile long, cnt long")
-        return {
-            (r["z"], r["tile"], r["cnt"])
-            for r in pyramid_from_finest(df, self.MAX_Z, self.MIN_Z).collect()
-        }
-
-    def test_accumulates_and_pyramid_matches_full_rollup(self, spark, tmp_path):
-        self._merge(spark, tmp_path, [(self.R0A, 5), (self.R1, 3)])
-        self._merge(spark, tmp_path, [(self.R1, 7), (self.R3, 1)])
-        want_finest = {(self.R0A, 5), (self.R1, 7), (self.R3, 1)}
-        assert self._finest(spark, tmp_path) == want_finest
-        assert self._tiles(spark, tmp_path) == self._want_tiles(spark, want_finest)
-
-    def test_untouched_partitions_not_rewritten(self, spark, tmp_path):
-        import os
-
-        stats = []
-        self._merge(spark, tmp_path, [(self.R0A, 5), (self.R1, 3)], stats)
-
-        def files(table, pz):
-            d = os.path.join(str(tmp_path), table, f"pz={pz}")
-            return sorted(os.listdir(d))
-
-        finest_r0, tiles_r0 = files("finest", 0), files("tiles", 0)
-        # batch 2 changes ONLY region 1: region 0's dirs must be untouched
-        # (parquet part file names are unique per write -- identical
-        # listings prove no rewrite), and the stats must say 1 region
-        self._merge(spark, tmp_path, [(self.R1, 9)], stats)
-        assert files("finest", 0) == finest_r0
-        assert files("tiles", 0) == tiles_r0
-        assert [s["changed_pz"] for s in stats] == [2, 1]
-        assert all(s["bytes_written"] > 0 for s in stats)
-        want_finest = {(self.R0A, 5), (self.R1, 9)}
-        assert self._tiles(spark, tmp_path) == self._want_tiles(spark, want_finest)
-
-    def test_retry_same_batch_is_idempotent(self, spark, tmp_path):
-        self._merge(spark, tmp_path, [(self.R0A, 5), (self.R1, 3)])
-        self._merge(spark, tmp_path, [(self.R1, 7)])
-        self._merge(spark, tmp_path, [(self.R1, 7)])  # foreachBatch retry
-        want_finest = {(self.R0A, 5), (self.R1, 7)}
-        assert self._finest(spark, tmp_path) == want_finest
-        assert self._tiles(spark, tmp_path) == self._want_tiles(spark, want_finest)
-
-    def test_crash_mid_swap_recovers_from_committed_tmp(self, spark, tmp_path):
-        import shutil
-
-        self._merge(spark, tmp_path, [(self.R0A, 5), (self.R1, 3)])
-        self._merge(spark, tmp_path, [(self.R1, 7)])
-        # simulate the crash window: region 1's new dir was committed in
-        # tmp, the old dir was already moved aside, the rename never ran
-        shutil.rmtree(str(tmp_path / "finest__tmp"), ignore_errors=True)
-        (tmp_path / "finest__tmp").mkdir()
-        (tmp_path / "finest__tmp" / "_SUCCESS").touch()
-        shutil.move(
-            str(tmp_path / "finest" / "pz=1"),
-            str(tmp_path / "finest__tmp" / "pz=1"),
-        )
-        # next batch (touches region 0 only) must first finish the swap
-        self._merge(spark, tmp_path, [(self.R0B, 2)])
-        want_finest = {(self.R0A, 5), (self.R0B, 2), (self.R1, 7)}
-        assert self._finest(spark, tmp_path) == want_finest
-        assert self._tiles(spark, tmp_path) == self._want_tiles(spark, want_finest)
-
-    def test_uncommitted_tmp_debris_is_ignored(self, spark, tmp_path):
-        self._merge(spark, tmp_path, [(self.R0A, 5), (self.R1, 3)])
-        import shutil
-
-        shutil.rmtree(str(tmp_path / "finest__tmp"), ignore_errors=True)
-        (tmp_path / "finest__tmp").mkdir()
-        (tmp_path / "finest__tmp" / "pz=1").mkdir()
-        (tmp_path / "finest__tmp" / "pz=1" / "part-junk.parquet").write_bytes(
-            b"\x00junk"
-        )  # no _SUCCESS: a crash DURING the tmp write -- must not swap in
-        self._merge(spark, tmp_path, [(self.R3, 1)])
-        want_finest = {(self.R0A, 5), (self.R1, 3), (self.R3, 1)}
-        assert self._finest(spark, tmp_path) == want_finest
-        assert self._tiles(spark, tmp_path) == self._want_tiles(spark, want_finest)
-
-
-@pytest.mark.spark
 class TestCrashSafeMerge:
     """Round-8 durability fix (ADVICE r7 high): the tile foreachBatch
     merge must survive a crash at ANY point of the tmp->finest swap
@@ -374,10 +227,41 @@ class TestCrashSafeMerge:
             for r in spark.read.parquet(str(tmp_path / "finest")).collect()
         }
 
+    def _tiles(self, spark, tmp_path):
+        return {
+            (r["z"], r["tile"], r["cnt"])
+            for r in spark.read.parquet(str(tmp_path / "tiles")).collect()
+        }
+
+    def _want_tiles(self, spark, finest_rows):
+        from osm_pbf_convert_spark.operators.tiling import pyramid_from_finest
+
+        df = spark.createDataFrame(list(finest_rows), "tile long, cnt long")
+        return {
+            (r["z"], r["tile"], r["cnt"])
+            for r in pyramid_from_finest(df, 4, 2).collect()
+        }
+
     def test_normal_merge_accumulates(self, spark, tmp_path):
         self._merge(spark, tmp_path, [(1, 5), (2, 3)])
         self._merge(spark, tmp_path, [(2, 7), (9, 1)])  # cumulative upsert
         assert self._finest(spark, tmp_path) == {(1, 5), (2, 7), (9, 1)}
+
+    def test_accumulates_and_pyramid_matches_full_rollup(self, spark, tmp_path):
+        # tiles in distinct zoom-2 parents, so the derived levels aggregate
+        self._merge(spark, tmp_path, [(1, 5), (17, 3), (200, 4)])
+        self._merge(spark, tmp_path, [(17, 7), (2, 1)])
+        want_finest = {(1, 5), (2, 1), (17, 7), (200, 4)}
+        assert self._finest(spark, tmp_path) == want_finest
+        assert self._tiles(spark, tmp_path) == self._want_tiles(spark, want_finest)
+
+    def test_retry_same_batch_is_idempotent(self, spark, tmp_path):
+        self._merge(spark, tmp_path, [(1, 5), (17, 3)])
+        self._merge(spark, tmp_path, [(17, 7)])
+        finest, tiles = self._finest(spark, tmp_path), self._tiles(spark, tmp_path)
+        self._merge(spark, tmp_path, [(17, 7)])  # foreachBatch retry
+        assert self._finest(spark, tmp_path) == finest == {(1, 5), (17, 7)}
+        assert self._tiles(spark, tmp_path) == tiles == self._want_tiles(spark, finest)
 
     def test_crash_between_delete_and_rename_recovers(self, spark, tmp_path):
         import shutil
@@ -389,7 +273,9 @@ class TestCrashSafeMerge:
         shutil.move(str(tmp_path / "finest"), str(tmp_path / "tmp"))
         # the retry / next batch must first finish the swap, then merge
         self._merge(spark, tmp_path, [(9, 1)])
-        assert self._finest(spark, tmp_path) == {(1, 5), (2, 7), (9, 1)}
+        want_finest = {(1, 5), (2, 7), (9, 1)}
+        assert self._finest(spark, tmp_path) == want_finest
+        assert self._tiles(spark, tmp_path) == self._want_tiles(spark, want_finest)
 
     def test_partial_tmp_debris_is_ignored(self, spark, tmp_path):
         self._merge(spark, tmp_path, [(1, 5), (2, 3)])
@@ -398,7 +284,9 @@ class TestCrashSafeMerge:
         (tmp_path / "tmp").mkdir()
         (tmp_path / "tmp" / "part-garbage.parquet").write_bytes(b"\x00junk")
         self._merge(spark, tmp_path, [(9, 1)])
-        assert self._finest(spark, tmp_path) == {(1, 5), (2, 3), (9, 1)}
+        want_finest = {(1, 5), (2, 3), (9, 1)}
+        assert self._finest(spark, tmp_path) == want_finest
+        assert self._tiles(spark, tmp_path) == self._want_tiles(spark, want_finest)
 
     def test_partial_finest_with_committed_tmp_prefers_tmp(self, spark, tmp_path):
         import shutil
@@ -410,53 +298,40 @@ class TestCrashSafeMerge:
         shutil.copytree(str(tmp_path / "finest"), str(tmp_path / "tmp"))
         (tmp_path / "finest" / "_SUCCESS").unlink()
         self._merge(spark, tmp_path, [(9, 1)])
-        assert self._finest(spark, tmp_path) == {(1, 5), (2, 7), (9, 1)}
+        want_finest = {(1, 5), (2, 7), (9, 1)}
+        assert self._finest(spark, tmp_path) == want_finest
+        assert self._tiles(spark, tmp_path) == self._want_tiles(spark, want_finest)
 
 
 @pytest.mark.spark
 class TestMixedMergeLayouts:
-    """The full-table and the incremental ``pz=`` tile-merge layouts must
-    not be mixed on one finest table: each merge refuses the other's
-    layout instead of silently dropping its accumulated state."""
-
-    def _full(self, spark, tmp_path, rows):
-        from osm_pbf_convert_spark.streaming.pipeline import merge_finest_batch
-
-        merge_finest_batch(
-            spark, spark.createDataFrame(rows, schema="tile long, cnt long"),
-            str(tmp_path / "finest"), str(tmp_path / "tmp"),
-            str(tmp_path / "tiles"), max_z=6, min_z=0,
-        )
-
-    def _incremental(self, spark, tmp_path, rows):
-        from osm_pbf_convert_spark.streaming.pipeline import (
-            merge_finest_batch_incremental,
-        )
-
-        merge_finest_batch_incremental(
-            spark, spark.createDataFrame(rows, schema="tile long, cnt long"),
-            str(tmp_path / "finest"), str(tmp_path / "tiles"),
-            max_z=6, min_z=0, anchor_z=2,
-        )
-
-    def _finest(self, spark, tmp_path):
-        return {
-            (r["tile"], r["cnt"])
-            for r in spark.read.parquet(str(tmp_path / "finest"))
-            .select("tile", "cnt").collect()
-        }
-
-    def test_incremental_merge_rejects_full_table_layout(self, spark, tmp_path):
-        self._full(spark, tmp_path, [(5, 5), (300, 3)])
-        with pytest.raises(ValueError, match="full-table layout"):
-            self._incremental(spark, tmp_path, [(300, 7)])
-        assert self._finest(spark, tmp_path) == {(5, 5), (300, 3)}
+    """A finest directory the swap protocol cannot have left behind (no
+    ``_SUCCESS``, no committed tmp to recover from) -- e.g. an older
+    partitioned layout or a foreign writer -- must be refused, never
+    silently treated as the first batch and overwritten."""
 
     def test_full_merge_rejects_incremental_layout(self, spark, tmp_path):
-        self._incremental(spark, tmp_path, [(5, 5), (300, 3)])
-        with pytest.raises(ValueError, match="incremental pz= layout"):
-            self._full(spark, tmp_path, [(300, 7)])
-        assert self._finest(spark, tmp_path) == {(5, 5), (300, 3)}
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from osm_pbf_convert_spark.streaming.pipeline import merge_finest_batch
+
+        finest = tmp_path / "finest"
+        finest.mkdir()
+        pq.write_table(
+            pa.table({"tile": pa.array([5, 300], pa.int64()),
+                      "cnt": pa.array([5, 3], pa.int64())}),
+            str(finest / "part-00000.parquet"),
+        )
+        before = {f.name: f.read_bytes() for f in finest.iterdir()}
+        with pytest.raises(ValueError, match="not a committed finest table"):
+            merge_finest_batch(
+                spark, spark.createDataFrame([(300, 7)], "tile long, cnt long"),
+                str(finest), str(tmp_path / "tmp"), str(tmp_path / "tiles"),
+                max_z=6, min_z=0,
+            )
+        assert {f.name: f.read_bytes() for f in finest.iterdir()} == before
+        assert not (tmp_path / "tiles").exists()
 
 
 class TestRehearsalSinkLog:

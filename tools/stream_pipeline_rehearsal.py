@@ -9,7 +9,6 @@ when state and the foreachBatch merge span many micro-batches at
     python tools/stream_pipeline_rehearsal.py                  # 16x pages
     python tools/stream_pipeline_rehearsal.py --replicate 4 --batches 4
     python tools/stream_pipeline_rehearsal.py --continuous     # live mode
-    python tools/stream_pipeline_rehearsal.py --anchor 4       # incremental
 
 Gates (exit 1 on failure): entities count + per-kind id checksum equal
 to batch decode; tile pyramid checksum-equal to batch tile_pyramid;
@@ -28,12 +27,6 @@ drain against the same checkpoints must land zero new rows; (c) no
 duplicate/lost files -- every parquet sink's ``_spark_metadata`` log
 must list exactly the part files on disk; (d) the same batch-parity
 checksums as replay mode.
-
-``--anchor N`` runs the tile merge in the round-8 INCREMENTAL layout
-(``tile_anchor_z=N``): per-batch bytes written are reported in the
-summary (proportional to changed regions, not table size), and the
-tiles parity gate proves the partition-pruned merge lands the identical
-pyramid.
 """
 
 from __future__ import annotations
@@ -139,7 +132,7 @@ def _counts_snapshot(spark, out: str) -> dict:
     }
 
 
-def run_continuous(spark, landing, out, ckpt, args, merge_stats):
+def run_continuous(spark, landing, out, ckpt, args):
     """Start all pipeline queries on processingTime triggers, feed the
     staged input files in one at a time WHILE downstream batches run,
     wait for quiescence, then stop. Returns (summary, failures)."""
@@ -160,7 +153,6 @@ def run_continuous(spark, landing, out, ckpt, args, merge_stats):
         max_z=args.max_zoom, lsh=LSH, available_now=False,
         trigger_seconds=args.trigger_seconds,
         source_options={"maxFilesPerTrigger": 1},
-        tile_anchor_z=args.anchor, merge_stats=merge_stats,
     )
     progress = {name: {} for name, _ in queries}
 
@@ -219,13 +211,11 @@ def run_continuous(spark, landing, out, ckpt, args, merge_stats):
 
     # gate: the continuous run consumed EVERYTHING -- a follow-up
     # availableNow drain on the same checkpoints must change nothing
-    # (its own merge-stats list: the summary reports the live run's)
     before = _counts_snapshot(spark, out)
     run_streaming_pipeline(
         spark, out=out, checkpoint=ckpt, pages_dir=feed,
         max_z=args.max_zoom, lsh=LSH, timeout=3600,
         source_options={"maxFilesPerTrigger": 1},
-        tile_anchor_z=args.anchor, merge_stats=[],
     )
     after = _counts_snapshot(spark, out)
     if before != after:
@@ -252,12 +242,6 @@ def run_continuous(spark, landing, out, ckpt, args, merge_stats):
         "n_dup_pairs_distinct": after["dup_pairs"],
         "wall_s": wall,
     }
-    if merge_stats:
-        summary["tile_merge"] = {
-            "batches": len(merge_stats),
-            "changed_pz": [s["changed_pz"] for s in merge_stats],
-            "bytes_written": [s["bytes_written"] for s in merge_stats],
-        }
     return summary, failures
 
 
@@ -274,9 +258,6 @@ def main():
     ap.add_argument("--trigger-seconds", type=int, default=2)
     ap.add_argument("--feed-interval", type=float, default=3.0,
                     help="seconds between input file drops (continuous mode)")
-    ap.add_argument("--anchor", type=int, default=None,
-                    help="tile_anchor_z: run the tile merge in the "
-                         "incremental partition-pruned layout")
     args = ap.parse_args()
 
     from pyspark.sql import functions as F
@@ -328,11 +309,8 @@ def main():
     shutil.rmtree(out, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)
 
-    merge_stats = []
     if args.continuous:
-        summary, failures = run_continuous(
-            spark, landing, out, ckpt, args, merge_stats
-        )
+        summary, failures = run_continuous(spark, landing, out, ckpt, args)
         wall = summary["wall_s"]
         print(json.dumps(summary), flush=True)
     else:
@@ -341,7 +319,6 @@ def main():
             spark, out=out, checkpoint=ckpt, pages_dir=landing,
             max_z=args.max_zoom, lsh=LSH, timeout=3600,
             source_options={"maxFilesPerTrigger": 1},
-            tile_anchor_z=args.anchor, merge_stats=merge_stats,
         )
         wall = round(time.time() - t0, 1)
         print(json.dumps({**summary, "wall_s": wall}), flush=True)
@@ -400,8 +377,7 @@ def main():
 
     result = {
         "metric": f"composed streaming pipeline rehearsal x{args.replicate}"
-        + (" [continuous]" if args.continuous else "")
-        + (f" [incremental anchor={args.anchor}]" if args.anchor is not None else ""),
+        + (" [continuous]" if args.continuous else ""),
         "n_pages": n_pages,
         "batches": n_offsets,
         "wall_s": wall,
@@ -411,7 +387,6 @@ def main():
         "n_tile_rows": summary.get("n_tile_rows"),
         "batch_pairs": n_batch_pairs,
         "distinct_pairs": summary.get("n_dup_pairs_distinct"),
-        "tile_merge": summary.get("tile_merge"),
         "parity": not failures,
     }
     print(json.dumps(result))
@@ -419,16 +394,6 @@ def main():
     if not args.no_append and not failures and args.continuous:
         with open(os.path.join(REPO, "BENCH", "NOTES.md"), "a") as f:
             db = summary.get("data_batches") or {}
-            tm = summary.get("tile_merge")
-            tm_txt = ""
-            if tm:
-                mb = tm["bytes_written"]
-                tm_txt = (
-                    f" Incremental tile merge (anchor_z={args.anchor}): "
-                    f"{tm['batches']} merge batches, per-batch bytes "
-                    f"{min(mb):,}-{max(mb):,} (changed regions "
-                    f"{min(tm['changed_pz'])}-{max(tm['changed_pz'])})."
-                )
             f.write(
                 f"\n## CONTINUOUS-trigger pipeline rehearsal: x{args.replicate} pages, "
                 f"live feed (local[32])\n\n"
@@ -442,7 +407,7 @@ def main():
                 f"unprocessed input); every sink's _spark_metadata log "
                 f"lists exactly the part files on disk (no duplicate/lost "
                 f"files); entities/tiles/pages_geo/dup-pairs parity "
-                f"checksums all equal to the batch operators.{tm_txt}\n"
+                f"checksums all equal to the batch operators.\n"
             )
     elif not args.no_append and not failures:
         with open(os.path.join(REPO, "BENCH", "NOTES.md"), "a") as f:
@@ -464,15 +429,7 @@ def main():
                 f"the batch LSH operator ({n_batch_pairs:,}; symmetric "
                 f"difference 0) across state spanning every micro-batch. "
                 f"RocksDB state store; foreachBatch merge cost bounded by "
-                f"tile count per batch."
-                + (
-                    f" Incremental tile merge (anchor_z={args.anchor}): "
-                    f"{summary['tile_merge']['batches']} merge batches, "
-                    f"changed regions {summary['tile_merge']['changed_pz']}, "
-                    f"bytes {summary['tile_merge']['bytes_written']}.\n"
-                    if summary.get("tile_merge")
-                    else "\n"
-                )
+                f"tile count per batch.\n"
             )
     spark.stop()
     if failures:
