@@ -1597,8 +1597,9 @@ WHERE x.doc_id < y.doc_id AND bit_count(xor(x.simhash, y.simhash)) <= 8
 
 
 # ---------------------------------------------------------------------------
-# pair graph -> dedup groups: connected components (large-star/small-star,
-# operators/graph.py) over the minhash-LSH pair stream, oracled with a
+# pair graph -> dedup groups: connected components (per-partition
+# contraction, then large-star/small-star rounds; operators/graph.py) over
+# the minhash-LSH pair stream, oracled with a
 # DuckDB RECURSIVE transitive closure over the SAME replayed pairs
 # ---------------------------------------------------------------------------
 
@@ -1631,10 +1632,11 @@ lbl AS (
 
 def q_dedup_groups(spark, sf_dir):
     """Near-dup GROUP labels: minhash-LSH pairs (md5 oracle pin) ->
-    alternating large-star/small-star connected components. The oracle is
-    an independent algorithm entirely -- DuckDB's recursive transitive
-    closure over the same replayed pairs -- so a hash match here checks
-    the star rounds' fixpoint, not just the pair stream."""
+    connected components (contraction, then large-star/small-star rounds
+    to an exact star-forest fixpoint). The oracle is an independent
+    algorithm entirely -- DuckDB's recursive transitive closure over the
+    same replayed pairs -- so a hash match here checks the fixpoint
+    labels, not just the pair stream."""
     return _minhash_pair_graph(spark, sf_dir)
 
 

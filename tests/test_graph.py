@@ -1,4 +1,5 @@
-"""Connected components (large-star/small-star) and survivor selection."""
+"""Connected components (contraction, large-star/small-star, exact
+fixpoint) and survivor selection."""
 
 import random
 
@@ -10,6 +11,17 @@ from osm_pbf_convert_spark.operators.graph import (
     dedup_survivors,
     near_dup_groups,
 )
+
+
+@pytest.fixture
+def spread(spark):
+    """Keep every shuffle partition: AQE would coalesce a test-sized edge
+    set into one partition, where the contraction alone finishes it."""
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    yield
+    spark.conf.set(key, old)
 
 
 def _labels(spark, edges, **kw):
@@ -44,13 +56,42 @@ def _union_find(edges):
     return out
 
 
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_star_forest_matches_union_find(seed):
+    """The contraction body alone, on batches split anywhere: one (root,
+    node) edge per non-root node, root = its component's minimum."""
+    import pyarrow as pa
+
+    from osm_pbf_convert_spark.operators.graph import _star_forest
+
+    rng = random.Random(seed)
+    edges = [(rng.randrange(500), rng.randrange(500)) for _ in range(400)]
+    # plus a 300-edge path, listed back to front
+    edges += [(1000 + i, 1001 + i) for i in range(300)][::-1]
+    edges = [(min(a, b), max(a, b)) for a, b in edges if a != b]
+    cut = len(edges) // 3
+    batches = [
+        pa.RecordBatch.from_pydict(
+            {"u": [a for a, _ in part], "v": [b for _, b in part]},
+            schema=pa.schema([("u", pa.int64()), ("v", pa.int64())]),
+        )
+        for part in (edges[:cut], [], edges[cut:])
+    ]
+    out = pa.Table.from_batches(list(_star_forest(iter(batches))))
+    stars = dict(zip(out["v"].to_pylist(), out["u"].to_pylist()))
+    want = _union_find(edges)
+    assert len(stars) == out.num_rows
+    assert stars == {x: c for x, c in want.items() if x != c}
+    assert list(_star_forest(iter([]))) == []
+
+
 def test_two_components(spark):
     got = _labels(spark, [(1, 2), (2, 3), (10, 11)])
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
 
 def test_chain_collapses(spark):
-    # a 40-node path: diameter 39, but star rounds converge in O(log^2)
+    # a 40-node path: diameter 39, yet one contraction pass collapses it
     edges = [(i, i + 1) for i in range(40)]
     got = _labels(spark, edges)
     assert got == {i: 0 for i in range(41)}
@@ -77,10 +118,11 @@ def test_random_graph_matches_union_find(spark, seed):
     assert got == _union_find(edges)
 
 
-def test_broom_graph_rounds_follow_log_diameter(spark):
-    """The adversarial shape (long chain + hot-minimum star + hubs) must
-    converge in ~log2(diameter) rounds with every label == the hot min --
-    the small-scale twin of tools/scale_rehearsal.py --cc-adversarial."""
+def test_broom_graph_rounds_follow_log_diameter(spark, spread):
+    """The adversarial shape (long chain + hot-minimum star + hubs), its
+    edges spread over every shuffle partition, must converge in
+    ~log2(diameter) rounds with every label == the hot min -- the
+    small-scale twin of tools/scale_rehearsal.py --cc-adversarial."""
     import math
     import sys
 
@@ -97,10 +139,71 @@ def test_broom_graph_rounds_follow_log_diameter(spark):
     assert stats["rounds"] <= math.ceil(math.log2(chain_n)) + 3
 
 
-def test_max_iter_raises(spark):
-    df = spark.createDataFrame([(i, i + 1) for i in range(40)], "a long, b long")
+def test_max_iter_raises(spark, spread):
+    # spread over 8 partitions, the contraction leaves most of a 200-node
+    # path standing (one pass collapses it in a single partition)
+    df = spark.createDataFrame([(i, i + 1) for i in range(200)], "a long, b long")
+    stats = {}
+    connected_components(df, stats=stats).count()
+    assert stats["rounds"] >= 2
     with pytest.raises(RuntimeError, match="no fixpoint"):
         connected_components(df, max_iter=1)
+
+
+def test_components_spanning_partitions_match_union_find(spark, spread):
+    rng = random.Random(7)
+    n = 300
+    edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(400)]
+    edges = [(a, b) for a, b in edges if a != b]
+    stats = {}
+    got = _labels(spark, edges, stats=stats)
+    assert got == _union_find(edges)
+    assert stats["rounds"] >= 1
+    # one fixpoint test after the contraction, then one per round
+    assert len(stats["edges"]) == stats["rounds"] + 1
+
+
+def test_one_partition_needs_no_round(spark):
+    edges = [(i, i + 1) for i in range(30)] + [(7, 100 + i) for i in range(20)]
+    edges += [(500, 501), (502, 501)]
+    stats = {}
+    got = _labels(spark, edges, stats=stats)
+    want = _union_find(edges)
+    assert got == want
+    assert stats["rounds"] == 0
+    non_root = sum(1 for x, c in want.items() if x != c)
+    assert stats["final_edges"] == non_root
+    assert stats["edges"] == [non_root]
+
+
+def test_two_center_leaf_is_not_a_fixpoint(spark):
+    """(1, 5), (2, 5): centres {1, 2} and leaves {5} are disjoint, yet 5
+    has two centres, so 1 and 2 are one component."""
+    from osm_pbf_convert_spark.operators.graph import _fixpoint
+
+    _, counts = _fixpoint(
+        spark.createDataFrame([(1, 5), (2, 5)], "u long, v long"), pin=False
+    )
+    assert counts["bad"] == 1
+    assert _labels(spark, [(1, 5), (2, 5)]) == {1: 1, 2: 1, 5: 1}
+
+
+@pytest.mark.parametrize("edges, bad", [
+    ([(1, 2), (1, 2), (1, 3), (4, 5)], 0),  # repeated star edges pass
+    ([(1, 2), (2, 3)], 1),                  # 2 is a centre and a leaf
+    ([(5, 1)], 1),                          # backward edge
+])
+def test_fixpoint_test_is_exact(spark, edges, bad):
+    from osm_pbf_convert_spark.operators.graph import _fixpoint
+
+    labels, counts = _fixpoint(
+        spark.createDataFrame(edges, "u long, v long"), pin=False
+    )
+    assert (counts["edges"], counts["bad"]) == (len(edges), bad)
+    if not bad:
+        assert counts["leaves"] == 3
+        got = {r["id"]: r["component"] for r in labels.collect()}
+        assert got == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4}
 
 
 def test_survivors_pick_longest_then_min_id(spark):

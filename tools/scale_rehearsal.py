@@ -191,6 +191,9 @@ def run_cc_adversarial(spark, results, chain_n, leaf_n, max_rounds):
     total = labels.count()
     r = results["cc_adversarial"]
     r["rounds"] = stats.get("rounds")
+    # edge rows entering each fixpoint test: after the contraction, then
+    # after each round
+    r["edges_per_test"] = stats.get("edges")
     r["n_edges"] = n_edges
     failures = []
     if bad:
@@ -254,9 +257,11 @@ def main():
                          "count, label correctness, and plan shape")
     ap.add_argument("--chain-n", type=int, default=4_000_000)
     ap.add_argument("--leaf-n", type=int, default=16_000_000)
-    # alternating-star collapses a path in ~log2(diameter) rounds (the
-    # measured law: 18 rounds at chain 100k = log2 + converge-detect), so
-    # the gate is diameter-relative; a fixed bound would either mask a
+    # the star rounds collapse a path in ~log2(diameter) rounds (the
+    # measured law: 17 rounds at chain 100k = ceil(log2), with the exact
+    # fixpoint test and no confirming round; the per-partition contraction
+    # hardly shortens a chain whose edges are hash-spread over partitions),
+    # so the gate is diameter-relative; a fixed bound would either mask a
     # regression at small chains or false-fail at big ones
     ap.add_argument("--max-rounds", type=int, default=None,
                     help="default ceil(log2(chain_n)) + 3")

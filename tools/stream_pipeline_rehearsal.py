@@ -323,9 +323,10 @@ def main():
         wall = round(time.time() - t0, 1)
         print(json.dumps({**summary, "wall_s": wall}), flush=True)
         failures = []
+    # offset files are named by batch id; Hadoop's hidden ``.N.crc``
+    # checksums and ``.tmp`` leftovers share the directory
     n_offsets = len([
-        o for o in os.listdir(os.path.join(ckpt, "decode", "offsets"))
-        if not o.endswith(".tmp")
+        o for o in os.listdir(os.path.join(ckpt, "decode", "offsets")) if o.isdigit()
     ])
     if n_offsets < args.batches // 2:
         failures.append(f"only {n_offsets} decode micro-batches (wanted >= {args.batches // 2})")
