@@ -24,8 +24,6 @@ from __future__ import annotations
 import numpy as np
 
 INT32_MAX = 2147483647  # C# int.MaxValue
-_U64_7F = np.uint64(0x7F)
-_U64_7 = np.uint64(7)
 
 
 # ---------------------------------------------------------------------------
@@ -137,7 +135,8 @@ def zigzag_decode(values: np.ndarray) -> np.ndarray:
 # ---------------------------------------------------------------------------
 
 def delta_decode(deltas: np.ndarray) -> np.ndarray:
-    """Prefix-sum of int64 deltas (reference ``PrimitiveDecoder.DecodeDeltaItems``)."""
+    """Prefix-sum of int64 deltas (reference ``PrimitiveDecoder.DecodeDeltaItems``).
+    Kept as the test oracle that inverts ``delta_encode``."""
     return np.cumsum(np.asarray(deltas, dtype=np.int64), dtype=np.int64)
 
 
@@ -221,11 +220,13 @@ def decode_varints_msb(buf: bytes | np.ndarray) -> np.ndarray:
 
 def coord_as_int(deg: np.ndarray) -> np.ndarray:
     """``(int)(value / 180 * int.MaxValue)`` -- C# cast truncates toward
-    zero (NOT floor; differs for negative coordinates)."""
+    zero (NOT floor; differs for negative coordinates). Kept as the test
+    oracle of the reference's coordinate quantization."""
     scaled = np.asarray(deg, dtype=np.float64) / 180.0 * INT32_MAX
     return np.trunc(scaled).astype(np.int64).astype(np.int32)
 
 
 def int_to_coord(ival: np.ndarray) -> np.ndarray:
-    """``value * 180.0 / int.MaxValue`` (reference Helpers.cs:8-10)."""
+    """``value * 180.0 / int.MaxValue`` (reference Helpers.cs:8-10). Kept
+    as the test oracle that inverts ``coord_as_int``."""
     return np.asarray(ival, dtype=np.float64) * 180.0 / INT32_MAX

@@ -48,10 +48,6 @@ def quantize_np(deg: np.ndarray) -> np.ndarray:
     return np.trunc(scaled).astype(np.int64).astype(np.int32)
 
 
-def unquantize_np(ival: np.ndarray) -> np.ndarray:
-    return np.asarray(ival, dtype=np.float64) * 180.0 / INT32_MAX
-
-
 def _spread_np(x: np.ndarray) -> np.ndarray:
     """Spread the 32 low bits of x to the even bit positions of a uint64."""
     x = np.asarray(x).astype(np.uint64) & np.uint64(0xFFFFFFFF)
@@ -76,6 +72,7 @@ def _compact_np(x: np.ndarray) -> np.ndarray:
 
 def morton_cell_np(ilat: np.ndarray, ilon: np.ndarray) -> np.ndarray:
     """64-bit cell, reference layout (lat odd bits / lon even bits).
+    Kept as the test oracle of ``morton_cell_col`` / ``morton_cell_sql``.
 
     Returned as int64 (two's-complement view of the reference's ulong) so it
     round-trips through Spark LongType / Parquet INT64 unchanged.
@@ -87,7 +84,8 @@ def morton_cell_np(ilat: np.ndarray, ilon: np.ndarray) -> np.ndarray:
 
 
 def morton_decode_np(cell: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """cell -> (ilat, ilon) int32."""
+    """cell -> (ilat, ilon) int32. Kept as a test oracle: inverts
+    ``morton_cell_np`` in the cell round-trip tests."""
     c = np.asarray(cell).astype(np.uint64)
     ilon = _compact_np(c)
     ilat = _compact_np(c >> np.uint64(1))
@@ -98,7 +96,8 @@ def morton_decode_np(cell: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
 
 
 def tile_np(cell: np.ndarray, z: int) -> np.ndarray:
-    """zoom-z tile id = top 2z bits of the cell (0 <= z <= 15)."""
+    """zoom-z tile id = top 2z bits of the cell (0 <= z <= 15). Kept as
+    the test oracle of ``tile_col`` / ``tile_sql``."""
     if z == 0:
         return np.zeros(np.asarray(cell).shape, dtype=np.int64)
     c = np.asarray(cell).astype(np.uint64)
@@ -106,7 +105,8 @@ def tile_np(cell: np.ndarray, z: int) -> np.ndarray:
 
 
 def heat_cell_np(ilat: np.ndarray, ilon: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Reference heat-map raster grid (16384 x 32768)."""
+    """Reference heat-map raster grid (16384 x 32768). Kept as the test
+    oracle of ``heat_row_col``/``heat_col_col`` and their SQL forms."""
     ilat = np.asarray(ilat, dtype=np.int64)
     ilon = np.asarray(ilon, dtype=np.int64)
     row = ((ilat + INT32_MAX) & 0xFFFFFFFF) >> 18
@@ -120,16 +120,13 @@ def heat_cell_np(ilat: np.ndarray, ilon: np.ndarray) -> tuple[np.ndarray, np.nda
 
 
 def quantize_col(deg: Column) -> Column:
-    """deg double -> int32 column with C# truncation-toward-zero.
+    """deg double -> int32 column with C# truncation-toward-zero. Kept as
+    the Column twin that tests check against ``quantize_np``.
 
     Spark's CAST(double AS long/int) truncates toward zero like C#'s
     ``(int)``, so a plain cast is exact.
     """
     return (deg / F.lit(180.0) * F.lit(float(INT32_MAX))).cast("long").cast("int")
-
-
-def unquantize_col(ival: Column) -> Column:
-    return ival.cast("double") * F.lit(180.0) / F.lit(float(INT32_MAX))
 
 
 def _spread_col(x: Column) -> Column:

@@ -65,13 +65,15 @@ def encode_blob_ids_info_py(infos) -> bytes:
     """Golden pure-Python port of ``WriteIdsIndex``
     (``BlobIdsInfo.cs:35-51``): ``infos`` is an iterable of
     (start_position, nodes_count, min_node_id, max_node_id,
-    ways_count, rels_count) tuples, one 36-byte record each."""
+    ways_count, rels_count) tuples, one 36-byte record each.
+    Kept as the byte-parity golden of the distributed ``.blobs.dat`` writer."""
     return b"".join(RECORD.pack(*info) for info in infos)
 
 
 def decode_blob_ids_info_py(data: bytes) -> list:
     """Sequential reader port (``ReadBlobIdsInfo``,
-    ``BlobIdsInfo.cs:21-32``)."""
+    ``BlobIdsInfo.cs:21-32``).
+    Kept as the byte-parity oracle of the distributed writer's output."""
     if len(data) % RECORD_BYTES:
         raise ValueError(
             f"truncated .blobs.dat: {len(data)} is not a multiple of {RECORD_BYTES}"
@@ -136,7 +138,8 @@ def read_blobs_dat(
     spark: SparkSession, path: str, split_records: int = 1_000_000
 ) -> DataFrame:
     """Distributed ``.blobs.dat`` reader: 36-byte-aligned byte-range
-    splits, one vectorized ``frombuffer`` decode per task."""
+    splits, one vectorized ``frombuffer`` decode per task.
+    Kept as the read direction that round-trips the ``.blobs.dat`` writer."""
     import pandas as pd
 
     from osm_pbf_convert_spark.sources import fsio

@@ -33,16 +33,16 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def exact_dedup(df: DataFrame, content_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_dedup(df: DataFrame) -> DataFrame:
     """Keep one row (min id) per distinct content digest."""
-    digest = F.md5(F.col(content_col).cast("binary")).alias("_digest")
-    w = df.select(F.col(id_col), digest)
-    keep = w.groupBy("_digest").agg(F.min(id_col).alias(id_col))
+    digest = F.md5(F.col("text").cast("binary")).alias("_digest")
+    w = df.select(F.col("doc_id"), digest)
+    keep = w.groupBy("_digest").agg(F.min("doc_id").alias("doc_id"))
     # merge hint: `keep` is corpus-sized (one row per distinct digest) but
     # DERIVED, so Catalyst's size estimate undershoots and auto-broadcasts
     # it -- the exit-52 OOM class the 16x rehearsal exposed in the LSH
     # joins. A fact-sized side must shuffle, never broadcast.
-    return df.join(keep.select(id_col).hint("merge"), id_col, "left_semi")
+    return df.join(keep.select("doc_id").hint("merge"), "doc_id", "left_semi")
 
 
 def shingles_col(text, k: int = 5):
@@ -69,7 +69,7 @@ def minhash_coeffs(i: int) -> tuple[int, int]:
 
 
 def minhash_signatures(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
+    df: DataFrame,
     num_hashes: int = 64, shingle_k: int = 5, hash_fn: str = "rolling",
 ) -> DataFrame:
     """(id, sig array[num_hashes]) -- min over shingle hashes per seed,
@@ -87,13 +87,13 @@ def minhash_signatures(
     vectorized Carter-Wegman mins). Docs with no k-char window emit no
     row."""
     if hash_fn == "rolling":
-        return _minhash_signatures_rolling(df, id_col, text_col, num_hashes, shingle_k)
+        return _minhash_signatures_rolling(df, num_hashes, shingle_k)
     if hash_fn == "md5":
-        return _minhash_signatures_md5(df, id_col, text_col, num_hashes, shingle_k)
+        return _minhash_signatures_md5(df, num_hashes, shingle_k)
     raise ValueError(f"unknown hash_fn {hash_fn!r}; expected 'rolling' or 'md5'")
 
 
-def _kr_hash_arrays(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
+def _kr_hash_arrays(df: DataFrame, k: int) -> DataFrame:
     """(id, shs array<long>): each doc's unique Karp-Rabin window
     hashes (operators/rolling.py) -- the substring-free stand-in for
     ``shingles_col`` in exact-jaccard verification (set semantics are
@@ -106,20 +106,19 @@ def _kr_hash_arrays(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFr
     def batches(it):
         for pdf in it:
             yield pd.DataFrame({
-                id_col: pdf[id_col].to_numpy(),
-                "shs": [u.astype(np.int64) for u in batch_window_hashes(pdf[text_col], k)],
+                "doc_id": pdf["doc_id"].to_numpy(),
+                "shs": [u.astype(np.int64) for u in batch_window_hashes(pdf["text"], k)],
             })
 
     from osm_pbf_convert_spark.plans.partitioning import fan_out
 
-    id_type = df.schema[id_col].dataType.simpleString()
-    return fan_out(df.select(id_col, text_col), key=id_col).mapInPandas(
-        batches, schema=f"{id_col} {id_type}, shs array<long>"
+    id_type = df.schema["doc_id"].dataType.simpleString()
+    return fan_out(df.select("doc_id", "text"), key="doc_id").mapInPandas(
+        batches, schema=f"doc_id {id_type}, shs array<long>"
     )
 
 
-def _minhash_signatures_rolling(df: DataFrame, id_col: str, text_col: str,
-                                num_hashes: int, shingle_k: int,
+def _minhash_signatures_rolling(df: DataFrame, num_hashes: int, shingle_k: int,
                                 bands: int | None = None) -> DataFrame:
     """The no-substring signature stage (``hash_fn="rolling"``): one
     Karp-Rabin window pass per Arrow batch (operators/rolling.py) -- a
@@ -146,13 +145,13 @@ def _minhash_signatures_rolling(df: DataFrame, id_col: str, text_col: str,
 
     def batches(it):
         for pdf in it:
-            flat, off = rolling.batch_window_hash_segments(pdf[text_col], shingle_k)
+            flat, off = rolling.batch_window_hash_segments(pdf["text"], shingle_k)
             nonempty = np.nonzero(np.diff(off) > 0)[0]
             if not nonempty.size:
                 continue  # no shingles -> no row (same as the md5 flavor)
             sig = rolling.segment_affine_min(flat, off, A, B)[nonempty]
             out = {
-                id_col: pdf[id_col].to_numpy()[nonempty],
+                "doc_id": pdf["doc_id"].to_numpy()[nonempty],
                 "sig": list(sig.astype(np.int64)),
             }
             if bands is not None:
@@ -163,17 +162,16 @@ def _minhash_signatures_rolling(df: DataFrame, id_col: str, text_col: str,
 
     from osm_pbf_convert_spark.plans.partitioning import fan_out
 
-    id_type = df.schema[id_col].dataType.simpleString()
-    schema = f"{id_col} {id_type}, sig array<long>"
+    id_type = df.schema["doc_id"].dataType.simpleString()
+    schema = f"doc_id {id_type}, sig array<long>"
     if bands is not None:
         schema += ", bnds array<long>"
-    return fan_out(df.select(id_col, text_col), key=id_col).mapInPandas(
+    return fan_out(df.select("doc_id", "text"), key="doc_id").mapInPandas(
         batches, schema=schema
     )
 
 
-def _minhash_signatures_md5(df: DataFrame, id_col: str, text_col: str,
-                            num_hashes: int, shingle_k: int) -> DataFrame:
+def _minhash_signatures_md5(df: DataFrame, num_hashes: int, shingle_k: int) -> DataFrame:
     """The md5 oracle flavor as ONE zero-shuffle Arrow pass: distinct
     k-char window md5 digests per doc (``md5win``), 60-bit base hash x =
     first 15 hex chars, vectorized Carter-Wegman mins. Docs with no
@@ -191,25 +189,25 @@ def _minhash_signatures_md5(df: DataFrame, id_col: str, text_col: str,
 
     def batches(it):
         for pdf in it:
-            digs, off = md5win.batch_window_md5_segments(pdf[text_col], shingle_k)
+            digs, off = md5win.batch_window_md5_segments(pdf["text"], shingle_k)
             nonempty = np.nonzero(np.diff(off) > 0)[0]
             if not nonempty.size:
                 continue
             x = md5win.digests_to_x60(digs)
             sig = md5win.segment_cw_min(x, off, A, B)[nonempty]
             yield pd.DataFrame({
-                id_col: pdf[id_col].to_numpy()[nonempty],
+                "doc_id": pdf["doc_id"].to_numpy()[nonempty],
                 "sig": list(sig),
             })
 
-    id_type = df.schema[id_col].dataType.simpleString()
-    return fan_out(df.select(id_col, text_col), key=id_col).mapInPandas(
-        batches, schema=f"{id_col} {id_type}, sig array<long>"
+    id_type = df.schema["doc_id"].dataType.simpleString()
+    return fan_out(df.select("doc_id", "text"), key="doc_id").mapInPandas(
+        batches, schema=f"doc_id {id_type}, sig array<long>"
     )
 
 
 def minhash_lsh_pairs(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
+    df: DataFrame,
     num_hashes: int = 64, bands: int = 16, shingle_k: int = 5,
     hash_fn: str = "rolling", max_bucket_size: int | None = None,
 ) -> DataFrame:
@@ -239,12 +237,10 @@ def minhash_lsh_pairs(
         # the signatures (rolling.band_buckets: 8-byte Horner keys, a
         # 10x byte win over joined-string buckets AND replayable in
         # DuckDB HUGEINT -- the production default carries the oracle)
-        sig = _minhash_signatures_rolling(
-            df, id_col, text_col, num_hashes, shingle_k, bands=bands
-        )
-        banded = sig.select(id_col, F.posexplode("bnds").alias("band", "bucket"))
-        return _bucket_join_pairs(banded, id_col, max_bucket_size)
-    sig = minhash_signatures(df, id_col, text_col, num_hashes, shingle_k, hash_fn)
+        sig = _minhash_signatures_rolling(df, num_hashes, shingle_k, bands=bands)
+        banded = sig.select("doc_id", F.posexplode("bnds").alias("band", "bucket"))
+        return _bucket_join_pairs(banded, max_bucket_size)
+    sig = minhash_signatures(df, num_hashes, shingle_k, hash_fn)
     # md5: bucket = the band's hash values joined as a string -- band id
     # is already a separate join column, so no re-hash is needed (and
     # DuckDB replays string concatenation exactly)
@@ -256,12 +252,11 @@ def minhash_lsh_pairs(
             for b in range(bands)
         ]
     )
-    banded = sig.select(id_col, F.posexplode(band_arr).alias("band", "bucket"))
-    return _bucket_join_pairs(banded, id_col, max_bucket_size)
+    banded = sig.select("doc_id", F.posexplode(band_arr).alias("band", "bucket"))
+    return _bucket_join_pairs(banded, max_bucket_size)
 
 
-def _bucket_join_pairs(banded: DataFrame, id_col: str,
-                       max_bucket_size: int | None) -> DataFrame:
+def _bucket_join_pairs(banded: DataFrame, max_bucket_size: int | None) -> DataFrame:
     """(band, bucket) self-join -> distinct (a < b) candidate pairs,
     with the optional oversized-bucket guard (see minhash_lsh_pairs)."""
     if max_bucket_size is not None:
@@ -275,8 +270,8 @@ def _bucket_join_pairs(banded: DataFrame, id_col: str,
             .filter(F.col("_sz") <= max_bucket_size)
             .drop("_sz")
         )
-    a = banded.select(F.col(id_col).alias("a"), "band", "bucket")
-    b = banded.select(F.col(id_col).alias("b"), "band", "bucket")
+    a = banded.select(F.col("doc_id").alias("a"), "band", "bucket")
+    b = banded.select(F.col("doc_id").alias("b"), "band", "bucket")
     # merge hint: both sides are the corpus-sized banded table -- the
     # compressed-columnar scan estimate can sneak a side under the
     # auto-broadcast threshold, and the row-format hash relation then
@@ -290,7 +285,7 @@ def _bucket_join_pairs(banded: DataFrame, id_col: str,
 
 
 def ngram_jaccard_pairs(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
+    df: DataFrame,
     shingle_k: int = 5, threshold: float = 0.8, min_common: int = 1,
     max_doc_freq: int | None = None,
 ) -> DataFrame:
@@ -321,8 +316,8 @@ def ngram_jaccard_pairs(
             UserWarning,  # visible by default (ResourceWarning is filtered)
             stacklevel=2,
         )
-    sh = df.select(F.col(id_col), F.explode(shingles_col(F.col(text_col), shingle_k)).alias("sh"))
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
+    sh = df.select(F.col("doc_id"), F.explode(shingles_col(F.col("text"), shingle_k)).alias("sh"))
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     cand_sh = sh
     if max_doc_freq is not None:
         rare = (
@@ -331,15 +326,15 @@ def ngram_jaccard_pairs(
             .select("sh")
         )
         cand_sh = sh.join(rare, "sh", "left_semi")
-    a = cand_sh.select(F.col(id_col).alias("a"), "sh")
-    b = cand_sh.select(F.col(id_col).alias("b"), "sh")
+    a = cand_sh.select(F.col("doc_id").alias("a"), "sh")
+    b = cand_sh.select(F.col("doc_id").alias("b"), "sh")
     common = (
         a.join(b.hint("merge"), "sh").filter(F.col("a") < F.col("b"))
         .groupBy("a", "b").agg(F.count(F.lit(1)).alias("common"))
         .filter(F.col("common") >= min_common)
     )
-    sa = sizes.select(F.col(id_col).alias("a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col(id_col).alias("b"), F.col("sz").alias("sz_b"))
+    sa = sizes.select(F.col("doc_id").alias("a"), F.col("sz").alias("sz_a"))
+    sb = sizes.select(F.col("doc_id").alias("b"), F.col("sz").alias("sz_b"))
     out = (
         common.join(sa.hint("merge"), "a").join(sb.hint("merge"), "b")
         .withColumn("jaccard", F.col("common") / (F.col("sz_a") + F.col("sz_b") - F.col("common")))
@@ -350,7 +345,7 @@ def ngram_jaccard_pairs(
 
 
 def ngram_jaccard_lsh_pairs(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
+    df: DataFrame,
     shingle_k: int = 5, threshold: float = 0.8,
     num_hashes: int = 64, bands: int = 16, hash_fn: str = "rolling",
     max_bucket_size: int | None = None, verify_on_hashes: bool = False,
@@ -388,17 +383,16 @@ def ngram_jaccard_lsh_pairs(
     if verify_on_hashes and hash_fn != "rolling":
         raise ValueError("verify_on_hashes intersects rolling window hashes; "
                          "it needs hash_fn='rolling'")
-    cands = minhash_lsh_pairs(df, id_col, text_col, num_hashes, bands, shingle_k,
-                              hash_fn, max_bucket_size)
+    cands = minhash_lsh_pairs(df, num_hashes, bands, shingle_k, hash_fn, max_bucket_size)
     if verify_on_hashes:
-        sh = _kr_hash_arrays(df, id_col, text_col, shingle_k)
+        sh = _kr_hash_arrays(df, shingle_k)
     else:
         from osm_pbf_convert_spark.plans.partitioning import fan_out
 
         # fan out BEFORE the substring materialization: shingles_col is
         # the per-row-heavy step here (guide §2.5 input skew)
-        sh = fan_out(df, key=id_col).select(
-            F.col(id_col), shingles_col(F.col(text_col), shingle_k).alias("shs")
+        sh = fan_out(df, key="doc_id").select(
+            F.col("doc_id"), shingles_col(F.col("text"), shingle_k).alias("shs")
         )
     # merge hints: the shingle-ARRAY side is corpus-sized; its columnar
     # scan estimate undershoots the exploded row format by ~100x, so the
@@ -406,8 +400,8 @@ def ngram_jaccard_lsh_pairs(
     # (measured exit-52 OOM at 16x bench volume, 8 GB executors)
     return (
         cands
-        .join(sh.select(F.col(id_col).alias("a"), F.col("shs").alias("sha")).hint("merge"), "a")
-        .join(sh.select(F.col(id_col).alias("b"), F.col("shs").alias("shb")).hint("merge"), "b")
+        .join(sh.select(F.col("doc_id").alias("a"), F.col("shs").alias("sha")).hint("merge"), "a")
+        .join(sh.select(F.col("doc_id").alias("b"), F.col("shs").alias("shb")).hint("merge"), "b")
         .withColumn("common", F.size(F.array_intersect("sha", "shb")))
         .withColumn(
             "jaccard",
@@ -418,7 +412,7 @@ def ngram_jaccard_lsh_pairs(
     )
 
 
-def _simhash_signatures_rolling(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def _simhash_signatures_rolling(df: DataFrame) -> DataFrame:
     """The no-token-row SimHash stage (``hash_fn="rolling"``): one Arrow
     pass per batch computes every token occurrence's Karp-Rabin Horner
     hash and the per-doc 64-bit majority (``rolling.batch_token_hash_
@@ -434,21 +428,20 @@ def _simhash_signatures_rolling(df: DataFrame, id_col: str, text_col: str) -> Da
 
     def batches(it):
         for pdf in it:
-            hashes, off = rolling.batch_token_hash_segments(pdf[text_col])
+            hashes, off = rolling.batch_token_hash_segments(pdf["text"])
             sig = rolling.segment_bit_majority(hashes, off)
             yield pd.DataFrame({
-                id_col: pdf[id_col].to_numpy(),
+                "doc_id": pdf["doc_id"].to_numpy(),
                 "simhash": sig.astype(np.int64),
             })
 
-    id_type = df.schema[id_col].dataType.simpleString()
-    return df.select(id_col, text_col).mapInPandas(
-        batches, schema=f"{id_col} {id_type}, simhash long"
+    id_type = df.schema["doc_id"].dataType.simpleString()
+    return df.select("doc_id", "text").mapInPandas(
+        batches, schema=f"doc_id {id_type}, simhash long"
     )
 
 
-def _simhash_signatures_md5(df: DataFrame, id_col: str, text_col: str,
-                            bits: int) -> DataFrame:
+def _simhash_signatures_md5(df: DataFrame, bits: int) -> DataFrame:
     """The md5 oracle SimHash as ONE zero-shuffle Arrow pass: 60-bit md5
     token hashes per occurrence (``md5win``, one real md5 per distinct
     token per batch) + the shared numpy bit-majority
@@ -465,21 +458,21 @@ def _simhash_signatures_md5(df: DataFrame, id_col: str, text_col: str,
 
     def batches(it):
         for pdf in it:
-            h60, off = md5win.batch_token_md5_segments(pdf[text_col])
+            h60, off = md5win.batch_token_md5_segments(pdf["text"])
             sig = rolling.segment_bit_majority(h60, off) & mask
             yield pd.DataFrame({
-                id_col: pdf[id_col].to_numpy(),
+                "doc_id": pdf["doc_id"].to_numpy(),
                 "simhash": sig.astype(np.int64),
             })
 
-    id_type = df.schema[id_col].dataType.simpleString()
-    return fan_out(df.select(id_col, text_col), key=id_col).mapInPandas(
-        batches, schema=f"{id_col} {id_type}, simhash long"
+    id_type = df.schema["doc_id"].dataType.simpleString()
+    return fan_out(df.select("doc_id", "text"), key="doc_id").mapInPandas(
+        batches, schema=f"doc_id {id_type}, simhash long"
     )
 
 
 def simhash_signatures(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
+    df: DataFrame,
     bits: int = 64, hash_fn: str = "rolling",
 ) -> DataFrame:
     """(id, simhash long): per-bit majority over the token hashes of each
@@ -497,16 +490,16 @@ def simhash_signatures(
         if bits != 64:
             raise ValueError("rolling simhash is 64-bit; pass hash_fn='md5' "
                              "for bits <= 60")
-        return _simhash_signatures_rolling(df, id_col, text_col)
+        return _simhash_signatures_rolling(df)
     if hash_fn == "md5":
         if bits > 60:
             raise ValueError("md5 variant carries 60 hash bits; pass bits<=60")
-        return _simhash_signatures_md5(df, id_col, text_col, bits)
+        return _simhash_signatures_md5(df, bits)
     raise ValueError(f"unknown hash_fn {hash_fn!r}; expected 'rolling' or 'md5'")
 
 
 def simhash_hamming_pairs(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
+    df: DataFrame,
     max_hamming: int = 3, bands: int | None = None,
     bits: int = 64, hash_fn: str = "rolling",
 ) -> DataFrame:
@@ -523,7 +516,7 @@ def simhash_hamming_pairs(
     """
     b = bands or (max_hamming + 1)
     width = bits // b
-    s = simhash_signatures(df, id_col, text_col, bits=bits, hash_fn=hash_fn)
+    s = simhash_signatures(df, bits=bits, hash_fn=hash_fn)
     chunk_arr = F.array(
         *[
             F.struct(
@@ -535,11 +528,11 @@ def simhash_hamming_pairs(
             for i in range(b)
         ]
     )
-    banded = s.select(id_col, "simhash", F.explode(chunk_arr).alias("c")).select(
-        id_col, "simhash", F.col("c.band").alias("band"), F.col("c.chunk").alias("chunk")
+    banded = s.select("doc_id", "simhash", F.explode(chunk_arr).alias("c")).select(
+        "doc_id", "simhash", F.col("c.band").alias("band"), F.col("c.chunk").alias("chunk")
     )
-    a = banded.select(F.col(id_col).alias("a"), F.col("simhash").alias("sh_a"), "band", "chunk")
-    b_ = banded.select(F.col(id_col).alias("b"), F.col("simhash").alias("sh_b"), "band", "chunk")
+    a = banded.select(F.col("doc_id").alias("a"), F.col("simhash").alias("sh_a"), "band", "chunk")
+    b_ = banded.select(F.col("doc_id").alias("b"), F.col("simhash").alias("sh_b"), "band", "chunk")
     # merge hint: corpus-sized self-join (see minhash_lsh_pairs)
     pairs = (
         a.join(b_.hint("merge"), ["band", "chunk"]).filter(F.col("a") < F.col("b"))
@@ -552,15 +545,15 @@ def simhash_hamming_pairs(
 
 
 def simhash_dedup_groups(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
+    df: DataFrame,
     bits: int = 64, hash_fn: str = "rolling",
 ) -> DataFrame:
     """Groups of docs with IDENTICAL simhash (near-dup at hamming 0); for
     hamming <= d banding, split the bits into d+1 chunks upstream."""
-    s = simhash_signatures(df, id_col, text_col, bits=bits, hash_fn=hash_fn)
+    s = simhash_signatures(df, bits=bits, hash_fn=hash_fn)
     return (
         s.groupBy("simhash")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"), F.count(F.lit(1)).alias("n"))
+        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"), F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") > 1)
     )
 
@@ -590,9 +583,7 @@ def _hyperplane_sign_matrix(spark, planes: int, dim: int, seed: int) -> list:
     ]
 
 
-def _assign_hyperplane_buckets(
-    df: DataFrame, id_col: str, vec_col: str, signs: list
-) -> DataFrame:
+def _assign_hyperplane_buckets(df: DataFrame, signs: list) -> DataFrame:
     """(id, vec, bucket) via one Arrow pass: all plane dots per batch,
     accumulated dimension-by-dimension so each row's float64 sum order is
     the sequential left fold (bit-identical to the Catalyst/DuckDB
@@ -608,7 +599,7 @@ def _assign_hyperplane_buckets(
         for pdf in it:
             if not len(pdf):
                 continue
-            vecs = pdf[vec_col].to_numpy()
+            vecs = pdf["embedding"].to_numpy()
             # robustness (ADVICE r7): a single null/ragged embedding must
             # not crash the whole job -- name the offending id instead
             # (the pre-r7 zip_with expression silently nulled such rows;
@@ -616,11 +607,11 @@ def _assign_hyperplane_buckets(
             lens = {len(v) if v is not None else -1 for v in vecs}
             if len(lens) > 1 or -1 in lens:
                 bad = next(
-                    i for v, i in zip(vecs, pdf[id_col])
+                    i for v, i in zip(vecs, pdf["vec_id"])
                     if v is None or len(v) != max(lens)
                 )
                 raise ValueError(
-                    f"embedding_neardup: null or ragged embedding at {id_col}={bad!r}"
+                    f"embedding_neardup: null or ragged embedding at vec_id={bad!r}"
                 )
             V = np.stack(vecs)  # n x dim float64
             n, d = V.shape
@@ -631,18 +622,18 @@ def _assign_hyperplane_buckets(
                 acc += V[:, j, None] * S[None, :, j]
             bucket = ((acc > 0.0).astype(np.int64) * weights).sum(axis=1)
             yield pd.DataFrame(
-                {id_col: pdf[id_col], vec_col: pdf[vec_col], "bucket": bucket}
+                {"vec_id": pdf["vec_id"], "embedding": pdf["embedding"], "bucket": bucket}
             )
 
-    in_schema = df.select(id_col, vec_col).schema
+    in_schema = df.select("vec_id", "embedding").schema
     out_schema = T.StructType(
         list(in_schema.fields) + [T.StructField("bucket", T.LongType())]
     )
-    return df.select(id_col, vec_col).mapInPandas(fn, schema=out_schema)
+    return df.select("vec_id", "embedding").mapInPandas(fn, schema=out_schema)
 
 
 def embedding_neardup_pairs(
-    df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding",
+    df: DataFrame,
     threshold: float = 0.95, planes: int = 16, seed: int = 42,
     hyperplanes: list | None = None,
 ) -> DataFrame:
@@ -672,24 +663,24 @@ def embedding_neardup_pairs(
     """
     # all arithmetic in float64: float32 inputs are widened BEFORE any
     # multiply, so products/sums round identically in Spark and DuckDB
-    df = df.withColumn(vec_col, F.col(vec_col).cast("array<double>"))
+    df = df.withColumn("embedding", F.col("embedding").cast("array<double>"))
     if hyperplanes is not None:
         signs = [[float(s) for s in row] for row in hyperplanes]
     else:
-        row = df.select(F.size(vec_col)).first()  # one-row driver probe
+        row = df.select(F.size("embedding")).first()  # one-row driver probe
         if row is None:  # empty input: no pairs (ADVICE r7 guard)
             return df.sparkSession.createDataFrame(
                 [], schema="a long, b long, cosine double"
             ).select(
-                F.col("a").cast(df.schema[id_col].dataType).alias("a"),
-                F.col("b").cast(df.schema[id_col].dataType).alias("b"),
+                F.col("a").cast(df.schema["vec_id"].dataType).alias("a"),
+                F.col("b").cast(df.schema["vec_id"].dataType).alias("b"),
                 "cosine",
             )
         dim = row[0]
         signs = _hyperplane_sign_matrix(df.sparkSession, planes, dim, seed)
-    withb = _assign_hyperplane_buckets(df, id_col, vec_col, signs)
-    a = withb.select(F.col(id_col).alias("a"), F.col(vec_col).alias("va"), "bucket")
-    b_ = withb.select(F.col(id_col).alias("b"), F.col(vec_col).alias("vb"), "bucket")
+    withb = _assign_hyperplane_buckets(df, signs)
+    a = withb.select(F.col("vec_id").alias("a"), F.col("embedding").alias("va"), "bucket")
+    b_ = withb.select(F.col("vec_id").alias("b"), F.col("embedding").alias("vb"), "bucket")
     # merge hint: corpus-sized self-join carrying full embedding vectors
     pairs = a.join(b_.hint("merge"), "bucket").filter(F.col("a") < F.col("b"))
     dot = F.aggregate(F.zip_with("va", "vb", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)

@@ -75,12 +75,12 @@ from pyspark.sql import DataFrame, Row, Window
 from pyspark.sql import functions as F
 
 
-def _canonical_edges(pairs: DataFrame, a_col: str, b_col: str) -> DataFrame:
+def _canonical_edges(pairs: DataFrame) -> DataFrame:
     """(u, v) with u = smaller endpoint, self-loops dropped, deduped."""
     return (
         pairs.select(
-            F.least(F.col(a_col), F.col(b_col)).alias("u"),
-            F.greatest(F.col(a_col), F.col(b_col)).alias("v"),
+            F.least(F.col("a"), F.col("b")).alias("u"),
+            F.greatest(F.col("a"), F.col("b")).alias("v"),
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
@@ -190,13 +190,11 @@ def _fixpoint(edges: DataFrame, pin: bool) -> tuple[DataFrame, Row]:
 
 def connected_components(
     pairs: DataFrame,
-    a_col: str = "a",
-    b_col: str = "b",
     max_iter: int = 25,
     use_local_checkpoint: bool = True,
     stats: dict | None = None,
 ) -> DataFrame:
-    """Labels (id, component) for every node appearing in ``pairs``;
+    """Labels (id, component) for every node appearing in ``pairs(a, b)``;
     component = the minimum node id of its connected component.
 
     The canonical edges are contracted per partition, then star rounds
@@ -231,7 +229,7 @@ def connected_components(
         )
 
     edges = _ckpt(
-        _canonical_edges(pairs, a_col, b_col).mapInArrow(_star_forest, "u long, v long")
+        _canonical_edges(pairs).mapInArrow(_star_forest, "u long, v long")
     )
     edges_in = []
     rounds = 0
@@ -250,11 +248,10 @@ def connected_components(
 
 
 def near_dup_groups(
-    pairs: DataFrame, a_col: str = "a", b_col: str = "b", id_name: str = "doc_id",
-    stats: dict | None = None, use_local_checkpoint: bool = True,
+    pairs: DataFrame, stats: dict | None = None, use_local_checkpoint: bool = True,
     max_iter: int = 25,
 ) -> DataFrame:
-    """(doc_id, component) labels over a near-dup pair stream -- the
+    """(doc_id, component) labels over a near-dup pair stream (a, b) -- the
     grouping step between pair emission (minhash/simhash/ngram/embedding
     operators) and survivor selection.
 
@@ -267,17 +264,11 @@ def near_dup_groups(
     at the 20M-edge adversarial rehearsal; disk checkpoints hold each
     round on stable storage instead."""
     return connected_components(
-        pairs, a_col, b_col, stats=stats,
-        use_local_checkpoint=use_local_checkpoint, max_iter=max_iter,
-    ).select(F.col("id").alias(id_name), "component")
+        pairs, stats=stats, use_local_checkpoint=use_local_checkpoint, max_iter=max_iter,
+    ).select(F.col("id").alias("doc_id"), "component")
 
 
-def dedup_survivors(
-    docs: DataFrame,
-    labels: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def dedup_survivors(docs: DataFrame, labels: DataFrame) -> DataFrame:
     """One survivor per duplicate component: the LONGEST text (ties -> min
     id) -- the usual "keep the most complete copy" training-data policy.
 
@@ -288,16 +279,16 @@ def dedup_survivors(
     """
     from pyspark.sql import Window
 
-    j = labels.join(docs.select(id_col, F.length(text_col).alias("_len")), id_col)
+    j = labels.join(docs.select("doc_id", F.length("text").alias("_len")), "doc_id")
     w = Window.partitionBy("component")
     ranked = j.select(
         "component",
-        F.col(id_col),
+        F.col("doc_id"),
         F.row_number()
-        .over(w.orderBy(F.col("_len").desc(), F.col(id_col)))
+        .over(w.orderBy(F.col("_len").desc(), F.col("doc_id")))
         .alias("_rn"),
         F.count(F.lit(1)).over(w).alias("n_docs"),
     )
     return ranked.filter(F.col("_rn") == 1).select(
-        "component", F.col(id_col).alias("survivor_id"), "n_docs"
+        "component", F.col("doc_id").alias("survivor_id"), "n_docs"
     )

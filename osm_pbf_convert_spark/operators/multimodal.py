@@ -1,146 +1,55 @@
-"""Multimodal column plumbing: image/audio/video as opaque binary columns
-with typed metadata.
+"""Multimodal column plumbing: images as opaque binary columns with typed
+metadata, decoded into features inside ``mapInPandas``.
 
-The Spark-side contract is REAL and tested: schemas, Arrow batch shapes,
-``mapInPandas`` partition flow, deterministic partitioning. Decoders:
-
-- ``"numpy"``: REAL image decode for two uncompressed formats a pure-numpy
-  parser can own -- 24-bit BI_RGB BMP and binary PPM (P6) -- exercising
-  the full decode -> pixels -> feature/resize path with no native deps.
-- ``"pil"``: general formats via Pillow when it is installed (import-
-  gated; absent in this container, so tests skip it).
-- ``"fake"``: deterministic pseudo-features from raw bytes (pipelines
-  stay end-to-end testable with arbitrary payloads).
-- ``"stub"``: raises NotImplementedError, documenting the missing native
-  dependency for formats beyond the above (JPEG/PNG/ffmpeg).
+``decode_image_np`` is a pure-numpy decoder for binary PPM (P6, maxval
+255), the uncompressed format the ``multimodal_features`` catalog query
+builds: it exercises the full decode -> pixels -> feature path with no
+native dependency. Any other payload raises ``ValueError``.
 """
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-MEDIA_SCHEMA = (
-    "media_id bigint, kind string, content binary, "
-    "meta struct<width:int, height:int, sample_rate:int, n_frames:int, mime:string>"
-)
-
-DECODERS = ("stub", "fake", "numpy", "pil")
-
-
-def _fake_feature(content: bytes, dim: int) -> np.ndarray:
-    """Deterministic pseudo-embedding: sha256-seeded uniform floats."""
-    if content is None:
-        content = b""
-    seed = int.from_bytes(hashlib.sha256(content).digest()[:8], "big")
-    rng = np.random.default_rng(seed)
-    return rng.random(dim, dtype=np.float64).astype(np.float32)
-
-
-# ---------------------------------------------------------------------------
-# pure-numpy image codecs (24-bit BI_RGB BMP, binary PPM/P6)
-# ---------------------------------------------------------------------------
 
 def decode_image_np(content: bytes) -> np.ndarray:
-    """bytes -> (H, W, 3) uint8 RGB. Supports uncompressed 24-bit BMP
-    (bottom-up or top-down) and binary PPM (P6, maxval 255)."""
+    """bytes -> (H, W, 3) uint8 RGB from binary PPM (P6, maxval 255)."""
     if content is None or len(content) < 2:
         raise ValueError("empty image payload")
     magic = bytes(content[:2])
-    if magic == b"BM":
-        if len(content) < 54:
-            raise ValueError("truncated BMP header")
-        off = int.from_bytes(content[10:14], "little")
-        width = int.from_bytes(content[18:22], "little", signed=True)
-        height = int.from_bytes(content[22:26], "little", signed=True)
-        bpp = int.from_bytes(content[28:30], "little")
-        comp = int.from_bytes(content[30:34], "little")
-        if bpp != 24 or comp != 0:
-            raise ValueError(f"only uncompressed 24-bit BMP supported (bpp={bpp}, comp={comp})")
-        bottom_up = height > 0
-        height = abs(height)
-        stride = ((width * 3 + 3) // 4) * 4
-        need = off + stride * height
-        if len(content) < need:
-            raise ValueError("truncated BMP pixel data")
-        rows = np.frombuffer(content, dtype=np.uint8, count=stride * height, offset=off)
-        px = rows.reshape(height, stride)[:, : width * 3].reshape(height, width, 3)
-        if bottom_up:
-            px = px[::-1]
-        return px[..., ::-1].copy()  # BGR -> RGB
-    if magic == b"P6":
-        # header: P6 <ws> width <ws> height <ws> maxval <single ws> raster
-        i, fields = 2, []
-        n = len(content)
-        while len(fields) < 3:
-            while i < n and content[i : i + 1].isspace():
+    if magic != b"P6":
+        raise ValueError(f"unsupported image magic {magic!r} (numpy decoder: PPM)")
+    # header: P6 <ws> width <ws> height <ws> maxval <single ws> raster
+    i, fields = 2, []
+    n = len(content)
+    while len(fields) < 3:
+        while i < n and content[i : i + 1].isspace():
+            i += 1
+        if i < n and content[i : i + 1] == b"#":  # comment to EOL
+            while i < n and content[i] not in (0x0A, 0x0D):
                 i += 1
-            if i < n and content[i : i + 1] == b"#":  # comment to EOL
-                while i < n and content[i] not in (0x0A, 0x0D):
-                    i += 1
-                continue
-            j = i
-            while j < n and not content[j : j + 1].isspace():
-                j += 1
-            fields.append(int(content[i:j]))
-            i = j
-        i += 1  # the single whitespace after maxval
-        width, height, maxval = fields
-        if maxval != 255:
-            raise ValueError("only maxval 255 PPM supported")
-        need = width * height * 3
-        if n - i < need:
-            raise ValueError("truncated PPM raster")
-        return (
-            np.frombuffer(content, dtype=np.uint8, count=need, offset=i)
-            .reshape(height, width, 3)
-            .copy()
-        )
-    raise ValueError(f"unsupported image magic {magic!r} (numpy decoder: BMP/PPM)")
-
-
-def encode_ppm(px: np.ndarray) -> bytes:
-    """(H, W, 3) uint8 RGB -> binary PPM (P6)."""
-    h, w = px.shape[:2]
-    return b"P6\n%d %d\n255\n" % (w, h) + np.ascontiguousarray(px, dtype=np.uint8).tobytes()
-
-
-def encode_bmp(px: np.ndarray) -> bytes:
-    """(H, W, 3) uint8 RGB -> uncompressed 24-bit bottom-up BMP."""
-    h, w = px.shape[:2]
-    stride = ((w * 3 + 3) // 4) * 4
-    rows = np.zeros((h, stride), dtype=np.uint8)
-    rows[:, : w * 3] = px[::-1, :, ::-1].reshape(h, w * 3)  # bottom-up BGR
-    data = rows.tobytes()
-    header = (
-        b"BM" + (54 + len(data)).to_bytes(4, "little") + b"\x00\x00\x00\x00"
-        + (54).to_bytes(4, "little")
-        + (40).to_bytes(4, "little")
-        + w.to_bytes(4, "little", signed=True) + h.to_bytes(4, "little", signed=True)
-        + (1).to_bytes(2, "little") + (24).to_bytes(2, "little")
-        + (0).to_bytes(4, "little") + len(data).to_bytes(4, "little")
-        + (2835).to_bytes(4, "little") * 2 + (0).to_bytes(4, "little") * 2
+            continue
+        j = i
+        while j < n and not content[j : j + 1].isspace():
+            j += 1
+        fields.append(int(content[i:j]))
+        i = j
+    i += 1  # the single whitespace after maxval
+    width, height, maxval = fields
+    if maxval != 255:
+        raise ValueError("only maxval 255 PPM supported")
+    need = width * height * 3
+    if n - i < need:
+        raise ValueError("truncated PPM raster")
+    return (
+        np.frombuffer(content, dtype=np.uint8, count=need, offset=i)
+        .reshape(height, width, 3)
+        .copy()
     )
-    return header + data
-
-
-def _decode_any(content: bytes, decoder: str) -> np.ndarray:
-    if decoder == "numpy":
-        return decode_image_np(content)
-    if decoder == "pil":
-        try:
-            from io import BytesIO
-
-            from PIL import Image  # noqa: import-gated optional dependency
-        except ImportError as e:
-            raise NotImplementedError("decoder='pil' requires Pillow") from e
-        return np.asarray(Image.open(BytesIO(content)).convert("RGB"))
-    raise ValueError(f"unknown pixel decoder {decoder!r}")
 
 
 def _pixel_feature(px: np.ndarray, dim: int) -> np.ndarray:
@@ -151,36 +60,20 @@ def _pixel_feature(px: np.ndarray, dim: int) -> np.ndarray:
     return (hist / max(1, gray.size)).astype(np.float32)
 
 
-def extract_features(
-    df: DataFrame, dim: int = 32, content_col: str = "content", decoder: str = "stub"
-) -> DataFrame:
+def extract_features(df: DataFrame, dim: int = 32) -> DataFrame:
     """media -> (all columns..., feature array<float>).
 
     ``mapInPandas`` with Arrow batches; batch shape = input batch rows, one
-    feature vector per row. decoder='numpy' REALLY decodes (BMP/PPM) and
-    emits a grayscale-histogram feature; decoder='pil' handles general
-    formats when Pillow is installed; decoder='stub' raises (documents the
-    missing native dependency for other formats); decoder='fake' is the
-    deterministic test double for arbitrary payloads.
+    feature vector per row: each ``content`` payload is REALLY decoded
+    (``decode_image_np``) into pixels and summarized as a ``dim``-bin
+    grayscale histogram.
     """
-    if decoder not in DECODERS:
-        raise ValueError(f"decoder must be one of {DECODERS}")
-    out_schema = df.schema.simpleString()[7:-1] + f", feature array<float>"
+    out_schema = df.schema.simpleString()[7:-1] + ", feature array<float>"
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if decoder == "stub":
-                raise NotImplementedError(
-                    "general media decode requires PIL/ffmpeg (not in this container); "
-                    "use decoder='numpy' for BMP/PPM or decoder='fake' for plumbing tests"
-                )
             pdf = pdf.copy()
-            if decoder == "fake":
-                pdf["feature"] = [_fake_feature(c, dim) for c in pdf[content_col]]
-            else:
-                pdf["feature"] = [
-                    _pixel_feature(_decode_any(c, decoder), dim) for c in pdf[content_col]
-                ]
+            pdf["feature"] = [_pixel_feature(decode_image_np(c), dim) for c in pdf["content"]]
             yield pdf
 
     from osm_pbf_convert_spark.plans.partitioning import fan_out
@@ -188,71 +81,3 @@ def extract_features(
     # per-row image decode is the per-row-heavy class (guide §2.5): never
     # run it on the 1-2 splits a small media table scans as
     return fan_out(df).mapInPandas(fn, out_schema)
-
-
-def resize_images(df: DataFrame, width: int, height: int, decoder: str = "stub") -> DataFrame:
-    """Image resize: output schema mirrors input with updated meta and
-    re-encoded content. decoder='numpy' REALLY resizes (nearest-neighbor
-    index sampling on decoded BMP/PPM pixels, re-encoded as PPM);
-    fake: content = sha256 tag + target dims (plumbing only)."""
-    if decoder not in DECODERS:
-        raise ValueError(f"decoder must be one of {DECODERS}")
-    out_schema = df.schema.simpleString()[7:-1]
-
-    def _resize_nn(px: np.ndarray) -> np.ndarray:
-        h, w = px.shape[:2]
-        ri = (np.arange(height) * h // height).clip(0, h - 1)
-        ci = (np.arange(width) * w // width).clip(0, w - 1)
-        return px[ri][:, ci]
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if decoder == "stub":
-                raise NotImplementedError(
-                    "general image resize requires PIL; decoder='numpy' handles BMP/PPM"
-                )
-            pdf = pdf.copy()
-            if decoder == "fake":
-                pdf["content"] = [
-                    hashlib.sha256((c or b"") + f"{width}x{height}".encode()).digest()
-                    for c in pdf["content"]
-                ]
-                mime = None
-            else:
-                pdf["content"] = [
-                    encode_ppm(_resize_nn(_decode_any(c, decoder))) for c in pdf["content"]
-                ]
-                mime = "image/x-portable-pixmap"
-            pdf["meta"] = [
-                {**(m if isinstance(m, dict) else m.asDict() if m is not None else {}),
-                 "width": width, "height": height,
-                 **({"mime": mime} if mime else {})}
-                for m in pdf["meta"]
-            ]
-            yield pdf
-
-    return df.mapInPandas(fn, out_schema)
-
-
-def sample_frames(df: DataFrame, every_n: int = 10, decoder: str = "stub") -> DataFrame:
-    """Video frame sampling plumbing: one output row per sampled frame
-    (media_id, frame_index, frame binary). fake: n_frames//every_n rows of
-    deterministic bytes."""
-    out_schema = "media_id bigint, frame_index int, frame binary"
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if decoder == "stub":
-                raise NotImplementedError("real frame extraction requires ffmpeg")
-            rows = []
-            for _, r in pdf.iterrows():
-                meta = r["meta"]
-                n = (meta.get("n_frames") if isinstance(meta, dict) else meta["n_frames"]) or 0
-                for fi in range(0, int(n), every_n):
-                    rows.append(
-                        (r["media_id"], fi,
-                         hashlib.sha256((r["content"] or b"") + fi.to_bytes(4, "big")).digest())
-                    )
-            yield pd.DataFrame(rows, columns=["media_id", "frame_index", "frame"])
-
-    return df.mapInPandas(fn, out_schema)

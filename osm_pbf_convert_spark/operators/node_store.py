@@ -50,7 +50,8 @@ def encode_nodes_index_py(ids, lats, lons, block_size: int = BLOCK_SIZE):
     """Pure-Python reference encoder (golden): a direct port of
     ``NodesIndex.WriteNode`` (``NodesIndex.cs:107-146``). Returns
     ``(dat_bytes, idx_bytes)``. Input must be ascending by id (the
-    reference receives nodes pre-sorted by its external sort)."""
+    reference receives nodes pre-sorted by its external sort).
+    Kept as the byte-parity golden of the distributed ``.nodes.dat`` writer."""
     dat = bytearray()
     idx = bytearray()
     last_id = last_lat = last_lon = 0
@@ -79,7 +80,8 @@ def encode_nodes_index_py(ids, lats, lons, block_size: int = BLOCK_SIZE):
 def decode_nodes_index_py(dat: bytes, block_size: int = BLOCK_SIZE):
     """Sequential decoder mirroring ``NodesIndex.ReadAllNodesById``'s
     parse states (``NodesIndex.cs:218-268``) for roundtrip tests: walks
-    the whole stream applying the same block-boundary resets."""
+    the whole stream applying the same block-boundary resets.
+    Kept as the byte-parity oracle of the distributed writer's output."""
     from osm_pbf_convert_spark.codecs import zigzag_decode
 
     ids, lats, lons = [], [], []

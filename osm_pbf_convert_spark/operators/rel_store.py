@@ -82,7 +82,8 @@ def encode_rels_file_py(rels):
     ascending-id iterable of ``(rel_id, rect, members)`` with ``rect`` =
     (min_lat, min_lon, max_lat, max_lon) or None (empty), ``members`` =
     list of (type, member_id, role, mid_lat, mid_lon). Returns
-    ``(rels_bytes, strings_bytes, roles_in_order)``."""
+    ``(rels_bytes, strings_bytes, roles_in_order)``.
+    Kept as the byte-parity golden of the distributed ``.rels`` writer."""
     dat = bytearray()
     role_ids: dict[str, int] = {}
     last_id = 0
@@ -119,7 +120,8 @@ def encode_rels_file_py(rels):
 def decode_rels_file_py(dat: bytes):
     """Sequential reader port for roundtrip tests: returns
     [(rel_id, (min_lat, min_lon, max_lat, max_lon), members)] with
-    members = [(type, member_id, role_id, mid_lat, mid_lon)]."""
+    members = [(type, member_id, role_id, mid_lat, mid_lon)].
+    Kept as the byte-parity oracle of the distributed writer's output."""
     from osm_pbf_convert_spark.codecs import zigzag_decode
 
     pos, n = 0, len(dat)

@@ -33,41 +33,35 @@ def brute_force_topk(
     vectors: DataFrame,
     queries: DataFrame,
     k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
 ) -> DataFrame:
     """Exact cosine top-k: queries broadcast against every vector."""
-    q = queries.select(F.col(query_id_col), F.col(query_vec_col))
-    v = vectors.select(F.col(id_col), F.col(vec_col))
+    q = queries.select(F.col("query_id"), F.col("query_vec"))
+    v = vectors.select(F.col("vec_id"), F.col("embedding"))
     joined = v.crossJoin(F.broadcast(q))
     scored = joined.withColumn(
-        "cosine", cosine_col(F.col(vec_col).cast("array<double>"), F.col(query_vec_col).cast("array<double>"))
+        "cosine", cosine_col(F.col("embedding").cast("array<double>"), F.col("query_vec").cast("array<double>"))
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.asc(id_col))
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine", "rank")
+        .select("query_id", "vec_id", "cosine", "rank")
     )
 
 
 def train_centroids(
-    vectors: DataFrame, ncells: int, vec_col: str = "embedding",
-    sample: int = 4096, iters: int = 5, seed: int = 42,
+    vectors: DataFrame, ncells: int, sample: int = 4096, iters: int = 5, seed: int = 42,
 ) -> np.ndarray:
     """Driver-side Lloyd iterations on a deterministic sample (ORDER BY
     xxhash64(id) LIMIT sample). ncells is small (sqrt(N) rule); the model
     ships back as a broadcast literal array."""
-    id_col = vectors.columns[0]
     pdf = (
-        vectors.select(vec_col)
-        .orderBy(F.xxhash64(F.col(id_col).cast("string"), F.lit(seed)))
+        vectors.select("embedding")
+        .orderBy(F.xxhash64(F.col(vectors.columns[0]).cast("string"), F.lit(seed)))
         .limit(sample)
         .toPandas()
     )
-    X = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
+    X = np.asarray(pdf["embedding"].tolist(), dtype=np.float64)
     rng = np.random.default_rng(seed)
     cents = X[rng.choice(len(X), size=min(ncells, len(X)), replace=False)]
     for _ in range(iters):
@@ -126,34 +120,30 @@ def ivf_topk(
     k: int,
     ncells: int = 16,
     nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
     centroids: np.ndarray | None = None,
 ) -> DataFrame:
     """IVF-bucketed approximate top-k: vectors assigned to their nearest
     centroid cell once; queries probe nprobe cells; exact cosine within."""
     if centroids is None:
-        centroids = train_centroids(vectors, ncells, vec_col)
+        centroids = train_centroids(vectors, ncells)
     spark = vectors.sparkSession
     assign1 = _nearest_cells_udf(spark, centroids, 1)
     probe = _nearest_cells_udf(spark, centroids, nprobe)
     v = vectors.select(
-        F.col(id_col), F.col(vec_col),
-        assign1(F.col(vec_col))[0].alias("cell"),
+        F.col("vec_id"), F.col("embedding"),
+        assign1(F.col("embedding"))[0].alias("cell"),
     )
     q = queries.select(
-        F.col(query_id_col), F.col(query_vec_col),
-        F.explode(probe(F.col(query_vec_col))).alias("cell"),
+        F.col("query_id"), F.col("query_vec"),
+        F.explode(probe(F.col("query_vec"))).alias("cell"),
     )
     cand = v.join(q, "cell")
     scored = cand.withColumn(
-        "cosine", cosine_col(F.col(vec_col).cast("array<double>"), F.col(query_vec_col).cast("array<double>"))
+        "cosine", cosine_col(F.col("embedding").cast("array<double>"), F.col("query_vec").cast("array<double>"))
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.asc(id_col))
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine", "rank")
+        .select("query_id", "vec_id", "cosine", "rank")
     )

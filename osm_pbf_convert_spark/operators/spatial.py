@@ -1,10 +1,9 @@
-"""Spatial operators: bbox aggregate, point-in-rect, point-in-polygon via a
+"""Spatial operators: point-in-rect, point-in-polygon via a
 broadcast packed cell-interval index, and kNN via tile ring expansion.
 
 - point-in-rect keeps the reference's exact half-open semantics:
   ``MinLat < lat && MaxLat >= lat && MinLon < lon && MaxLon >= lon``
   (min-EXCLUSIVE, max-inclusive -- ``OSM-pbf-convert/BoundingRect.cs:62-65``).
-- bbox aggregate = min/max fold (``BoundingRect.cs:44-61``).
 - point-in-polygon generalizes the reference's rect-containment + KD-tree
   descent (``SpatialIndex.cs:175-184``): polygons are compiled ONCE on the
   driver into per-zoom tile cover sets (full tiles: containment decided;
@@ -27,26 +26,14 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from osm_pbf_convert_spark.functions.cells import (
-    _compact_np,
     _spread_col,
     quantize_np,
     tile_col,
 )
 
 # ---------------------------------------------------------------------------
-# bbox + rect
+# rect
 # ---------------------------------------------------------------------------
-
-
-def bbox_agg(df: DataFrame, *group_cols: str) -> DataFrame:
-    """min/max lat/lon fold; with no group columns aggregates globally."""
-    aggs = [
-        F.min("ilat").alias("min_ilat"),
-        F.max("ilat").alias("max_ilat"),
-        F.min("ilon").alias("min_ilon"),
-        F.max("ilon").alias("max_ilon"),
-    ]
-    return df.groupBy(*group_cols).agg(*aggs) if group_cols else df.agg(*aggs)
 
 
 def in_rect(
@@ -155,13 +142,6 @@ def _xy_to_tile(tx: np.ndarray, ty: np.ndarray, z: int) -> np.ndarray:
     from osm_pbf_convert_spark.functions.cells import _spread_np
 
     return (_spread_np(tx) | (_spread_np(ty) << np.uint64(1))).astype(np.int64)
-
-
-def tile_to_xy(tile: np.ndarray, z: int):
-    t = np.asarray(tile).astype(np.uint64)
-    tx = _compact_np(t).astype(np.int64)
-    ty = _compact_np(t >> np.uint64(1)).astype(np.int64)
-    return tx, ty
 
 
 def biased_tile_col(ilat: Column, ilon: Column, z: int) -> Column:

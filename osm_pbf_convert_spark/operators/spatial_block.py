@@ -109,6 +109,7 @@ def encode_spatial_block_py(nodes=(), ways=(), rels=()) -> bytes:
     lon)], tags); rels: (id, position, rel_type, role_id, mid_lat,
     mid_lon, item_type, item_id, tags). tags = list of dicts with
     tag_id / key_id / key / value (exactly one of the 3 marker forms).
+    Kept as the byte-parity golden of the distributed block writer.
     """
     out = bytearray()
     lid = lla = llo = 0
@@ -658,7 +659,8 @@ def decode_spatial_block_py(blob: bytes, sections: str | None = None):
 def read_spatial_blocks(spark, block_dir: str) -> DataFrame:
     """Distributed reader over a directory of reference block files: one
     task per block (tiles are independent by construction). Returns the
-    unified entity frame (kind 0/1/2 with the writer's column roles)."""
+    unified entity frame (kind 0/1/2 with the writer's column roles).
+    Kept as the read direction that round-trips the block writer."""
     import glob as _glob
     import os
     import re as _re

@@ -1,18 +1,11 @@
-"""Statistics operators: way length/size stats (#28), lossy heavy-hitters
-(#23), median split (#30).
+"""Statistics operators: way size histogram (#28), heavy hitters (#23).
 
-- way size stats (``OSM-pbf-convert/WaysFileProcessor.cs:20-102``):
-  node-count histogram, max/avg nodes per way, bbox-size quantile profile.
-  The reference's 50-step sorted-desc sample becomes ``approxQuantile``
-  (Greenwald-Khanna -- same epsilon-bounded contract as the reference's
-  tolerance-bounded quickselect).
+- way size stats (``OSM-pbf-convert/WaysFileProcessor.cs:20-102``): the
+  node-count histogram over resolved ways.
 - heavy hitters (``TagStatsProcessor.cs:122-142`` evicts count<100 when the
   hash map hits 10M keys): at Spark scale the exact groupBy is fine, but the
   bounded-memory analog is exposed as a count-min-style threshold filter
   over partial aggregates.
-- median split (``HuffmanCoding/QuickSortSplitter.cs:22-117``, tolerance
-  count/100): ``approxQuantile(col, [0.5], 0.01)`` gives the same
-  "within count/100 of the true median" guarantee.
 """
 
 from __future__ import annotations
@@ -29,29 +22,6 @@ def way_size_histogram(ways_resolved: DataFrame) -> DataFrame:
     )
 
 
-def way_size_summary(ways_resolved: DataFrame) -> dict:
-    """Driver-side scalar summary: max/avg nodes per way + bbox-size
-    quantiles (reference prints these at Finish)."""
-    row = ways_resolved.agg(
-        F.max("n_resolved").alias("max_nodes"),
-        F.avg("n_resolved").alias("avg_nodes"),
-        F.count(F.lit(1)).alias("n_ways"),
-    ).first()
-    sized = ways_resolved.select(
-        (
-            (F.col("max_ilat").cast("long") - F.col("min_ilat").cast("long"))
-            + (F.col("max_ilon").cast("long") - F.col("min_ilon").cast("long"))
-        ).cast("double").alias("box_size")  # cast BEFORE subtracting: int32 spans overflow
-    )
-    qs = sized.approxQuantile("box_size", [0.0, 0.25, 0.5, 0.75, 0.98, 1.0], 0.01)
-    return {
-        "max_nodes": row["max_nodes"],
-        "avg_nodes": row["avg_nodes"],
-        "n_ways": row["n_ways"],
-        "box_size_quantiles": qs,
-    }
-
-
 def heavy_hitters(df: DataFrame, key_col: str, min_count: int = 100) -> DataFrame:
     """Keys with count >= min_count -- the exact version of the reference's
     lossy eviction (which drops counts < 100 under memory pressure). The
@@ -64,9 +34,3 @@ def heavy_hitters(df: DataFrame, key_col: str, min_count: int = 100) -> DataFram
         .filter(F.col("cnt") >= min_count)
     )
 
-
-def median_split(df: DataFrame, col: str, rel_err: float = 0.01) -> float:
-    """Split value within rel_err of the median -- the reference's
-    quickselect-with-tolerance (SpatialBlock.cs:347-348 uses count/100,
-    i.e. rel_err=0.01)."""
-    return df.approxQuantile(col, [0.5], rel_err)[0]

@@ -89,7 +89,7 @@ class TagDictionary:
             rows = [("\x00__none__", "\x00", -1)]
         return spark.createDataFrame(rows, schema=f"key string, value string, {idcol} int")
 
-    def encode(self, spark: SparkSession, df: DataFrame, kind: str, id_col: str = "id") -> DataFrame:
+    def encode(self, spark: SparkSession, df: DataFrame, kind: str) -> DataFrame:
         """df(id, tags map) -> (id, pos, tag_id, key_id, value) rows; tags
         not reaching any dictionary level are DROPPED (reference semantics).
 
@@ -97,7 +97,7 @@ class TagDictionary:
         """
         level1 = {"node": self.node_tag_codes, "way": self.way_tag_codes, "generic": []}[kind]
         exploded = df.select(
-            F.col(id_col).alias("_id"), F.posexplode(F.map_entries("tags")).alias("pos", "e")
+            F.col("id").alias("_id"), F.posexplode(F.map_entries("tags")).alias("pos", "e")
         ).select("_id", "pos", F.col("e.key").alias("key"), F.col("e.value").alias("value"))
         if self.stoplist:
             exploded = exploded.filter(~F.col("key").isin(list(self.stoplist)))
@@ -115,7 +115,7 @@ class TagDictionary:
         out = out.withColumn("tag_id", F.coalesce("tag_id1", "tag_id2"))
         out = out.filter(F.col("tag_id").isNotNull() | F.col("key_id").isNotNull())
         return out.select(
-            F.col("_id").alias(id_col),
+            F.col("_id").alias("id"),
             "pos",
             "tag_id",
             F.when(F.col("tag_id").isNull(), F.col("key_id")).alias("key_id"),
@@ -137,9 +137,9 @@ def top_k_tags(df: DataFrame, k: int = 400) -> DataFrame:
     return tag_key_stats(df).orderBy(F.desc("cnt"), F.asc("key")).limit(k)
 
 
-def packed_ref_col(id_col, type_code: int):
+def packed_ref_col(type_code: int):
     """(id << 2) | type -- the reference's inverted-index ref packing."""
-    return F.shiftleft(id_col.cast("long"), 2).bitwiseOR(F.lit(type_code))
+    return F.shiftleft(F.col("id").cast("long"), 2).bitwiseOR(F.lit(type_code))
 
 
 def inverted_tag_index(
@@ -155,7 +155,7 @@ def inverted_tag_index(
             continue
         parts.append(
             df.select(
-                packed_ref_col(F.col("id"), code).alias("ref"),
+                packed_ref_col(code).alias("ref"),
                 F.explode(F.map_entries("tags")).alias("e"),
             ).select("ref", F.col("e.key").alias("key"), F.col("e.value").alias("value"))
         )

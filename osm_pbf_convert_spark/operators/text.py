@@ -37,11 +37,11 @@ def bpe_ish_token_count(text: Column) -> Column:
     return F.regexp_count(text, F.lit(TOKEN_REGEX))
 
 
-def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_features(df: DataFrame) -> DataFrame:
     """Adds length / token / punctuation / stopword-ratio features and a
     composite quality score in [0,1] (heuristic, documented, deterministic).
     """
-    t = F.col(text_col)
+    t = F.col("text")
     n_chars = F.length(t)
     ws_tokens = whitespace_token_count(t)
     n_punct = F.regexp_count(t, F.lit(r"[\.,;:!\?\"'\(\)\[\]]"))
@@ -76,12 +76,12 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def lang_id(df: DataFrame, text_col: str = "text", out_col: str = "lang_pred") -> DataFrame:
+def lang_id(df: DataFrame) -> DataFrame:
     """Heuristic language ID: distinct-stopword hits per language + script
     detection (CJK -> ja, cyrillic dominates -> uk). Deterministic ties ->
     lexicographically first language code.
     """
-    t = F.col(text_col)
+    t = F.col("text")
     words = F.array_distinct(F.filter(F.split(F.lower(t), r"\W+"), lambda w: w != ""))
     scores = []
     for code, sw in sorted(STOPWORDS.items()):
@@ -97,11 +97,11 @@ def lang_id(df: DataFrame, text_col: str = "text", out_col: str = "lang_pred") -
         .when(best["hits"] > 0, best["code"])
         .otherwise(F.lit("und"))
     )
-    return df.withColumn(out_col, pred)
+    return df.withColumn("lang_pred", pred)
 
 
-def fingerprint(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-                shingle_k: int = 8, bottom_k: int = 8, hash_fn: str = "rolling") -> DataFrame:
+def fingerprint(df: DataFrame, shingle_k: int = 8, bottom_k: int = 8,
+                hash_fn: str = "rolling") -> DataFrame:
     """Bottom-k sketch fingerprint: the k smallest shingle hashes combined
     into one fingerprint; equal fingerprints => highly likely
     near-identical content.
@@ -114,14 +114,13 @@ def fingerprint(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     - "md5": hex-string fingerprint, bit-identical in DuckDB -- the
       correctness-oracle flavor (the catalog query pins it)."""
     if hash_fn == "rolling":
-        return _fingerprint_rolling(df, id_col, text_col, shingle_k, bottom_k)
+        return _fingerprint_rolling(df, shingle_k, bottom_k)
     if hash_fn == "md5":
-        return _fingerprint_md5(df, id_col, text_col, shingle_k, bottom_k)
+        return _fingerprint_md5(df, shingle_k, bottom_k)
     raise ValueError(f"unknown hash_fn {hash_fn!r}; expected 'rolling' or 'md5'")
 
 
-def _fingerprint_md5(df: DataFrame, id_col: str, text_col: str,
-                     shingle_k: int, bottom_k: int) -> DataFrame:
+def _fingerprint_md5(df: DataFrame, shingle_k: int, bottom_k: int) -> DataFrame:
     """The md5 bottom-k fingerprint as ONE zero-shuffle Arrow pass:
     per-doc distinct k-char window md5 digests from
     ``operators/md5win.py`` (already sorted by digest bytes, which IS the
@@ -144,7 +143,7 @@ def _fingerprint_md5(df: DataFrame, id_col: str, text_col: str,
 
     def batches(it):
         for pdf in it:
-            digs, off = md5win.batch_window_md5_segments(pdf[text_col], shingle_k)
+            digs, off = md5win.batch_window_md5_segments(pdf["text"], shingle_k)
             fps = []
             for i in range(off.size - 1):
                 s, e = off[i], min(off[i] + bottom_k, off[i + 1])
@@ -157,7 +156,7 @@ def _fingerprint_md5(df: DataFrame, id_col: str, text_col: str,
             out["fingerprint"] = pd.Series(fps, index=pdf.index)
             yield out
 
-    return fan_out(df, key=id_col).mapInPandas(batches, schema=schema_str)
+    return fan_out(df, key="doc_id").mapInPandas(batches, schema=schema_str)
 
 
 # bottom-k combine multiplier for the "rolling" flavor (window-hash
@@ -165,8 +164,7 @@ def _fingerprint_md5(df: DataFrame, id_col: str, text_col: str,
 _KR_COMBINE = 1099511628211  # FNV-64 prime
 
 
-def _fingerprint_rolling(df: DataFrame, id_col: str, text_col: str,
-                         shingle_k: int, bottom_k: int) -> DataFrame:
+def _fingerprint_rolling(df: DataFrame, shingle_k: int, bottom_k: int) -> DataFrame:
     """The true ROLLING-hash fingerprint: Arrow batches in, one numpy
     polynomial pass per batch, zero substring materialization.
 
@@ -208,7 +206,7 @@ def _fingerprint_rolling(df: DataFrame, id_col: str, text_col: str,
             dtype=np.uint64,
         )
         for pdf in it:
-            flat, off = batch_window_hash_segments(pdf[text_col], k)
+            flat, off = batch_window_hash_segments(pdf["text"], k)
             cnt = np.diff(off)
             # per-doc bottom-k of the sorted-unique segment: gather the
             # first min(cnt, bottom_k) hashes, zero-pad the rest (a zero
@@ -228,4 +226,4 @@ def _fingerprint_rolling(df: DataFrame, id_col: str, text_col: str,
 
     from osm_pbf_convert_spark.plans.partitioning import fan_out
 
-    return fan_out(df, key=id_col).mapInPandas(batches, schema=schema_str)
+    return fan_out(df, key="doc_id").mapInPandas(batches, schema=schema_str)

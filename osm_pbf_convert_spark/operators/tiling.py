@@ -5,6 +5,8 @@ hierarchical tile pyramid (zooms 0-15).
   16384x32768 grid, ``row=(uint)(ilat+int.MaxValue)>>18``,
   ``col=(uint)(ilon+int.MaxValue)>>17`` -- one groupBy/count, bit-exact
   cell math via ``heat_row_col``/``heat_col_col``.
+- windowed tile counts: per-(event-time window, zoom-z tile) counts
+  over geo-tagged events.
 - tile pyramid (north rule raster<->vector, zooms 0-15): aggregate ONCE at
   the finest zoom, then roll coarser levels up from the previous level
   (``tile_{z-1} = tile_z >> 2``). Each rollup shuffles only the previous
@@ -45,6 +47,21 @@ def tile_counts(nodes: DataFrame, z: int) -> DataFrame:
     cell = morton_cell_col(F.col("ilat"), F.col("ilon"))
     return nodes.groupBy(tile_col(cell, z).alias("tile")).agg(
         F.count(F.lit(1)).alias("cnt")
+    )
+
+
+def windowed_tile_counts(points: DataFrame, z: int = 8, window: str = "1 hour") -> DataFrame:
+    """points(ts, ilat, ilon) -> (window_start, tile, cnt): per event-time
+    window counts at zoom z (the ``tile_windows`` catalog query)."""
+    cell = morton_cell_col(F.col("ilat"), F.col("ilon"))
+    return (
+        points.groupBy(
+            F.window("ts", window).alias("w"), tile_col(cell, z).alias("tile")
+        )
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .select(
+            F.unix_timestamp(F.col("w.start")).alias("window_start"), "tile", "cnt"
+        )
     )
 
 
@@ -103,26 +120,6 @@ def pyramid_from_finest(finest: DataFrame, max_z: int, min_z: int = 0) -> DataFr
     )
 
 
-def rasterize_tiles(tile_df: DataFrame, z: int) -> DataFrame:
-    """Vector tile counts -> raster pixel coords at zoom z: decode the
-    Morton tile id into (y, x) grid position (inverse interleave done with
-    pure column bit-math, 5 compact rounds)."""
-    def compact(c, shift):
-        x = F.shiftrightunsigned(c, shift).bitwiseAND(F.lit(0x5555555555555555))
-        x = (x.bitwiseOR(F.shiftright(x, 1))).bitwiseAND(F.lit(0x3333333333333333))
-        x = (x.bitwiseOR(F.shiftright(x, 2))).bitwiseAND(F.lit(0x0F0F0F0F0F0F0F0F))
-        x = (x.bitwiseOR(F.shiftright(x, 4))).bitwiseAND(F.lit(0x00FF00FF00FF00FF))
-        x = (x.bitwiseOR(F.shiftright(x, 8))).bitwiseAND(F.lit(0x0000FFFF0000FFFF))
-        x = (x.bitwiseOR(F.shiftright(x, 16))).bitwiseAND(F.lit(0x00000000FFFFFFFF))
-        return x
-
-    return tile_df.select(
-        compact(F.col("tile"), 1).alias("y"),
-        compact(F.col("tile"), 0).alias("x"),
-        "cnt",
-    )
-
-
 def export_heat_map_bytes(heat_df, rows: int = 16384, cols: int = 32768) -> bytes:
     """Serialize a heat-map count grid in the REFERENCE'S binary format:
     MSB-first 7-bit varint per cell, row-major, zeros included
@@ -132,8 +129,8 @@ def export_heat_map_bytes(heat_df, rows: int = 16384, cols: int = 32768) -> byte
     dump -- intended for bounded grids / cropped regions; the full global
     grid at reference dimensions is a ~0.5 GB artifact: use the
     distributed band sink (``heat_map_bands`` / ``write_heat_map_file``
-    below, byte-identical by golden test) for it. Kept as the byte-format
-    parity bridge to the reference's `.heat.map` files.
+    below, byte-identical by golden test) for it. Kept as the golden the
+    band sink is tested against.
     """
     import numpy as np
 
@@ -235,6 +232,7 @@ def read_heat_map_file(
     start) and emits cells at offset + arange. ``sparse=True`` drops
     zero cells executor-side, so the returned frame is aggregate-sized,
     not grid-sized. Total varint count is validated against rows*cols.
+    Kept as the read direction that round-trips the heat-map writer.
     """
     import os
 

@@ -58,7 +58,8 @@ def _zz1(v: int) -> int:
 def encode_ways_file_py(ways):
     """Pure-Python reference writer port (golden): ``ways`` is an
     ascending-id iterable of ``(id, nodes)`` with ``nodes`` a list of
-    ``(node_id, lat, lon)``. Returns ``(data_bytes, info_bytes)``."""
+    ``(node_id, lat, lon)``. Returns ``(data_bytes, info_bytes)``.
+    Kept as the byte-parity golden of the distributed ways writer."""
     dat = bytearray()
     info = bytearray()
     last_way_id = 0
@@ -93,7 +94,8 @@ def encode_ways_file_py(ways):
 
 def decode_ways_file_py(dat: bytes):
     """Sequential reader port (``ReadWayData``) for roundtrip tests:
-    returns the (id, nodes) list back from the data stream."""
+    returns the (id, nodes) list back from the data stream.
+    Kept as the byte-parity oracle of the distributed writer's output."""
     from osm_pbf_convert_spark.codecs import zigzag_decode
 
     pos, n = 0, len(dat)

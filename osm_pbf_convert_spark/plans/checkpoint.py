@@ -118,12 +118,6 @@ def _uncommitted(df: DataFrame, partition_col: str, done: set) -> DataFrame:
     return df.filter(c.isNull() | ~c.isin(sorted(done)))
 
 
-def pending_only(spark: SparkSession, input_df: DataFrame, table: CheckpointTable,
-                 job_id: str, partition_col: str = "partition_id") -> DataFrame:
-    """Filter the input to partitions without a committed lineage row."""
-    return _uncommitted(input_df, partition_col, table.completed_ids(spark, job_id))
-
-
 def run_with_checkpoint(
     spark: SparkSession,
     input_df: DataFrame,

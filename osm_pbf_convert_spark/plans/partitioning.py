@@ -25,8 +25,8 @@ from pyspark.sql import functions as F
 from osm_pbf_convert_spark.functions.cells import morton_cell_col, tile_col
 
 
-def with_cell(df: DataFrame, ilat: str = "ilat", ilon: str = "ilon") -> DataFrame:
-    return df.withColumn("cell", morton_cell_col(F.col(ilat), F.col(ilon)))
+def with_cell(df: DataFrame) -> DataFrame:
+    return df.withColumn("cell", morton_cell_col(F.col("ilat"), F.col("ilon")))
 
 
 def fan_out(df: DataFrame, key: str | None = None) -> DataFrame:
@@ -93,9 +93,7 @@ def write_spatial_table(df: DataFrame, path: str, z: int = 6) -> None:
     )
 
 
-def write_bucketed_nodes(
-    df: DataFrame, table: str, buckets: int = 64, id_col: str = "id"
-) -> None:
+def write_bucketed_nodes(df: DataFrame, table: str, buckets: int = 64) -> None:
     """Persist nodes as a bucketed+sorted table on the join key -- the
     durable analog of the reference's clustered node store
     (`NodesIndex.cs`: delta-coded blocks clustered by node id + sparse
@@ -105,8 +103,8 @@ def write_bucketed_nodes(
     times (the reference's exact access pattern)."""
     (
         df.write.mode("overwrite")
-        .bucketBy(buckets, id_col)
-        .sortBy(id_col)
+        .bucketBy(buckets, "id")
+        .sortBy("id")
         .format("parquet")
         .saveAsTable(table)
     )

@@ -1915,10 +1915,10 @@ def q_point_in_polygon(spark, sf_dir):
 def q_multimodal_features(spark, sf_dir):
     """REAL image decode end-to-end, fully oracled: each doc's md5 hex
     (repeated to 48 ASCII bytes) becomes the raster of a genuine 4x4 PPM
-    (P6) container, which decoder='numpy' actually parses into pixels
-    before computing the grayscale-histogram feature -- no fake/stub on
-    this path. Because the raster bytes are ASCII hex chars, DuckDB
-    replays the decode arithmetic with ascii(substr(...)); bin parity of
+    (P6) container, which ``extract_features`` actually parses into
+    pixels before computing the grayscale-histogram feature. Because the
+    raster bytes are ASCII hex chars, DuckDB replays the decode
+    arithmetic with ascii(substr(...)); bin parity of
     the float32 matmul vs float64 SQL was verified exhaustively over all
     4096 possible (r,g,b) hex-char pixels (min edge distance 1e-3)."""
     from osm_pbf_convert_spark.operators.multimodal import extract_features
@@ -1936,7 +1936,7 @@ def q_multimodal_features(spark, sf_dir):
             "'n_frames', CAST(NULL AS INT), 'mime', 'image/x-portable-pixmap')"
         ).alias("meta"),
     )
-    out = extract_features(media, dim=8, decoder="numpy")
+    out = extract_features(media, dim=8)
     return out.select(
         "media_id",
         *[F.round(F.element_at("feature", j + 1).cast("double"), 6).alias(f"f{j}") for j in range(8)],
@@ -2018,18 +2018,14 @@ FROM events GROUP BY 1, 2
 
 
 def q_tile_windows(spark, sf_dir):
-    """Streaming geo rollup validated in batch: windowed per-tile counts
-    over geo-tagged events (streaming/tiles.py shares this transformation
-    with the watermark streaming variant; the streaming pytest checks
-    stream ⊆ batch under availableNow replay)."""
-    from osm_pbf_convert_spark.streaming.tiles import windowed_tile_counts
-
+    """Windowed per-tile counts over geo-tagged events (one-hour
+    event-time windows, zoom 8)."""
     ev = _t(spark, sf_dir, "events").select(
         "ts",
         F.expr(SX.ilat_sql("event_id")).cast("int").alias("ilat"),
         F.expr(SX.ilon_sql("event_id")).cast("int").alias("ilon"),
     )
-    return windowed_tile_counts(ev, z=8, window="1 hour")
+    return tiling.windowed_tile_counts(ev, z=8, window="1 hour")
 
 
 _Q_TILE_WINDOWS_ORACLE = f"""

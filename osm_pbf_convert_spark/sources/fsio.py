@@ -154,5 +154,7 @@ def local_path(path: str) -> str:
 
 
 def mock_uri(local: str) -> str:
-    """Test helper: the ``mock://`` URI for a local absolute path."""
+    """The ``mock://`` URI for a local absolute path. Kept beside the
+    ``mock://`` filesystem this module registers; tests use it to drive
+    the object-store IO paths."""
     return MOCK_PREFIX + "/" + os.path.abspath(local).lstrip("/")

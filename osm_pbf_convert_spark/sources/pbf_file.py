@@ -313,6 +313,8 @@ def read_pbf_nodes(spark, path, split_bytes: int = 64 * 1024 * 1024, **kw) -> Da
 
 
 def read_pbf_ways(spark, path, split_bytes: int = 64 * 1024 * 1024, **kw) -> DataFrame:
+    """Ways of a standalone ``.osm.pbf`` file. Kept as the read half of the
+    file writer's round-trip tests."""
     from osm_pbf_convert_spark.sources.pbf import decode_ways
 
     return decode_ways(
@@ -321,6 +323,8 @@ def read_pbf_ways(spark, path, split_bytes: int = 64 * 1024 * 1024, **kw) -> Dat
 
 
 def read_pbf_relations(spark, path, split_bytes: int = 64 * 1024 * 1024, **kw) -> DataFrame:
+    """Relations of a standalone ``.osm.pbf`` file. Kept as the read half
+    of the file writer's round-trip tests."""
     from osm_pbf_convert_spark.sources.pbf import decode_relations
 
     return decode_relations(
@@ -329,6 +333,8 @@ def read_pbf_relations(spark, path, split_bytes: int = 64 * 1024 * 1024, **kw) -
 
 
 def read_pbf_entities(spark, path, split_bytes: int = 64 * 1024 * 1024, **kw) -> DataFrame:
+    """All entity kinds of a standalone ``.osm.pbf`` file in one pass. Kept
+    as the read half of the file writer's round-trip tests."""
     from osm_pbf_convert_spark.sources.pbf import decode_entities
 
     return decode_entities(
@@ -361,7 +367,7 @@ def pbf_block_frames(
     (seq, n_bytes, frame binary), where concatenating frames in seq
     order after an OSMHeader frame yields a valid ``.osm.pbf``.
 
-    Inputs use the DECODERS' schemas, so decode -> write -> decode is a
+    Inputs use the decoders' schemas, so decode -> write -> decode is a
     lossless circle: nodes(id, lat, lon, tags map), ways(id, refs,
     tags), relations(id, members array<struct<member_type,ref,role>>,
     tags). Coordinates re-quantize via ``coords_to_raw`` (the decode

@@ -72,7 +72,8 @@ def read_nodes_index(
     """``{prefix}.nodes.dat`` + ``{prefix}.idx`` -> DataFrame(id, ilat,
     ilon). One task per index sync range; each range decodes with fresh
     delta state, exactly mirroring the writer's block resets. IO via
-    ``fsio`` -- object-store URIs work."""
+    ``fsio`` -- object-store URIs work.
+    Kept as the read direction that round-trips the ``.nodes.dat`` writer."""
     from osm_pbf_convert_spark.sources import fsio
 
     dat_path = f"{prefix}.nodes.dat"
@@ -144,7 +145,8 @@ def read_ways_file(
     id,ilat,ilon>>). The info file supplies absolute (id, offset) per
     way, so splits are arbitrary runs of ways: each task decodes its
     byte range and re-seeds the id chain from the split's first info
-    id. IO via ``fsio`` -- object-store URIs work."""
+    id. IO via ``fsio`` -- object-store URIs work.
+    Kept as the read direction that round-trips the ways writer."""
     from osm_pbf_convert_spark.sources import fsio
 
     with fsio.open_seekable(path + ".idx") as f:
@@ -344,6 +346,7 @@ def read_rels_file(
     the skim streams in ``skim_window_bytes`` windows (bounded driver
     memory on multi-GB files). IO goes through ``fsio``: local paths
     and object-store URIs both work.
+    Kept as the read direction that round-trips the ``.rels`` writer.
     """
     from osm_pbf_convert_spark.sources import fsio
 

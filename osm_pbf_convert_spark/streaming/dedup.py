@@ -47,8 +47,7 @@ HDFSBackedStateStoreProvider keeps every key on-heap -- fine for tests,
 an OOM at 10^12 docs. Parity between the two providers is
 pytest-enforced and replayed at 10x (tools/stream_replay.py).
 
-No reference counterpart (the reference has no streaming); same
-new-capability family as streaming/sessions.py.
+No reference counterpart (the reference has no streaming).
 """
 
 from __future__ import annotations
@@ -142,8 +141,6 @@ def _pair_fn(max_bucket_size: int | None, state_ttl_ms: int | None = None):
 
 def stream_minhash_pairs(
     stream_df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     num_hashes: int = 32,
     bands: int = 8,
     shingle_k: int = 5,
@@ -166,12 +163,9 @@ def stream_minhash_pairs(
         # mirror the batch operator: band_buckets would silently truncate
         # the tail hashes and break the documented batch-parity contract
         raise ValueError("bands must divide num_hashes")
-    sig = _minhash_signatures_rolling(
-        stream_df.select(id_col, text_col), id_col, text_col,
-        num_hashes, shingle_k, bands=bands,
-    )
+    sig = _minhash_signatures_rolling(stream_df, num_hashes, shingle_k, bands=bands)
     banded = sig.select(
-        F.col(id_col).cast("long").alias("_id"),
+        F.col("doc_id").cast("long").alias("_id"),
         F.posexplode("bnds").alias("band", "bucket"),
     )
     ttl_ms = None if state_ttl_minutes is None else state_ttl_minutes * 60_000
@@ -264,8 +258,6 @@ def _simhash_pair_fn(max_hamming: int, state_ttl_ms: int | None = None):
 
 def stream_simhash_pairs(
     stream_df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_hamming: int = 8,
     state_ttl_minutes: int | None = None,
 ) -> DataFrame:
@@ -283,7 +275,7 @@ def stream_simhash_pairs(
 
     bands = max_hamming + 1
     width = 64 // bands
-    sig = simhash_signatures(stream_df, id_col, text_col)
+    sig = simhash_signatures(stream_df)
     chunk_arr = F.array(
         *[
             F.struct(
@@ -296,7 +288,7 @@ def stream_simhash_pairs(
         ]
     )
     banded = sig.select(
-        F.col(id_col).cast("long").alias("_id"),
+        F.col("doc_id").cast("long").alias("_id"),
         "simhash",
         F.explode(chunk_arr).alias("c"),
     ).select("_id", "simhash", F.col("c.band").alias("band"), F.col("c.chunk").alias("chunk"))
@@ -312,19 +304,6 @@ def stream_simhash_pairs(
             else GroupStateTimeout.ProcessingTimeTimeout
         ),
     )
-
-
-def stream_exact_dedup(stream_df: DataFrame, content_col: str = "text") -> DataFrame:
-    """First-seen survivor per exact content digest, stream-native:
-    ``dropDuplicates`` keeps one row per key with state-store-backed
-    exactly-once semantics. The batch twin (``dedup.exact_dedup``)
-    keeps the MIN id instead -- a stream cannot know the minimum before
-    the stream ends, so the streaming contract is one-per-group with
-    the group membership identical (pytest-enforced); add a watermark
-    upstream to bound state on unbounded streams."""
-    return stream_df.withColumn(
-        "_digest", F.md5(F.col(content_col).cast("binary"))
-    ).dropDuplicates(["_digest"]).drop("_digest")
 
 
 def stream_documents(spark: SparkSession, docs_dir: str, schema, **options) -> DataFrame:

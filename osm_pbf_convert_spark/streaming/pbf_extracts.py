@@ -1,5 +1,5 @@
-"""Streaming ingest of ``.osm.pbf`` extracts: watch a directory, decode
-each newly-arrived extract file into entity rows.
+"""Streaming source of ``.osm.pbf`` extracts: watch a directory and emit
+each newly-arrived extract file as one (url, payload) row.
 
 The reference processes one extract per invocation
 (``PbfFileProcessor.Process``); a live pipeline instead receives
@@ -7,9 +7,9 @@ regional extract drops (Geofabrik-style dailies) and wants them decoded
 as they land. Structured Streaming's ``binaryFile`` source provides
 exactly-once per-file tracking (checkpointed file log), and the
 ``sources.pbf`` decoders (one mapInArrow loop) run UNCHANGED on the
-streaming DataFrame -- the whole batch decode stack is reused, so the
-batch DuckDB oracles validate the streaming semantics and the pytest
-checks stream output == batch output under ``availableNow`` replay.
+streaming DataFrame -- ``streaming/pipeline.py`` decodes this stream
+with the batch decode stack, so the batch DuckDB oracles validate the
+streaming semantics.
 
 Scale shape: one input file per task (``binaryFile`` does not split
 files) -- right for the extract-drop pattern where files arrive many at
@@ -37,20 +37,5 @@ def pbf_extract_stream(
         .option("pathGlobFilter", glob)
         .load(watch_dir)
         .select(F.col("path").alias("url"), F.col("content").alias("payload"))
-    )
-
-
-def stream_decode_nodes(
-    spark: SparkSession, watch_dir: str, glob: str = "*.osm.pbf",
-    on_error: str = "skip",
-) -> DataFrame:
-    """Streaming node rows from arriving extracts -- `decode_nodes` on
-    the file stream (mapInArrow is streaming-compatible; stateless, so
-    no watermark is needed until an aggregation is stacked on top)."""
-    from osm_pbf_convert_spark.sources.pbf import decode_nodes
-
-    return decode_nodes(
-        pbf_extract_stream(spark, watch_dir, glob),
-        payload_col="payload", on_error=on_error,
     )
 

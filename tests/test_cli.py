@@ -71,6 +71,37 @@ def _run(verb, pages, out, monkeypatch, spark, input_flag="--pages"):
 
 
 @pytest.mark.spark
+def test_cli_session_lets_cached_plans_coalesce(spark):
+    """The real CLI session builder sets
+    canChangeCachedPlanOutputPartitioning: without it, blob-index's
+    persisted per-blob ids keep spark.sql.shuffle.partitions (200)
+    partitions and every join against them runs 200-task stages."""
+    import cli
+
+    keys = (
+        "spark.app.name",
+        "spark.sql.adaptive.enabled",
+        "spark.sql.adaptive.skewJoin.enabled",
+        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
+    )
+    before = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        # start from the default so a builder that stops setting it fails
+        spark.conf.set("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "false")
+        session = cli._spark("conf-check")
+        assert session is spark  # the active session, with its runtime confs applied
+        assert session.conf.get(
+            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") == "true"
+        assert session.conf.get("spark.sql.adaptive.enabled") == "true"
+    finally:
+        for k, v in before.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+@pytest.mark.spark
 class TestCliVerbs:
     @pytest.mark.parametrize("verb,sub,min_rows", [
         ("join", "ways_resolved", 8),

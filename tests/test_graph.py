@@ -234,7 +234,7 @@ def test_star_rounds_never_broadcast(spark):
     )
 
     pairs = spark.createDataFrame([(i, i + 1) for i in range(100)], "a long, b long")
-    edges = _canonical_edges(pairs, "a", "b").localCheckpoint(eager=True)
+    edges = _canonical_edges(pairs).localCheckpoint(eager=True)
     for step in (_large_star, _small_star):
         plan = step(edges)._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" not in plan, plan

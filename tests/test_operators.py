@@ -9,7 +9,6 @@ from osm_pbf_convert_spark.functions.cells import heat_cell_np, morton_cell_np, 
 from osm_pbf_convert_spark.operators.joins import assemble_relations, join_pages_geo, resolve_ways
 from osm_pbf_convert_spark.operators.spatial import (
     assign_polygons,
-    bbox_agg,
     compile_polygons,
     in_rect,
     knn_join,
@@ -21,7 +20,7 @@ from osm_pbf_convert_spark.operators.tags import (
     top_k_tags,
     way_type_col,
 )
-from osm_pbf_convert_spark.operators.tiling import heat_map, rasterize_tiles, tile_counts, tile_pyramid
+from osm_pbf_convert_spark.operators.tiling import heat_map, tile_counts, tile_pyramid
 
 
 @pytest.fixture(scope="module")
@@ -228,10 +227,7 @@ class TestTiling:
 
 @pytest.mark.spark
 class TestSpatial:
-    def test_bbox_and_rect(self, spark, nodes_df):
-        ndf, npdf = nodes_df
-        bb = bbox_agg(ndf).toPandas().iloc[0]
-        assert bb["min_ilat"] == npdf["ilat"].min() and bb["max_ilon"] == npdf["ilon"].max()
+    def test_bbox_and_rect(self, spark):
         # min-exclusive: a point exactly on min_lat/lon is NOT contained
         df = spark.createDataFrame(pd.DataFrame({"ilat": [10, 11, 20], "ilon": [10, 11, 20]}))
         got = df.filter(in_rect(F.col("ilat"), F.col("ilon"), 10, 20, 10, 20)).toPandas()
@@ -384,24 +380,6 @@ class TestPagesGeo:
         out = join_pages_geo(pages, nodes_with_url).toPandas().sort_values("url")
         assert out["text"].tolist() == texts  # byte-identical passthrough
         assert (out["n_geo"] > 0).all()
-
-
-@pytest.mark.spark
-class TestRasterize:
-    def test_rasterize_inverts_tile_ids(self, spark):
-        from osm_pbf_convert_spark.operators.spatial import tile_to_xy
-
-        z = 8
-        rng = np.random.default_rng(17)
-        tiles = rng.integers(0, 1 << (2 * z), 300, dtype=np.int64)
-        df = spark.createDataFrame(
-            pd.DataFrame({"tile": tiles, "cnt": np.ones(300, dtype=np.int64)})
-        )
-        out = rasterize_tiles(df, z).toPandas()
-        tx, ty = tile_to_xy(tiles, z)
-        got = out[["y", "x"]].to_numpy()
-        exp = np.stack([ty, tx], axis=1)
-        assert (np.sort(got, axis=0) == np.sort(exp, axis=0)).all()
 
 
 @pytest.mark.spark

@@ -300,7 +300,8 @@ class TestExtractStream:
         """availableNow streaming decode of a directory of extracts ==
         the batch decode of the same files (exactly-once per file via
         the binaryFile source's checkpointed log)."""
-        from osm_pbf_convert_spark.streaming.pbf_extracts import stream_decode_nodes
+        from osm_pbf_convert_spark.sources.pbf import decode_nodes
+        from osm_pbf_convert_spark.streaming.pbf_extracts import pbf_extract_stream
 
         watch = tmp_path / "drops"
         watch.mkdir()
@@ -314,7 +315,7 @@ class TestExtractStream:
             os.rename(p, newp)
             all_ids |= {nid for nid, _, _ in nodes_i}
 
-        sdf = stream_decode_nodes(spark, str(watch))
+        sdf = decode_nodes(pbf_extract_stream(spark, str(watch)), payload_col="payload")
         assert sdf.isStreaming
         q = (
             sdf.writeStream.format("memory").queryName("pbfdrops")

@@ -1,5 +1,5 @@
 """Tests for training-data pipeline operators: dedup, text, similarity,
-multimodal plumbing, checkpoint/resume."""
+image features, checkpoint/resume."""
 
 import hashlib
 import re
@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from osm_pbf_convert_spark.operators import dedup, multimodal, similarity, text
-from osm_pbf_convert_spark.plans.checkpoint import CheckpointTable, pending_only, run_with_checkpoint
+from osm_pbf_convert_spark.plans.checkpoint import CheckpointTable, run_with_checkpoint
 
 
 @pytest.fixture(scope="module")
@@ -295,8 +295,7 @@ class TestDedup:
         want = self._catalyst_buckets(df, signs).set_index("vec_id")["bucket"]
         got = (
             dedup._assign_hyperplane_buckets(
-                df.withColumn("embedding", F.col("embedding").cast("array<double>")),
-                "vec_id", "embedding", signs,
+                df.withColumn("embedding", F.col("embedding").cast("array<double>")), signs
             ).toPandas().set_index("vec_id")["bucket"]
         )
         assert (got.sort_index() == want.sort_index()).all()
@@ -583,101 +582,67 @@ class TestSimilarity:
             assert set(out[out["query_id"] == qi]["vec_id"]) == {qi}
 
 
+MEDIA_SCHEMA = (
+    "media_id bigint, kind string, content binary, "
+    "meta struct<width:int, height:int, sample_rate:int, n_frames:int, mime:string>"
+)
+
+
+def _encode_ppm(px: np.ndarray) -> bytes:
+    """(H, W, 3) uint8 RGB -> binary PPM (P6)."""
+    h, w = px.shape[:2]
+    return b"P6\n%d %d\n255\n" % (w, h) + np.ascontiguousarray(px, dtype=np.uint8).tobytes()
+
+
 @pytest.mark.spark
 class TestMultimodal:
-    @pytest.fixture(scope="class")
-    def media(self, spark):
-        rows = [
-            (1, "image", b"\x89PNGfake1", (64, 48, None, None, "image/png")),
-            (2, "image", b"\x89PNGfake2", (32, 32, None, None, "image/png")),
-            (3, "video", b"RIFFfake", (640, 480, None, 30, "video/avi")),
-            (4, "audio", None, (None, None, 44100, None, "audio/wav")),
-        ]
-        return spark.createDataFrame(rows, schema=multimodal.MEDIA_SCHEMA)
-
-    def test_stub_raises(self, media):
-        with pytest.raises(Exception) as ei:
-            multimodal.extract_features(media, decoder="stub").collect()
-        assert "NotImplementedError" in str(ei.value) or "decode" in str(ei.value)
-
-    def test_fake_features_deterministic(self, media):
-        a = multimodal.extract_features(media, dim=16, decoder="fake").toPandas()
-        b = multimodal.extract_features(media, dim=16, decoder="fake").toPandas()
-        a = a.sort_values("media_id").reset_index(drop=True)
-        b = b.sort_values("media_id").reset_index(drop=True)
-        assert all(len(v) == 16 for v in a["feature"])
-        for x, y in zip(a["feature"], b["feature"]):
-            assert np.array_equal(np.asarray(x), np.asarray(y))
-
-    def test_frame_sampling(self, media):
-        frames = multimodal.sample_frames(media.filter("kind='video'"), every_n=10, decoder="fake").toPandas()
-        assert frames["frame_index"].tolist() == [0, 10, 20]
-        assert frames["media_id"].nunique() == 1
-
     def test_numpy_codecs_roundtrip(self):
-        """Pure-numpy BMP and PPM codecs: encode -> decode is pixel-exact
-        (incl. non-multiple-of-4 BMP row padding)."""
+        """The pure-numpy PPM decoder is pixel-exact, including headers
+        with comments and runs of whitespace."""
         rng = np.random.default_rng(9)
         px = rng.integers(0, 256, size=(13, 7, 3), dtype=np.uint8)
-        assert np.array_equal(multimodal.decode_image_np(multimodal.encode_bmp(px)), px)
-        assert np.array_equal(multimodal.decode_image_np(multimodal.encode_ppm(px)), px)
+        assert np.array_equal(multimodal.decode_image_np(_encode_ppm(px)), px)
         # PPM with comments and multi-whitespace header
         hdr = b"P6\n# a comment\n 7\t13 \n255\n" + px.tobytes()
         assert np.array_equal(multimodal.decode_image_np(hdr), px)
 
     def test_numpy_real_decode_features(self, spark):
-        """decoder='numpy' exercises the FULL path -- real bytes -> real
-        pixels -> histogram feature -- and the same pixels encoded as BMP
-        vs PPM must produce the identical feature vector."""
+        """extract_features exercises the FULL path -- real bytes -> real
+        pixels -> histogram feature."""
         rng = np.random.default_rng(4)
         px1 = rng.integers(0, 256, size=(24, 16, 3), dtype=np.uint8)
         px2 = np.zeros((8, 8, 3), dtype=np.uint8)  # all-black: known histogram
         rows = [
-            (1, "image", multimodal.encode_bmp(px1), (16, 24, None, None, "image/bmp")),
-            (2, "image", multimodal.encode_ppm(px1), (16, 24, None, None, "image/x-portable-pixmap")),
-            (3, "image", multimodal.encode_ppm(px2), (8, 8, None, None, "image/x-portable-pixmap")),
+            (2, "image", _encode_ppm(px1), (16, 24, None, None, "image/x-portable-pixmap")),
+            (3, "image", _encode_ppm(px2), (8, 8, None, None, "image/x-portable-pixmap")),
         ]
-        df = spark.createDataFrame(rows, schema=multimodal.MEDIA_SCHEMA)
+        df = spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
         out = (
-            multimodal.extract_features(df, dim=8, decoder="numpy")
+            multimodal.extract_features(df, dim=8)
             .toPandas().sort_values("media_id").reset_index(drop=True)
         )
-        f_bmp, f_ppm, f_black = (np.asarray(v) for v in out["feature"])
-        assert np.array_equal(f_bmp, f_ppm)  # same pixels, either container
+        f_ppm, f_black = (np.asarray(v) for v in out["feature"])
+        assert np.array_equal(f_ppm, multimodal._pixel_feature(px1, 8))  # decoded pixels
         assert f_black[0] == 1.0 and f_black[1:].sum() == 0  # black -> first bin
-        assert abs(f_bmp.sum() - 1.0) < 1e-6  # normalized histogram
+        assert abs(f_ppm.sum() - 1.0) < 1e-6  # normalized histogram
 
-    def test_numpy_real_resize(self, spark):
-        """decoder='numpy' really resamples: output decodes to the target
-        dims with nearest-neighbor-selected source pixels."""
-        px = np.arange(4 * 6 * 3, dtype=np.uint8).reshape(4, 6, 3)
-        df = spark.createDataFrame(
-            [(1, "image", multimodal.encode_bmp(px), (6, 4, None, None, "image/bmp"))],
-            schema=multimodal.MEDIA_SCHEMA,
-        )
-        out = multimodal.resize_images(df, width=3, height=2, decoder="numpy").collect()[0]
-        rp = multimodal.decode_image_np(bytes(out["content"]))
-        assert rp.shape == (2, 3, 3)
-        assert np.array_equal(rp, px[[0, 2]][:, [0, 2, 4]])  # nn index sampling
-        assert out["meta"]["width"] == 3 and out["meta"]["height"] == 2
-
-    def test_numpy_decoder_rejects_unknown_magic(self, media):
+    def test_numpy_decoder_rejects_unknown_magic(self, spark):
         from pyspark.errors.exceptions.captured import PythonException
 
-        with pytest.raises(PythonException, match="unsupported image magic"):
-            multimodal.extract_features(
-                media.filter("media_id = 1"), decoder="numpy"
-            ).collect()
-
-    def test_pil_decoder_when_available(self, spark):
-        pytest.importorskip("PIL")
-        px = np.random.default_rng(2).integers(0, 256, size=(5, 5, 3), dtype=np.uint8)
-        df = spark.createDataFrame(
-            [(1, "image", multimodal.encode_bmp(px), (5, 5, None, None, "image/bmp"))],
-            schema=multimodal.MEDIA_SCHEMA,
+        media = spark.createDataFrame(
+            [(1, "image", b"\x89PNGfake1", (64, 48, None, None, "image/png"))],
+            schema=MEDIA_SCHEMA,
         )
-        out = multimodal.extract_features(df, dim=8, decoder="pil").collect()
-        assert len(out[0]["feature"]) == 8
+        with pytest.raises(PythonException, match="unsupported image magic"):
+            multimodal.extract_features(media).collect()
+
+
+def _capture(seen: list):
+    """A ``process_fn`` that records the pending frame it is given."""
+    def process(pend):
+        seen.append(pend)
+        return pend
+    return process
 
 
 @pytest.mark.spark
@@ -700,21 +665,20 @@ class TestCheckpoint:
         sink = str(tmp_path / "out")
         df = spark.range(100).withColumn("partition_id", F.pmod("id", F.lit(4)))
 
-        calls = []
+        seen = []
 
         def process(pend):
-            calls.append(1)
+            seen.append(pend)
             return pend.withColumn("doubled", F.col("id") * 2)
 
         n1 = run_with_checkpoint(spark, df, process, sink, table, "job1")
         assert n1 == 4
         out1 = spark.read.parquet(sink)
         assert out1.count() == 100
-        # second run: nothing pending
+        # second run: nothing pending, the committed partitions are filtered
         n2 = run_with_checkpoint(spark, df, process, sink, table, "job1")
         assert n2 == 0
-        # pending_only filters committed partitions
-        assert pending_only(spark, df, table, "job1").count() == 0
+        assert seen[-1].count() == 0
         # metrics recorded per partition
         m = table.metrics(spark, "job1").toPandas()
         assert set(m["partition_id"]) == {0, 1, 2, 3}
@@ -728,12 +692,9 @@ class TestCheckpoint:
         pre = spark.createDataFrame([(0, 10), (1, 10)], "partition_id bigint, n_rows bigint")
         table.commit(spark, "job2", pre)
         seen = []
-
-        def process(pend):
-            seen.append(pend)
-            return pend
-        n = run_with_checkpoint(spark, df, process, sink, table, "job2")
+        n = run_with_checkpoint(spark, df, _capture(seen), sink, table, "job2")
         assert n == 2  # only 2 and 3 processed
+        assert {r[0] for r in seen[0].select("partition_id").distinct().collect()} == {2, 3}
         got_parts = {r["partition_id"] for r in spark.read.parquet(sink).select("partition_id").distinct().collect()}
         assert got_parts == {2, 3}
 
@@ -762,8 +723,9 @@ class TestCheckpoint:
         df = spark.range(30).withColumn("partition_id", pid.cast("bigint"))
         assert run_with_checkpoint(spark, df, lambda p: p, sink, table, "job4") == 4
         assert table.completed_ids(spark, "job4") == {0, 1, 2}
-        assert pending_only(spark, df, table, "job4").count() == 6
-        assert run_with_checkpoint(spark, df, lambda p: p, sink, table, "job4") == 1
+        seen = []
+        assert run_with_checkpoint(spark, df, _capture(seen), sink, table, "job4") == 1
+        assert seen[0].count() == 6
         assert spark.read.parquet(sink).count() == 30
         null_rows = table.metrics(spark, "job4").filter(F.col("partition_id").isNull())
         assert [r["n_rows"] for r in null_rows.collect()] == [6, 6]
@@ -771,17 +733,22 @@ class TestCheckpoint:
     def test_pending_plan_is_a_filter(self, spark, tmp_path):
         """Resume filters on the driver-side committed set: no join and no
         broadcast, and no filter at all while the table does not exist."""
-        table = CheckpointTable(str(tmp_path / "ckpt5"))
         df = spark.range(20).withColumn("partition_id", F.pmod("id", F.lit(4)))
         plan = lambda d: d._jdf.queryExecution().executedPlan().toString()  # noqa: E731
-        fresh = plan(pending_only(spark, df, table, "job5"))
+        seen = []
+        fresh_table = CheckpointTable(str(tmp_path / "ckpt5_fresh"))
+        run_with_checkpoint(spark, df, _capture(seen), str(tmp_path / "out5_fresh"),
+                            fresh_table, "job5")
+        fresh = plan(seen[0])
         assert "Join" not in fresh and "BroadcastExchange" not in fresh
         assert "Filter" not in fresh
+        table = CheckpointTable(str(tmp_path / "ckpt5"))
         table.commit(spark, "job5", df.groupBy("partition_id").count()
                      .withColumnRenamed("count", "n_rows").filter("partition_id = 1"))
-        resumed = plan(pending_only(spark, df, table, "job5"))
+        run_with_checkpoint(spark, df, _capture(seen), str(tmp_path / "out5"), table, "job5")
+        resumed = plan(seen[1])
         assert "Join" not in resumed and "BroadcastExchange" not in resumed
-        assert pending_only(spark, df, table, "job5").count() == 15
+        assert seen[1].count() == 15
 
     def test_lineage_counts_match_sink(self, spark, tmp_path):
         """Per-partition lineage n_rows equal the sink's per-partition
@@ -828,47 +795,6 @@ class TestCheckpoint:
 
 
 @pytest.mark.spark
-class TestStats:
-    def test_median_split_invariant(self, spark):
-        """Port of the reference QuickSortSplitTests invariant: split within
-        count/100 of the median, max(left) <= split <= min(right)."""
-        import random
-
-        rng = random.Random(125)
-        vals = [rng.randint(0, 10**6) for _ in range(1000)]
-        df = spark.createDataFrame([(v,) for v in vals], "v bigint")
-        from osm_pbf_convert_spark.operators.stats import median_split
-
-        m = median_split(df, "v", rel_err=0.01)
-        below = sorted(vals).index(sorted(vals, key=lambda x: abs(x - m))[0])
-        rank = sum(1 for v in vals if v <= m)
-        assert abs(rank - 500) <= 1000 // 100 + 1
-        left = [v for v in vals if v <= m]
-        right = [v for v in vals if v > m]
-        assert max(left) <= min(right)
-
-    def test_median_split_duplicates(self, spark):
-        vals = [i % 300 for i in range(900)]
-        df = spark.createDataFrame([(v,) for v in vals], "v bigint")
-        from osm_pbf_convert_spark.operators.stats import median_split
-
-        m = median_split(df, "v", rel_err=0.01)
-        rank = sum(1 for v in vals if v <= m)
-        assert abs(rank - 450) <= 900 // 100 + 150  # duplicate plateaus shift rank
-
-    def test_way_size_summary(self, spark, sf_dir):
-        from osm_pbf_convert_spark import queries as Q
-        from osm_pbf_convert_spark.operators.joins import resolve_ways
-        from osm_pbf_convert_spark.operators.stats import way_size_summary
-
-        res = resolve_ways(Q._li_ways(spark, sf_dir), Q._li_nodes(spark, sf_dir), keep_tags=False)
-        s = way_size_summary(res)
-        assert s["max_nodes"] >= 1 and s["n_ways"] > 0
-        assert len(s["box_size_quantiles"]) == 6
-        assert s["box_size_quantiles"] == sorted(s["box_size_quantiles"])
-
-
-@pytest.mark.spark
 class TestTagDictionaryFile:
     def test_load_from_json(self, spark):
         from osm_pbf_convert_spark.operators.tags import TagDictionary
@@ -882,87 +808,6 @@ class TestTagDictionaryFile:
         )
         out = td.encode(spark, df, kind="node").toPandas()
         assert len(out) == 2  # cafe -> 1001, name -> key 1; created_by+zzz dropped
-
-
-@pytest.mark.spark
-class TestStreaming:
-    def test_stream_matches_batch(self, spark, sf_dir, tmp_path):
-        """availableNow streaming run over the events parquet produces the
-        same windowed counts as the batch transformation."""
-        from osm_pbf_convert_spark.streaming.windows import (
-            stream_windowed_event_counts,
-            windowed_event_counts,
-        )
-
-        events = spark.read.parquet(f"{sf_dir}/events.parquet")
-        batch = (
-            windowed_event_counts(events)
-            .select("window_start", "event_type", "n_events")
-            .toPandas()
-            .sort_values(["window_start", "event_type"])
-            .reset_index(drop=True)
-        )
-        schema = events.schema.simpleString()[7:-1].replace(":", " ")
-        evdir = tmp_path / "events_only"
-        evdir.mkdir()
-        (evdir / "events.parquet").symlink_to(f"{sf_dir}/events.parquet")
-        sdf = stream_windowed_event_counts(spark, str(evdir), schema)
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName("wincounts")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .start()
-        )
-        q.awaitTermination(120)
-        got = (
-            spark.sql("select * from wincounts")
-            .toPandas()
-            .sort_values(["window_start", "event_type"])
-            .reset_index(drop=True)
-        )
-        assert got.equals(batch[["window_start", "event_type", "n_events"]])
-
-    def test_stream_tile_counts_match_batch(self, spark, sf_dir, tmp_path):
-        """Streaming geo rollup (windowed per-tile counts) under
-        availableNow replay equals the batch transformation."""
-        from pyspark.sql import functions as F
-
-        from osm_pbf_convert_spark import sql_fixtures as SX
-        from osm_pbf_convert_spark.streaming.tiles import (
-            stream_windowed_tile_counts,
-            windowed_tile_counts,
-        )
-
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-            "ts",
-            F.expr(SX.ilat_sql("event_id")).cast("int").alias("ilat"),
-            F.expr(SX.ilon_sql("event_id")).cast("int").alias("ilon"),
-        )
-        pts_dir = tmp_path / "pts"
-        ev.write.mode("overwrite").parquet(str(pts_dir))
-        batch = (
-            windowed_tile_counts(spark.read.parquet(str(pts_dir)), z=8)
-            .toPandas().sort_values(["window_start", "tile"]).reset_index(drop=True)
-        )
-        sdf = stream_windowed_tile_counts(
-            spark, str(pts_dir), "ts timestamp_ntz, ilat int, ilon int", z=8
-        )
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName("tilewin")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", str(tmp_path / "tckpt"))
-            .start()
-        )
-        q.awaitTermination(120)
-        got = (
-            spark.sql("select * from tilewin")
-            .toPandas().sort_values(["window_start", "tile"]).reset_index(drop=True)
-        )
-        assert got.equals(batch[["window_start", "tile", "cnt"]])
 
 
 @pytest.mark.spark
@@ -986,40 +831,3 @@ class TestSimhashHamming:
         assert got_pairs == exp
         assert (1, 2) in got_pairs and got_pairs[(1, 2)] == 0
 
-
-@pytest.mark.spark
-class TestStatefulSessions:
-    def test_stream_sessions_match_batch(self, spark, sf_dir, tmp_path):
-        """applyInPandasWithState sessionizer vs the exact batch window
-        computation: every CLOSED streamed session must appear in the batch
-        session set with identical (user, start, end, count)."""
-        from osm_pbf_convert_spark import queries as Q
-        from osm_pbf_convert_spark.streaming.sessions import stream_sessionize
-
-        batch = Q.q_sessionization(spark, sf_dir).toPandas()
-        batch_keys = {
-            (r["user_id"], r["t_start"], r["t_end"], r["n_events"]) for _, r in batch.iterrows()
-        }
-        events = spark.read.parquet(f"{sf_dir}/events.parquet")
-        schema = events.schema.simpleString()[7:-1].replace(":", " ")
-        evdir = tmp_path / "events_only"
-        evdir.mkdir()
-        (evdir / "events.parquet").symlink_to(f"{sf_dir}/events.parquet")
-        sdf = stream_sessionize(spark, str(evdir), schema, gap_seconds=1800)
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName("sessions_out")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", str(tmp_path / "ck"))
-            .start()
-        )
-        # ProcessingTimeTimeout keeps scheduling timer batches, so the query
-        # outlives availableNow; wait for the data batches then stop.
-        q.awaitTermination(25)
-        q.stop()
-        got = spark.sql("select * from sessions_out").toPandas()
-        assert len(got) > 0, "expected at least some closed sessions"
-        for _, r in got.iterrows():
-            key = (r["user_id"], r["t_start"], r["t_end"], r["n_events"])
-            assert key in batch_keys, f"streamed session {key} not in batch sessions"

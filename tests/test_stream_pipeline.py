@@ -171,7 +171,10 @@ class TestStreamPipeline:
 class TestStreamPipelineExtracts:
     def test_extract_mode(self, spark, sf_dir, tmp_path):
         """Watch-dir mode: an .osm.pbf drop decodes and tiles identically
-        to the batch reader; no dedup stage (extracts carry no text)."""
+        to the batch reader; no dedup stage (extracts carry no text). A
+        second drop of the same extract, drained against the same
+        checkpoint, merges a second micro-batch into the existing finest
+        tile table: every count doubles."""
         import shutil
 
         from osm_pbf_convert_spark.queries import _pbf_file
@@ -203,6 +206,19 @@ class TestStreamPipelineExtracts:
             for r in spark.read.parquet(f"{out}/tiles").collect()
         }
         assert got_tiles == want
+
+        shutil.copy(src, watch / "extract2.osm.pbf")
+        run_streaming_pipeline(
+            spark, out=out, checkpoint=ckpt, watch_dir=str(watch),
+            max_z=MAX_Z, timeout=300,
+        )
+        batch_ids = [n for n in os.listdir(f"{ckpt}/tiles/offsets") if n.isdigit()]
+        assert len(batch_ids) >= 2, batch_ids
+        got_tiles = {
+            (r["z"], r["tile"], r["cnt"])
+            for r in spark.read.parquet(f"{out}/tiles").collect()
+        }
+        assert got_tiles == {(z, tile, 2 * cnt) for z, tile, cnt in want}
 
 
 @pytest.mark.spark

@@ -8,7 +8,6 @@ import pytest
 from osm_pbf_convert_spark.operators import dedup
 from osm_pbf_convert_spark.streaming.dedup import (
     stream_documents,
-    stream_exact_dedup,
     stream_minhash_pairs,
     stream_simhash_pairs,
 )
@@ -251,22 +250,3 @@ class TestStreamSimhashPairs:
         }
         assert got == batch
 
-
-@pytest.mark.spark
-class TestStreamExactDedup:
-    def test_one_survivor_per_group(self, spark, sf_dir, tmp_path):
-        path = _materialize(spark, sf_dir, tmp_path, 2)
-        docs = spark.read.parquet(path)
-        sdf = stream_exact_dedup(
-            stream_documents(spark, path, docs.schema, maxFilesPerTrigger=1)
-        )
-        _run_stream(spark, sdf, tmp_path, "exact_stream")
-        kept = spark.table("exact_stream").toPandas()
-        src = docs.toPandas()
-        # exactly one survivor per distinct text, survivor from the group
-        groups = src.groupby("text")["doc_id"].agg(set)
-        assert len(kept) == len(groups)
-        by_text = kept.set_index("text")["doc_id"]
-        assert set(by_text.index) == set(groups.index)
-        for text, did in by_text.items():
-            assert did in groups[text]
