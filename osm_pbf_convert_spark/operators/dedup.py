@@ -5,14 +5,17 @@ All shapes are shuffle-conscious:
 - exact: hash-groupBy on a content digest -- one shuffle, map-side partial
   agg; survivor = min(doc_id) for determinism.
 - MinHash + LSH: signature stage = one zero-shuffle Arrow window pass
-  (``hash_fn="rolling"``: Karp-Rabin window hashes, operators/rolling.py;
-  ``hash_fn="md5"``: md5 window digests, operators/md5win.py) -> band
-  keys -> bucket self-join emits candidate pairs -> optional exact
+  (``hash_fn="rolling"``: a ``mapInArrow`` over Karp-Rabin window
+  hashes, sort-free per-seed minima, emitting the (doc_id, band, bucket)
+  rows itself, operators/rolling.py; ``hash_fn="md5"``: md5 window
+  digests, operators/md5win.py, banded in Catalyst) -> bucket
+  self-join emits candidate pairs -> optional exact
   Jaccard verify. Band/bucket join is equi-join on the band hash:
   broadcast-free, AQE handles hot buckets; oversized boilerplate buckets
   can be capped (max_bucket_size).
 - SimHash: 64-bit (rolling) or 60-bit (md5) signature from token hashes;
-  the per-bit majority is a numpy pass inside the same Arrow map.
+  the per-bit majority (one int64 ``add.reduceat`` per bit) is a numpy
+  pass inside the same Arrow map.
 - n-gram Jaccard: candidate pairs from shared shingles (inverted index),
   Jaccard = |common| / (|a|+|b|-|common|).
 - embedding cosine near-dup: random-hyperplane LSH buckets, exact cosine
@@ -97,23 +100,25 @@ def _kr_hash_arrays(df: DataFrame, k: int) -> DataFrame:
     """(id, shs array<long>): each doc's unique Karp-Rabin window
     hashes (operators/rolling.py) -- the substring-free stand-in for
     ``shingles_col`` in exact-jaccard verification (set semantics are
-    identical up to ~|S|^2/2^64 within-doc collisions)."""
+    identical up to ~|S|^2/2^64 within-doc collisions). One
+    ``mapInArrow`` pass: ``shs`` is a ListArray over the sorted-unique
+    ``(flat, offsets)`` segments, with no per-row Python."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    from osm_pbf_convert_spark.operators.rolling import batch_window_hashes
-
-    def batches(it):
-        for pdf in it:
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"].to_numpy(),
-                "shs": [u.astype(np.int64) for u in batch_window_hashes(pdf["text"], k)],
-            })
-
+    from osm_pbf_convert_spark.operators.rolling import batch_window_hash_segments
     from osm_pbf_convert_spark.plans.partitioning import fan_out
 
+    def batches(it):
+        for batch in it:
+            flat, off = batch_window_hash_segments(batch.column("text").to_pandas(), k)
+            shs = pa.ListArray.from_arrays(pa.array(off.astype(np.int32)),
+                                           pa.array(flat.view(np.int64)))
+            yield pa.RecordBatch.from_arrays([batch.column("doc_id"), shs],
+                                             names=["doc_id", "shs"])
+
     id_type = df.schema["doc_id"].dataType.simpleString()
-    return fan_out(df.select("doc_id", "text"), key="doc_id").mapInPandas(
+    return fan_out(df.select("doc_id", "text"), key="doc_id").mapInArrow(
         batches, schema=f"doc_id {id_type}, shs array<long>"
     )
 
@@ -121,52 +126,57 @@ def _kr_hash_arrays(df: DataFrame, k: int) -> DataFrame:
 def _minhash_signatures_rolling(df: DataFrame, num_hashes: int, shingle_k: int,
                                 bands: int | None = None) -> DataFrame:
     """The no-substring signature stage (``hash_fn="rolling"``): one
-    Karp-Rabin window pass per Arrow batch (operators/rolling.py) -- a
-    narrow map with ZERO shuffle and no per-shingle rows. sig_i = min
-    over the doc's unique window hashes w of A_i*w + B_i mod 2^64 (odd
-    A_i: a bijection on Z_2^64, a textbook permutation family). Docs
-    with no window (shorter than k) emit NO row, like the md5 flavor.
+    ``mapInArrow`` pass -- a narrow map with ZERO shuffle and no
+    per-shingle rows. Per Arrow batch, every in-document Karp-Rabin
+    window hash (``rolling.batch_window_hashes``, duplicates kept) feeds
+    ``rolling.segment_affine_min``: sig_i = min over the doc's window
+    hashes w of A_i*w + B_i mod 2^64 (odd A_i: a bijection on Z_2^64, a
+    textbook permutation family). Docs with no window (shorter than k)
+    emit NO row, like the md5 flavor.
 
-    Peak memory is bounded regardless of document length: the window x
-    seed product matrix is chunked with a running minimum
-    (``rolling.segment_affine_min``), so a single multi-MB document
-    costs the same ~32 MB transient as a batch of tweets.
+    No sort and no windows x seeds matrix: the minima are taken one seed
+    at a time, so the peak transient is one window-length uint64 vector
+    per batch, whatever ``num_hashes`` or the document lengths are.
 
-    ``bands``: when given, additionally emits ``bnds array<long>`` --
-    the per-band Horner bucket keys (``rolling.band_buckets``) computed
-    in the SAME Arrow pass, so the LSH banding stage adds no second
-    scan and stays DuckDB-replayable."""
+    Without ``bands`` the output is ``(doc_id, sig array<long>)``, the
+    signature a ListArray over the flat signature matrix. With ``bands``
+    it is the LSH banding rows ``(doc_id, band int, bucket bigint)``
+    directly: one row per (doc, band), the bucket the band's Horner key
+    (``rolling.band_buckets``, DuckDB-replayable), so no signature column
+    is shipped and nothing is exploded downstream."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     from osm_pbf_convert_spark.operators import rolling
+    from osm_pbf_convert_spark.plans.partitioning import fan_out
 
     A, B = rolling.affine_family(num_hashes)
 
     def batches(it):
-        for pdf in it:
-            flat, off = rolling.batch_window_hash_segments(pdf["text"], shingle_k)
-            nonempty = np.nonzero(np.diff(off) > 0)[0]
+        for batch in it:
+            flat, off = rolling.batch_window_hashes(batch.column("text").to_pandas(), shingle_k)
+            nonempty = np.nonzero(np.diff(off))[0]
             if not nonempty.size:
                 continue  # no shingles -> no row (same as the md5 flavor)
             sig = rolling.segment_affine_min(flat, off, A, B)[nonempty]
-            out = {
-                "doc_id": pdf["doc_id"].to_numpy()[nonempty],
-                "sig": list(sig.astype(np.int64)),
-            }
-            if bands is not None:
-                out["bnds"] = list(
-                    rolling.band_buckets(sig, bands).astype(np.int64)
-                )
-            yield pd.DataFrame(out)
-
-    from osm_pbf_convert_spark.plans.partitioning import fan_out
+            ids = batch.column("doc_id")
+            if bands is None:
+                sigs = pa.ListArray.from_arrays(
+                    pa.array(np.arange(0, sig.size + 1, num_hashes, dtype=np.int32)),
+                    pa.array(sig.view(np.int64).ravel()))
+                yield pa.RecordBatch.from_arrays([ids.take(nonempty), sigs],
+                                                 names=["doc_id", "sig"])
+            else:
+                yield pa.RecordBatch.from_arrays([
+                    ids.take(np.repeat(nonempty, bands)),
+                    pa.array(np.tile(np.arange(bands, dtype=np.int32), nonempty.size)),
+                    pa.array(rolling.band_buckets(sig, bands).view(np.int64).ravel()),
+                ], names=["doc_id", "band", "bucket"])
 
     id_type = df.schema["doc_id"].dataType.simpleString()
-    schema = f"doc_id {id_type}, sig array<long>"
-    if bands is not None:
-        schema += ", bnds array<long>"
-    return fan_out(df.select("doc_id", "text"), key="doc_id").mapInPandas(
+    schema = (f"doc_id {id_type}, sig array<long>" if bands is None
+              else f"doc_id {id_type}, band int, bucket bigint")
+    return fan_out(df.select("doc_id", "text"), key="doc_id").mapInArrow(
         batches, schema=schema
     )
 
@@ -233,12 +243,12 @@ def minhash_lsh_pairs(
         raise ValueError("bands must divide num_hashes")
     r = num_hashes // bands
     if hash_fn == "rolling":
-        # band buckets come out of the SAME zero-shuffle Arrow pass as
-        # the signatures (rolling.band_buckets: 8-byte Horner keys, a
-        # 10x byte win over joined-string buckets AND replayable in
-        # DuckDB HUGEINT -- the production default carries the oracle)
-        sig = _minhash_signatures_rolling(df, num_hashes, shingle_k, bands=bands)
-        banded = sig.select("doc_id", F.posexplode("bnds").alias("band", "bucket"))
+        # the (doc_id, band, bucket) rows come out of the SAME zero-shuffle
+        # Arrow pass as the signatures (rolling.band_buckets: 8-byte
+        # Horner keys, a 10x byte win over joined-string buckets AND
+        # replayable in DuckDB HUGEINT -- the production default carries
+        # the oracle)
+        banded = _minhash_signatures_rolling(df, num_hashes, shingle_k, bands=bands)
         return _bucket_join_pairs(banded, max_bucket_size)
     sig = minhash_signatures(df, num_hashes, shingle_k, hash_fn)
     # md5: bucket = the band's hash values joined as a string -- band id

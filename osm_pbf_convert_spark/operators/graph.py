@@ -270,25 +270,18 @@ def near_dup_groups(
 
 def dedup_survivors(docs: DataFrame, labels: DataFrame) -> DataFrame:
     """One survivor per duplicate component: the LONGEST text (ties -> min
-    id) -- the usual "keep the most complete copy" training-data policy.
+    id; a null text ranks last) -- the usual "keep the most complete
+    copy" training-data policy.
 
     Returns (component, survivor_id, n_docs). Documents absent from
     ``labels`` are singletons and survive by definition; callers drop dups
     with an anti-join of (labels minus survivors) against the corpus.
-    One window over the component key -- a single shuffle after the join.
-    """
-    from pyspark.sql import Window
-
+    One aggregate over the component key -- a single shuffle after the
+    join, with a map-side partial aggregate: the survivor is the minimum
+    of the struct (-length, doc_id), a null length mapped past every
+    real one, so the struct order is the ranking."""
     j = labels.join(docs.select("doc_id", F.length("text").alias("_len")), "doc_id")
-    w = Window.partitionBy("component")
-    ranked = j.select(
-        "component",
-        F.col("doc_id"),
-        F.row_number()
-        .over(w.orderBy(F.col("_len").desc(), F.col("doc_id")))
-        .alias("_rn"),
-        F.count(F.lit(1)).over(w).alias("n_docs"),
-    )
-    return ranked.filter(F.col("_rn") == 1).select(
-        "component", F.col("doc_id").alias("survivor_id"), "n_docs"
-    )
+    rank = F.struct(F.coalesce(-F.col("_len"), F.lit(2**31 - 1)), F.col("doc_id"))
+    return j.groupBy("component").agg(
+        F.min(rank).alias("_best"), F.count(F.lit(1)).alias("n_docs")
+    ).select("component", F.col("_best.doc_id").alias("survivor_id"), "n_docs")

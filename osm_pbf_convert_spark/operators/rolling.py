@@ -5,12 +5,19 @@ materializing every k-char substring before hashing (`shingles_col`).
 This module computes the k-byte window hashes of a whole Arrow batch
 WITHOUT building a single substring: the batch's lower-cased texts are
 concatenated into ONE uint8 buffer, every window hash is a Karp-Rabin
-polynomial computed with k vectorized shifted multiply-adds (mod 2^64
-by natural uint64 wrap), and windows crossing document boundaries are
-masked out. Measured 30x on the fingerprint operator (BENCH/NOTES.md);
-consumed by ``text.fingerprint(hash_fn="rolling")``,
+polynomial computed with k vectorized Horner steps (mod 2^64 by natural
+uint64 wrap), and windows crossing document boundaries are masked out
+(``batch_window_hashes``, the one window front end). Measured 30x on
+the fingerprint operator (BENCH/NOTES.md); consumed by
+``text.fingerprint(hash_fn="rolling")``,
 ``dedup.minhash_signatures(hash_fn="rolling")`` and (token flavor)
 ``dedup.simhash_signatures(hash_fn="rolling")``.
+
+The segment reductions do O(windows) numpy work per output column and
+never sort: ``segment_affine_min`` takes one ``np.minimum.reduceat``
+per hash seed, ``segment_bit_majority`` one ``np.add.reduceat`` per
+bit, each into a single reused vector, so peak transient memory is one
+window- (or token-) length vector per batch.
 
 Everything here is deterministic integer arithmetic mod 2^64 -- numpy
 computes it by natural uint64 wrap, DuckDB replays it in HUGEINT with
@@ -50,34 +57,50 @@ def window_powers(k: int) -> np.ndarray:
                     dtype=np.uint64)
 
 
-def batch_window_hash_segments(texts, k: int):
-    """``(flat, offsets)`` for a pandas Series of strings: the per-row
-    slice ``flat[offsets[i]:offsets[i+1]]`` is row i's SORTED UNIQUE
-    uint64 window hashes over the lower-cased UTF-8 bytes (possibly
-    empty). One global lexsort + boundary-diff dedupe -- zero per-row
-    Python, so a corpus of millions of tiny docs costs the same numpy
-    passes as one big doc (the round-5 ``np.unique``-per-row loop was
-    the last per-row step in the rolling path)."""
-    powers = window_powers(k)
+def _lowered_utf8(texts):
+    """``(buf, lens)``: the concatenated lower-cased UTF-8 bytes of a
+    pandas Series of strings (None -> "") and each row's byte length."""
     raw = texts.fillna("").str.lower().str.encode("utf-8")
     lens = raw.str.len().to_numpy(np.int64)
-    buf = np.frombuffer(b"".join(raw), dtype=np.uint8)
-    n = buf.size
+    return np.frombuffer(b"".join(raw), dtype=np.uint8), lens
+
+
+def batch_window_hashes(texts, k: int):
+    """``(flat, offsets)`` for a pandas Series of strings: the per-row
+    slice ``flat[offsets[i]:offsets[i+1]]`` is EVERY in-document k-byte
+    window hash of row i's lower-cased UTF-8 bytes, in document order,
+    duplicates kept (a row shorter than k has none). The one window
+    front end: in-place Horner steps over the batch's concatenated
+    byte buffer, then one boolean compress that drops the windows
+    crossing a document boundary -- the mask is an ``np.repeat`` of
+    (valid, invalid) runs over the document lengths."""
+    buf, lens = _lowered_utf8(texts)
+    nwin = np.maximum(lens - (k - 1), 0)
     offsets = np.zeros(lens.size + 1, dtype=np.int64)
-    starts = np.zeros(lens.size + 1, dtype=np.int64)
-    np.cumsum(lens, out=starts[1:])
-    if n < k:
+    np.cumsum(nwin, out=offsets[1:])
+    if not offsets[-1]:
         return np.empty(0, dtype=np.uint64), offsets
-    h = np.zeros(n - k + 1, dtype=np.uint64)
+    m = buf.size - k + 1
+    h = buf[:m].astype(np.uint64)
+    C = np.uint64(KR_BASE)
     with np.errstate(over="ignore"):
-        for j in range(k):
-            h += buf[j:n - k + 1 + j].astype(np.uint64) * powers[j]
-    # owner doc of each window start; windows crossing a doc boundary
-    # (start in doc i, end past it) are dropped
-    pos = np.arange(n - k + 1, dtype=np.int64)
-    owner = np.searchsorted(starts, pos, side="right") - 1
-    valid = pos + k <= starts[owner + 1]
-    h, owner = h[valid], owner[valid]
+        for j in range(1, k):
+            h *= C
+            h += buf[j:m + j]
+    # doc i's starts: nwin[i] valid windows, then lens[i] - nwin[i]
+    # starts whose window runs past the doc's end
+    runs = np.column_stack((nwin, lens - nwin)).ravel()
+    valid = np.repeat(np.tile([True, False], lens.size), runs)[:m]
+    return h[valid], offsets
+
+
+def batch_window_hash_segments(texts, k: int):
+    """``batch_window_hashes`` with each row's slice SORTED and UNIQUE
+    (one global lexsort + boundary-diff dedupe, zero per-row Python) --
+    the set form the bottom-k fingerprint and the exact-Jaccard verify
+    need. A minimum never needs it (``segment_affine_min``)."""
+    h, offsets = batch_window_hashes(texts, k)
+    owner = np.repeat(np.arange(offsets.size - 1), np.diff(offsets))
     order = np.lexsort((h, owner))
     h, owner = h[order], owner[order]
     if h.size:
@@ -85,16 +108,9 @@ def batch_window_hash_segments(texts, k: int):
         keep[0] = True
         keep[1:] = (h[1:] != h[:-1]) | (owner[1:] != owner[:-1])
         h, owner = h[keep], owner[keep]
-    np.cumsum(np.bincount(owner, minlength=lens.size), out=offsets[1:])
-    return h, offsets
-
-
-def batch_window_hashes(texts, k: int):
-    """Generator view of ``batch_window_hash_segments``: one ndarray of
-    sorted unique uint64 window hashes per row."""
-    flat, off = batch_window_hash_segments(texts, k)
-    for i in range(off.size - 1):
-        yield flat[off[i]:off[i + 1]]
+    out = np.zeros_like(offsets)
+    np.cumsum(np.bincount(owner, minlength=offsets.size - 1), out=out[1:])
+    return h, out
 
 
 def affine_family(num_hashes: int, seed: int = 42):
@@ -110,33 +126,28 @@ def affine_family(num_hashes: int, seed: int = 42):
 
 
 def segment_affine_min(flat: np.ndarray, offsets: np.ndarray,
-                       A: np.ndarray, B: np.ndarray,
-                       chunk: int = 1 << 16) -> np.ndarray:
+                       A: np.ndarray, B: np.ndarray) -> np.ndarray:
     """Per-segment elementwise min of ``A_j*x + B_j mod 2^64`` over each
     segment of ``flat`` -- the minhash signature matrix, (nseg, |A|)
     uint64, empty segments = uint64 max.
 
-    Memory is bounded by design: the |windows| x |A| product matrix is
-    materialized ``chunk`` window rows at a time with a running minimum
-    (``np.minimum.reduceat`` per chunk, folded into the output), so the
-    peak transient is ``chunk * len(A) * 8`` bytes (32 MB at defaults)
-    REGARDLESS of document length -- a 1 MB document with ~1M unique
-    windows no longer allocates a ~0.5 GB dense matrix."""
+    One hash at a time: ``A_j*x + B_j`` into one reused window-length
+    vector, then ``np.minimum.reduceat`` at the non-empty segments'
+    starts. Segments may hold repeated values (the minimum of a multiset
+    is the minimum of its set), so no sort or dedupe is needed, and the
+    peak transient is one window-length vector whatever ``len(A)`` is."""
     nseg = offsets.size - 1
     out = np.full((nseg, A.size), U64_MAX, dtype=np.uint64)
-    n = int(flat.size)
-    for s in range(0, n, chunk):
-        e = min(s + chunk, n)
-        with np.errstate(over="ignore"):
-            m = flat[s:e, None] * A[None, :] + B[None, :]
-        # segment boundaries that fall strictly inside [s, e); dedupe
-        # handles empty segments (equal consecutive offsets)
-        inner = np.unique(offsets[(offsets > s) & (offsets < e)])
-        red_at = np.concatenate((np.zeros(1, np.int64), inner - s))
-        part = np.minimum.reduceat(m, red_at, axis=0)
-        segs = np.searchsorted(offsets, np.concatenate(([s], inner)),
-                               side="right") - 1
-        out[segs] = np.minimum(out[segs], part)
+    nonempty = np.nonzero(np.diff(offsets))[0]
+    if not nonempty.size:
+        return out
+    at = offsets[nonempty]
+    x = np.empty(flat.size, dtype=np.uint64)
+    with np.errstate(over="ignore"):
+        for j in range(A.size):
+            np.multiply(flat, A[j], out=x)
+            x += B[j]
+            out[nonempty, j] = np.minimum.reduceat(x, at)
     return out
 
 
@@ -173,9 +184,7 @@ def batch_token_spans(texts):
     splitting for ANY text because ASCII whitespace never occurs inside
     a multi-byte UTF-8 sequence. Shared by the Karp-Rabin token hasher
     below and the md5 token hasher (``operators/md5win.py``)."""
-    raw = texts.fillna("").str.lower().str.encode("utf-8")
-    lens = raw.str.len().to_numpy(np.int64)
-    buf = np.frombuffer(b"".join(raw), dtype=np.uint8)
+    buf, lens = _lowered_utf8(texts)
     n = buf.size
     offsets = np.zeros(lens.size + 1, dtype=np.int64)
     starts = np.zeros(lens.size + 1, dtype=np.int64)
@@ -249,19 +258,25 @@ def segment_bit_majority(hashes: np.ndarray, offsets: np.ndarray) -> np.ndarray:
     """Per-segment 64-bit SimHash from token hashes: bit i of the output
     is set iff strictly more than half the segment's token hashes carry
     bit i (ties -> 0, matching the JVM flavors' ``sum(+-1) > 0``).
-    Zero-token segments get 0. One unpackbits + one add.reduceat."""
+    Zero-token segments get 0. One pass per bit: shift and mask into one
+    reused token-length vector, then an int64 ``np.add.reduceat`` at the
+    non-empty segments' starts -- no tokens x 64 bit matrix."""
     nseg = offsets.size - 1
     out = np.zeros(nseg, dtype=np.uint64)
     cnt = np.diff(offsets)
-    nonempty = np.nonzero(cnt > 0)[0]
+    nonempty = np.nonzero(cnt)[0]
     if not nonempty.size:
         return out
-    bits = np.unpackbits(
-        np.ascontiguousarray(hashes, dtype="<u8").view(np.uint8).reshape(-1, 8),
-        axis=1, bitorder="little",
-    ).astype(np.int64)
-    sums = np.add.reduceat(bits, offsets[nonempty], axis=0)
-    maj = (2 * sums) > cnt[nonempty, None]
-    packed = np.packbits(maj, axis=1, bitorder="little")
-    out[nonempty] = np.frombuffer(packed.tobytes(), dtype="<u8")
+    h = np.asarray(hashes, dtype=np.uint64)
+    at = offsets[nonempty]
+    cnt = cnt[nonempty]
+    bit = np.empty(h.size, dtype=np.uint64)
+    maj = np.zeros(nonempty.size, dtype=np.uint64)
+    one = np.uint64(1)
+    for i in range(64):
+        np.right_shift(h, np.uint64(i), out=bit)
+        bit &= one
+        ones = np.add.reduceat(bit.view(np.int64), at)
+        maj |= (2 * ones > cnt).astype(np.uint64) << np.uint64(i)
+    out[nonempty] = maj
     return out

@@ -100,7 +100,7 @@ class TagDictionary:
             F.col("id").alias("_id"), F.posexplode(F.map_entries("tags")).alias("pos", "e")
         ).select("_id", "pos", F.col("e.key").alias("key"), F.col("e.value").alias("value"))
         if self.stoplist:
-            exploded = exploded.filter(~F.col("key").isin(list(self.stoplist)))
+            exploded = exploded.filter(~F.col("key").isin(sorted(self.stoplist)))
 
         d1 = self._dim(spark, level1, "tag_id1")
         d2 = self._dim(spark, self.tag_codes, "tag_id2")

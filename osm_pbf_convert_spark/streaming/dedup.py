@@ -6,9 +6,10 @@ land continuously. This module turns the batch MinHash-LSH operator
 (operators/dedup.py, rolling flavor) into a Structured Streaming
 pipeline with the SAME pair semantics under ``availableNow`` replay:
 
-1. signatures + band buckets: the identical zero-shuffle Arrow pass as
-   batch (``_minhash_signatures_rolling`` -- ``mapInPandas`` is
-   stateless, so it lifts to streams unchanged);
+1. band rows: the identical zero-shuffle Arrow pass as batch
+   (``_minhash_signatures_rolling`` emits ``(doc_id, band, bucket)``
+   rows -- ``mapInArrow`` is stateless, so it lifts to streams
+   unchanged);
 2. candidate pairs: ``applyInPandasWithState`` keyed by (band, bucket).
    State per key = the doc ids seen in that bucket (packed int64
    bytes); each arriving doc emits one pair against every doc already
@@ -163,10 +164,8 @@ def stream_minhash_pairs(
         # mirror the batch operator: band_buckets would silently truncate
         # the tail hashes and break the documented batch-parity contract
         raise ValueError("bands must divide num_hashes")
-    sig = _minhash_signatures_rolling(stream_df, num_hashes, shingle_k, bands=bands)
-    banded = sig.select(
-        F.col("doc_id").cast("long").alias("_id"),
-        F.posexplode("bnds").alias("band", "bucket"),
+    banded = _minhash_signatures_rolling(stream_df, num_hashes, shingle_k, bands=bands).select(
+        F.col("doc_id").cast("long").alias("_id"), "band", "bucket"
     )
     ttl_ms = None if state_ttl_minutes is None else state_ttl_minutes * 60_000
     return banded.groupBy("band", "bucket").applyInPandasWithState(

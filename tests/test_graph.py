@@ -222,6 +222,38 @@ def test_survivors_pick_longest_then_min_id(spark):
     assert out == {1: (2, 3), 7: (7, 2)}
 
 
+def test_survivors_match_window_ranking(spark):
+    """The aggregate picks exactly what a row_number window ordered by
+    (length DESC NULLS LAST, doc_id) picks: longest text, ties to the
+    smallest id, null text last, an empty text ahead of a null one."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    docs = spark.createDataFrame(
+        [(1, "aaa"), (2, "bbbb"), (3, "cccc"), (4, None), (5, None), (6, ""),
+         (7, None), (8, "x"), (10, None), (11, "y" * 40), (12, "\u20ac" * 40)],
+        "doc_id long, text string",
+    )
+    labels = spark.createDataFrame(
+        [(1, 1), (2, 1), (3, 1), (4, 4), (5, 4), (7, 6), (6, 6), (8, 8),
+         (9, 8), (10, 10), (11, 11), (12, 11)],
+        "doc_id long, component long",
+    )
+    j = labels.join(docs.select("doc_id", F.length("text").alias("_len")), "doc_id")
+    w = Window.partitionBy("component")
+    want = {
+        (r["component"], r["doc_id"], r["n"])
+        for r in j.select(
+            "component", "doc_id",
+            F.row_number().over(w.orderBy(F.col("_len").desc(), "doc_id")).alias("rn"),
+            F.count(F.lit(1)).over(w).alias("n"),
+        ).filter("rn = 1").collect()
+    }
+    got = {tuple(r) for r in dedup_survivors(docs, labels).collect()}
+    assert got == want == {(1, 2, 3), (4, 4, 2), (6, 6, 2), (8, 8, 1),
+                           (10, 10, 1), (11, 11, 2)}
+
+
 def test_star_rounds_never_broadcast(spark):
     """The mins side of a star round is node-sized (fact-sized at scale):
     it must sort-merge/shuffled-hash join, never auto-broadcast. The

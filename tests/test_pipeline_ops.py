@@ -208,7 +208,7 @@ class TestDedup:
             [(1, "some document text body here")], "doc_id long, text string")
         plan = dedup.minhash_signatures(df, num_hashes=16, shingle_k=4)\
             ._jdf.queryExecution().executedPlan().toString()
-        assert "MapInPandas" in plan and "Exchange" not in plan
+        assert "MapInArrow" in plan and "Exchange" not in plan
 
     def test_verify_on_hashes_parity(self, spark):
         """The 64-bit-hash verify flavor returns identical pairs AND
@@ -808,6 +808,17 @@ class TestTagDictionaryFile:
         )
         out = td.encode(spark, df, kind="node").toPandas()
         assert len(out) == 2  # cafe -> 1001, name -> key 1; created_by+zzz dropped
+
+    def test_stoplist_filter_lists_keys_sorted(self, spark):
+        """The stoplist ``IN (...)`` list is sorted, so the plan text does
+        not depend on the interpreter's string-hash seed."""
+        from osm_pbf_convert_spark.operators.tags import TagDictionary
+
+        td = TagDictionary.load("data/tags_map.json")
+        df = spark.createDataFrame([(1, {"a": "b"})], schema="id bigint, tags map<string,string>")
+        plan = td.encode(spark, df, kind="node")._jdf.queryExecution().analyzed().toString()
+        listed = re.search(r"key#\d+ IN \(([^)]*)\)", plan).group(1).split(",")
+        assert listed == sorted(td.stoplist)
 
 
 @pytest.mark.spark

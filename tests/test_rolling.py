@@ -25,6 +25,32 @@ def ref_window_hashes(text: str, k: int) -> list[int]:
     return sorted(out)
 
 
+def ref_all_window_hashes(text, k: int) -> list[int]:
+    """Brute force: every KR window polynomial of the lower-cased utf-8
+    bytes, in document order, duplicates kept (None -> no windows)."""
+    b = (text or "").lower().encode("utf-8")
+    out = []
+    for i in range(len(b) - k + 1):
+        h = 0
+        for c in b[i:i + k]:
+            h = (h * rolling.KR_BASE + c) % rolling.MOD64
+        out.append(h)
+    return out
+
+
+# texts that exercise every window-front-end edge: None, empty, shorter
+# than k, repeated windows (a two-letter alphabet), multi-byte UTF-8,
+# and whitespace; consecutive rows make windows span doc boundaries
+TEXTS = st.lists(
+    st.one_of(
+        st.none(),
+        st.text(alphabet=st.sampled_from("ab AB\n\u00e9\u20ac\U0001f600\u0130"),
+                max_size=40),
+    ),
+    max_size=10,
+)
+
+
 def ref_token_hashes(text: str) -> list[int]:
     toks = text.lower().encode("utf-8").split()  # bytes.split: ASCII \s runs
     out = []
@@ -65,17 +91,47 @@ class TestWindowSegments:
         assert off[4] - off[3] == 4  # 4 distinct 3-grams in "abcdef"
 
 
+class TestWindowHashes:
+    """The window front end: every in-document window, document order,
+    duplicates kept."""
+
+    @given(TEXTS, st.integers(min_value=1, max_value=6))
+    @settings(max_examples=80, deadline=None)
+    def test_matches_bruteforce(self, texts, k):
+        flat, off = rolling.batch_window_hashes(pd.Series(texts, dtype=object), k)
+        assert off.size == len(texts) + 1 and off[-1] == flat.size
+        for i, t in enumerate(texts):
+            assert flat[off[i]:off[i + 1]].tolist() == ref_all_window_hashes(t, k), (i, t)
+
+    def test_keeps_repeats_and_never_crosses_docs(self):
+        flat, off = rolling.batch_window_hashes(pd.Series(["aaaaa", "bbb", "ab"]), 3)
+        assert np.diff(off).tolist() == [3, 1, 0]
+        aaa, bbb = ref_all_window_hashes("aaa", 3)[0], ref_all_window_hashes("bbb", 3)[0]
+        # "aaaaa"+"bbb" would add "aab" and "abb" if windows crossed
+        assert flat.tolist() == [aaa, aaa, aaa, bbb]
+
+
+def ref_minhash(text, k: int, A, B):
+    """Brute force: per-seed min of A*w + B mod 2^64 over the doc's SET
+    of window hashes (None when the doc has no window)."""
+    ws = set(ref_all_window_hashes(text, k))
+    if not ws:
+        return None
+    return [min((a * w + b) % rolling.MOD64 for w in ws)
+            for a, b in zip(A.tolist(), B.tolist())]
+
+
 class TestSegmentAffineMin:
     @given(st.lists(st.lists(st.integers(0, 2**64 - 1), max_size=30),
                     min_size=1, max_size=8),
-           st.integers(1, 8), st.integers(1, 5))
+           st.integers(1, 8))
     @settings(max_examples=40, deadline=None)
-    def test_matches_dense(self, segs, num_hashes, chunk):
+    def test_matches_dense(self, segs, num_hashes):
         A, B = rolling.affine_family(num_hashes)
         flat = np.array([x for s in segs for x in s], dtype=np.uint64)
         off = np.zeros(len(segs) + 1, dtype=np.int64)
         np.cumsum([len(s) for s in segs], out=off[1:])
-        got = rolling.segment_affine_min(flat, off, A, B, chunk=chunk)
+        got = rolling.segment_affine_min(flat, off, A, B)
         for i, s in enumerate(segs):
             if not s:
                 assert (got[i] == rolling.U64_MAX).all()
@@ -84,14 +140,37 @@ class TestSegmentAffineMin:
                    for a, b in zip(A.tolist(), B.tolist())]
             assert got[i].tolist() == exp, i
 
-    def test_chunk_boundary_inside_segment(self):
-        # one segment spanning several chunks must still take the global min
-        A, B = rolling.affine_family(4)
-        flat = np.arange(1000, dtype=np.uint64)
-        off = np.array([0, 1000], dtype=np.int64)
-        small = rolling.segment_affine_min(flat, off, A, B, chunk=7)
-        big = rolling.segment_affine_min(flat, off, A, B, chunk=1 << 20)
-        assert (small == big).all()
+    @given(TEXTS, st.integers(min_value=1, max_value=6), st.integers(1, 6))
+    @settings(max_examples=60, deadline=None)
+    def test_texts_match_bruteforce_set_minhash(self, texts, k, num_hashes):
+        """Minima over the duplicates-kept windows equal the minima over
+        each doc's window SET, i.e. the sort-unique path's signatures."""
+        A, B = rolling.affine_family(num_hashes)
+        series = pd.Series(texts, dtype=object)
+        got = rolling.segment_affine_min(*rolling.batch_window_hashes(series, k), A, B)
+        dedup = rolling.segment_affine_min(
+            *rolling.batch_window_hash_segments(series, k), A, B)
+        assert (got == dedup).all()
+        for i, t in enumerate(texts):
+            exp = ref_minhash(t, k, A, B)
+            if exp is None:
+                assert (got[i] == rolling.U64_MAX).all(), (i, t)
+            else:
+                assert got[i].tolist() == exp, (i, t)
+
+    def test_long_segment_between_empty_ones(self):
+        # a 200k-value segment flanked by empty segments takes its global
+        # min, and the empty segments stay at uint64 max
+        A, B = rolling.affine_family(3)
+        rng = np.random.default_rng(7)
+        flat = rng.integers(0, 2**63, size=200_001, dtype=np.uint64)
+        off = np.array([0, 0, 200_000, 200_000, 200_001], dtype=np.int64)
+        got = rolling.segment_affine_min(flat, off, A, B)
+        with np.errstate(over="ignore"):
+            mapped = flat[:, None] * A[None, :] + B[None, :]
+        assert (got[1] == mapped[:200_000].min(axis=0)).all()
+        assert (got[3] == mapped[200_000]).all()
+        assert (got[[0, 2]] == rolling.U64_MAX).all()
 
 
 class TestBandBuckets:
@@ -153,6 +232,36 @@ class TestBitMajority:
                     exp |= 1 << bit
             assert int(got[i]) == exp, i
 
+    @given(st.lists(st.one_of(st.none(), st.text(
+        alphabet=st.sampled_from("ab \t\nXy\u00e9\u20ac\U0001f600"), max_size=50)),
+        max_size=10))
+    @settings(max_examples=60, deadline=None)
+    def test_texts_match_bruteforce(self, texts):
+        """Rolling SimHash of raw texts (None, empty, whitespace-only,
+        repeated and multi-byte tokens) against the pure-Python
+        token-hash majority."""
+        flat, off = rolling.batch_token_hash_segments(pd.Series(texts, dtype=object))
+        got = rolling.segment_bit_majority(flat, off)
+        for i, t in enumerate(texts):
+            toks = ref_token_hashes(t or "")
+            exp = 0
+            for bit in range(64):
+                if 2 * sum((h >> bit) & 1 for h in toks) > len(toks):
+                    exp |= 1 << bit
+            assert int(got[i]) == exp, (i, t)
+
+    def test_long_segment_and_ties(self):
+        # 100k tokens where bit 0 is set in exactly half (a tie -> 0) and
+        # bit 63 in all but one (-> 1); the trailing single-token segment
+        # is its own majority
+        h = np.zeros(100_000, dtype=np.uint64)
+        h[::2] |= np.uint64(1)
+        h[1:] |= np.uint64(1 << 63)
+        flat = np.concatenate([h, np.array([5], dtype=np.uint64)])
+        off = np.array([0, 100_000, 100_000, 100_001], dtype=np.int64)
+        got = rolling.segment_bit_majority(flat, off)
+        assert got.tolist() == [1 << 63, 0, 5]
+
 
 @pytest.mark.spark
 class TestSimhashRollingSpark:
@@ -209,3 +318,54 @@ class TestSimhashRollingSpark:
         pairs = dedup.simhash_hamming_pairs(df, max_hamming=3).collect()
         got = {(r["a"], r["b"]) for r in pairs}
         assert (0, 2) in got and (1, 3) in got
+
+
+@pytest.mark.spark
+class TestMinhashRollingSpark:
+    ROWS = [(1, "the quick brown fox"), (2, "ab"), (3, None),
+            (4, "aaaaaaaa aaaa"), (5, "\u00e9t\u00e9 \u20ac\u20ac \U0001f600 caf\u00e9")]
+
+    def _df(self, spark):
+        return spark.createDataFrame(self.ROWS, "doc_id bigint, text string")
+
+    @staticmethod
+    def _signed(values):
+        return [v - rolling.MOD64 if v >= 1 << 63 else v for v in values]
+
+    def test_signature_schema_and_values(self, spark):
+        from pyspark.sql import types as T
+
+        from osm_pbf_convert_spark.operators import dedup
+
+        out = dedup.minhash_signatures(self._df(spark), num_hashes=8, shingle_k=3)
+        assert out.schema == T.StructType([
+            T.StructField("doc_id", T.LongType()),
+            T.StructField("sig", T.ArrayType(T.LongType())),
+        ])
+        A, B = rolling.affine_family(8)
+        exp = {i: ref_minhash(t, 3, A, B) for i, t in self.ROWS}
+        got = {r["doc_id"]: r["sig"] for r in out.collect()}
+        # docs with no 3-byte window (short, null) emit no row
+        assert got == {i: self._signed(s) for i, s in exp.items() if s is not None}
+
+    def test_band_rows_schema_and_values(self, spark):
+        from pyspark.sql import types as T
+
+        from osm_pbf_convert_spark.operators import dedup
+
+        out = dedup._minhash_signatures_rolling(self._df(spark), 8, 3, bands=4)
+        assert out.schema == T.StructType([
+            T.StructField("doc_id", T.LongType()),
+            T.StructField("band", T.IntegerType()),
+            T.StructField("bucket", T.LongType()),
+        ])
+        A, B = rolling.affine_family(8)
+        exp = set()
+        for i, t in self.ROWS:
+            s = ref_minhash(t, 3, A, B)
+            if s is None:
+                continue
+            buckets = rolling.band_buckets(np.array([s], dtype=np.uint64), 4)[0]
+            exp |= {(i, b, v) for b, v in enumerate(self._signed(buckets.tolist()))}
+        got = [tuple(r) for r in out.collect()]
+        assert len(got) == len(exp) and set(got) == exp
