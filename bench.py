@@ -308,19 +308,18 @@ def main():
         subset = [
             "pricing_summary", "ways_nodes_join", "way_bbox", "relation_members",
             "tile_counts_z8", "heat_map", "tile_pyramid", "knn", "embedding_topk",
-            "minhash_pairs", "exact_dedup", "token_counts", "point_in_polygon",
+            "exact_dedup", "token_counts", "point_in_polygon",
             "sessionization", "tag_stats_by_kind", "knn_multi_tile", "pip_rects",
-            "simhash_hamming_pairs", "tag_dict_encode", "ngram_jaccard_lsh",
-            "lang_id", "fingerprint", "ivf_topk", "tile_windows",
+            "simhash_hamming_pairs", "tag_dict_encode",
+            "lang_id", "ivf_topk", "tile_windows",
             "pbf_file_nodes",
-            # the production rolling defaults, oracled in round 6 -- benched
-            # alongside their md5 oracle pins so the round-over-round record
-            # carries the path users actually run
+            # the text signature operators, oracled since round 6 -- the
+            # one hash family the dedup operators run
             "fingerprint_rolling", "minhash_pairs_rolling",
             "ngram_lsh_rolling", "simhash_rolling",
             # round-6 pipeline step: near-dup pairs -> connected-component
-            # group labels (the full md5-pinned pair graph + star rounds),
-            # so the CC operator has a driver-visible round-over-round row
+            # group labels (the full pair graph + star rounds), so the CC
+            # operator has a driver-visible round-over-round row
             "dedup_groups",
         ]
         runs = {name: [] for name in subset}

@@ -11,7 +11,7 @@ measurement contract; numbers printed here are working evidence for
 OPTIMIZATION_r08.md only.
 
 Usage:
-  python bench_extra.py --queries minhash_pairs,fingerprint --iters 3
+  python bench_extra.py --queries minhash_pairs_rolling,fingerprint_rolling --iters 3
   python bench_extra.py --queries BENCH --explain-dir plans/r08 --suffix before
 """
 
@@ -28,10 +28,10 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 BENCH_SUBSET = [
     "pricing_summary", "ways_nodes_join", "way_bbox", "relation_members",
     "tile_counts_z8", "heat_map", "tile_pyramid", "knn", "embedding_topk",
-    "minhash_pairs", "exact_dedup", "token_counts", "point_in_polygon",
+    "exact_dedup", "token_counts", "point_in_polygon",
     "sessionization", "tag_stats_by_kind", "knn_multi_tile", "pip_rects",
-    "simhash_hamming_pairs", "tag_dict_encode", "ngram_jaccard_lsh",
-    "lang_id", "fingerprint", "ivf_topk", "tile_windows",
+    "simhash_hamming_pairs", "tag_dict_encode",
+    "lang_id", "ivf_topk", "tile_windows",
     "pbf_file_nodes",
     "fingerprint_rolling", "minhash_pairs_rolling",
     "ngram_lsh_rolling", "simhash_rolling",

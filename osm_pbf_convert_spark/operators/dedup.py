@@ -4,26 +4,24 @@ All shapes are shuffle-conscious:
 
 - exact: hash-groupBy on a content digest -- one shuffle, map-side partial
   agg; survivor = min(doc_id) for determinism.
-- MinHash + LSH: signature stage = one zero-shuffle Arrow window pass
-  (``hash_fn="rolling"``: a ``mapInArrow`` over Karp-Rabin window
-  hashes, sort-free per-seed minima, emitting the (doc_id, band, bucket)
-  rows itself, operators/rolling.py; ``hash_fn="md5"``: md5 window
-  digests, operators/md5win.py, banded in Catalyst) -> bucket
-  self-join emits candidate pairs -> optional exact
-  Jaccard verify. Band/bucket join is equi-join on the band hash:
-  broadcast-free, AQE handles hot buckets; oversized boilerplate buckets
-  can be capped (max_bucket_size).
-- SimHash: 64-bit (rolling) or 60-bit (md5) signature from token hashes;
-  the per-bit majority (one int64 ``add.reduceat`` per bit) is a numpy
-  pass inside the same Arrow map.
+- MinHash + LSH: signature stage = one zero-shuffle ``mapInArrow`` pass
+  over Karp-Rabin window hashes (operators/rolling.py), sort-free
+  per-seed minima, emitting the (doc_id, band, bucket) rows itself ->
+  bucket self-join emits candidate pairs -> optional exact Jaccard
+  verify on the same window hashes. Band/bucket join is equi-join on the
+  band hash: broadcast-free, AQE handles hot buckets; oversized
+  boilerplate buckets can be capped (max_bucket_size).
+- SimHash: 64-bit signature from Karp-Rabin token hashes; the per-bit
+  majority (one int64 ``add.reduceat`` per bit) is a numpy pass inside
+  the same Arrow map.
 - n-gram Jaccard: candidate pairs from shared shingles (inverted index),
   Jaccard = |common| / (|a|+|b|-|common|).
 - embedding cosine near-dup: random-hyperplane LSH buckets, exact cosine
   inside buckets.
 
-Every signature operator has two hash flavors: ``"rolling"`` is the
-production default, ``"md5"`` the flavor the DuckDB catalog oracles
-replay bit-identically. Any other ``hash_fn`` raises ``ValueError``.
+Every signature is deterministic integer arithmetic mod 2^64, so the
+DuckDB catalog oracles (``*_rolling`` entries in queries.py) replay the
+production operators bit for bit; there is one hash family.
 
 No reference counterpart (the reference is a spatial engine); these are the
 training-data-pipeline extensions the engine needs at 100 TB.
@@ -59,49 +57,11 @@ def shingles_col(text, k: int = 5):
     ).otherwise(F.array().cast("array<string>"))
 
 
-MERSENNE31 = (1 << 31) - 1
-
-
-def minhash_coeffs(i: int) -> tuple[int, int]:
-    """Deterministic Carter-Wegman coefficients (a_i, b_i) in Z_p,
-    p = 2^31-1, a_i != 0 -- shared by the Spark md5-variant minhash and
-    its generated DuckDB oracle SQL."""
-    a = (2654435761 * (i + 1) + 0x9E3779B9) % MERSENNE31 or 1
-    b = (40503 * (i + 7) * 2654435789 + i) % MERSENNE31
-    return a, b
-
-
-def minhash_signatures(
-    df: DataFrame,
-    num_hashes: int = 64, shingle_k: int = 5, hash_fn: str = "rolling",
-) -> DataFrame:
-    """(id, sig array[num_hashes]) -- min over shingle hashes per seed,
-    computed in one zero-shuffle Arrow pass.
-
-    hash_fn: "rolling" (no-substring Karp-Rabin window hashes + affine
-    mod-2^64 permutation family -- the production flavor, see
-    ``_minhash_signatures_rolling``) or "md5" (the DuckDB-replayable
-    oracle flavor): ONE md5 per shingle supplies a 60-bit base hash x
-    (first 15 hex chars), and the seed family is Carter-Wegman universal
-    hashing h_i = (a_i*x + b_i) mod (2^31-1) -- textbook-valid for
-    minhash, exact in 64-bit arithmetic (a_i, x < 2^31), and replayed
-    bit-identically in SQL (``operators/md5win.py``: numpy window
-    extraction, one ``hashlib.md5`` per globally unique window,
-    vectorized Carter-Wegman mins). Docs with no k-char window emit no
-    row."""
-    if hash_fn == "rolling":
-        return _minhash_signatures_rolling(df, num_hashes, shingle_k)
-    if hash_fn == "md5":
-        return _minhash_signatures_md5(df, num_hashes, shingle_k)
-    raise ValueError(f"unknown hash_fn {hash_fn!r}; expected 'rolling' or 'md5'")
-
-
 def _kr_hash_arrays(df: DataFrame, k: int) -> DataFrame:
-    """(id, shs array<long>): each doc's unique Karp-Rabin window
-    hashes (operators/rolling.py) -- the substring-free stand-in for
-    ``shingles_col`` in exact-jaccard verification (set semantics are
-    identical up to ~|S|^2/2^64 within-doc collisions). One
-    ``mapInArrow`` pass: ``shs`` is a ListArray over the sorted-unique
+    """(id, shs array<long>): each doc's unique Karp-Rabin k-byte
+    window hashes (operators/rolling.py), the sets the exact-jaccard
+    verify of ``ngram_jaccard_lsh_pairs`` intersects. One ``mapInArrow``
+    pass: ``shs`` is a ListArray over the sorted-unique
     ``(flat, offsets)`` segments, with no per-row Python."""
     import numpy as np
     import pyarrow as pa
@@ -125,14 +85,13 @@ def _kr_hash_arrays(df: DataFrame, k: int) -> DataFrame:
 
 def _minhash_signatures_rolling(df: DataFrame, num_hashes: int, shingle_k: int,
                                 bands: int | None = None) -> DataFrame:
-    """The no-substring signature stage (``hash_fn="rolling"``): one
-    ``mapInArrow`` pass -- a narrow map with ZERO shuffle and no
-    per-shingle rows. Per Arrow batch, every in-document Karp-Rabin
-    window hash (``rolling.batch_window_hashes``, duplicates kept) feeds
-    ``rolling.segment_affine_min``: sig_i = min over the doc's window
-    hashes w of A_i*w + B_i mod 2^64 (odd A_i: a bijection on Z_2^64, a
-    textbook permutation family). Docs with no window (shorter than k)
-    emit NO row, like the md5 flavor.
+    """The MinHash signature stage: one ``mapInArrow`` pass -- a narrow
+    map with ZERO shuffle and no per-shingle rows. Per Arrow batch, every
+    in-document Karp-Rabin window hash (``rolling.batch_window_hashes``,
+    duplicates kept) feeds ``rolling.segment_affine_min``: sig_i = min
+    over the doc's window hashes w of A_i*w + B_i mod 2^64 (odd A_i: a
+    bijection on Z_2^64, a textbook permutation family). Docs with no
+    window (shorter than k) emit NO row.
 
     No sort and no windows x seeds matrix: the minima are taken one seed
     at a time, so the peak transient is one window-length uint64 vector
@@ -157,7 +116,7 @@ def _minhash_signatures_rolling(df: DataFrame, num_hashes: int, shingle_k: int,
             flat, off = rolling.batch_window_hashes(batch.column("text").to_pandas(), shingle_k)
             nonempty = np.nonzero(np.diff(off))[0]
             if not nonempty.size:
-                continue  # no shingles -> no row (same as the md5 flavor)
+                continue  # no shingles -> no row
             sig = rolling.segment_affine_min(flat, off, A, B)[nonempty]
             ids = batch.column("doc_id")
             if bands is None:
@@ -181,52 +140,18 @@ def _minhash_signatures_rolling(df: DataFrame, num_hashes: int, shingle_k: int,
     )
 
 
-def _minhash_signatures_md5(df: DataFrame, num_hashes: int, shingle_k: int) -> DataFrame:
-    """The md5 oracle flavor as ONE zero-shuffle Arrow pass: distinct
-    k-char window md5 digests per doc (``md5win``), 60-bit base hash x =
-    first 15 hex chars, vectorized Carter-Wegman mins. Docs with no
-    window emit NO row. Input is fanned out first
-    (``plans.partitioning.fan_out``): the heavy per-row work must not
-    run on one or two scan splits."""
-    import numpy as np
-    import pandas as pd
-
-    from osm_pbf_convert_spark.operators import md5win
-    from osm_pbf_convert_spark.plans.partitioning import fan_out
-
-    A = np.array([minhash_coeffs(i)[0] for i in range(num_hashes)], dtype=np.int64)
-    B = np.array([minhash_coeffs(i)[1] for i in range(num_hashes)], dtype=np.int64)
-
-    def batches(it):
-        for pdf in it:
-            digs, off = md5win.batch_window_md5_segments(pdf["text"], shingle_k)
-            nonempty = np.nonzero(np.diff(off) > 0)[0]
-            if not nonempty.size:
-                continue
-            x = md5win.digests_to_x60(digs)
-            sig = md5win.segment_cw_min(x, off, A, B)[nonempty]
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"].to_numpy()[nonempty],
-                "sig": list(sig),
-            })
-
-    id_type = df.schema["doc_id"].dataType.simpleString()
-    return fan_out(df.select("doc_id", "text"), key="doc_id").mapInPandas(
-        batches, schema=f"doc_id {id_type}, sig array<long>"
-    )
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     num_hashes: int = 64, bands: int = 16, shingle_k: int = 5,
-    hash_fn: str = "rolling", max_bucket_size: int | None = None,
+    max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Candidate near-duplicate pairs (a < b) sharing >= 1 LSH band.
 
     rows_per_band = num_hashes // bands; two docs collide in a band iff all
     its rows agree -> P(collide) = s^rows per band (s = true Jaccard).
-    hash_fn as in minhash_signatures ("md5" = the DuckDB-replayable oracle
-    variant; band buckets become the joined hex strings).
+    The (doc_id, band, bucket) rows come out of the zero-shuffle
+    signature pass itself (``_minhash_signatures_rolling``; the bucket is
+    an 8-byte Horner key the DuckDB oracle replays in HUGEINT).
 
     ``max_bucket_size`` is the LSH-at-scale guard: band buckets holding
     more than this many docs are EXCLUDED from the self-join. Oversized
@@ -241,39 +166,10 @@ def minhash_lsh_pairs(
     callers at corpus scale should set it deliberately, not silently."""
     if num_hashes % bands:
         raise ValueError("bands must divide num_hashes")
-    r = num_hashes // bands
-    if hash_fn == "rolling":
-        # the (doc_id, band, bucket) rows come out of the SAME zero-shuffle
-        # Arrow pass as the signatures (rolling.band_buckets: 8-byte
-        # Horner keys, a 10x byte win over joined-string buckets AND
-        # replayable in DuckDB HUGEINT -- the production default carries
-        # the oracle)
-        banded = _minhash_signatures_rolling(df, num_hashes, shingle_k, bands=bands)
-        return _bucket_join_pairs(banded, max_bucket_size)
-    sig = minhash_signatures(df, num_hashes, shingle_k, hash_fn)
-    # md5: bucket = the band's hash values joined as a string -- band id
-    # is already a separate join column, so no re-hash is needed (and
-    # DuckDB replays string concatenation exactly)
-    band_arr = F.array(
-        *[
-            F.concat_ws(
-                "|", *[F.element_at("sig", b * r + i + 1).cast("string") for i in range(r)]
-            )
-            for b in range(bands)
-        ]
-    )
-    banded = sig.select("doc_id", F.posexplode(band_arr).alias("band", "bucket"))
-    return _bucket_join_pairs(banded, max_bucket_size)
-
-
-def _bucket_join_pairs(banded: DataFrame, max_bucket_size: int | None) -> DataFrame:
-    """(band, bucket) self-join -> distinct (a < b) candidate pairs,
-    with the optional oversized-bucket guard (see minhash_lsh_pairs)."""
+    banded = _minhash_signatures_rolling(df, num_hashes, shingle_k, bands=bands)
     if max_bucket_size is not None:
         # window count shuffles by (band, bucket) -- the SAME key the
         # self-join below uses, so the exchange is reused, not added
-        from pyspark.sql import Window
-
         w = Window.partitionBy("band", "bucket")
         banded = (
             banded.withColumn("_sz", F.count(F.lit(1)).over(w))
@@ -287,11 +183,10 @@ def _bucket_join_pairs(banded: DataFrame, max_bucket_size: int | None) -> DataFr
     # auto-broadcast threshold, and the row-format hash relation then
     # explodes ~100x on every executor (measured: exit-52 OOM at 16x bench
     # volume). A fact-fact self-join must shuffle, never broadcast.
-    pairs = (
+    return (
         a.join(b.hint("merge"), ["band", "bucket"])
         .filter(F.col("a") < F.col("b")).select("a", "b").distinct()
     )
-    return pairs
 
 
 def ngram_jaccard_pairs(
@@ -357,8 +252,8 @@ def ngram_jaccard_pairs(
 def ngram_jaccard_lsh_pairs(
     df: DataFrame,
     shingle_k: int = 5, threshold: float = 0.8,
-    num_hashes: int = 64, bands: int = 16, hash_fn: str = "rolling",
-    max_bucket_size: int | None = None, verify_on_hashes: bool = False,
+    num_hashes: int = 64, bands: int = 16,
+    max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Scale path for n-gram Jaccard: MinHash-LSH candidate generation +
     EXACT Jaccard verify on the candidates.
@@ -368,43 +263,30 @@ def ngram_jaccard_lsh_pairs(
     shingles are corpus-common. LSH banding collides pairs with probability
     1-(1-s^r)^b driven by the PAIR's similarity s, independent of shingle
     document frequency; surviving jaccard values are exact (computed on the
-    full shingle sets), so only recall is probabilistic. This is the shape
+    full window sets), so only recall is probabilistic. This is the shape
     that holds at 100 TB: candidates scale with true duplicates.
 
     ``max_bucket_size`` (see minhash_lsh_pairs) additionally guards the
     band join against boilerplate buckets, whose pair count -- and the
-    shingle-array bytes the verify join ships per pair -- otherwise
+    window-hash arrays the verify join ships per pair -- otherwise
     grows quadratically with corpus size (measured 9x wall at 4x volume
     without it; the exact-verify stage keeps precision unchanged, the
     cap affects recall only through pairs with no small-bucket
     collision).
 
-    ``verify_on_hashes`` intersects the 64-bit Karp-Rabin window hashes
-    the rolling signatures minimized over instead of shingle strings
-    (no substring materializes anywhere): the verify join must carry one
-    shingle array per CANDIDATE through its second merge-join sort, so
-    array bytes -- not pair count -- dominate its shuffle/spill at
-    scale; long arrays halve them (measured at 64x volume). Jaccard
-    stays exact up to within-doc hash collisions (~|S|^2 / 2^64 -- odds
-    of one affected doc per ~10^9 docs), so this is the 100 TB recipe
-    alongside ``max_bucket_size``. It needs ``hash_fn="rolling"``; the
-    md5 oracle flavor verifies on the shingle strings (default False:
-    bit-exact string-set semantics)."""
-    if verify_on_hashes and hash_fn != "rolling":
-        raise ValueError("verify_on_hashes intersects rolling window hashes; "
-                         "it needs hash_fn='rolling'")
-    cands = minhash_lsh_pairs(df, num_hashes, bands, shingle_k, hash_fn, max_bucket_size)
-    if verify_on_hashes:
-        sh = _kr_hash_arrays(df, shingle_k)
-    else:
-        from osm_pbf_convert_spark.plans.partitioning import fan_out
-
-        # fan out BEFORE the substring materialization: shingles_col is
-        # the per-row-heavy step here (guide §2.5 input skew)
-        sh = fan_out(df, key="doc_id").select(
-            F.col("doc_id"), shingles_col(F.col("text"), shingle_k).alias("shs")
-        )
-    # merge hints: the shingle-ARRAY side is corpus-sized; its columnar
+    The verify intersects each pair's sets of 64-bit Karp-Rabin window
+    hashes (``_kr_hash_arrays``) -- the same k-byte windows of the
+    lower-cased UTF-8 text the signatures minimize over, so no substring
+    materializes anywhere. On ASCII text these are the character k-grams
+    of ``ngram_jaccard_pairs``; on multi-byte text the jaccard is over
+    UTF-8 byte windows, not char k-grams. Array bytes, not pair count,
+    dominate the verify join's shuffle/spill at scale, and 8-byte hashes
+    halve them against shingle strings (measured at 64x volume). Jaccard
+    is exact up to within-doc hash collisions (~|S|^2 / 2^64 -- odds of
+    one affected doc per ~10^9 docs)."""
+    cands = minhash_lsh_pairs(df, num_hashes, bands, shingle_k, max_bucket_size)
+    sh = _kr_hash_arrays(df, shingle_k)
+    # merge hints: the hash-ARRAY side is corpus-sized; its columnar
     # scan estimate undershoots the exploded row format by ~100x, so the
     # auto-broadcast threshold would hash-build it on every executor
     # (measured exit-52 OOM at 16x bench volume, 8 GB executors)
@@ -422,15 +304,16 @@ def ngram_jaccard_lsh_pairs(
     )
 
 
-def _simhash_signatures_rolling(df: DataFrame) -> DataFrame:
-    """The no-token-row SimHash stage (``hash_fn="rolling"``): one Arrow
-    pass per batch computes every token occurrence's Karp-Rabin Horner
-    hash and the per-doc 64-bit majority (``rolling.batch_token_hash_
-    segments`` + ``segment_bit_majority``) -- ZERO shuffle and zero
-    per-token rows. Tokens split on the ASCII ``\\s`` class exactly like
-    Java's ``split(lower(text), '\\s+')``; majority ties -> 0, zero-token
-    docs -> 0. Deterministic integer math mod 2^64 -- replayed by the
-    DuckDB ``simhash_rolling`` oracle entry."""
+def simhash_signatures(df: DataFrame) -> DataFrame:
+    """(id, simhash long): per-doc 64-bit SimHash in one zero-shuffle
+    Arrow pass, no per-token rows. Every token occurrence of
+    ``lower(text)`` gets its affine-finalized Karp-Rabin Horner hash and
+    the per-bit majority is taken per doc
+    (``rolling.batch_token_hash_segments`` + ``segment_bit_majority``).
+    Tokens split on the ASCII ``\\s`` class exactly like Java's
+    ``split(lower(text), '\\s+')``; majority ties -> 0, zero-token docs ->
+    0. Deterministic integer math mod 2^64 -- replayed by the DuckDB
+    ``simhash_rolling`` oracle entry."""
     import numpy as np
     import pandas as pd
 
@@ -451,67 +334,9 @@ def _simhash_signatures_rolling(df: DataFrame) -> DataFrame:
     )
 
 
-def _simhash_signatures_md5(df: DataFrame, bits: int) -> DataFrame:
-    """The md5 oracle SimHash as ONE zero-shuffle Arrow pass: 60-bit md5
-    token hashes per occurrence (``md5win``, one real md5 per distinct
-    token per batch) + the shared numpy bit-majority
-    (``rolling.segment_bit_majority``); token-less docs get 0 (the
-    majority of an empty segment) and ties -> 0. The signature is masked
-    to the low ``bits`` bits."""
-    import numpy as np
-    import pandas as pd
-
-    from osm_pbf_convert_spark.operators import md5win, rolling
-    from osm_pbf_convert_spark.plans.partitioning import fan_out
-
-    mask = np.uint64((1 << bits) - 1)
-
-    def batches(it):
-        for pdf in it:
-            h60, off = md5win.batch_token_md5_segments(pdf["text"])
-            sig = rolling.segment_bit_majority(h60, off) & mask
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"].to_numpy(),
-                "simhash": sig.astype(np.int64),
-            })
-
-    id_type = df.schema["doc_id"].dataType.simpleString()
-    return fan_out(df.select("doc_id", "text"), key="doc_id").mapInPandas(
-        batches, schema=f"doc_id {id_type}, simhash long"
-    )
-
-
-def simhash_signatures(
-    df: DataFrame,
-    bits: int = 64, hash_fn: str = "rolling",
-) -> DataFrame:
-    """(id, simhash long): per-bit majority over the token hashes of each
-    doc, tokens = ``lower(text)`` split on Java's ``\\s+``, in one
-    zero-shuffle Arrow pass (no per-token rows).
-
-    hash_fn: "rolling" (production default, 64-bit Karp-Rabin token
-    hashes -- see ``_simhash_signatures_rolling``; requires bits=64) or
-    "md5" (token hash = first 15 hex chars of md5 as a 60-bit long, so
-    bits must be <= 60; DuckDB replays it via
-    CAST('0x'||substr(md5(tok),1,15) AS BIGINT) -- the correctness-oracle
-    flavor; the sign bit stays clear, so signed and unsigned shifts agree
-    across engines)."""
-    if hash_fn == "rolling":
-        if bits != 64:
-            raise ValueError("rolling simhash is 64-bit; pass hash_fn='md5' "
-                             "for bits <= 60")
-        return _simhash_signatures_rolling(df)
-    if hash_fn == "md5":
-        if bits > 60:
-            raise ValueError("md5 variant carries 60 hash bits; pass bits<=60")
-        return _simhash_signatures_md5(df, bits)
-    raise ValueError(f"unknown hash_fn {hash_fn!r}; expected 'rolling' or 'md5'")
-
-
 def simhash_hamming_pairs(
     df: DataFrame,
     max_hamming: int = 3, bands: int | None = None,
-    bits: int = 64, hash_fn: str = "rolling",
 ) -> DataFrame:
     """Near-duplicate pairs with simhash Hamming distance <= max_hamming.
 
@@ -521,12 +346,11 @@ def simhash_hamming_pairs(
     chunks don't cover only ADD candidates -- fewer covered differences
     need even fewer clean chunks -- and the exact popcount verify uses
     every bit); exact popcount (bit_count, JVM) verifies candidates.
-
-    bits/hash_fn as in simhash_signatures (md5 = 60-bit oracle variant).
+    Chunks are 64 // bands bits wide, over the unsigned signature.
     """
     b = bands or (max_hamming + 1)
-    width = bits // b
-    s = simhash_signatures(df, bits=bits, hash_fn=hash_fn)
+    width = 64 // b
+    s = simhash_signatures(df)
     chunk_arr = F.array(
         *[
             F.struct(
@@ -554,13 +378,10 @@ def simhash_hamming_pairs(
     return pairs
 
 
-def simhash_dedup_groups(
-    df: DataFrame,
-    bits: int = 64, hash_fn: str = "rolling",
-) -> DataFrame:
+def simhash_dedup_groups(df: DataFrame) -> DataFrame:
     """Groups of docs with IDENTICAL simhash (near-dup at hamming 0); for
     hamming <= d banding, split the bits into d+1 chunks upstream."""
-    s = simhash_signatures(df, bits=bits, hash_fn=hash_fn)
+    s = simhash_signatures(df)
     return (
         s.groupBy("simhash")
         .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"), F.count(F.lit(1)).alias("n"))

@@ -9,9 +9,11 @@ polynomial computed with k vectorized Horner steps (mod 2^64 by natural
 uint64 wrap), and windows crossing document boundaries are masked out
 (``batch_window_hashes``, the one window front end). Measured 30x on
 the fingerprint operator (BENCH/NOTES.md); consumed by
-``text.fingerprint(hash_fn="rolling")``,
-``dedup.minhash_signatures(hash_fn="rolling")`` and (token flavor)
-``dedup.simhash_signatures(hash_fn="rolling")``.
+``text.fingerprint``, the MinHash signature stage of
+``dedup.minhash_lsh_pairs``, the exact-jaccard verify of
+``dedup.ngram_jaccard_lsh_pairs`` and (token flavor)
+``dedup.simhash_signatures`` -- the one hash family of every text
+signature operator.
 
 The segment reductions do O(windows) numpy work per output column and
 never sort: ``segment_affine_min`` takes one ``np.minimum.reduceat``
@@ -96,12 +98,17 @@ def batch_window_hashes(texts, k: int):
 
 def batch_window_hash_segments(texts, k: int):
     """``batch_window_hashes`` with each row's slice SORTED and UNIQUE
-    (one global lexsort + boundary-diff dedupe, zero per-row Python) --
-    the set form the bottom-k fingerprint and the exact-Jaccard verify
-    need. A minimum never needs it (``segment_affine_min``)."""
+    (one global sort by (owner, hash) + boundary-diff dedupe, zero
+    per-row Python) -- the set form the bottom-k fingerprint and the
+    exact-Jaccard verify need. A minimum never needs it
+    (``segment_affine_min``)."""
     h, offsets = batch_window_hashes(texts, k)
     owner = np.repeat(np.arange(offsets.size - 1), np.diff(offsets))
-    order = np.lexsort((h, owner))
+    # sort by hash, then stable-sort by owner: the (owner, hash) order of
+    # a two-key lexsort, faster (958k windows of 2,000 docs, one core,
+    # best of 5: 0.29 s lexsort, 0.20 s here)
+    order = np.argsort(h)
+    order = order[np.argsort(owner[order], kind="stable")]
     h, owner = h[order], owner[order]
     if h.size:
         keep = np.empty(h.size, dtype=bool)
@@ -172,25 +179,30 @@ def band_buckets(sig: np.ndarray, bands: int) -> np.ndarray:
     return out
 
 
-def batch_token_spans(texts):
-    """``(buf, starts, tok_a, tok_b, offsets)``: the concatenated
-    lower-cased UTF-8 byte buffer of a pandas Series, per-row start
-    offsets, and the [tok_a, tok_b) byte span of every
-    ASCII-whitespace-separated token OCCURRENCE in document order.
-    ``offsets`` is the per-row token-count prefix sum. The delimiter
-    class [ \\t\\n\\x0b\\f\\r] is exactly Java's ``\\s`` (as in
-    ``split(lower(text), '\\s+')``) and RE2's ``\\s`` (the DuckDB oracles'
-    ``regexp_split_to_array``); byte-level splitting equals char-level
-    splitting for ANY text because ASCII whitespace never occurs inside
-    a multi-byte UTF-8 sequence. Shared by the Karp-Rabin token hasher
-    below and the md5 token hasher (``operators/md5win.py``)."""
+def batch_token_hash_segments(texts):
+    """``(flat, offsets)`` for a pandas Series of strings: the per-row
+    slice is the affine-finalized Karp-Rabin Horner hash
+    (``TOK_FIN_A * horner + TOK_FIN_B`` mod 2^64, base ``KR_BASE``) of
+    every ASCII-whitespace-separated token OCCURRENCE of the lower-cased
+    text, in document order (multiplicity preserved -- simhash weights
+    by occurrence; see ``TOK_FIN_A`` for why the finalizer exists).
+    The delimiter class [ \\t\\n\\x0b\\f\\r] is exactly Java's ``\\s`` (as
+    in ``split(lower(text), '\\s+')``); byte-level splitting equals
+    char-level splitting for ANY text because ASCII whitespace never
+    occurs inside a multi-byte UTF-8 sequence.
+
+    Vectorized end to end: token runs come from mask transitions on the
+    concatenated byte buffer; token hashes come from one dense gather per
+    token-LENGTH group (so total multiplies equal total token bytes --
+    no padding to the batch's longest token), chunked so peak transient
+    memory stays bounded."""
     buf, lens = _lowered_utf8(texts)
     n = buf.size
     offsets = np.zeros(lens.size + 1, dtype=np.int64)
+    if n == 0:
+        return np.empty(0, dtype=np.uint64), offsets
     starts = np.zeros(lens.size + 1, dtype=np.int64)
     np.cumsum(lens, out=starts[1:])
-    if n == 0:
-        return buf, starts, np.empty(0, np.int64), np.empty(0, np.int64), offsets
     nonws = ~np.isin(buf, np.frombuffer(b" \t\n\x0b\x0c\r", dtype=np.uint8))
     # docs are concatenated without separators: a doc start always breaks
     # a token run
@@ -206,24 +218,6 @@ def batch_token_spans(texts):
     tok_b = np.nonzero(nonws & (next_break | docstart[1:n + 1]))[0] + 1
     tok_owner = np.searchsorted(starts, tok_a, side="right") - 1
     np.cumsum(np.bincount(tok_owner, minlength=lens.size), out=offsets[1:])
-    return buf, starts, tok_a, tok_b, offsets
-
-
-def batch_token_hash_segments(texts):
-    """``(flat, offsets)`` for a pandas Series of strings: the per-row
-    slice is the affine-finalized Karp-Rabin Horner hash
-    (``TOK_FIN_A * horner + TOK_FIN_B`` mod 2^64, base ``KR_BASE``) of
-    every ASCII-whitespace-separated token OCCURRENCE of the lower-cased
-    text, in document order (multiplicity preserved -- simhash weights
-    by occurrence; see ``TOK_FIN_A`` for why the finalizer exists).
-    Token boundaries come from ``batch_token_spans``.
-
-    Vectorized end to end: token runs come from mask transitions on the
-    concatenated byte buffer; token hashes come from one dense gather per
-    token-LENGTH group (so total multiplies equal total token bytes --
-    no padding to the batch's longest token), chunked so peak transient
-    memory stays bounded."""
-    buf, starts, tok_a, tok_b, offsets = batch_token_spans(texts)
     tlens = tok_b - tok_a
     t = tok_a.size
     hashes = np.zeros(t, dtype=np.uint64)

@@ -3,12 +3,12 @@ scoring, language-ID heuristic, document fingerprinting.
 
 Everything is built-in ``pyspark.sql.functions`` (JVM, codegen) -- no
 Python in the hot path, with ONE deliberate exception: ``fingerprint``
-is an Arrow-batched numpy pass in both of its flavors ("rolling", the
-production Karp-Rabin window hash, and "md5", the DuckDB-replayable
-oracle), taken because round-4 profiling showed the substring-building
-expression chains spend ~90% of their time materializing substrings
-(measured win in BENCH/NOTES.md). These are training-data-pipeline
-extensions (no reference counterpart).
+is an Arrow-batched numpy pass over Karp-Rabin window hashes, taken
+because round-4 profiling showed the substring-building expression
+chains spend ~90% of their time materializing substrings (measured win
+in BENCH/NOTES.md); the DuckDB ``fingerprint_rolling`` oracle replays it
+bit for bit. These are training-data-pipeline extensions (no reference
+counterpart).
 """
 
 from __future__ import annotations
@@ -100,89 +100,28 @@ def lang_id(df: DataFrame) -> DataFrame:
     return df.withColumn("lang_pred", pred)
 
 
-def fingerprint(df: DataFrame, shingle_k: int = 8, bottom_k: int = 8,
-                hash_fn: str = "rolling") -> DataFrame:
-    """Bottom-k sketch fingerprint: the k smallest shingle hashes combined
-    into one fingerprint; equal fingerprints => highly likely
-    near-identical content.
-
-    hash_fn flavors (equality contract identical, values differ by hash
-    family):
-    - "rolling" (production default): Arrow-batched numpy Karp-Rabin --
-      window hashes without substring materialization, a long
-      fingerprint (see ``_fingerprint_rolling``).
-    - "md5": hex-string fingerprint, bit-identical in DuckDB -- the
-      correctness-oracle flavor (the catalog query pins it)."""
-    if hash_fn == "rolling":
-        return _fingerprint_rolling(df, shingle_k, bottom_k)
-    if hash_fn == "md5":
-        return _fingerprint_md5(df, shingle_k, bottom_k)
-    raise ValueError(f"unknown hash_fn {hash_fn!r}; expected 'rolling' or 'md5'")
-
-
-def _fingerprint_md5(df: DataFrame, shingle_k: int, bottom_k: int) -> DataFrame:
-    """The md5 bottom-k fingerprint as ONE zero-shuffle Arrow pass:
-    per-doc distinct k-char window md5 digests from
-    ``operators/md5win.py`` (already sorted by digest bytes, which IS the
-    lexicographic order of their hex strings), take the first
-    ``bottom_k``, join the hex forms with ',', md5 again -- the value
-    DuckDB's ``md5(array_to_string(list_sort(...)[1:k], ','))`` gives,
-    incl. the empty-doc case (fingerprint = md5(''))."""
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-
-    from osm_pbf_convert_spark.operators import md5win
-    from osm_pbf_convert_spark.plans.partitioning import fan_out
-
-    out_fields = list(df.schema.fields)
-    schema_str = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in out_fields)
-    schema_str += ", fingerprint string"
-    empty_fp = hashlib.md5(b"").hexdigest()
-
-    def batches(it):
-        for pdf in it:
-            digs, off = md5win.batch_window_md5_segments(pdf["text"], shingle_k)
-            fps = []
-            for i in range(off.size - 1):
-                s, e = off[i], min(off[i] + bottom_k, off[i + 1])
-                if e == s:
-                    fps.append(empty_fp)
-                    continue
-                msg = b",".join(digs[j].tobytes().hex().encode() for j in range(s, e))
-                fps.append(hashlib.md5(msg).hexdigest())
-            out = pdf.copy()
-            out["fingerprint"] = pd.Series(fps, index=pdf.index)
-            yield out
-
-    return fan_out(df, key="doc_id").mapInPandas(batches, schema=schema_str)
-
-
-# bottom-k combine multiplier for the "rolling" flavor (window-hash
-# core lives in operators/rolling.py)
+# bottom-k combine multiplier (window-hash core lives in
+# operators/rolling.py)
 _KR_COMBINE = 1099511628211  # FNV-64 prime
 
 
-def _fingerprint_rolling(df: DataFrame, shingle_k: int, bottom_k: int) -> DataFrame:
-    """The true ROLLING-hash fingerprint: Arrow batches in, one numpy
+def fingerprint(df: DataFrame, shingle_k: int = 8, bottom_k: int = 8) -> DataFrame:
+    """Bottom-k sketch fingerprint: the ``bottom_k`` smallest distinct
+    k-byte window hashes combined into one long; equal fingerprints =>
+    highly likely near-identical content. Arrow batches in, one numpy
     polynomial pass per batch, zero substring materialization.
 
     Round-4 profiling pinned ~90% of a substring-based fingerprint's
     cost on materializing every k-char substring (`shingles_col`)
-    before hashing; this flavor never builds a substring. All of a batch's
-    lower-cased texts are concatenated into ONE uint8 buffer, every
-    k-byte window hash is computed as a Karp-Rabin polynomial with
-    8 vectorized shifted multiply-adds (mod 2^64 by natural uint64
-    wrap), windows crossing document boundaries are masked out, and
-    per-doc bottom-k of the UNIQUE window hashes is combined into one
-    long. Semantics match the md5 flavor (distinct shingles -> bottom-k
-    sketch -> combine); values differ by hash family, so equal-text docs
-    get equal fingerprints and the md5 catalog flavor stays the oracle.
-
-    Byte-level windows over UTF-8 (the md5 flavor windows over
-    CHARACTERS) shift k-gram boundaries only on multi-byte text --
-    fingerprint equality, the operator's contract, is unaffected.
+    before hashing; this operator never builds a substring. All of a
+    batch's lower-cased texts are concatenated into ONE uint8 buffer,
+    every k-byte window hash is a Karp-Rabin polynomial computed with
+    vectorized Horner steps (mod 2^64 by natural uint64 wrap), windows
+    crossing document boundaries are masked out, and per-doc bottom-k of
+    the UNIQUE window hashes is combined into one long. Windows are over
+    UTF-8 bytes, so k-gram boundaries shift on multi-byte text;
+    fingerprint equality, the operator's contract, is unaffected. Docs
+    with no window get fingerprint 0.
 
     The bottom-k gather is fully vectorized over the batch (one padded
     index matrix against the sorted-unique segment layout of

@@ -38,8 +38,8 @@ def fan_out(df: DataFrame, key: str | None = None) -> DataFrame:
     its entire map side (shingle hashing, Arrow passes, regex scans) on
     those few cores -- measured at bench scale: the 594 KB documents table
     plans ONE split under a 1 MB ``openCostInBytes`` floor, so every
-    signature stage ran single-threaded on a 32-core box (md5 minhash
-    5.6 s -> 2.5 s from this alone). Repartitioning costs one exchange of
+    signature stage ran single-threaded on a 32-core box (a minhash
+    stage 5.6 s -> 2.5 s from this alone). Repartitioning costs one exchange of
     the RAW rows (cheap: raw text, not exploded shingles).
 
     Scale-adaptive by construction: fires only when the planned scan

@@ -997,161 +997,18 @@ SELECT CAST(1 AS BIGINT), 'building', COUNT(DISTINCT l_orderkey) FROM lineitem W
 """
 
 # ---------------------------------------------------------------------------
-# dedup family -- md5-variant catalog entries (same banding/verify logic as
-# the rolling production defaults; the hash is swapped for one DuckDB can
-# replay bit-identically, mirroring the fingerprint md5 pattern)
+# dedup family -- exact inverted-index n-gram Jaccard (string shingles)
 # ---------------------------------------------------------------------------
-
-def q_minhash_pairs(spark, sf_dir):
-    # md5 variant: Carter-Wegman family (a_i*x + b_i mod 2^31-1) over a
-    # 60-bit md5-prefix base hash -- DuckDB replays it bit-identically;
-    # the rolling (no-substring) flavor is the production default
-    return dedup.minhash_lsh_pairs(
-        _t(spark, sf_dir, "documents"), num_hashes=32, bands=8, shingle_k=5,
-        hash_fn="md5",
-    )
-
-
-def _minhash_banded_cte(num_hashes: int, bands: int, shingle_k: int) -> str:
-    """CTE chain replaying minhash_lsh_pairs(hash_fn='md5'): distinct
-    k-gram shingles -> 60-bit md5-prefix base hash x -> Carter-Wegman
-    family h_i = (a_i*x + b_i) mod 2^31-1 (same literal coefficients as
-    the Spark side, dedup.minhash_coeffs) -> per-seed min -> per-band
-    bucket = '|'-joined values."""
-    p = dedup.MERSENNE31
-    r = num_hashes // bands
-    mins = ",\n         ".join(
-        f"min(({dedup.minhash_coeffs(i)[0]} * x + {dedup.minhash_coeffs(i)[1]}) % {p}) AS h{i}"
-        for i in range(num_hashes)
-    )
-    band_selects = "\n  UNION ALL\n".join(
-        f"  SELECT doc_id, {b} AS band, "
-        + "concat_ws('|', " + ", ".join(f"h{b * r + i}" for i in range(r)) + ") AS bucket FROM sig"
-        for b in range(bands)
-    )
-    return f"""sh0 AS (
-  SELECT doc_id,
-         unnest(list_distinct(
-           [substr(lower(text), i, {shingle_k}) FOR i IN generate_series(1, greatest(length(text) - {shingle_k - 1}, 0))]
-         )) AS sh
-  FROM documents
-),
-sh AS (SELECT doc_id, CAST('0x' || substr(md5(sh), 1, 15) AS BIGINT) % {p} AS x FROM sh0),
-sig AS (
-  SELECT doc_id, {mins}
-  FROM sh GROUP BY doc_id
-),
-banded AS (
-{band_selects}
-)"""
-
-
-_Q_MINHASH_ORACLE = f"""
-WITH {_minhash_banded_cte(32, 8, 5)}
-SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-FROM banded x JOIN banded y USING (band, bucket)
-WHERE x.doc_id < y.doc_id
-"""
-
-
-def q_simhash_groups(spark, sf_dir):
-    return dedup.simhash_dedup_groups(
-        _t(spark, sf_dir, "documents"), bits=60, hash_fn="md5"
-    ).select("simhash", "n")
-
-
-def q_simhash_hamming_pairs(spark, sf_dir):
-    return dedup.simhash_hamming_pairs(
-        _t(spark, sf_dir, "documents"), max_hamming=8, bits=60, hash_fn="md5"
-    ).select("a", "b", F.col("hamming").cast("int").alias("hamming"))
-
-
-def _simhash_sig_cte(bits: int = 60) -> str:
-    """CTE chain replaying simhash_signatures(hash_fn='md5'): whitespace
-    tokens of lower(text) -> 60-bit token hash CAST('0x'||substr(md5,1,15))
-    -> per-bit majority sums -> assembled BIGINT; token-less docs get 0."""
-    bit_sums = ",\n         ".join(
-        f"SUM(CASE WHEN (h >> {i}) & 1 = 1 THEN 1 ELSE -1 END) AS b{i}" for i in range(bits)
-    )
-    assemble = "\n    + ".join(
-        f"(CASE WHEN b{i} > 0 THEN (CAST(1 AS BIGINT) << {i}) ELSE 0 END)" for i in range(bits)
-    )
-    return f"""tok AS (
-  SELECT doc_id,
-         unnest(list_filter(regexp_split_to_array(lower(text), '\\s+'), x -> x != '')) AS tok
-  FROM documents
-),
-th AS (SELECT doc_id, CAST('0x' || substr(md5(tok), 1, 15) AS BIGINT) AS h FROM tok),
-sums AS (
-  SELECT doc_id, {bit_sums}
-  FROM th GROUP BY doc_id
-),
-sig0 AS (SELECT doc_id, CAST({assemble} AS BIGINT) AS simhash FROM sums),
-sig AS (
-  SELECT d.doc_id, COALESCE(s.simhash, 0) AS simhash
-  FROM documents d LEFT JOIN sig0 s USING (doc_id)
-)"""
-
-
-_Q_SIMHASH_GROUPS_ORACLE = f"""
-WITH {_simhash_sig_cte(60)}
-SELECT simhash, CAST(COUNT(*) AS BIGINT) AS n
-FROM sig GROUP BY simhash HAVING COUNT(*) > 1
-"""
-
-# max_hamming=8 -> 9 pigeonhole chunks of width 60//9 = 6 bits; uncovered
-# bits only widen candidates, the bit_count(xor) verify is exact over all 60
-_Q_SIMHASH_HAMMING_ORACLE = f"""
-WITH {_simhash_sig_cte(60)},
-banded AS (
-  SELECT doc_id, simhash, band, (simhash >> (band * 6)) & 63 AS chunk
-  FROM sig, (SELECT unnest(generate_series(0, 8)) AS band)
-)
-SELECT DISTINCT x.doc_id AS a, y.doc_id AS b,
-       CAST(bit_count(xor(x.simhash, y.simhash)) AS INT) AS hamming
-FROM banded x JOIN banded y USING (band, chunk)
-WHERE x.doc_id < y.doc_id AND bit_count(xor(x.simhash, y.simhash)) <= 8
-"""
-
 
 def q_ngram_jaccard(spark, sf_dir):
     # Exact inverted-index variant. max_doc_freq bounds the O(df^2)
     # candidate blowup of corpus-common shingles; this synthetic corpus is
     # template-heavy (near-dup pairs share shingles with df up to ~400 at
     # sf0.01), so the guard sits just above that. The corpus-profile-free
-    # scale path is q_ngram_jaccard_lsh below.
+    # scale path is q_ngram_lsh_rolling below.
     return dedup.ngram_jaccard_pairs(
         _t(spark, sf_dir, "documents"), shingle_k=6, threshold=0.6, min_common=5,
         max_doc_freq=400,
-    ).select("a", "b", F.round("jaccard", 6).alias("jaccard"))
-
-
-def q_ngram_jaccard_lsh(spark, sf_dir):
-    """Scale path: MinHash-LSH candidates + exact Jaccard verify -- the
-    candidate count follows true pair similarity, not shingle document
-    frequency. md5 hash variant so DuckDB replays banding AND verify
-    (the rolling no-substring flavor is the production default; a pytest
-    proves the hash families find the same labeled near-dups)."""
-    # r=4 rows/band: background pairs (s~0.12 on this corpus) collide with
-    # P = 1-(1-0.12^4)^16 = 0.33%, while s>=0.6 pairs are found with 89%+
-    # probability -- candidates stay proportional to true near-dups
-    return dedup.ngram_jaccard_lsh_pairs(
-        _t(spark, sf_dir, "documents"), shingle_k=6, threshold=0.6,
-        num_hashes=64, bands=16, hash_fn="md5",
-    ).select("a", "b", F.round("jaccard", 6).alias("jaccard"))
-
-
-def q_ngram_lsh_bucket_cap(spark, sf_dir):
-    """The LSH-at-scale bucket-cap guard under the FULL oracle: band
-    buckets holding more than ``max_bucket_size`` docs are excluded from
-    candidate generation (boilerplate band signatures grow pair counts
-    quadratically with corpus size -- found by the 64x rehearsal gate,
-    see dedup.minhash_lsh_pairs). cap=2 BITES at this corpus (buckets of
-    3-4 docs exist), so the row proves the guard's exclusion semantics
-    against DuckDB's window replay, not just its plumbing."""
-    return dedup.ngram_jaccard_lsh_pairs(
-        _t(spark, sf_dir, "documents"), shingle_k=6, threshold=0.6,
-        num_hashes=64, bands=16, hash_fn="md5", max_bucket_size=2,
     ).select("a", "b", F.round("jaccard", 6).alias("jaccard"))
 
 
@@ -1183,78 +1040,10 @@ WHERE common / (sa.sz + sb.sz - common) >= 0.6
 """
 
 
-# LSH replay: md5-minhash banding for candidates (same CTE family as
-# minhash_pairs, shingle_k=6 / 64 hashes / 16 bands), then the EXACT
-# jaccard verify on the full distinct-shingle sets of each candidate pair.
-_Q_NGRAM_LSH_ORACLE = f"""
-WITH {_minhash_banded_cte(64, 16, 6)},
-cand AS (
-  SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-  FROM banded x JOIN banded y USING (band, bucket)
-  WHERE x.doc_id < y.doc_id
-),
-shs AS (
-  SELECT doc_id,
-         list_distinct(
-           [substr(lower(text), i, 6) FOR i IN generate_series(1, greatest(length(text) - 5, 0))]
-         ) AS s
-  FROM documents
-),
-scored AS (
-  SELECT c.a, c.b,
-         len(list_intersect(sa.s, sb.s)) AS common,
-         len(sa.s) AS za, len(sb.s) AS zb
-  FROM cand c
-  JOIN shs sa ON sa.doc_id = c.a
-  JOIN shs sb ON sb.doc_id = c.b
-)
-SELECT a, b, ROUND(common / (za + zb - common), 6) AS jaccard
-FROM scored
-WHERE common / (za + zb - common) >= 0.6
-"""
-
-
-# The bucket-cap variant: identical banding + verify, with band buckets
-# larger than the cap excluded via a window count -- the exact replay of
-# minhash_lsh_pairs(max_bucket_size=2).
-_Q_NGRAM_LSH_CAP_ORACLE = f"""
-WITH {_minhash_banded_cte(64, 16, 6)},
-kept AS (
-  SELECT band, bucket, doc_id FROM (
-    SELECT band, bucket, doc_id,
-           COUNT(*) OVER (PARTITION BY band, bucket) AS _sz
-    FROM banded
-  ) WHERE _sz <= 2
-),
-cand AS (
-  SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-  FROM kept x JOIN kept y USING (band, bucket)
-  WHERE x.doc_id < y.doc_id
-),
-shs AS (
-  SELECT doc_id,
-         list_distinct(
-           [substr(lower(text), i, 6) FOR i IN generate_series(1, greatest(length(text) - 5, 0))]
-         ) AS s
-  FROM documents
-),
-scored AS (
-  SELECT c.a, c.b,
-         len(list_intersect(sa.s, sb.s)) AS common,
-         len(sa.s) AS za, len(sb.s) AS zb
-  FROM cand c
-  JOIN shs sa ON sa.doc_id = c.a
-  JOIN shs sb ON sb.doc_id = c.b
-)
-SELECT a, b, ROUND(common / (za + zb - common), 6) AS jaccard
-FROM scored
-WHERE common / (za + zb - common) >= 0.6
-"""
-
-
 # ---------------------------------------------------------------------------
-# rolling-flavor catalog entries: the PRODUCTION defaults (hash_fn="rolling",
-# operators/rolling.py) under the driver's rows+schema+hash gate. Karp-Rabin
+# signature dedup entries: the one hash family of the text signature
+# operators (operators/rolling.py) under the driver's rows+schema+hash gate,
+# replayed bit for bit -- no oracle-only hash flavor exists. Karp-Rabin
 # mod 2^64 and the affine permutation family are deterministic integer
 # arithmetic, so DuckDB replays them in HUGEINT with explicit `% 2^64`
 # reductions; 64-bit products that would overflow HUGEINT (A*w with both
@@ -1313,7 +1102,7 @@ wh AS (
 
 
 def _rolling_banded_cte(num_hashes: int, bands: int, shingle_k: int) -> str:
-    """CTE chain replaying minhash_lsh_pairs(hash_fn='rolling'): distinct
+    """CTE chain replaying minhash_lsh_pairs: distinct
     KR window hashes -> per-seed min of A_i*w + B_i mod 2^64 (the SAME
     affine_family(seed=42) literals numpy uses) -> per-band Horner bucket
     fold(acc*KR_BASE + h, acc0=band) mod 2^64 (rolling.band_buckets)."""
@@ -1350,8 +1139,8 @@ banded AS (
 
 
 def q_fingerprint_rolling(spark, sf_dir):
-    """The PRODUCTION fingerprint default (hash_fn='rolling' -- the
-    30x-measured no-substring flavor) under the full DuckDB hash gate."""
+    """The fingerprint operator (the 30x-measured no-substring window
+    hash) under the full DuckDB hash gate."""
     return text.fingerprint(_t(spark, sf_dir, "documents")).select(
         "doc_id", "fingerprint"
     )
@@ -1375,9 +1164,8 @@ FROM bot
 
 
 def q_minhash_pairs_rolling(spark, sf_dir):
-    """The PRODUCTION minhash-LSH default (hash_fn='rolling'): zero-shuffle
-    Arrow signature+banding stage, 8-byte Horner band keys. Same banding
-    parameters as the md5-pinned `minhash_pairs` entry."""
+    """The minhash-LSH operator: zero-shuffle Arrow signature+banding
+    stage, 8-byte Horner band keys."""
     return dedup.minhash_lsh_pairs(
         _t(spark, sf_dir, "documents"), num_hashes=32, bands=8, shingle_k=5,
     )
@@ -1456,21 +1244,38 @@ def q_minhash_pairs_stream(spark, sf_dir):
 
 
 def q_ngram_lsh_rolling(spark, sf_dir):
-    """The PRODUCTION ngram-LSH scale recipe end to end: rolling
-    signatures + Horner band buckets + hash-set exact verify
-    (verify_on_hashes) -- no substring materializes anywhere. Same
-    banding/threshold as the md5-pinned `ngram_jaccard_lsh` entry."""
+    """The ngram-LSH scale recipe end to end: rolling signatures +
+    Horner band buckets + exact verify on the window-hash sets -- no
+    substring materializes anywhere. Candidate generation follows true
+    pair similarity, not shingle document frequency."""
+    # r=4 rows/band: background pairs (s~0.12 on this corpus) collide with
+    # P = 1-(1-0.12^4)^16 = 0.33%, while s>=0.6 pairs are found with 89%+
+    # probability -- candidates stay proportional to true near-dups
     return dedup.ngram_jaccard_lsh_pairs(
         _t(spark, sf_dir, "documents"), shingle_k=6, threshold=0.6,
-        num_hashes=64, bands=16, verify_on_hashes=True,
+        num_hashes=64, bands=16,
     ).select("a", "b", F.round("jaccard", 6).alias("jaccard"))
 
 
-_Q_NGRAM_LSH_ROLLING_ORACLE = f"""
-WITH {_rolling_banded_cte(64, 16, 6)},
+def _ngram_lsh_rolling_oracle(max_bucket_size: int | None = None) -> str:
+    """Rolling banding for candidates, then the exact jaccard verify on
+    the distinct window-hash sets; with ``max_bucket_size``, band buckets
+    larger than the cap are excluded via a window count (the replay of
+    minhash_lsh_pairs' guard)."""
+    kept = "" if max_bucket_size is None else f"""
+kept AS (
+  SELECT band, bucket, doc_id FROM (
+    SELECT band, bucket, doc_id,
+           COUNT(*) OVER (PARTITION BY band, bucket) AS _sz
+    FROM banded
+  ) WHERE _sz <= {max_bucket_size}
+),"""
+    src = "banded" if max_bucket_size is None else "kept"
+    return f"""
+WITH {_rolling_banded_cte(64, 16, 6)},{kept}
 cand AS (
   SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-  FROM banded x JOIN banded y USING (band, bucket)
+  FROM {src} x JOIN {src} y USING (band, bucket)
   WHERE x.doc_id < y.doc_id
 ),
 scored AS (
@@ -1487,10 +1292,23 @@ WHERE common / (za + zb - common) >= 0.6
 """
 
 
+def q_ngram_lsh_bucket_cap(spark, sf_dir):
+    """The LSH-at-scale bucket-cap guard under the FULL oracle: band
+    buckets holding more than ``max_bucket_size`` docs are excluded from
+    candidate generation (boilerplate band signatures grow pair counts
+    quadratically with corpus size -- found by the 64x rehearsal gate,
+    see dedup.minhash_lsh_pairs). cap=2 BITES at this corpus (buckets of
+    3-4 docs exist), so the row proves the guard's exclusion semantics
+    against DuckDB's window replay, not just its plumbing."""
+    return dedup.ngram_jaccard_lsh_pairs(
+        _t(spark, sf_dir, "documents"), shingle_k=6, threshold=0.6,
+        num_hashes=64, bands=16, max_bucket_size=2,
+    ).select("a", "b", F.round("jaccard", 6).alias("jaccard"))
+
+
 def q_simhash_rolling(spark, sf_dir):
-    """The PRODUCTION simhash default (hash_fn='rolling'): per-doc 64-bit
-    signatures straight from the zero-shuffle token-hash pass -- every
-    one of the 500 signatures value-hashed against the DuckDB replay
+    """The simhash operator: per-doc 64-bit signatures straight from the
+    zero-shuffle token-hash pass -- every one of the 500 signatures value-hashed against the DuckDB replay
     (a per-doc check, strictly stronger than the group/pair entries)."""
     return dedup.simhash_signatures(_t(spark, sf_dir, "documents")).select(
         "doc_id", "simhash"
@@ -1498,10 +1316,10 @@ def q_simhash_rolling(spark, sf_dir):
 
 
 def _simhash_rolling_sig_cte() -> str:
-    """CTE chain replaying the PRODUCTION simhash signatures
-    (hash_fn='rolling'): Java-\\s tokens -> finalized Karp-Rabin Horner
-    token hash -> per-bit majority -> ``sig(doc_id, u HUGEINT unsigned,
-    simhash BIGINT signed)``; token-less docs get 0."""
+    """CTE chain replaying dedup.simhash_signatures: Java-\\s tokens ->
+    finalized Karp-Rabin Horner token hash -> per-bit majority ->
+    ``sig(doc_id, u HUGEINT unsigned, simhash BIGINT signed)``;
+    token-less docs get 0."""
     from osm_pbf_convert_spark.operators.rolling import (
         KR_BASE, TOK_FIN_A, TOK_FIN_B,
     )
@@ -1554,6 +1372,17 @@ SELECT doc_id, simhash FROM sig
 """
 
 
+def q_simhash_groups(spark, sf_dir):
+    return dedup.simhash_dedup_groups(_t(spark, sf_dir, "documents")).select("simhash", "n")
+
+
+_Q_SIMHASH_GROUPS_ORACLE = f"""
+WITH {_simhash_rolling_sig_cte()}
+SELECT simhash, CAST(COUNT(*) AS BIGINT) AS n
+FROM sig GROUP BY simhash HAVING COUNT(*) > 1
+"""
+
+
 def q_simhash_pairs_stream(spark, sf_dir):
     """The VERIFIED streaming dedup surface (streaming/dedup.py):
     applyInPandasWithState carries (id, signature) in the bucket state
@@ -1596,6 +1425,15 @@ WHERE x.doc_id < y.doc_id AND bit_count(xor(x.simhash, y.simhash)) <= 8
 """
 
 
+def q_simhash_hamming_pairs(spark, sf_dir):
+    """The batch SimHash pair operator at max_hamming=8 (9 pigeonhole
+    bands x 7 bits): the same pair set as the verified stream, so the
+    entry shares the `simhash_pairs_stream` oracle."""
+    return dedup.simhash_hamming_pairs(
+        _t(spark, sf_dir, "documents"), max_hamming=8
+    ).select("a", "b", F.col("hamming").cast("int").alias("hamming"))
+
+
 # ---------------------------------------------------------------------------
 # pair graph -> dedup groups: connected components (per-partition
 # contraction, then large-star/small-star rounds; operators/graph.py) over
@@ -1608,13 +1446,15 @@ def _minhash_pair_graph(spark, sf_dir):
 
     pairs = dedup.minhash_lsh_pairs(
         _t(spark, sf_dir, "documents"), num_hashes=32, bands=8, shingle_k=5,
-        hash_fn="md5",
     )
     return near_dup_groups(pairs)
 
 
-_Q_CC_CTE = f"""{_minhash_banded_cte(32, 8, 5)},
-pairs AS (
+# pairs is MATERIALIZED: the recursive step would otherwise re-run the
+# whole signature replay on every iteration (at sf0.01 the closure had
+# not finished after 3 minutes; materialized it takes 13 s)
+_Q_CC_CTE = f"""{_rolling_banded_cte(32, 8, 5)},
+pairs AS MATERIALIZED (
   SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
   FROM banded x JOIN banded y USING (band, bucket)
   WHERE x.doc_id < y.doc_id
@@ -1631,7 +1471,7 @@ lbl AS (
 
 
 def q_dedup_groups(spark, sf_dir):
-    """Near-dup GROUP labels: minhash-LSH pairs (md5 oracle pin) ->
+    """Near-dup GROUP labels: minhash-LSH pairs ->
     connected components (contraction, then large-star/small-star rounds
     to an exact star-forest fixpoint). The oracle is an independent
     algorithm entirely -- DuckDB's recursive transitive closure over the
@@ -1760,24 +1600,6 @@ SELECT doc_id, CAST(ws AS BIGINT) AS n_tokens_ws,
          + least(stopword_ratio * 10, 1.0) * 0.2
        END, 6) AS quality_score
 FROM r
-"""
-
-
-def q_fingerprint(spark, sf_dir):
-    # md5 variant: bit-identical in DuckDB via its md5(); the production
-    # rolling flavor has its own entry (fingerprint_rolling)
-    return text.fingerprint(_t(spark, sf_dir, "documents"), hash_fn="md5").select(
-        "doc_id", "fingerprint"
-    )
-
-
-_Q_FINGERPRINT_ORACLE = """
-SELECT doc_id,
-  md5(COALESCE(array_to_string(
-    list_sort([md5(s) FOR s IN list_distinct(
-        [substr(lower(text), i, 8) FOR i IN generate_series(1, greatest(length(text) - 7, 0))]
-    )])[1:8], ','), '')) AS fingerprint
-FROM documents
 """
 
 
@@ -2105,20 +1927,17 @@ WHERE ilat >= -477218588 AND ilat < 0 AND ilon >= -1431655764 AND ilon < -715827
 #      displaced in a prior round, go FIRST so they are guaranteed a row.
 #   2. New entries added in a round must be inserted inside the first 50
 #      (top of the dict), never appended at the end.
-#   3. The LAST six positions (51-56) hold long-stable redundant oracle-pin
-#      flavors whose production twin IS inside the cap:
-#        minhash_pairs       (md5 pin; production = minhash_pairs_rolling)
-#        ngram_jaccard_lsh   (md5 pin; production = ngram_lsh_rolling)
-#        fingerprint         (md5 pin; production = fingerprint_rolling)
+#   3. The LAST three positions (51-53) hold long-stable entries whose
+#      primary twin IS inside the cap:
 #        ngram_jaccard       (brute-force oracle; LSH variants in cap)
-#        simhash_groups      (pin flavor; simhash_hamming_pairs/_rolling in cap)
+#        simhash_groups      (GROUP BY over the signatures simhash_rolling
+#                             checks per doc)
 #        pbf_roundtrip_nodes (same oracle as pbf_file_nodes; byte-parity
 #                             roundtrip is pytest-golden-checked)
-#      Each tail entry stays in the catalog and keeps its ORACLES row. The
-#      md5 dedup pins (minhash_pairs, simhash_groups, fingerprint,
-#      ngram_jaccard_lsh) are re-verified on every pytest run by
-#      tests/test_catalog_policy.py::TestMd5OracleTail (tools/selfcheck
-#      compare against DuckDB), though they sit past the 50-entry cap.
+#      Each tail entry stays in the catalog and keeps its ORACLES row, and
+#      every entry past the cap is replayed against DuckDB on every pytest
+#      run (tests/test_catalog_policy.py::TestOracleTail, tools/selfcheck
+#      compare; the tail is read from this dict, not listed there).
 #   4. If the catalog grows, rotate another stable pin flavor into the tail
 #      rather than letting a new or never-checked entry fall past the cap.
 QUERIES = {
@@ -2174,11 +1993,8 @@ QUERIES = {
     "minhash_pairs_rolling": q_minhash_pairs_rolling,
     "minhash_pairs_stream": q_minhash_pairs_stream,
     "simhash_pairs_stream": q_simhash_pairs_stream,
-    # -- rotation tail (positions 51+): redundant oracle-pin flavors whose
-    # -- production twin is inside the cap; selfcheck-verified every round --
-    "minhash_pairs": q_minhash_pairs,
-    "ngram_jaccard_lsh": q_ngram_jaccard_lsh,
-    "fingerprint": q_fingerprint,
+    # -- rotation tail (positions 51+): entries whose primary twin is inside
+    # -- the cap; replayed against DuckDB by tier-1 pytest ------------------
     "ngram_jaccard": q_ngram_jaccard,
     "simhash_groups": q_simhash_groups,
     "pbf_roundtrip_nodes": q_pbf_roundtrip_nodes,
@@ -2223,19 +2039,16 @@ ORACLES = {
     "ivf_topk": _Q_IVF_ORACLE,
     "lang_id": _Q_LANG_ORACLE,
     "quality": _Q_QUALITY_ORACLE,
-    "fingerprint": _Q_FINGERPRINT_ORACLE,
     "sessionization": _Q_SESSION_ORACLE,
     "tag_stats_by_kind": _Q_TAGKIND_ORACLE,
-    "minhash_pairs": _Q_MINHASH_ORACLE,
     "simhash_groups": _Q_SIMHASH_GROUPS_ORACLE,
-    "simhash_hamming_pairs": _Q_SIMHASH_HAMMING_ORACLE,
-    "ngram_jaccard_lsh": _Q_NGRAM_LSH_ORACLE,
-    "ngram_lsh_bucket_cap": _Q_NGRAM_LSH_CAP_ORACLE,
+    "simhash_hamming_pairs": _simhash_pairs_stream_oracle(),
+    "ngram_lsh_bucket_cap": _ngram_lsh_rolling_oracle(max_bucket_size=2),
     "fingerprint_rolling": _fingerprint_rolling_oracle(),
     "minhash_pairs_rolling": _Q_MINHASH_ROLLING_ORACLE,
     "minhash_pairs_stream": _Q_MINHASH_ROLLING_ORACLE,
     "simhash_pairs_stream": _simhash_pairs_stream_oracle(),
-    "ngram_lsh_rolling": _Q_NGRAM_LSH_ROLLING_ORACLE,
+    "ngram_lsh_rolling": _ngram_lsh_rolling_oracle(),
     "simhash_rolling": _simhash_rolling_oracle(),
     "dedup_groups": _Q_DEDUP_GROUPS_ORACLE,
     "dedup_survivors": _Q_DEDUP_SURVIVORS_ORACLE,

@@ -3,8 +3,8 @@ streaming surface.
 
 A training-data pipeline rarely gets its corpus as one batch -- crawls
 land continuously. This module turns the batch MinHash-LSH operator
-(operators/dedup.py, rolling flavor) into a Structured Streaming
-pipeline with the SAME pair semantics under ``availableNow`` replay:
+(operators/dedup.py) into a Structured Streaming pipeline with the SAME
+pair semantics under ``availableNow`` replay:
 
 1. band rows: the identical zero-shuffle Arrow pass as batch
    (``_minhash_signatures_rolling`` emits ``(doc_id, band, bucket)``
@@ -150,7 +150,7 @@ def stream_minhash_pairs(
 ) -> DataFrame:
     """Near-dup candidate pair stream over a document stream; under
     ``availableNow`` replay the DISTINCT output equals the batch
-    ``minhash_lsh_pairs(hash_fn="rolling")`` pair set with the same
+    ``minhash_lsh_pairs`` pair set with the same
     parameters (pytest-enforced, single- and multi-micro-batch).
 
     ``state_ttl_minutes`` bounds state on UNBOUNDED streams: a bucket

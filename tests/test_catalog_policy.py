@@ -15,24 +15,18 @@ from osm_pbf_convert_spark.queries import ORACLES, QUERIES
 
 DRIVER_CAP = 50
 
-# The only entries allowed past the driver cap: redundant oracle-pin flavors
-# whose production twin sits inside the cap (see the registry comment).
+# The only entries allowed past the driver cap: long-stable entries whose
+# primary twin sits inside the cap (see the registry comment).
 ROTATION_TAIL_ALLOWED = {
-    "minhash_pairs",
-    "ngram_jaccard_lsh",
-    "fingerprint",
     "ngram_jaccard",
     "simhash_groups",
     "pbf_roundtrip_nodes",
 }
 
-# tail entry -> its production/primary twin that must be driver-checked
+# tail entry -> its primary twin that must be driver-checked
 TAIL_TWIN = {
-    "minhash_pairs": "minhash_pairs_rolling",
-    "ngram_jaccard_lsh": "ngram_lsh_rolling",
-    "fingerprint": "fingerprint_rolling",
     "ngram_jaccard": "ngram_lsh_rolling",
-    "simhash_groups": "simhash_hamming_pairs",
+    "simhash_groups": "simhash_rolling",
     "pbf_roundtrip_nodes": "pbf_file_nodes",
 }
 
@@ -75,22 +69,24 @@ def test_never_driver_checked_entries_lead():
 
 
 @pytest.mark.spark
-class TestMd5OracleTail:
-    """The md5 dedup pins sit past the 50-entry cap, and they are the only
-    DuckDB gate on md5 hash values: run each query and its oracle SQL
-    here and require the selfcheck comparison to pass."""
+class TestOracleTail:
+    """The driver never checks the entries past its cap, so every one of
+    them is replayed here: run the query and its oracle SQL and require
+    the selfcheck comparison to pass. The tail is read from the
+    registry, so an entry rotated past the cap is covered the moment it
+    lands there."""
 
-    MD5_TAIL = ("minhash_pairs", "simhash_groups", "fingerprint", "ngram_jaccard_lsh")
-
-    def test_md5_tail_oracles_match_duckdb(self, spark, sf_dir):
+    def test_tail_oracles_match_duckdb(self, spark, sf_dir):
         import duckdb
 
         from tools.selfcheck import TABLES, compare
 
+        tail = list(QUERIES)[DRIVER_CAP:]
+        assert tail, "no entry sits past the driver cap"
         con = duckdb.connect()
         for t in TABLES:
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-        for name in self.MD5_TAIL:
+        for name in tail:
             got = QUERIES[name](spark, sf_dir).toPandas()
             want = con.execute(ORACLES[name]).fetchdf()
             assert len(got) > 0, name

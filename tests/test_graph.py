@@ -280,9 +280,7 @@ def test_catalog_entries_match_oracle_semantics(spark, sf_dir):
     from osm_pbf_convert_spark import queries as Q
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    pairs = dedup.minhash_lsh_pairs(
-        docs, num_hashes=32, bands=8, shingle_k=5, hash_fn="md5"
-    ).collect()
+    pairs = dedup.minhash_lsh_pairs(docs, num_hashes=32, bands=8, shingle_k=5).collect()
     labels = {
         r["doc_id"]: r["component"]
         for r in Q.QUERIES["dedup_groups"](spark, sf_dir).collect()

@@ -1,7 +1,6 @@
 """Tests for training-data pipeline operators: dedup, text, similarity,
 image features, checkpoint/resume."""
 
-import hashlib
 import re
 
 import numpy as np
@@ -42,44 +41,6 @@ class TestDedup:
         assert (1, 2) in got  # identical docs always collide
         assert (1, 3) in got or (2, 3) in got  # near dup collides w.h.p.
         assert (4, 7) not in got and (5, 7) not in got  # unrelated don't
-
-    def test_hash_variants_agree_on_labeled_dups(self, docs_df):
-        """The md5 oracle variant and the rolling production default are
-        the same algorithm with the hash family swapped: both must find
-        the identical pair and the near-dup, and reject unrelated docs;
-        simhash variants must agree on hamming-0 groups."""
-        df, _ = docs_df
-        for fn in ("rolling", "md5"):
-            pairs = dedup.minhash_lsh_pairs(
-                df, num_hashes=32, bands=16, shingle_k=4, hash_fn=fn
-            ).toPandas()
-            got = {tuple(r) for r in pairs[["a", "b"]].itertuples(index=False)}
-            assert (1, 2) in got, fn
-            assert (1, 3) in got or (2, 3) in got, fn
-            assert (4, 7) not in got and (5, 7) not in got, fn
-        g64 = dedup.simhash_dedup_groups(df).toPandas()
-        g60 = dedup.simhash_dedup_groups(df, bits=60, hash_fn="md5").toPandas()
-        # identical docs (1, 2) form a hamming-0 group under either hash
-        assert any({1, 2} <= set(ids) for ids in g64["ids"])
-        assert any({1, 2} <= set(ids) for ids in g60["ids"])
-
-    def test_hash_fn_accepts_only_rolling_and_md5(self, docs_df):
-        """Every public signature entry point takes exactly "rolling" and
-        "md5"; any other flavor name fails at call time, and so does the
-        hash-set verify on the md5 flavor (it intersects rolling hashes)."""
-        df, _ = docs_df
-        entry_points = (
-            dedup.minhash_signatures, dedup.minhash_lsh_pairs,
-            dedup.ngram_jaccard_lsh_pairs, dedup.simhash_signatures,
-            dedup.simhash_hamming_pairs, dedup.simhash_dedup_groups,
-            text.fingerprint,
-        )
-        for fn in entry_points:
-            for bad in ("xxhash64", "sha1"):
-                with pytest.raises(ValueError, match="hash_fn"):
-                    fn(df, hash_fn=bad)
-        with pytest.raises(ValueError, match="verify_on_hashes"):
-            dedup.ngram_jaccard_lsh_pairs(df, hash_fn="md5", verify_on_hashes=True)
 
     def test_ngram_jaccard(self, docs_df):
         df, _ = docs_df
@@ -182,10 +143,10 @@ class TestDedup:
         assert "BroadcastHashJoin" not in plan
 
     def test_full_rolling_lsh_matches_exact_path(self, spark):
-        """hash_fn="rolling" + verify_on_hashes (zero substrings end to
-        end) finds the same >= threshold pairs WITH the same exact
-        jaccard values as the exhaustive inverted-index path (ASCII
-        text: byte k-grams == char k-grams)."""
+        """The window-hash verify (zero substrings end to end) finds the
+        same >= threshold pairs WITH the same exact jaccard values as the
+        exhaustive inverted-index path (ASCII text: byte k-grams == char
+        k-grams)."""
         base = "the quick brown fox jumps over the lazy sleeping dog tonight "
         rows = [(i, base + f"variant {i} unique tail content number {i}") for i in range(20)]
         rows += [(100, base * 3), (101, base * 3 + "x"), (102, base * 3 + "yz")]
@@ -194,36 +155,51 @@ class TestDedup:
             df, shingle_k=5, threshold=0.6, max_doc_freq=None
         ).toPandas()
         roll = dedup.ngram_jaccard_lsh_pairs(
-            df, shingle_k=5, threshold=0.6, num_hashes=32, bands=16,
-            hash_fn="rolling", verify_on_hashes=True
+            df, shingle_k=5, threshold=0.6, num_hashes=32, bands=16
         ).toPandas()
         e = {(r["a"], r["b"]): round(r["jaccard"], 9) for _, r in exact.iterrows()}
         g = {(r["a"], r["b"]): round(r["jaccard"], 9) for _, r in roll.iterrows()}
         assert g == e and len(g) > 0
+
+    def test_lsh_jaccard_is_over_utf8_byte_windows(self, spark):
+        """The verify intersects the k-byte window sets the signatures
+        minimize over: on multi-byte text the returned jaccard equals a
+        brute-force jaccard of UTF-8 byte k-grams, not of char k-grams."""
+        k = 5
+
+        def grams(t, as_bytes):
+            s = t.lower().encode("utf-8") if as_bytes else t.lower()
+            return {s[i:i + k] for i in range(len(s) - k + 1)}
+
+        def jac(x, y, as_bytes):
+            a, b = grams(x, as_bytes), grams(y, as_bytes)
+            return len(a & b) / len(a | b)
+
+        base = "größere übung für äpfel, öfen und straßenbahn "
+        rows = [(1, base * 2), (2, base * 2 + "é"), (3, base + "ЖЖ" + base),
+                (4, "совсем другой текст без общих слов"), (5, "日本語のテキストです")]
+        texts = dict(rows)
+        df = spark.createDataFrame(rows, schema="doc_id bigint, text string")
+        # 32 bands of 2 rows: every pair with s >= 0.5 collides w.h.p.;
+        # threshold 0 keeps every verified candidate
+        got = dedup.ngram_jaccard_lsh_pairs(
+            df, shingle_k=k, threshold=0.0, num_hashes=64, bands=32).collect()
+        got = {(r["a"], r["b"]): r["jaccard"] for r in got}
+        assert {(1, 2), (1, 3), (2, 3)} <= set(got)
+        for (a, b), j in got.items():
+            assert j == pytest.approx(jac(texts[a], texts[b], True), abs=1e-12), (a, b)
+        # the planted pairs tell byte windows from char k-grams apart
+        assert any(jac(texts[a], texts[b], True) != jac(texts[a], texts[b], False)
+                   for a, b in ((1, 2), (1, 3), (2, 3)))
 
     def test_rolling_signature_stage_has_no_shuffle(self, spark):
         """The rolling signature stage is a narrow Arrow map: its plan
         contains no Exchange."""
         df = spark.createDataFrame(
             [(1, "some document text body here")], "doc_id long, text string")
-        plan = dedup.minhash_signatures(df, num_hashes=16, shingle_k=4)\
+        plan = dedup._minhash_signatures_rolling(df, 16, 4)\
             ._jdf.queryExecution().executedPlan().toString()
         assert "MapInArrow" in plan and "Exchange" not in plan
-
-    def test_verify_on_hashes_parity(self, spark):
-        """The 64-bit-hash verify flavor returns identical pairs AND
-        identical exact jaccard values to the string-set verify (hash
-        collisions are ~|S|^2/2^64; none at test scale)."""
-        base = "the quick brown fox jumps over the lazy sleeping dog tonight "
-        rows = [(i, base + f"variant {i} tail {i}") for i in range(15)]
-        rows += [(100, base * 3), (101, base * 3 + "x")]
-        df = spark.createDataFrame(rows, schema="doc_id bigint, text string")
-        kw = dict(shingle_k=5, threshold=0.6, num_hashes=32, bands=16)
-        a = dedup.ngram_jaccard_lsh_pairs(df, **kw).toPandas()
-        b = dedup.ngram_jaccard_lsh_pairs(df, verify_on_hashes=True, **kw).toPandas()
-        key = lambda p: sorted(
-            (r["a"], r["b"], round(r["jaccard"], 9)) for _, r in p.iterrows())
-        assert key(a) == key(b) and len(a) > 0
 
     def test_simhash_groups(self, docs_df):
         df, _ = docs_df
@@ -315,102 +291,6 @@ class TestDedup:
             assert signs[p] == want
 
 
-JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")  # Java's \s class
-
-
-def _md5_hex(s: str) -> str:
-    return hashlib.md5(s.encode("utf-8")).hexdigest()
-
-
-def _kgrams(text: str, k: int) -> set:
-    t = text.lower()
-    return {t[i: i + k] for i in range(len(t) - k + 1)}
-
-
-def ref_md5_minhash(text: str, num_hashes: int, k: int):
-    """Per-doc md5 minhash: distinct character k-grams of lower(text),
-    60-bit base hash = first 15 hex chars of md5, Carter-Wegman mins.
-    None when the doc has no k-gram (the operator emits no row)."""
-    p = dedup.MERSENNE31
-    xs = [int(_md5_hex(w)[:15], 16) % p for w in _kgrams(text, k)]
-    if not xs:
-        return None
-    coeffs = [dedup.minhash_coeffs(i) for i in range(num_hashes)]
-    return [min((a * x + b) % p for x in xs) for a, b in coeffs]
-
-
-def ref_md5_simhash(text: str, bits: int) -> int:
-    """Per-doc md5 simhash: tokens of lower(text) split on Java \\s, 60-bit
-    md5 token hash, bit set iff set in a strict majority of tokens."""
-    hs = [int(_md5_hex(t)[:15], 16) for t in JAVA_WS.split(text.lower()) if t]
-    return sum(1 << i for i in range(bits)
-               if 2 * sum((h >> i) & 1 for h in hs) > len(hs))
-
-
-def ref_md5_fingerprint(text: str, k: int, bottom_k: int) -> str:
-    """Per-doc md5 fingerprint: sorted hex digests of the distinct
-    k-grams, bottom-k joined with ',', md5 of that string."""
-    digs = sorted(_md5_hex(w) for w in _kgrams(text, k))
-    return _md5_hex(",".join(digs[:bottom_k]))
-
-
-@pytest.mark.spark
-class TestMd5ArrowParity:
-    """The md5 oracle flavors run as zero-shuffle Arrow passes
-    (operators/md5win.py). They must equal a per-document hashlib
-    reference VALUE-FOR-VALUE (the DuckDB oracle pins hash values, not
-    just equality classes) on a corpus that exercises every edge:
-    exact/near dups, empty text, text shorter than k, non-ASCII scripts
-    (the per-doc fallback path), mixed-case, and every Java-\\s
-    whitespace delimiter."""
-
-    ROWS = [
-        (1, "the quick brown fox jumps over the lazy dog"),
-        (2, "the quick brown fox jumps over the lazy dog"),
-        (3, "the quick brown fox jumped over the lazy dog!"),
-        (4, "der schnelle braune fuchs springt über den faulen hund gut"),
-        (5, "це зовсім інший текст про щось не схоже на інші документи"),
-        (6, ""),
-        (7, "ab"),
-        (8, "日本語のテキストです これはテストです 日本語のテキスト"),
-        (9, "MiXeD CaSe TeXt WiTh UPPER and lower"),
-        (10, "tabs\tand\nnewlines\x0bweird\fspaces\r end"),
-        (11, "ASCII with ünïcödé mixed in the middle of things"),
-    ]
-
-    @pytest.fixture(scope="class")
-    def mixed_df(self, spark):
-        return spark.createDataFrame(self.ROWS, schema="doc_id bigint, text string")
-
-    def test_minhash_signatures_exact(self, mixed_df):
-        for k, h in ((5, 32), (6, 64), (8, 16), (10, 16)):
-            got = {
-                r["doc_id"]: list(r["sig"])
-                for r in dedup.minhash_signatures(
-                    mixed_df, num_hashes=h, shingle_k=k, hash_fn="md5").collect()
-            }
-            want = {i: ref_md5_minhash(t, h, k) for i, t in self.ROWS}
-            assert got == {i: s for i, s in want.items() if s is not None}, k
-
-    def test_simhash_signatures_exact(self, mixed_df):
-        for bits in (60, 32):
-            got = {
-                r["doc_id"]: r["simhash"]
-                for r in dedup.simhash_signatures(
-                    mixed_df, bits=bits, hash_fn="md5").collect()
-            }
-            assert got == {i: ref_md5_simhash(t, bits) for i, t in self.ROWS}, bits
-
-    def test_fingerprint_exact(self, mixed_df):
-        for k, b in ((8, 8), (5, 3), (10, 4)):
-            got = {
-                r["doc_id"]: r["fingerprint"]
-                for r in text.fingerprint(
-                    mixed_df, shingle_k=k, bottom_k=b, hash_fn="md5").collect()
-            }
-            assert got == {i: ref_md5_fingerprint(t, k, b) for i, t in self.ROWS}, k
-
-
 @pytest.mark.spark
 class TestText:
     def test_token_counts(self, spark):
@@ -443,22 +323,6 @@ class TestText:
         assert out[1] == out[2]
         assert out[1] != out[7]
 
-    def test_fingerprint_flavors_same_equality_classes(self, docs_df):
-        """rolling / md5 differ by hash family but must induce the SAME
-        duplicate partition of the corpus (the operator's contract);
-        rolling handles sub-k and empty texts as 0."""
-        from itertools import combinations
-
-        df, rows = docs_df
-        fps = {h: text.fingerprint(df, hash_fn=h).toPandas()
-               .set_index("doc_id")["fingerprint"]
-               for h in ("rolling", "md5")}
-        ids = [r[0] for r in rows if len(r[1]) >= 8]
-        for a, b in combinations(ids, 2):
-            dup = fps["md5"][a] == fps["md5"][b]
-            assert (fps["rolling"][a] == fps["rolling"][b]) == dup, (a, b)
-        assert fps["rolling"][8] == 0  # empty text
-
     def test_fingerprint_rolling_batch_boundaries(self, spark):
         """Window hashes are computed over a concatenated batch buffer --
         windows must never leak across document boundaries: permuting
@@ -472,10 +336,10 @@ class TestText:
                 for i in range(50)]
         a = text.fingerprint(
             spark.createDataFrame(rows, "doc_id long, text string"),
-            hash_fn="rolling").toPandas().set_index("doc_id")["fingerprint"]
+        ).toPandas().set_index("doc_id")["fingerprint"]
         b = text.fingerprint(
             spark.createDataFrame(rows[::-1], "doc_id long, text string"),
-            hash_fn="rolling").toPandas().set_index("doc_id")["fingerprint"]
+        ).toPandas().set_index("doc_id")["fingerprint"]
         assert a.sort_index().equals(b.sort_index())
         assert a.nunique() == 50
 

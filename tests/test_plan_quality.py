@@ -258,8 +258,8 @@ class TestDriverContract:
         names = re.findall(r'"([a-z_0-9]+)"', m.group(1))
         for n in names:
             assert n in QUERIES, n
-        # the production rolling defaults must stay in the round-over-round
-        # record alongside their md5 oracle pins (round-6 protocol)
+        # the text signature operators must stay in the round-over-round
+        # record (round-6 protocol)
         for n in ("fingerprint_rolling", "minhash_pairs_rolling",
                   "ngram_lsh_rolling", "simhash_rolling", "dedup_groups"):
             assert n in names, f"bench subset must carry {n}"

@@ -1,12 +1,12 @@
 """Numpy-level contracts of the Karp-Rabin rolling core
 (operators/rolling.py) against brute-force pure-Python references, plus
-the SimHash rolling flavor's Spark-side parity. These are the ground
+the Spark-side parity of the SimHash, MinHash and fingerprint operators. These are the ground
 truth the DuckDB ``*_rolling`` oracle replays are generated against."""
 
 import numpy as np
 import pandas as pd
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from osm_pbf_convert_spark.operators import rolling
@@ -51,6 +51,25 @@ TEXTS = st.lists(
 )
 
 
+# a fixed edge corpus: exact and near dups, empty, shorter than k,
+# Cyrillic, CJK, mixed case, every Java-\s delimiter, and ASCII with
+# scattered multi-byte letters
+EDGE_ROWS = [
+    (1, "the quick brown fox jumps over the lazy dog"),
+    (2, "the quick brown fox jumps over the lazy dog"),
+    (3, "the quick brown fox jumped over the lazy dog!"),
+    (4, "der schnelle braune fuchs springt über den faulen hund gut"),
+    (5, "це зовсім інший текст про щось не схоже на інші документи"),
+    (6, ""),
+    (7, "ab"),
+    (8, "日本語のテキストです これはテストです 日本語のテキスト"),
+    (9, "MiXeD CaSe TeXt WiTh UPPER and lower"),
+    (10, "tabs\tand\nnewlines\x0bweird\fspaces\r end"),
+    (11, "ASCII with ünïcödé mixed in the middle of things"),
+]
+EDGE_TEXTS = [t for _, t in EDGE_ROWS]
+
+
 def ref_token_hashes(text: str) -> list[int]:
     toks = text.lower().encode("utf-8").split()  # bytes.split: ASCII \s runs
     out = []
@@ -66,6 +85,7 @@ class TestWindowSegments:
     @given(st.lists(st.text(alphabet=st.characters(codec="utf-8"), max_size=40),
                     max_size=12),
            st.integers(min_value=1, max_value=6))
+    @example(EDGE_TEXTS, 8)
     @settings(max_examples=60, deadline=None)
     def test_matches_bruteforce(self, texts, k):
         flat, off = rolling.batch_window_hash_segments(pd.Series(texts), k)
@@ -141,6 +161,8 @@ class TestSegmentAffineMin:
             assert got[i].tolist() == exp, i
 
     @given(TEXTS, st.integers(min_value=1, max_value=6), st.integers(1, 6))
+    @example(EDGE_TEXTS, 5, 6)
+    @example(EDGE_TEXTS, 10, 2)
     @settings(max_examples=60, deadline=None)
     def test_texts_match_bruteforce_set_minhash(self, texts, k, num_hashes):
         """Minima over the duplicates-kept windows equal the minima over
@@ -235,6 +257,7 @@ class TestBitMajority:
     @given(st.lists(st.one_of(st.none(), st.text(
         alphabet=st.sampled_from("ab \t\nXy\u00e9\u20ac\U0001f600"), max_size=50)),
         max_size=10))
+    @example(EDGE_TEXTS)
     @settings(max_examples=60, deadline=None)
     def test_texts_match_bruteforce(self, texts):
         """Rolling SimHash of raw texts (None, empty, whitespace-only,
@@ -279,11 +302,11 @@ class TestSimhashRollingSpark:
             (5, ""),
             (6, "  \t \n "),
             (7, "one-token"),
-        ]
+        ] + [(100 + i, t) for i, t in EDGE_ROWS]
         df = spark.createDataFrame(rows, schema="doc_id bigint, text string")
         got = {
             r["doc_id"]: r["simhash"]
-            for r in dedup.simhash_signatures(df, hash_fn="rolling").collect()
+            for r in dedup.simhash_signatures(df).collect()
         }
         for doc_id, text in rows:
             toks = ref_token_hashes(text)
@@ -301,7 +324,7 @@ class TestSimhashRollingSpark:
         from osm_pbf_convert_spark.operators import dedup
 
         df = spark.createDataFrame([(1, "a b c")], "doc_id bigint, text string")
-        plan = dedup.simhash_signatures(df, hash_fn="rolling")._jdf.queryExecution(
+        plan = dedup.simhash_signatures(df)._jdf.queryExecution(
         ).executedPlan().toString()
         assert "Exchange" not in plan
 
@@ -323,7 +346,8 @@ class TestSimhashRollingSpark:
 @pytest.mark.spark
 class TestMinhashRollingSpark:
     ROWS = [(1, "the quick brown fox"), (2, "ab"), (3, None),
-            (4, "aaaaaaaa aaaa"), (5, "\u00e9t\u00e9 \u20ac\u20ac \U0001f600 caf\u00e9")]
+            (4, "aaaaaaaa aaaa"), (5, "\u00e9t\u00e9 \u20ac\u20ac \U0001f600 caf\u00e9")
+            ] + [(100 + i, t) for i, t in EDGE_ROWS]
 
     def _df(self, spark):
         return spark.createDataFrame(self.ROWS, "doc_id bigint, text string")
@@ -337,7 +361,7 @@ class TestMinhashRollingSpark:
 
         from osm_pbf_convert_spark.operators import dedup
 
-        out = dedup.minhash_signatures(self._df(spark), num_hashes=8, shingle_k=3)
+        out = dedup._minhash_signatures_rolling(self._df(spark), 8, 3)
         assert out.schema == T.StructType([
             T.StructField("doc_id", T.LongType()),
             T.StructField("sig", T.ArrayType(T.LongType())),
@@ -369,3 +393,28 @@ class TestMinhashRollingSpark:
             exp |= {(i, b, v) for b, v in enumerate(self._signed(buckets.tolist()))}
         got = [tuple(r) for r in out.collect()]
         assert len(got) == len(exp) and set(got) == exp
+
+
+def ref_fingerprint(text, k: int, bottom_k: int) -> int:
+    """Brute force: the bottom_k smallest distinct window hashes combined
+    as sum_j h_j * _KR_COMBINE^(bottom_k-1-j) mod 2^64, as a signed long
+    (no window -> 0)."""
+    from osm_pbf_convert_spark.operators.text import _KR_COMBINE
+
+    bot = ref_window_hashes(text or "", k)[:bottom_k]
+    fp = sum(h * pow(_KR_COMBINE, bottom_k - 1 - j, rolling.MOD64)
+             for j, h in enumerate(bot)) % rolling.MOD64
+    return fp - rolling.MOD64 if fp >= 1 << 63 else fp
+
+
+@pytest.mark.spark
+class TestFingerprintRollingSpark:
+    def test_matches_reference_on_edge_rows(self, spark):
+        from osm_pbf_convert_spark.operators import text
+
+        df = spark.createDataFrame(EDGE_ROWS, "doc_id bigint, text string")
+        for k, b in ((8, 8), (5, 3), (10, 4)):
+            got = {r["doc_id"]: r["fingerprint"]
+                   for r in text.fingerprint(df, shingle_k=k, bottom_k=b).collect()}
+            assert got == {i: ref_fingerprint(t, k, b) for i, t in EDGE_ROWS}, k
+        assert got[1] == got[2] and got[6] == got[7] == 0

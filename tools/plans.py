@@ -22,7 +22,7 @@ HEADLINE = [
     "heat_map",
     "knn",
     "embedding_topk",
-    "minhash_pairs",
+    "minhash_pairs_rolling",
     "decode_nodes",
     "pages_geo",
     "pricing_summary",

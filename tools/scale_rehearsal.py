@@ -305,7 +305,7 @@ def main():
             ("simhash_rolling", dedup.simhash_hamming_pairs(docs, max_hamming=8)),
             ("ngram_lsh_rolling", dedup.ngram_jaccard_lsh_pairs(
                 docs, shingle_k=6, threshold=0.6, num_hashes=64, bands=16,
-                max_bucket_size=64, verify_on_hashes=True)),
+                max_bucket_size=64)),
         ]:
             results[name] = _plan_flags(df)
             print(f"{name}: {results[name]}", flush=True)
@@ -429,11 +429,11 @@ def main():
     # 9x wall at 4x volume without it, and ZERO verified pairs lost
     # with it at 64x -- see BENCH/NOTES.md). NOT a silent cap: the
     # parameter is part of the recorded scale recipe.
-    print("ngram_lsh_rolling: max_bucket_size=64 + verify_on_hashes (scale recipe)", flush=True)
+    print("ngram_lsh_rolling: max_bucket_size=64 + window-hash verify (scale recipe)", flush=True)
     measured(
         spark, "ngram_lsh_rolling",
         dedup.ngram_jaccard_lsh_pairs(docs, shingle_k=6, threshold=0.6, num_hashes=64, bands=16,
-                                      max_bucket_size=64, verify_on_hashes=True),
+                                      max_bucket_size=64),
         results,
     )
 
