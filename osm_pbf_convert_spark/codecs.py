@@ -117,6 +117,11 @@ def zigzag_encode(values: np.ndarray) -> np.ndarray:
     return ((v << np.int64(1)) ^ (v >> np.int64(63))).astype(np.uint64)
 
 
+def zigzag_int(v: int) -> int:
+    """Scalar ``zigzag_encode`` for one Python int (the per-record writers)."""
+    return ((v << 1) ^ (v >> 63)) & 0xFFFFFFFFFFFFFFFF
+
+
 def zigzag_decode(values: np.ndarray) -> np.ndarray:
     """uint64 zigzag -> int64. Matches ``EncodeHelpers.DecodeZigZag``:
     value = (long)(u >> 1); if (u & 1) value = -1 ^ value."""
@@ -168,18 +173,41 @@ def encode_varints_msb(values) -> bytes:
     return bytes(out)
 
 
-def encode_varints_msb_np(values: np.ndarray) -> bytes:
-    """Vectorized ``encode_varints_msb``: same bytes, numpy throughput.
-
-    Group counts come from threshold comparisons (exact, no float log);
-    groups are filled most-significant-first with <= 10 vectorized passes.
-    Used by the heat-map band sink, where a band is millions of cells."""
-    v = np.ascontiguousarray(values, dtype=np.uint64).ravel()
-    if v.size == 0:
-        return b""
+def varint_lengths(values: np.ndarray) -> np.ndarray:
+    """Byte length of each 7-bit-group varint (either group order), by
+    exact threshold compares (no float log)."""
+    v = np.asarray(values, dtype=np.uint64)
     g = np.ones(v.size, dtype=np.int64)
     for k in range(1, 10):
         g += (v >= (np.uint64(1) << np.uint64(7 * k))).astype(np.int64)
+    return g
+
+
+def encode_dotnet_string(s: str) -> bytes:
+    """``BinaryWriter.Write(string)``: LSB-first 7-bit length + UTF-8
+    (the .NET length prefix, NOT the storage files' MSB varint)."""
+    b = s.encode("utf-8")
+    n = len(b)
+    out = bytearray()
+    while True:
+        if n < 0x80:
+            out.append(n)
+            break
+        out.append(0x80 | (n & 0x7F))
+        n >>= 7
+    return bytes(out) + b
+
+
+def encode_varints_msb_np(values: np.ndarray) -> bytes:
+    """Vectorized ``encode_varints_msb``: same bytes, numpy throughput.
+
+    Group counts come from ``varint_lengths``; groups are filled
+    most-significant-first with <= 10 vectorized passes. Used by the
+    heat-map band sink, where a band is millions of cells."""
+    v = np.ascontiguousarray(values, dtype=np.uint64).ravel()
+    if v.size == 0:
+        return b""
+    g = varint_lengths(v)
     offsets = np.cumsum(g)
     out = np.zeros(int(offsets[-1]), dtype=np.uint8)
     pos = offsets - 1

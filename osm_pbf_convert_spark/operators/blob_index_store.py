@@ -34,8 +34,12 @@ import struct
 from typing import Iterator
 
 import numpy as np
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
+
+from osm_pbf_convert_spark.sources import fsio
+from osm_pbf_convert_spark.sources.byterange import scan_ranges, sink_segments
 
 # BinaryWriter field order, little-endian, packed (BlobIdsInfo.cs:35-42)
 RECORD = struct.Struct("<qiqqii")
@@ -85,9 +89,7 @@ def blob_index_segments(df: DataFrame, num_chunks: int | None = None) -> DataFra
     """Distributed encode stage: range-partition on ``start_position``
     (the reference writes infos in blob order), encode each partition
     as ONE packed-record blob via the structured dtype. Returns
-    (first_pos, blob) rows -- the driver orders by first_pos and
-    streams."""
-    import pandas as pd
+    (first_pos, blob) rows, range-ordered by first_pos."""
     from pyspark.sql import functions as F
 
     spark = df.sparkSession
@@ -101,36 +103,34 @@ def blob_index_segments(df: DataFrame, num_chunks: int | None = None) -> DataFra
         .sortWithinPartitions("start_position")
     )
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def encode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         parts = []
         first = None
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            rec = np.empty(len(pdf), dtype=_DTYPE)
+            rec = np.empty(batch.num_rows, dtype=_DTYPE)
             for c in COLUMNS:
-                rec[c] = pdf[c].to_numpy()
+                rec[c] = batch.column(c).to_numpy()
             if first is None:
                 first = int(rec["start_position"][0])
             parts.append(rec.tobytes())
         if parts:
-            yield pd.DataFrame({"first_pos": [first], "blob": [b"".join(parts)]})
+            yield pa.RecordBatch.from_pydict({"first_pos": [first], "blob": [b"".join(parts)]})
 
-    return part.mapInPandas(encode, schema="first_pos long, blob binary")
+    return part.mapInArrow(encode, schema="first_pos long, blob binary")
 
 
 def write_blobs_dat(df: DataFrame, out_path: str, num_chunks: int | None = None) -> int:
     """Single ``.blobs.dat`` byte sink: executor-parallel encode, driver
     splice in start-position order. Returns bytes written."""
-    from osm_pbf_convert_spark.sources import fsio
-
-    segments = blob_index_segments(df, num_chunks)
     total = 0
-    with fsio.open_output(out_path) as out:
-        for row in segments.orderBy("first_pos").toLocalIterator():
-            blob = bytes(row["blob"])
-            out.write(blob)
-            total += len(blob)
+    with sink_segments(blob_index_segments(df, num_chunks), "first_pos", out_path) as (
+        rows, (out,)
+    ):
+        for row in rows:
+            out.write(row["blob"])
+            total += len(row["blob"])
     return total
 
 
@@ -140,34 +140,24 @@ def read_blobs_dat(
     """Distributed ``.blobs.dat`` reader: 36-byte-aligned byte-range
     splits, one vectorized ``frombuffer`` decode per task.
     Kept as the read direction that round-trips the ``.blobs.dat`` writer."""
-    import pandas as pd
-
-    from osm_pbf_convert_spark.sources import fsio
-
     size = fsio.file_size(path)
     if size % RECORD_BYTES:
         raise ValueError(
             f"{path}: {size} bytes is not a multiple of {RECORD_BYTES}"
         )
     n_rec = size // RECORD_BYTES
-    bounds = [
-        (path, i * split_records * RECORD_BYTES,
-         min((i + 1) * split_records, n_rec) * RECORD_BYTES)
-        for i in range(max(1, -(-n_rec // split_records)))
-    ]
-    sdf = spark.createDataFrame(bounds, schema="path string, start long, end long")
+    starts = np.arange(0, max(n_rec, 1), split_records, dtype=np.int64)
+    splits = pa.table({
+        "start": starts * RECORD_BYTES,
+        "end": np.minimum(starts + split_records, n_rec) * RECORD_BYTES,
+    })
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for p, s, e in zip(pdf["path"], pdf["start"], pdf["end"]):
-                if e <= s:
-                    continue
-                with fsio.open_seekable(p) as f:
-                    f.seek(int(s))
-                    raw = f.read(int(e) - int(s))
-                rec = np.frombuffer(raw, dtype=_DTYPE)
-                yield pd.DataFrame({c: rec[c] for c in COLUMNS})
+    def decode(start, end):
+        if end <= start:
+            return
+        with fsio.open_seekable(path) as f:
+            f.seek(start)
+            rec = np.frombuffer(f.read(end - start), dtype=_DTYPE)
+        yield pa.RecordBatch.from_pydict({c: rec[c] for c in COLUMNS})
 
-    return sdf.repartitionByRange(len(bounds), "path", "start").mapInPandas(
-        scan, schema=SCHEMA
-    )
+    return scan_ranges(spark, splits, decode, SCHEMA)

@@ -16,12 +16,13 @@ bucketed Parquet table (``plans/partitioning.py``) -- the correct
 north-rule mapping. This sink is the byte-parity bridge to the
 reference's artifact, shaped like ``write_heat_map_file``: the expensive
 work (sort, deltas, zigzag, varint byte emission) runs VECTORIZED ON
-EXECUTORS via mapInPandas; the driver only streams pre-encoded chunks to
-the file, re-encoding the handful of records the format's sequential
-block-chain makes position-dependent (one per 4 KB block boundary + one
-per partition seam). The chain is inherently sequential -- each block
-boundary's position depends on every prior byte length -- which is why
-the reference itself is a single-threaded writer (``NodesIndex.cs:37-43``).
+EXECUTORS via mapInArrow; the driver only streams pre-encoded chunks to
+the file (``byterange.sink_segments``), re-encoding the handful of
+records the format's sequential block-chain makes position-dependent
+(one per 4 KB block boundary + one per partition seam). The chain is
+inherently sequential -- each block boundary's position depends on every
+prior byte length -- which is why the reference itself is a
+single-threaded writer (``NodesIndex.cs:37-43``).
 """
 
 from __future__ import annotations
@@ -32,18 +33,20 @@ import numpy as np
 
 from pyspark.sql import DataFrame
 
-from osm_pbf_convert_spark.codecs import encode_varints_msb, encode_varints_msb_np
+from osm_pbf_convert_spark.codecs import (
+    encode_varints_msb,
+    encode_varints_msb_np,
+    varint_lengths,
+    zigzag_encode,
+    zigzag_int,
+)
+from osm_pbf_convert_spark.sources.byterange import sink_segments
 
 BLOCK_SIZE = 4096
 
 
-def _zz(v: int) -> int:
-    """Single-value zigzag (EncodeHelpers.EncodeZigZag)."""
-    return ((v << 1) ^ (v >> 63)) & 0xFFFFFFFFFFFFFFFF
-
-
 def _record_bytes(did: int, dlat: int, dlon: int) -> bytes:
-    return encode_varints_msb([did & 0xFFFFFFFFFFFFFFFF, _zz(dlat), _zz(dlon)])
+    return encode_varints_msb([did & 0xFFFFFFFFFFFFFFFF, zigzag_int(dlat), zigzag_int(dlon)])
 
 
 def encode_nodes_index_py(ids, lats, lons, block_size: int = BLOCK_SIZE):
@@ -126,8 +129,8 @@ def node_index_segments(
     delta-encoded against (0,0,0) because the previous partition's last
     values are unknowable executor-side; the driver re-encodes that one
     record against its running state."""
+    import pyarrow as pa
     from pyspark.sql import functions as F
-    import pandas as pd
 
     spark = nodes.sparkSession
     n = num_chunks or spark.sparkContext.defaultParallelism
@@ -141,9 +144,9 @@ def node_index_segments(
         .sortWithinPartitions("id")
     )
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def encode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         # ONE output row per partition (accumulating the batch outputs
-        # cuts the driver's toLocalIterator row count from hundreds to
+        # cuts the driver's streamed row count from hundreds to
         # num_chunks; measured: per-row streaming overhead dominated the
         # sink wall at 7M+ nodes) -- UNLESS the partition is huge: each
         # long buffer is 8 B/node, so a single-row partition of ~250M+
@@ -159,7 +162,7 @@ def node_index_segments(
         def flush():
             nonlocal acc, acc_nodes, first_row
             ids_buf = b"".join(acc["ids"])
-            row = pd.DataFrame(
+            row = pa.RecordBatch.from_pydict(
                 {
                     "first_id": [int(np.frombuffer(ids_buf[:8], dtype="<i8")[0])],
                     "ids": [ids_buf],
@@ -175,12 +178,12 @@ def node_index_segments(
             first_row = False
             return row
 
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            ids = pdf["id"].to_numpy(np.int64)
-            lats = pdf["ilat"].to_numpy(np.int64)
-            lons = pdf["ilon"].to_numpy(np.int64)
+            ids = batch.column("id").to_numpy()
+            lats = batch.column("ilat").to_numpy()
+            lons = batch.column("ilon").to_numpy()
             did = np.empty_like(ids)
             did[0] = ids[0] - prev_id
             np.subtract(ids[1:], ids[:-1], out=did[1:])
@@ -192,16 +195,11 @@ def node_index_segments(
             np.subtract(lons[1:], lons[:-1], out=dlon[1:])
             # interleave (did, zz(dlat), zz(dlon)) and varint-encode in one
             # vectorized pass; per-record lengths from per-value group counts
-            zlat = ((dlat << np.int64(1)) ^ (dlat >> np.int64(63))).astype(np.uint64)
-            zlon = ((dlon << np.int64(1)) ^ (dlon >> np.int64(63))).astype(np.uint64)
             flat = np.empty(ids.size * 3, dtype=np.uint64)
             flat[0::3] = did.astype(np.uint64)
-            flat[1::3] = zlat
-            flat[2::3] = zlon
-            g = np.ones(flat.size, dtype=np.int64)
-            for k in range(1, 10):
-                g += (flat >= (np.uint64(1) << np.uint64(7 * k))).astype(np.int64)
-            lens = g.reshape(-1, 3).sum(axis=1)
+            flat[1::3] = zigzag_encode(dlat)
+            flat[2::3] = zigzag_encode(dlon)
+            lens = varint_lengths(flat).reshape(-1, 3).sum(axis=1)
             blob = encode_varints_msb_np(flat)
             # arrays ship as raw little-endian buffers: the driver
             # np.frombuffer's them -- array<long> Rows would force tens of
@@ -218,7 +216,7 @@ def node_index_segments(
         if acc["ids"]:
             yield flush()
 
-    return df.mapInPandas(
+    return df.mapInArrow(
         encode,
         schema="first_id long, ids binary, ilats binary, ilons binary, "
                "lens binary, blob binary, fresh boolean",
@@ -232,38 +230,21 @@ def write_nodes_index_file(
     """Assemble ``{out_prefix}.nodes.dat`` + ``{out_prefix}.idx``
     byte-identical to the reference writer (golden-tested against
     ``encode_nodes_index_py``). Executors produce pre-encoded chunk blobs
-    (``node_index_segments``); the driver streams them through the Hadoop
-    FileSystem API (object-store URIs work), re-encoding only the
+    (``node_index_segments``); the driver streams them in id order into
+    ``fsio`` outputs (object-store URIs work), re-encoding only the
     position-dependent records: partition seams and the one reset record
     per 4 KB block. Returns (dat_bytes, idx_bytes) written."""
-    spark = nodes.sparkSession
-    jvm = spark._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-
-    def _create(path_str):
-        path = jvm.org.apache.hadoop.fs.Path(path_str)
-        return path.getFileSystem(hconf).create(path, True)
-
-    # materialize the segments with a fully PARALLEL job first --
-    # toLocalIterator alone would run the encode one partition at a time
-    # while the driver consumes (measured ~2.5x the parallel encode wall);
-    # the driver then merely streams pre-computed rows off disk in order
-    seg_path = f"{out_prefix}.segments.tmp"
-    node_index_segments(nodes, num_chunks, max_nodes_per_row).write.mode(
-        "overwrite"
-    ).parquet(seg_path)
-    segments = spark.read.parquet(seg_path).orderBy("first_id")
-
-    dat_out = _create(f"{out_prefix}.nodes.dat")
-    idx_out = _create(f"{out_prefix}.idx")
     pos = 0
     last_reset = 0
     prev_id = prev_lat = prev_lon = 0
     last_index_id = 0
     dat_total = idx_total = 0
     seen_any = False
-    try:
-        for row in segments.toLocalIterator():
+    segments = node_index_segments(nodes, num_chunks, max_nodes_per_row)
+    with sink_segments(
+        segments, "first_id", f"{out_prefix}.nodes.dat", f"{out_prefix}.idx"
+    ) as (rows, (dat_out, idx_out)):
+        for row in rows:
             ids = np.frombuffer(bytes(row["ids"]), dtype="<i8")
             lats = np.frombuffer(bytes(row["ilats"]), dtype="<i8")
             lons = np.frombuffer(bytes(row["ilons"]), dtype="<i8")
@@ -290,8 +271,7 @@ def write_nodes_index_file(
             shift = 0
             lo = 0
 
-            idx_buf = bytearray()  # batched: one py4j write per chunk,
-            # not one per 4KB reset (py4j round-trips dominated the splice)
+            idx_buf = bytearray()  # one idx write per chunk, not one per 4KB reset
 
             def patch(j: int, new: bytes, is_reset: bool, boundary: int | None):
                 nonlocal shift, lo, last_index_id, last_reset
@@ -341,7 +321,7 @@ def write_nodes_index_file(
                 cursor = int(orig_starts[j + 1])
             pieces.append(blob[cursor:])
             chunk = b"".join(pieces)
-            dat_out.write(bytearray(chunk))
+            dat_out.write(chunk)
             dat_total += len(chunk)
             if idx_buf:
                 idx_out.write(idx_buf)
@@ -349,9 +329,4 @@ def write_nodes_index_file(
             pos += int(orig_starts[-1]) + shift
             assert pos == dat_total, "position bookkeeping diverged"
             prev_id, prev_lat, prev_lon = int(ids[-1]), int(lats[-1]), int(lons[-1])
-    finally:
-        dat_out.close()
-        idx_out.close()
-        sp = jvm.org.apache.hadoop.fs.Path(seg_path)
-        sp.getFileSystem(hconf).delete(sp, True)
     return dat_total, idx_total

@@ -28,10 +28,10 @@ length-prefixed string (LSB-first 7-bit length + UTF-8 bytes --
 ``BinaryWriter.Write(string)``, NOT the project's MSB varint).
 
 Like the ways file there are no block resets: executors encode whole
-records as flat varint sequences via mapInPandas (first-appearance role
+records as flat varint sequences via mapInArrow (first-appearance role
 ids are resolved by a tiny distributed pre-pass and broadcast); the
 driver patches one id-delta varint per partition seam and streams the
-file through the Hadoop FileSystem API.
+file into an ``fsio`` output (``byterange.sink_segments``).
 """
 
 from __future__ import annotations
@@ -42,29 +42,18 @@ import numpy as np
 
 from pyspark.sql import DataFrame
 
-from osm_pbf_convert_spark.codecs import encode_varints_msb, encode_varints_msb_np
+from osm_pbf_convert_spark.codecs import (
+    encode_dotnet_string,
+    encode_varints_msb,
+    encode_varints_msb_np,
+    zigzag_encode,
+    zigzag_int,
+)
+from osm_pbf_convert_spark.sources.byterange import sink_segments
 
 INT_MIN = -(2**31)
 INT_MAX = 2**31 - 1
 _U64 = 0xFFFFFFFFFFFFFFFF
-
-
-def _zz1(v: int) -> int:
-    return ((v << 1) ^ (v >> 63)) & _U64
-
-
-def _dotnet_string(s: str) -> bytes:
-    """BinaryWriter.Write(string): LSB-first 7-bit length + UTF-8."""
-    b = s.encode("utf-8")
-    n = len(b)
-    out = bytearray()
-    while True:
-        if n < 0x80:
-            out.append(n)
-            break
-        out.append(0x80 | (n & 0x7F))
-        n >>= 7
-    return bytes(out) + b
 
 
 def encode_strings_file_py(roles_in_order) -> bytes:
@@ -73,7 +62,7 @@ def encode_strings_file_py(roles_in_order) -> bytes:
     out = bytearray()
     for i, role in enumerate(roles_in_order):
         out += encode_varints_msb([i])
-        out += _dotnet_string(role)
+        out += encode_dotnet_string(role)
     return bytes(out)
 
 
@@ -97,7 +86,7 @@ def encode_rels_file_py(rels):
             min_lat, min_lon, max_lat, max_lon = (int(v) for v in rect)
         vals = [
             rel_id - last_id, 0,
-            _zz1(min_lat), _zz1(min_lon),
+            zigzag_int(min_lat), zigzag_int(min_lon),
             (max_lat - min_lat) & _U64, (max_lon - min_lon) & _U64,
             len(members),
         ]
@@ -108,8 +97,8 @@ def encode_rels_file_py(rels):
             if role not in role_ids:
                 role_ids[role] = len(role_ids)
             vals += [
-                int(mtype), _zz1(int(mid) - lm), role_ids[role],
-                _zz1(int(mid_lat) - lla), _zz1(int(mid_lon) - llo),
+                int(mtype), zigzag_int(int(mid) - lm), role_ids[role],
+                zigzag_int(int(mid_lat) - lla), zigzag_int(int(mid_lon) - llo),
             ]
             lm, lla, llo = int(mid), int(mid_lat), int(mid_lon)
         dat += encode_varints_msb(vals)
@@ -168,7 +157,8 @@ def decode_rels_file_py(dat: bytes):
 def role_dictionary(assembled: DataFrame) -> list:
     """Distributed first-appearance role dictionary: roles ordered by
     their first (rel_id, member position) in the serial stream -- exactly
-    the order the reference's sequential GetRoleId assigns."""
+    the order the reference's sequential GetRoleId assigns. One row per
+    distinct role comes back; the driver sorts them."""
     from pyspark.sql import functions as F
 
     first = (
@@ -178,11 +168,9 @@ def role_dictionary(assembled: DataFrame) -> list:
         .select(F.coalesce(F.col("m.role"), F.lit("")).alias("role"), "rel_id", "pos")
         .groupBy("role")
         .agg(F.min(F.struct("rel_id", "pos")).alias("first"))
-        .orderBy("first")
-        .select("role")
         .collect()
     )
-    return [r["role"] for r in first]
+    return [r["role"] for r in sorted(first, key=lambda r: tuple(r["first"]))]
 
 
 def rel_segments(assembled: DataFrame, roles: list, num_chunks: int | None = None) -> DataFrame:
@@ -196,12 +184,13 @@ def rel_segments(assembled: DataFrame, roles: list, num_chunks: int | None = Non
     arithmetic (id deltas across relations, per-relation member chains
     via segmented deltas) is numpy scatter + one varint pass per batch.
     """
+    import pyarrow as pa
+    import pyarrow.compute as pc
     from pyspark.sql import functions as F
-    import pandas as pd
 
     spark = assembled.sparkSession
     n = num_chunks or spark.sparkContext.defaultParallelism
-    role_map = {r: i for i, r in enumerate(roles)}
+    role_set = pa.array(roles, pa.string())
     mem = F.col("members")
     df = (
         assembled.select(
@@ -220,43 +209,34 @@ def rel_segments(assembled: DataFrame, roles: list, num_chunks: int | None = Non
         .sortWithinPartitions("rel_id")
     )
 
-    def _zz(v: np.ndarray) -> np.ndarray:
-        v = v.astype(np.int64)
-        return ((v << np.int64(1)) ^ (v >> np.int64(63))).astype(np.uint64)
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def encode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         prev_id = 0
         fresh = True
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            nrels = len(pdf)
-            ids = pdf["rel_id"].to_numpy(np.int64)
-            lists = list(pdf["m_types"])
-            cnts = np.fromiter(
-                (0 if a is None else len(a) for a in lists), np.int64, nrels
-            )
+            nrels = batch.num_rows
+            ids = batch.column("rel_id").to_numpy()
+            cnts = batch.column("m_types").value_lengths().fill_null(0).to_numpy().astype(np.int64)
             total_m = int(cnts.sum())
 
-            def flat(col, dtype=np.int64):
-                arrs = [np.asarray(a, dtype) for a in pdf[col] if a is not None and len(a)]
-                return np.concatenate(arrs) if arrs else np.empty(0, dtype)
+            def flat(col):
+                return batch.column(col).flatten().to_numpy()
 
             did = np.empty_like(ids)
             did[0] = ids[0] - prev_id
             np.subtract(ids[1:], ids[:-1], out=did[1:])
-            mn_lat = pdf["min_lat"].to_numpy(np.int64)
-            mn_lon = pdf["min_lon"].to_numpy(np.int64)
-            mx_lat = pdf["max_lat"].to_numpy(np.int64)
-            mx_lon = pdf["max_lon"].to_numpy(np.int64)
+            mn_lat, mn_lon, mx_lat, mx_lon = (
+                batch.column(c).to_numpy() for c in ("min_lat", "min_lon", "max_lat", "max_lon")
+            )
 
             vals = np.empty(7 * nrels + 5 * total_m, dtype=np.uint64)
             rec_starts = np.zeros(nrels, dtype=np.int64)
             np.cumsum(7 + 5 * cnts[:-1], out=rec_starts[1:])
             vals[rec_starts] = did.astype(np.uint64)
             vals[rec_starts + 1] = 0
-            vals[rec_starts + 2] = _zz(mn_lat)
-            vals[rec_starts + 3] = _zz(mn_lon)
+            vals[rec_starts + 2] = zigzag_encode(mn_lat)
+            vals[rec_starts + 3] = zigzag_encode(mn_lon)
             vals[rec_starts + 4] = (mx_lat - mn_lat).astype(np.uint64)
             vals[rec_starts + 5] = (mx_lon - mn_lon).astype(np.uint64)
             vals[rec_starts + 6] = cnts.astype(np.uint64)
@@ -278,23 +258,24 @@ def rel_segments(assembled: DataFrame, roles: list, num_chunks: int | None = Non
                     d = a.copy()
                     d[1:] -= a[:-1]
                     d[fi] = a[fi]
-                    return _zz(d)
+                    return zigzag_encode(d)
 
-                roles_flat = np.concatenate(
-                    [np.asarray(a, object) for a in pdf["m_roles"] if a is not None and len(a)]
-                )
-                role_ids = pd.Series(roles_flat).map(role_map).to_numpy(np.int64)
+                role_ids = pc.index_in(batch.column("m_roles").flatten(), value_set=role_set)
                 vals[base] = flat("m_types").astype(np.uint64)
                 vals[base + 1] = chain(flat("m_refs"))
-                vals[base + 2] = role_ids.astype(np.uint64)
+                vals[base + 2] = role_ids.to_numpy().astype(np.uint64)
                 vals[base + 3] = chain(flat("m_lats"))
                 vals[base + 4] = chain(flat("m_lons"))
             blob = encode_varints_msb_np(vals)
-            yield pd.DataFrame({"ids": [ids], "blob": [blob], "fresh": [fresh]})
+            yield pa.RecordBatch.from_pydict(
+                {"first_id": [int(ids[0])], "ids": [ids], "blob": [blob], "fresh": [fresh]}
+            )
             prev_id = int(ids[-1])
             fresh = False
 
-    return df.mapInPandas(encode, schema="ids array<long>, blob binary, fresh boolean")
+    return df.mapInArrow(
+        encode, schema="first_id long, ids array<long>, blob binary, fresh boolean"
+    )
 
 
 def write_rels_file(
@@ -303,21 +284,15 @@ def write_rels_file(
     """Assemble ``out_file`` (+ ``out_file + '.strs'``) byte-identical to
     the reference writer (golden-tested vs ``encode_rels_file_py``).
     Returns (rels_bytes, strings_bytes)."""
-    spark = assembled.sparkSession
-    jvm = spark._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-
-    def _create(path_str):
-        path = jvm.org.apache.hadoop.fs.Path(path_str)
-        return path.getFileSystem(hconf).create(path, True)
-
     roles = role_dictionary(assembled)
-    dat_out = _create(out_file)
     total = 0
     prev_id = 0
     seen = False
-    try:
-        for row in rel_segments(assembled, roles, num_chunks).toLocalIterator():
+    strs = encode_strings_file_py(roles)
+    with sink_segments(
+        rel_segments(assembled, roles, num_chunks), "first_id", out_file, out_file + ".strs"
+    ) as (rows, (dat_out, strs_out)):
+        for row in rows:
             ids = np.asarray(row["ids"], dtype=np.int64)
             blob = bytes(row["blob"])
             if seen and ids[0] <= prev_id:
@@ -327,15 +302,8 @@ def write_rels_file(
                 old = encode_varints_msb([int(ids[0])])
                 new = encode_varints_msb([int(ids[0]) - prev_id])
                 blob = new + blob[len(old):]
-            dat_out.write(bytearray(blob))
+            dat_out.write(blob)
             total += len(blob)
             prev_id = int(ids[-1])
-    finally:
-        dat_out.close()
-    strs = encode_strings_file_py(roles)
-    strs_out = _create(out_file + ".strs")
-    try:
-        strs_out.write(bytearray(strs))
-    finally:
-        strs_out.close()
+        strs_out.write(strs)
     return total, len(strs)

@@ -49,33 +49,17 @@ from pyspark.sql import DataFrame
 
 from osm_pbf_convert_spark.codecs import (
     delta_encode,
+    encode_dotnet_string,
     encode_varints_msb,
     encode_varints_msb_np,
+    varint_lengths,
     zigzag_encode,
+    zigzag_int,
 )
-
-_U64 = 0xFFFFFFFFFFFFFFFF
-
-
-def _zz1(v: int) -> int:
-    return ((v << 1) ^ (v >> 63)) & _U64
 
 
 def _vint(out: bytearray, v: int) -> None:
     out += encode_varints_msb([v])
-
-
-def _dotnet_string(s: str) -> bytes:
-    b = s.encode("utf-8")
-    n = len(b)
-    out = bytearray()
-    while True:
-        if n < 0x80:
-            out.append(n)
-            break
-        out.append(0x80 | (n & 0x7F))
-        n >>= 7
-    return bytes(out) + b
 
 
 def _write_tags(out: bytearray, tags) -> None:
@@ -93,11 +77,11 @@ def _write_tags(out: bytearray, tags) -> None:
         elif key_id is not None and value is not None:
             out.append(2)
             _vint(out, int(key_id))
-            out += _dotnet_string(value)
+            out += encode_dotnet_string(value)
         elif key and value is not None:
             out.append(3)
-            out += _dotnet_string(key)
-            out += _dotnet_string(value)
+            out += encode_dotnet_string(key)
+            out += encode_dotnet_string(value)
         else:
             raise ValueError(f"invalid tag record {t!r}")
 
@@ -114,9 +98,9 @@ def encode_spatial_block_py(nodes=(), ways=(), rels=()) -> bytes:
     out = bytearray()
     lid = lla = llo = 0
     for nid, lat, lon, tags in nodes:
-        _vint(out, _zz1(int(nid) - lid))
-        _vint(out, _zz1(int(lat) - lla))
-        _vint(out, _zz1(int(lon) - llo))
+        _vint(out, zigzag_int(int(nid) - lid))
+        _vint(out, zigzag_int(int(lat) - lla))
+        _vint(out, zigzag_int(int(lon) - llo))
         lid, lla, llo = int(nid), int(lat), int(lon)
         _write_tags(out, tags)
     wid = 0
@@ -125,15 +109,15 @@ def encode_spatial_block_py(nodes=(), ways=(), rels=()) -> bytes:
         if first:
             out.append(0)
             first = False
-        _vint(out, _zz1(int(w_id) - wid))
+        _vint(out, zigzag_int(int(w_id) - wid))
         wid = int(w_id)
         _vint(out, int(wtype))
         _vint(out, len(wnodes))
         ln = la = lo = 0
         for nid, lat, lon in wnodes:
-            _vint(out, _zz1(int(nid) - ln))
-            _vint(out, _zz1(int(lat) - la))
-            _vint(out, _zz1(int(lon) - lo))
+            _vint(out, zigzag_int(int(nid) - ln))
+            _vint(out, zigzag_int(int(lat) - la))
+            _vint(out, zigzag_int(int(lon) - lo))
             ln, la, lo = int(nid), int(lat), int(lon)
         _write_tags(out, tags)
     rid = 0
@@ -143,27 +127,19 @@ def encode_spatial_block_py(nodes=(), ways=(), rels=()) -> bytes:
         if first:
             out.append(0)
             first = False
-        _vint(out, _zz1(int(r_id) - rid))
+        _vint(out, zigzag_int(int(r_id) - rid))
         rid = int(r_id)
         _vint(out, int(position))
         _vint(out, int(rel_type))
         _vint(out, int(role_id))
-        _vint(out, _zz1(int(mid_lat) - rmid))
+        _vint(out, zigzag_int(int(mid_lat) - rmid))
         rmid = int(mid_lat)
-        _vint(out, _zz1(int(mid_lon) - rmid))
+        _vint(out, zigzag_int(int(mid_lon) - rmid))
         rmid = int(mid_lon)
         _vint(out, int(item_type))
         _vint(out, int(item_id))
         _write_tags(out, tags)
     return bytes(out)
-
-
-def _varint_lengths(v: np.ndarray) -> np.ndarray:
-    """Byte length of each MSB varint, by exact threshold compares."""
-    g = np.ones(v.size, dtype=np.int64)
-    for k in range(1, 10):
-        g += (v >= (np.uint64(1) << np.uint64(7 * k))).astype(np.int64)
-    return g
 
 
 def _tag_blob_list(tags_iter) -> list:
@@ -196,7 +172,7 @@ def _encode_nodes_np(ids, lats, lons, tag_blobs) -> bytes:
     flat[0::3] = zigzag_encode(delta_encode(ids))
     flat[1::3] = zigzag_encode(delta_encode(lats))
     flat[2::3] = zigzag_encode(delta_encode(lons))
-    g = _varint_lengths(flat)
+    g = varint_lengths(flat)
     rec_ends = np.cumsum(g.reshape(-1, 3).sum(axis=1))
     return _splice(encode_varints_msb_np(flat), rec_ends, tag_blobs)
 
@@ -232,7 +208,7 @@ def _encode_ways_np(ids, wtypes, cnts, wn_ids, wn_lats, wn_lons, tag_blobs) -> b
         vals[base] = chain(wn_ids)
         vals[base + 1] = chain(wn_lats)
         vals[base + 2] = chain(wn_lons)
-    g = _varint_lengths(vals)
+    g = varint_lengths(vals)
     rec_ends = np.cumsum(np.add.reduceat(g, rec_starts))
     return _splice(encode_varints_msb_np(vals), rec_ends, tag_blobs)
 
@@ -253,7 +229,7 @@ def _encode_rels_np(ids, pos_, rtypes, roles, mlats, mlons, itypes, iids, tag_bl
     vals[:, 6] = itypes.astype(np.uint64)
     vals[:, 7] = iids.astype(np.uint64)
     vals = vals.ravel()
-    g = _varint_lengths(vals)
+    g = varint_lengths(vals)
     rec_ends = np.cumsum(g.reshape(-1, 8).sum(axis=1))
     return _splice(encode_varints_msb_np(vals), rec_ends, tag_blobs)
 
@@ -443,15 +419,6 @@ def spatial_block_blobs(
     )
 
 
-def _local_dir(out_dir: str) -> str | None:
-    """Local filesystem path for ``out_dir``, or None for remote URIs."""
-    if out_dir.startswith("file://"):
-        return out_dir[len("file://"):]
-    if "://" not in out_dir:
-        return out_dir
-    return None
-
-
 def write_spatial_blocks(
     out_dir: str,
     nodes: DataFrame | None = None,
@@ -466,49 +433,14 @@ def write_spatial_blocks(
     ambiguity. Returns the block count.
 
     Tiles are self-contained, so files are written FROM THE EXECUTORS
-    (the encode task itself) -- no per-file driver funnel; the driver
-    action is a count. Local paths and every ``fsio``-resolvable URI
-    scheme (``s3://``/``gs://``/``hdfs://``/``abfs://``, plus the
-    hermetic ``mock://`` test scheme) take that executor path via
-    pyarrow-fs clients in the Python workers; only schemes Arrow
-    cannot resolve fall back to streaming the blobs through the
-    driver's JVM Hadoop FileSystem API."""
+    (the encode task itself, through ``fsio``) -- no per-file driver
+    funnel; the driver action is a count. ``out_dir`` may be any URI
+    ``fsio`` resolves (local, ``file://``, the Arrow-native object
+    stores, the hermetic ``mock://`` test scheme); others raise."""
     from osm_pbf_convert_spark.sources import fsio
 
-    import pyarrow as pa
-
-    try:
-        fsio.makedirs(out_dir)
-    except (ValueError, NotImplementedError, pa.ArrowInvalid,
-            pa.ArrowNotImplementedError):
-        # scheme Arrow cannot RESOLVE: driver Hadoop bridge below. Real
-        # IO failures (permissions, credentials) must propagate -- the
-        # JVM funnel would only re-hit them later, 10x slower and with a
-        # misleading driver-path traceback.
-        pass
-    else:
-        local = _local_dir(out_dir)
-        target = local if local is not None else out_dir
-        return spatial_block_blobs(nodes, ways, rels, z, out_dir=target).count()
-
-    df = spatial_block_blobs(nodes, ways, rels, z)
-    spark = df.sparkSession
-    jvm = spark._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    count = 0
-    for row in df.toLocalIterator():
-        for name, payload in (
-            (f"block_{row['tile']}.dat", bytes(row["data"])),
-            (f"block_{row['tile']}.dat.sections", row["sections"].encode()),
-        ):
-            path = jvm.org.apache.hadoop.fs.Path(f"{out_dir}/{name}")
-            out = path.getFileSystem(hconf).create(path, True)
-            try:
-                out.write(bytearray(payload))
-            finally:
-                out.close()
-        count += 1
-    return count
+    fsio.makedirs(out_dir)
+    return spatial_block_blobs(nodes, ways, rels, z, out_dir=out_dir).count()
 
 
 def decode_spatial_block_py(blob: bytes, sections: str | None = None):
@@ -658,49 +590,62 @@ def decode_spatial_block_py(blob: bytes, sections: str | None = None):
 
 def read_spatial_blocks(spark, block_dir: str) -> DataFrame:
     """Distributed reader over a directory of reference block files: one
-    task per block (tiles are independent by construction). Returns the
+    task per block (tiles are independent by construction), each reading
+    its file and ``.sections`` sidecar through ``fsio`` (so a ``mock://``
+    or object-store directory reads back like a local one). Returns the
     unified entity frame (kind 0/1/2 with the writer's column roles).
     Kept as the read direction that round-trips the block writer."""
-    import glob as _glob
-    import os
     import re as _re
 
-    import pandas as pd
+    import pyarrow as pa
 
-    files = sorted(_glob.glob(os.path.join(block_dir, "block_*.dat")))
+    from osm_pbf_convert_spark.sources import fsio
+    from osm_pbf_convert_spark.sources.byterange import _struct_lists, scan_ranges
+
+    files = fsio.expand_glob(block_dir.rstrip("/") + "/block_*.dat")
     if not files:
         raise FileNotFoundError(f"no block_*.dat under {block_dir}")
-    fdf = spark.createDataFrame(
-        [(int(_re.search(r"block_(-?\d+)\.dat$", f).group(1)), f) for f in files],
-        schema="tile long, path string",
-    )
+    splits = pa.table({
+        "tile": [int(_re.search(r"block_(-?\d+)\.dat$", f).group(1)) for f in files],
+        "path": files,
+    })
+    names = ["tile", "kind", "id", "v1", "v2", "v3", "v4", "v5", "v6",
+             "wnodes", "item_type", "tags"]
+    tags_t = pa.list_(pa.struct([("tag_id", pa.int32()), ("key_id", pa.int32()),
+                                 ("key", pa.string()), ("value", pa.string())]))
 
-    def decode(batches):
-        for pdf in batches:
-            for tile, path in zip(pdf["tile"], pdf["path"]):
-                sections = None
-                if os.path.exists(path + ".sections"):
-                    with open(path + ".sections") as sf:
-                        sections = sf.read().strip()
-                with open(path, "rb") as f:
-                    nds, wys, rls = decode_spatial_block_py(f.read(), sections)
-                rows = []
-                for i, la, lo, tags in nds:
-                    rows.append((int(tile), 0, i, la, lo, None, None, None, None, None, None, None, tags))
-                for i, ty, wn, tags in wys:
-                    rows.append((int(tile), 1, i, ty, None, None, None, None, None,
-                                 [{"id": a, "ilat": b, "ilon": c} for a, b, c in wn], None, None, tags))
-                for i, p_, rt, ro, mla, mlo, it, ii, tags in rls:
-                    rows.append((int(tile), 2, i, p_, rt, ro, mla, mlo, ii, None, it, None, tags))
-                yield pd.DataFrame(
-                    rows,
-                    columns=["tile", "kind", "id", "v1", "v2", "v3", "v4", "v5",
-                             "v6", "wnodes", "item_type", "pad", "tags"],
-                ).drop(columns=["pad"])
+    def decode(tile, path):
+        try:
+            with fsio.open_seekable(path + ".sections") as f:
+                sections = f.read().decode().strip()
+        except FileNotFoundError:
+            sections = None
+        with fsio.open_seekable(path) as f:
+            nds, wys, rls = decode_spatial_block_py(f.read(), sections)
+
+        def batch(kind, tags, **cols):
+            n = len(tags)
+            cols.update(tile=[tile] * n, kind=[kind] * n, tags=pa.array(tags, tags_t))
+            return pa.RecordBatch.from_arrays(
+                [pa.array(cols[c]) if c in cols else pa.nulls(n) for c in names], names=names
+            )
+
+        if nds:
+            i, la, lo, tags = zip(*nds)
+            yield batch(0, tags, id=i, v1=la, v2=lo)
+        if wys:
+            i, ty, wn, tags = zip(*wys)
+            flat = np.array([t for w in wn for t in w], dtype=np.int64).reshape(-1, 3)
+            wnodes = _struct_lists([len(w) for w in wn], id=flat[:, 0], ilat=flat[:, 1],
+                                   ilon=flat[:, 2])
+            yield batch(1, tags, id=i, v1=ty, wnodes=wnodes)
+        if rls:
+            i, p_, rt, ro, mla, mlo, it, ii, tags = zip(*rls)
+            yield batch(2, tags, id=i, v1=p_, v2=rt, v3=ro, v4=mla, v5=mlo, v6=ii, item_type=it)
 
     schema = (
         "tile long, kind int, id long, v1 long, v2 long, v3 long, v4 long, "
         "v5 long, v6 long, wnodes array<struct<id:long,ilat:long,ilon:long>>, "
         "item_type long, tags " + TAGS_SCHEMA
     )
-    return fdf.repartitionByRange(len(files), "tile").mapInPandas(decode, schema=schema)
+    return scan_ranges(spark, splits, decode, schema)

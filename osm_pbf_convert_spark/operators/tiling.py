@@ -149,10 +149,11 @@ def heat_map_bands(
     """Distributed encoder for the reference heat-map byte format: the grid
     is split into ``rows/band_rows`` horizontal bands, each band encoded to
     its exact byte slice ON AN EXECUTOR (vectorized MSB-varint, zeros
-    included). Returns (band, n_bytes, data binary); concatenating ``data``
-    in band order is byte-equal to ``export_heat_map_bytes`` of the whole
-    grid -- without ever materializing the ~0.5 GB dense dump on the
-    driver (the full-grid scale path the driver-side export is not).
+    included). Returns (band, n_bytes, data binary), range-partitioned
+    and in band order; concatenating ``data`` in band order is byte-equal
+    to ``export_heat_map_bytes`` of the whole grid -- without ever
+    materializing the ~0.5 GB dense dump on the driver (the full-grid
+    scale path the driver-side export is not).
 
     Empty bands are preserved (all-zero slices) via a range outer-join, so
     the band set is always complete.
@@ -209,7 +210,9 @@ def heat_map_bands(
         data = encode_varints_msb_np(grid.ravel())
         return pd.DataFrame({"band": [band], "n_bytes": [len(data)], "data": [data]})
 
-    return full.groupBy("band").applyInPandas(
+    # range-partitioned by band, so the grouped output comes back in
+    # band order (the sink streams it without another sort)
+    return full.repartitionByRange(n_bands, "band").groupBy("band").applyInPandas(
         encode_band, schema="band int, n_bytes long, data binary"
     )
 
@@ -234,97 +237,69 @@ def read_heat_map_file(
     not grid-sized. Total varint count is validated against rows*cols.
     Kept as the read direction that round-trips the heat-map writer.
     """
-    import os
-
-    import pandas as pd
+    import pyarrow as pa
 
     from osm_pbf_convert_spark.sources import fsio
+    from osm_pbf_convert_spark.sources.byterange import scan_ranges
 
     size = fsio.file_size(path)
-    n_splits = max(1, -(-size // split_bytes))
-    bounds = [(i * split_bytes, min((i + 1) * split_bytes, size)) for i in range(n_splits)]
-    rdf = spark.createDataFrame(bounds, schema="start long, end long")
+    starts = np.arange(0, max(size, 1), split_bytes, dtype=np.int64)
+    ends = np.minimum(starts + split_bytes, size)
 
-    def count_ends(batches):
-        for pdf in batches:
-            rows_out = []
-            for s, e in zip(pdf["start"], pdf["end"]):
-                from osm_pbf_convert_spark.sources import fsio
+    def count_ends(start, end):
+        with fsio.open_seekable(path) as f:
+            f.seek(start)
+            b = np.frombuffer(f.read(end - start), dtype=np.uint8)
+        yield pa.RecordBatch.from_pydict({"start": [start], "n_vals": [int((b < 0x80).sum())]})
 
-                with fsio.open_seekable(path) as f:
-                    f.seek(int(s))
-                    b = np.frombuffer(f.read(int(e) - int(s)), dtype=np.uint8)
-                rows_out.append((int(s), int((b < 0x80).sum())))
-            yield pd.DataFrame(rows_out, columns=["start", "n_vals"])
+    splits = pa.table({"start": starts, "end": ends})
+    counts = dict(scan_ranges(spark, splits, count_ends, "start long, n_vals long").collect())
+    n_vals = np.array([counts[s] for s in starts.tolist()], dtype=np.int64)
+    if int(n_vals.sum()) != rows * cols:
+        raise ValueError(f"{path}: {int(n_vals.sum())} varints, expected {rows * cols}")
 
-    counts = {
-        r["start"]: r["n_vals"]
-        for r in rdf.mapInPandas(count_ends, "start long, n_vals long").collect()
-    }
-    total = sum(counts.values())
-    if total != rows * cols:
-        raise ValueError(f"{path}: {total} varints, expected {rows * cols}")
-    offsets = []
-    acc = 0
-    for s, e in bounds:
-        offsets.append((s, e, acc))
-        acc += counts[s]
-    odf = spark.createDataFrame(offsets, schema="start long, end long, cell_off long")
+    def decode(start, end, cell_off):
+        back = min(start, 9)  # a uint64 varint is <= 10 bytes
+        with fsio.open_seekable(path) as f:
+            f.seek(start - back)
+            b = np.frombuffer(f.read(back + end - start), dtype=np.uint8)
+        ends = np.nonzero(b < 0x80)[0]
+        # first varint ending at/after start: may START before it --
+        # include its continuation bytes from the backread
+        first_end = int(np.searchsorted(ends, back))
+        if first_end == ends.size:
+            return  # no varint ends in this range
+        begin = 0 if first_end == 0 else int(ends[first_end - 1]) + 1
+        last = int(ends[np.searchsorted(ends, b.size) - 1])
+        vals = decode_varints_msb(b[begin:last + 1])
+        idx = cell_off + np.arange(vals.size, dtype=np.int64)
+        if sparse:
+            keep = vals != 0
+            vals, idx = vals[keep], idx[keep]
+        yield pa.RecordBatch.from_pydict({
+            "row": (idx // cols).astype(np.int32),
+            "col": (idx % cols).astype(np.int32),
+            "cnt": vals.astype(np.int64),
+        })
 
-    def decode(batches):
-        for pdf in batches:
-            for s, e, off in zip(pdf["start"], pdf["end"], pdf["cell_off"]):
-                s, e, off = int(s), int(e), int(off)
-                back = min(s, 9)  # a uint64 varint is <= 10 bytes
-                from osm_pbf_convert_spark.sources import fsio
-
-                with fsio.open_seekable(path) as f:
-                    f.seek(s - back)
-                    b = np.frombuffer(f.read(back + e - s), dtype=np.uint8)
-                ends = np.nonzero(b < 0x80)[0]
-                # first varint ending at/after s: may START before s --
-                # include its continuation bytes from the backread
-                first_end = int(np.searchsorted(ends, back))
-                if first_end == ends.size:
-                    continue  # no varint ends in this range
-                begin = 0 if first_end == 0 else int(ends[first_end - 1]) + 1
-                last = int(ends[np.searchsorted(ends, b.size) - 1])
-                vals = decode_varints_msb(b[begin:last + 1])
-                idx = off + np.arange(vals.size, dtype=np.int64)
-                if sparse:
-                    keep = vals != 0
-                    vals, idx = vals[keep], idx[keep]
-                yield pd.DataFrame({
-                    "row": (idx // cols).astype(np.int32),
-                    "col": (idx % cols).astype(np.int32),
-                    "cnt": vals.astype(np.int64),
-                })
-
-    return odf.repartitionByRange(n_splits, "start").mapInPandas(
-        decode, schema="row int, col int, cnt long"
-    )
+    offsets = pa.table({"start": starts, "end": ends, "cell_off": np.cumsum(n_vals) - n_vals})
+    return scan_ranges(spark, offsets, decode, "row int, col int, cnt long")
 
 
 def write_heat_map_file(heat_df: DataFrame, out_file: str, rows: int = 16384,
                         cols: int = 32768, band_rows: int = 512) -> int:
     """Assemble the reference ``.heat.map`` byte stream: bands encode in
     parallel on executors; the driver only streams the (already encoded)
-    slices to the target in order. ``out_file`` goes through the Hadoop
-    FileSystem API, so object-store / HDFS URIs (s3a://, hdfs://) work the
-    same as local paths -- consistent with checkpoint._exists. Returns
-    total bytes written."""
-    bands = heat_map_bands(heat_df, rows, cols, band_rows).orderBy("band")
-    spark = heat_df.sparkSession
-    jvm = spark._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(out_file)
-    fs = path.getFileSystem(hconf)
-    out = fs.create(path, True)
+    slices, in band order, into an ``fsio`` output
+    (``byterange.sink_segments``: local paths and Arrow-native
+    object-store URIs). Returns total bytes written."""
+    from osm_pbf_convert_spark.sources.byterange import sink_segments
+
     total = 0
-    try:
-        for r in bands.toLocalIterator():
-            out.write(bytearray(r["data"]))
+    with sink_segments(heat_map_bands(heat_df, rows, cols, band_rows), "band", out_file) as (
+        bands, (out,)
+    ):
+        for r in bands:
+            out.write(r["data"])
             total += len(r["data"])
-    finally:
-        out.close()
     return total

@@ -19,13 +19,13 @@ Format (varints MSB-first 7-bit, ``Write7BitEncodedInt``):
 Unlike the node store there are NO block-boundary resets: the only
 cross-chunk state is the way-id delta chain and the running byte offset,
 both O(1) per chunk. Executors therefore encode EVERYTHING (data records,
-info id varints, info tails) vectorized via mapInPandas; the driver
+info id varints, info tails) vectorized via mapInArrow; the driver
 re-encodes one id-delta varint per partition seam, vectorized-encodes the
 absolute-offset varints per chunk (numpy, no per-way Python), splices the
 three info piece streams with a vectorized scatter, and streams both
-files through the Hadoop FileSystem API. The engine's query-path ways
-table remains Parquet (CLI ``ways-file``); this sink is the byte-parity
-bridge, shaped like ``node_store.write_nodes_index_file``.
+files into ``fsio`` outputs (``byterange.sink_segments``). The engine's
+query-path ways table remains Parquet (CLI ``ways-file``); this sink is
+the byte-parity bridge, shaped like ``node_store.write_nodes_index_file``.
 """
 
 from __future__ import annotations
@@ -36,23 +36,14 @@ import numpy as np
 
 from pyspark.sql import DataFrame
 
-from osm_pbf_convert_spark.codecs import encode_varints_msb, encode_varints_msb_np
-
-
-def _zz_np(v: np.ndarray) -> np.ndarray:
-    v = np.asarray(v, dtype=np.int64)
-    return ((v << np.int64(1)) ^ (v >> np.int64(63))).astype(np.uint64)
-
-
-def _varint_lens(vals: np.ndarray) -> np.ndarray:
-    g = np.ones(vals.size, dtype=np.int64)
-    for k in range(1, 10):
-        g += (vals >= (np.uint64(1) << np.uint64(7 * k))).astype(np.int64)
-    return g
-
-
-def _zz1(v: int) -> int:
-    return ((v << 1) ^ (v >> 63)) & 0xFFFFFFFFFFFFFFFF
+from osm_pbf_convert_spark.codecs import (
+    encode_varints_msb,
+    encode_varints_msb_np,
+    varint_lengths,
+    zigzag_encode,
+    zigzag_int,
+)
+from osm_pbf_convert_spark.sources.byterange import sink_segments
 
 
 def encode_ways_file_py(ways):
@@ -73,7 +64,9 @@ def encode_ways_file_py(ways):
         ln = la = lo = 0
         for nid, lat, lon in nodes:
             nid, lat, lon = int(nid), int(lat), int(lon)
-            dat += encode_varints_msb([_zz1(nid - ln), _zz1(lat - la), _zz1(lon - lo)])
+            dat += encode_varints_msb(
+                [zigzag_int(nid - ln), zigzag_int(lat - la), zigzag_int(lon - lo)]
+            )
             ln, la, lo = nid, lat, lon
         lats = [int(n[1]) for n in nodes]
         lons = [int(n[2]) for n in nodes]
@@ -86,8 +79,8 @@ def encode_ways_file_py(ways):
         info += int(min_lat).to_bytes(4, "little", signed=True)
         info += int(min_lon).to_bytes(4, "little", signed=True)
         info += encode_varints_msb(
-            [_zz1(mid_lat - min_lat), _zz1(mid_lon - min_lon),
-             _zz1(max_lat - mid_lat), _zz1(max_lon - mid_lon)]
+            [zigzag_int(mid_lat - min_lat), zigzag_int(mid_lon - min_lon),
+             zigzag_int(max_lat - mid_lat), zigzag_int(max_lon - mid_lon)]
         )
     return bytes(dat), bytes(info)
 
@@ -135,15 +128,15 @@ def way_segments(ways_resolved: DataFrame, num_chunks: int | None = None) -> Dat
     varints and info tails, and the way ids. The first way of each
     PARTITION is delta-encoded against 0 (``fresh``); the driver patches
     that one varint against its running chain."""
+    import pyarrow as pa
     from pyspark.sql import functions as F
-    import pandas as pd
 
     spark = ways_resolved.sparkSession
     n = num_chunks or spark.sparkContext.defaultParallelism
     df = (
         ways_resolved.select(
             F.col("way_id").cast("long").alias("id"),
-            F.col("nodes"),
+            F.col("nodes").cast("array<struct<id:long,ilat:long,ilon:long>>"),
             F.col("mid_ilat").cast("long"), F.col("mid_ilon").cast("long"),
             F.col("min_ilat").cast("long"), F.col("max_ilat").cast("long"),
             F.col("min_ilon").cast("long"), F.col("max_ilon").cast("long"),
@@ -152,25 +145,18 @@ def way_segments(ways_resolved: DataFrame, num_chunks: int | None = None) -> Dat
         .sortWithinPartitions("id")
     )
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def encode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         prev_id = 0
         fresh = True
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            ids = pdf["id"].to_numpy(np.int64)
-            counts = np.array([len(v) for v in pdf["nodes"]], dtype=np.int64)
-            # node columns concatenated across the batch, way boundaries
-            # from counts (struct rows arrive as dicts via Arrow)
-            nid = np.fromiter(
-                (nd["id"] for v in pdf["nodes"] for nd in v), np.int64, counts.sum()
-            )
-            nlat = np.fromiter(
-                (nd["ilat"] for v in pdf["nodes"] for nd in v), np.int64, counts.sum()
-            )
-            nlon = np.fromiter(
-                (nd["ilon"] for v in pdf["nodes"] for nd in v), np.int64, counts.sum()
-            )
+            ids = batch.column("id").to_numpy()
+            # node columns concatenated across the batch (Arrow list
+            # values, no per-node Python), way boundaries from counts
+            nodes = batch.column("nodes")
+            counts = nodes.value_lengths().to_numpy().astype(np.int64)
+            nid, nlat, nlon = (a.to_numpy() for a in nodes.flatten().flatten())
             starts = np.zeros(ids.size, dtype=np.int64)
             np.cumsum(counts[:-1], out=starts[1:])
             # per-way-reset deltas: diff, then way-start entries = raw value
@@ -193,29 +179,27 @@ def way_segments(ways_resolved: DataFrame, num_chunks: int | None = None) -> Dat
             node_rows = np.arange(int(counts.sum()), dtype=np.int64)
             way_of_node = np.repeat(np.arange(ids.size, dtype=np.int64), counts)
             node_base = node_rows * 3 + 2 * (way_of_node + 1)
-            flat[node_base] = _zz_np(deltas(nid))
-            flat[node_base + 1] = _zz_np(deltas(nlat))
-            flat[node_base + 2] = _zz_np(deltas(nlon))
+            flat[node_base] = zigzag_encode(deltas(nid))
+            flat[node_base + 1] = zigzag_encode(deltas(nlat))
+            flat[node_base + 2] = zigzag_encode(deltas(nlon))
             blob = encode_varints_msb_np(flat)
-            vlens = _varint_lens(flat)
+            vlens = varint_lengths(flat)
             way_val_starts = hdr_pos  # first value index of each way
             way_lens = np.add.reduceat(vlens, way_val_starts)
             # info pieces: id varints; fixed+zigzag tails
             id_blob = encode_varints_msb_np(ids.astype(np.uint64))
-            id_lens = _varint_lens(ids.astype(np.uint64))
-            mid_lat = pdf["mid_ilat"].to_numpy(np.int64)
-            mid_lon = pdf["mid_ilon"].to_numpy(np.int64)
-            min_lat = pdf["min_ilat"].to_numpy(np.int64)
-            max_lat = pdf["max_ilat"].to_numpy(np.int64)
-            min_lon = pdf["min_ilon"].to_numpy(np.int64)
-            max_lon = pdf["max_ilon"].to_numpy(np.int64)
+            id_lens = varint_lengths(ids.astype(np.uint64))
+            mid_lat, mid_lon, min_lat, max_lat, min_lon, max_lon = (
+                batch.column(c).to_numpy()
+                for c in ("mid_ilat", "mid_ilon", "min_ilat", "max_ilat", "min_ilon", "max_ilon")
+            )
             zz_tail = np.empty(ids.size * 4, dtype=np.uint64)
-            zz_tail[0::4] = _zz_np(mid_lat - min_lat)
-            zz_tail[1::4] = _zz_np(mid_lon - min_lon)
-            zz_tail[2::4] = _zz_np(max_lat - mid_lat)
-            zz_tail[3::4] = _zz_np(max_lon - mid_lon)
+            zz_tail[0::4] = zigzag_encode(mid_lat - min_lat)
+            zz_tail[1::4] = zigzag_encode(mid_lon - min_lon)
+            zz_tail[2::4] = zigzag_encode(max_lat - mid_lat)
+            zz_tail[3::4] = zigzag_encode(max_lon - mid_lon)
             zz_blob = np.frombuffer(encode_varints_msb_np(zz_tail), dtype=np.uint8)
-            zz_lens4 = _varint_lens(zz_tail).reshape(-1, 4)
+            zz_lens4 = varint_lengths(zz_tail).reshape(-1, 4)
             zz_lens = zz_lens4.sum(axis=1)
             # fixed part: minLat/minLon int32 LE per way
             fixed = np.empty((ids.size, 8), dtype=np.uint8)
@@ -224,8 +208,9 @@ def way_segments(ways_resolved: DataFrame, num_chunks: int | None = None) -> Dat
             tail_blob, tail_lens = _interleave(
                 [(fixed.ravel(), np.full(ids.size, 8, dtype=np.int64)), (zz_blob, zz_lens)]
             )
-            yield pd.DataFrame(
+            yield pa.RecordBatch.from_pydict(
                 {
+                    "first_id": [int(ids[0])],
                     "ids": [ids],
                     "way_lens": [way_lens.astype(np.int64)],
                     "blob": [blob],
@@ -237,9 +222,9 @@ def way_segments(ways_resolved: DataFrame, num_chunks: int | None = None) -> Dat
             prev_id = int(ids[-1])
             fresh = False
 
-    return df.mapInPandas(
+    return df.mapInArrow(
         encode,
-        schema="ids array<long>, way_lens array<long>, blob binary, "
+        schema="first_id long, ids array<long>, way_lens array<long>, blob binary, "
                "id_blob binary, id_lens array<int>, tail_blob binary, "
                "tail_lens array<int>, fresh boolean",
     )
@@ -274,23 +259,15 @@ def write_ways_file(
     the reference writer (golden-tested vs ``encode_ways_file_py``).
     Driver work per chunk is O(chunk) numpy: patch one seam varint,
     vector-encode the absolute data offsets, scatter-splice the info
-    pieces, stream via the Hadoop FileSystem API."""
-    spark = ways_resolved.sparkSession
-    jvm = spark._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-
-    def _create(path_str):
-        path = jvm.org.apache.hadoop.fs.Path(path_str)
-        return path.getFileSystem(hconf).create(path, True)
-
-    dat_out = _create(out_file)
-    idx_out = _create(out_file + ".idx")
+    pieces, stream into ``fsio`` outputs."""
     base = 0
     prev_id = 0
     idx_total = 0
     seen = False
-    try:
-        for row in way_segments(ways_resolved, num_chunks).toLocalIterator():
+    with sink_segments(
+        way_segments(ways_resolved, num_chunks), "first_id", out_file, out_file + ".idx"
+    ) as (rows, (dat_out, idx_out)):
+        for row in rows:
             ids = np.asarray(row["ids"], dtype=np.int64)
             way_lens = np.asarray(row["way_lens"], dtype=np.int64)
             blob = bytes(row["blob"])
@@ -308,7 +285,7 @@ def write_ways_file(
             np.cumsum(way_lens[:-1], out=local[1:])
             offs = (base + local).astype(np.uint64)
             off_blob = np.frombuffer(encode_varints_msb_np(offs), dtype=np.uint8)
-            off_lens = _varint_lens(offs)
+            off_lens = varint_lengths(offs)
             info, _ = _interleave(
                 [
                     (np.frombuffer(bytes(row["id_blob"]), dtype=np.uint8),
@@ -318,12 +295,9 @@ def write_ways_file(
                      np.asarray(row["tail_lens"], dtype=np.int64)),
                 ]
             )
-            dat_out.write(bytearray(blob))
-            idx_out.write(bytearray(info.tobytes()))
+            dat_out.write(blob)
+            idx_out.write(info)
             base += len(blob)
             idx_total += info.size
             prev_id = int(ids[-1])
-    finally:
-        dat_out.close()
-        idx_out.close()
     return base, idx_total

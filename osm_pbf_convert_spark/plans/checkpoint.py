@@ -33,20 +33,16 @@ from __future__ import annotations
 
 import time
 
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from osm_pbf_convert_spark.sources.byterange import _local_frame
 
 CHECKPOINT_SCHEMA = (
     "job_id string, partition_id bigint, n_rows bigint, "
     "metric_name string, metric_value double, attempt bigint, committed_at double"
 )
 _COLUMNS = [f.split()[0] for f in CHECKPOINT_SCHEMA.split(", ")]
-
-
-def _local_frame(spark: SparkSession, schema: str, **columns: list) -> DataFrame:
-    """Driver-built Arrow frame: a local relation (a Python-list frame runs a Python task)."""
-    return spark.createDataFrame(pa.table(columns), schema=schema)
 
 
 class CheckpointTable:

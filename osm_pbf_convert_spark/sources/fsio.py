@@ -23,9 +23,10 @@ Scheme routing:
   network. Production correctness of the generic path is therefore
   test-covered even though the sandbox can't reach a real bucket;
 - anything else -> ``pyarrow.fs.FileSystem.from_uri`` (``s3://``,
-  ``gs://``, ``hdfs://``, ``abfs://``, ...). Unknown schemes raise
-  ``ValueError`` from Arrow, which callers may catch to fall back to
-  the driver-side JVM Hadoop bridge.
+  ``gs://``, ``hdfs://``, ``abfs://``, ...). Unknown schemes (e.g. the
+  Hadoop-only ``s3a://``) raise ``ArrowInvalid`` (a ``ValueError``):
+  every reader and byte sink goes through this module, so they accept
+  the same URIs and have no JVM fallback.
 """
 
 from __future__ import annotations

@@ -49,11 +49,13 @@ path hermetically in tests (see ``fsio.py``).
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
+
+from osm_pbf_convert_spark.sources import fsio
+from osm_pbf_convert_spark.sources.byterange import scan_ranges, sink_segments
 
 # OSM PBF spec hard caps (fileformat.proto): BlobHeader <= 64 KiB,
 # Blob <= 32 MiB. The reference trusts them implicitly (int32 reads).
@@ -66,8 +68,6 @@ def _open_for_split(path: str):
     """Seekable input for one scan task: plain ``open`` on local paths
     (zero extra layers on the hot path), ``fsio`` ranged-read handle on
     any URI scheme."""
-    from osm_pbf_convert_spark.sources import fsio
-
     if fsio.is_local(path):
         return open(fsio.local_path(path), "rb")
     return fsio.open_seekable(path)
@@ -250,14 +250,8 @@ def pbf_blob_frames(
     ``path`` may be one file, a glob (``extracts/*.osm.pbf``), or a
     list of either -- region extract SETS read as one DataFrame, each
     file split independently (per-file lineage keeps them apart)."""
-    import glob as _glob
-
-    import pandas as pd
-
     if on_error not in ("raise", "resync"):
         raise ValueError("on_error must be 'raise' or 'resync'")
-    from osm_pbf_convert_spark.sources import fsio
-
     patterns = [path] if isinstance(path, str) else list(path)
     files = []
     for pat in patterns:
@@ -268,38 +262,30 @@ def pbf_blob_frames(
     bounds = []
     for uri in files:
         size = fsio.file_size(uri)
-        n = max(1, -(-size // split_bytes))
         bounds.extend(
-            (uri, i * split_bytes, min((i + 1) * split_bytes, size), size)
-            for i in range(n)
+            {"path": uri, "start": s, "end": min(s + split_bytes, size), "file_size": size}
+            for s in range(0, max(size, 1), split_bytes)
         )
-    n_splits = len(bounds)
-    sdf = spark.createDataFrame(
-        bounds, schema="path string, start long, end long, file_size long"
-    )
+    splits = pa.Table.from_pylist(bounds)
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for p, s, e, fsize in zip(
-                pdf["path"], pdf["start"], pdf["end"], pdf["file_size"]
-            ):
-                rows = []
-                with _open_for_split(p) as f:
-                    for off, btype, frame in _walk_split(
-                        f, int(s), int(e), int(fsize), on_error, bad_bytes
-                    ):
-                        rows.append((f"{p}#{off}", p, off, btype, len(frame), frame))
-                if rows:
-                    yield pd.DataFrame(
-                        rows,
-                        columns=["url", "path", "offset", "blob_type",
-                                 "n_bytes", "payload"],
-                    )
+    def decode(path, start, end, file_size):
+        with _open_for_split(path) as f:
+            frames = list(_walk_split(f, start, end, file_size, on_error, bad_bytes))
+        if frames:
+            offs, types, payloads = zip(*frames)
+            yield pa.RecordBatch.from_pydict({
+                "url": [f"{path}#{off}" for off in offs],
+                "path": [path] * len(offs),
+                "offset": offs,
+                "blob_type": types,
+                "n_bytes": [len(p) for p in payloads],
+                "payload": payloads,
+            })
 
-    return sdf.repartitionByRange(n_splits, "path", "start").mapInPandas(
-        scan,
-        schema="url string, path string, offset long, blob_type string, "
-               "n_bytes long, payload binary",
+    return scan_ranges(
+        spark, splits, decode,
+        "url string, path string, offset long, blob_type string, "
+        "n_bytes long, payload binary",
     )
 
 
@@ -347,13 +333,6 @@ def read_pbf_entities(spark, path, split_bytes: int = 64 * 1024 * 1024, **kw) ->
 # ---------------------------------------------------------------------------
 
 
-def _as_dict(m) -> dict:
-    """Arrow map columns arrive as dicts OR lists of (k, v) tuples."""
-    if m is None:
-        return {}
-    return m if isinstance(m, dict) else dict(m)
-
-
 def pbf_block_frames(
     nodes: DataFrame | None = None,
     ways: DataFrame | None = None,
@@ -377,7 +356,6 @@ def pbf_block_frames(
     delta chains reset per block), so encoding is embarrassingly
     parallel.
     """
-    import pandas as pd
     from pyspark.sql import functions as F
     from pyspark import TaskContext
 
@@ -459,26 +437,26 @@ def pbf_block_frames(
             return out
 
         def emit(rows):
-            import pandas as _pd
+            return pa.RecordBatch.from_pydict({
+                "seq": [s for s, _ in rows],
+                "n_bytes": [len(fr) for _, fr in rows],
+                "frame": [fr for _, fr in rows],
+            })
 
-            return _pd.DataFrame(
-                [(s, len(fr), fr) for s, fr in rows],
-                columns=["seq", "n_bytes", "frame"],
-            )
-
-        for pdf in batches:
+        for batch in batches:
             out_rows = []
-            for row in pdf.itertuples(index=False):
-                kind = int(row.kind)
+            c = batch.to_pydict()
+            for kind, id_, lat, lon, refs, members, tags in zip(
+                c["kind"], c["id"], c["lat"], c["lon"], c["refs"], c["members"], c["tags"]
+            ):
+                # Arrow maps arrive as lists of (key, value) pairs
+                tags = dict(tags or ())
                 if kind == 0:
-                    vals = (0, int(row.id), float(row.lat), float(row.lon),
-                            _as_dict(row.tags))
+                    vals = (0, id_, lat, lon, tags)
                 elif kind == 1:
-                    refs = [] if row.refs is None else [int(x) for x in row.refs]
-                    vals = (1, int(row.id), refs, None, _as_dict(row.tags))
+                    vals = (1, id_, refs or [], None, tags)
                 else:
-                    mem = [] if row.members is None else list(row.members)
-                    vals = (2, int(row.id), mem, None, _as_dict(row.tags))
+                    vals = (2, id_, members or [], None, tags)
                 if pend and (pend[0][0] != kind or len(pend) >= entities_per_block):
                     out_rows.append(flush())
                 pend.append(vals)
@@ -490,7 +468,7 @@ def pbf_block_frames(
         if last is not None:
             yield emit([last])
 
-    return df.mapInPandas(encode, schema="seq long, n_bytes long, frame binary")
+    return df.mapInArrow(encode, schema="seq long, n_bytes long, frame binary")
 
 
 def write_pbf_file(
@@ -517,14 +495,11 @@ def write_pbf_file(
         num_chunks,
     )
     header_block = field_bytes(4, b"OsmSchema-V0.6") + field_bytes(4, b"DenseNodes")
-    from osm_pbf_convert_spark.sources import fsio
-
-    total = 0
-    with fsio.open_output(out_path) as f:
-        hdr = frame_blob(header_block, blob_type="OSMHeader", compress=False)
+    hdr = frame_blob(header_block, blob_type="OSMHeader", compress=False)
+    total = len(hdr)
+    with sink_segments(frames, "seq", out_path) as (rows, (f,)):
         f.write(hdr)
-        total += len(hdr)
-        for row in frames.orderBy("seq").toLocalIterator():
-            f.write(bytes(row["frame"]))
+        for row in rows:
+            f.write(row["frame"])
             total += len(row["frame"])
     return total

@@ -32,10 +32,13 @@ pure-Python writer ports.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 
 from osm_pbf_convert_spark.codecs import decode_varints_msb, zigzag_decode
+from osm_pbf_convert_spark.sources import fsio
+from osm_pbf_convert_spark.sources.byterange import _struct_lists, scan_ranges
 
 BLOCK_SIZE = 4096
 
@@ -74,41 +77,56 @@ def read_nodes_index(
     delta state, exactly mirroring the writer's block resets. IO via
     ``fsio`` -- object-store URIs work.
     Kept as the read direction that round-trips the ``.nodes.dat`` writer."""
-    from osm_pbf_convert_spark.sources import fsio
-
     dat_path = f"{prefix}.nodes.dat"
     with fsio.open_seekable(f"{prefix}.idx") as f:
         starts, _ = _parse_nodes_idx(f.read(), block_size)
     size = fsio.file_size(dat_path)
-    bounds = [0] + [s for s in starts if s < size] + [size]
-    ranges = [
-        (bounds[i], bounds[i + 1]) for i in range(len(bounds) - 1)
-        if bounds[i + 1] > bounds[i]
-    ]
-    rdf = spark.createDataFrame(ranges, schema="start long, end long")
+    bounds = np.array([0] + [s for s in starts if s < size] + [size], dtype=np.int64)
+    keep = bounds[1:] > bounds[:-1]
+    splits = pa.table({"start": bounds[:-1][keep], "end": bounds[1:][keep]})
 
-    def decode(batches):
-        import pandas as pd
+    def decode(start, end):
+        with fsio.open_seekable(dat_path) as f:
+            f.seek(start)
+            buf = f.read(end - start)
+        vals = decode_varints_msb(buf)
+        if vals.size % 3:
+            raise ValueError("corrupt nodes.dat range (non-triplet varints)")
+        trip = vals.reshape(-1, 3)
+        yield pa.RecordBatch.from_pydict({
+            "id": np.cumsum(trip[:, 0].astype(np.int64)),
+            "ilat": np.cumsum(zigzag_decode(trip[:, 1])),
+            "ilon": np.cumsum(zigzag_decode(trip[:, 2])),
+        })
 
-        for pdf in batches:
-            for start, end in zip(pdf["start"], pdf["end"]):
-                from osm_pbf_convert_spark.sources import fsio
+    return scan_ranges(spark, splits, decode, "id long, ilat long, ilon long")
 
-                with fsio.open_seekable(dat_path) as f:
-                    f.seek(int(start))
-                    buf = f.read(int(end) - int(start))
-                vals = decode_varints_msb(buf)
-                if vals.size % 3:
-                    raise ValueError("corrupt nodes.dat range (non-triplet varints)")
-                trip = vals.reshape(-1, 3)
-                ids = np.cumsum(trip[:, 0].astype(np.int64))
-                lats = np.cumsum(zigzag_decode(trip[:, 1]))
-                lons = np.cumsum(zigzag_decode(trip[:, 2]))
-                yield pd.DataFrame({"id": ids, "ilat": lats, "ilon": lons})
 
-    return rdf.repartitionByRange(len(ranges), "start").mapInPandas(
-        decode, schema="id long, ilat long, ilon long"
-    )
+def _record_runs(rec_starts: list, rec_ids: list, size: int, per_split: int) -> pa.Table:
+    """Split table over runs of ``per_split`` self-contained records:
+    (start, end, first_id, n) per run, byte ends from the next run's
+    first record (or EOF)."""
+    first = np.arange(0, len(rec_starts), per_split, dtype=np.int64)
+    last = np.minimum(first + per_split, len(rec_starts))
+    bounds = np.append(np.asarray(rec_starts, dtype=np.int64), size)
+    return pa.table({
+        "start": bounds[first],
+        "end": bounds[last],
+        "first_id": np.asarray(rec_ids, dtype=np.int64)[first],
+        "n": last - first,
+    })
+
+
+def _segcum(d: np.ndarray, cnts: np.ndarray) -> np.ndarray:
+    """Cumulative sum that restarts at every segment of ``cnts`` (the
+    per-way / per-relation delta chains)."""
+    if not d.size:
+        return d
+    c = np.cumsum(d)
+    first = np.zeros(cnts.size, dtype=np.int64)
+    np.cumsum(cnts[:-1], out=first[1:])
+    fi = np.clip(first, 0, max(d.size - 1, 0))
+    return c - np.repeat(c[fi] - d[fi], cnts)
 
 
 def _parse_ways_info(info: bytes):
@@ -147,79 +165,43 @@ def read_ways_file(
     byte range and re-seeds the id chain from the split's first info
     id. IO via ``fsio`` -- object-store URIs work.
     Kept as the read direction that round-trips the ways writer."""
-    from osm_pbf_convert_spark.sources import fsio
-
     with fsio.open_seekable(path + ".idx") as f:
         ids, offs = _parse_ways_info(f.read())
-    size = fsio.file_size(path)
-    splits = []
-    for i in range(0, len(ids), ways_per_split):
-        j = min(i + ways_per_split, len(ids))
-        end = offs[j] if j < len(ids) else size
-        splits.append((offs[i], end, ids[i], j - i))
-    rdf = spark.createDataFrame(
-        splits, schema="start long, end long, first_id long, n_ways long"
-    )
+    splits = _record_runs(offs, ids, fsio.file_size(path), ways_per_split)
 
-    def decode(batches):
-        import pandas as pd
+    def decode(start, end, first_id, n):
+        with fsio.open_seekable(path) as f:
+            f.seek(start)
+            vals = decode_varints_msb(f.read(end - start))
+        # hop walk (2 value touches per way), then vectorized
+        # extraction: triplet chains reset per way -> segmented
+        # cumsum over the flat node stream
+        starts = np.empty(n, dtype=np.int64)
+        cnts = np.empty(n, dtype=np.int64)
+        p = 0
+        for r in range(n):
+            starts[r] = p
+            c = int(vals[p + 1])
+            cnts[r] = c
+            p += 2 + 3 * c
+        if p != vals.size:
+            raise ValueError("corrupt ways range (trailing varints)")
+        dids = vals[starts].astype(np.int64)
+        base = np.repeat(starts + 2, cnts) + 3 * (
+            np.arange(int(cnts.sum()), dtype=np.int64) - np.repeat(np.cumsum(cnts) - cnts, cnts)
+        )
+        yield pa.RecordBatch.from_pydict({
+            "id": np.cumsum(dids) - dids[0] + first_id,
+            "nodes": _struct_lists(
+                cnts,
+                id=_segcum(zigzag_decode(vals[base]), cnts),
+                ilat=_segcum(zigzag_decode(vals[base + 1]), cnts),
+                ilon=_segcum(zigzag_decode(vals[base + 2]), cnts),
+            ),
+        })
 
-        for pdf in batches:
-            out_ids, out_nodes = [], []
-            for start, end, first_id, n_ways in zip(
-                pdf["start"], pdf["end"], pdf["first_id"], pdf["n_ways"]
-            ):
-                from osm_pbf_convert_spark.sources import fsio
-
-                with fsio.open_seekable(path) as f:
-                    f.seek(int(start))
-                    buf = f.read(int(end) - int(start))
-                vals = decode_varints_msb(buf)
-                n_ways = int(n_ways)
-                # hop walk (2 value touches per way), then vectorized
-                # extraction: triplet chains reset per way -> segmented
-                # cumsum over the flat node stream
-                starts = np.empty(n_ways, dtype=np.int64)
-                cnts = np.empty(n_ways, dtype=np.int64)
-                p = 0
-                for r in range(n_ways):
-                    starts[r] = p
-                    c = int(vals[p + 1])
-                    cnts[r] = c
-                    p += 2 + 3 * c
-                if p != vals.size:
-                    raise ValueError("corrupt ways range (trailing varints)")
-                dids = vals[starts].astype(np.int64)
-                wids = np.cumsum(dids) - dids[0] + int(first_id)
-                total = int(cnts.sum())
-                first_n = np.zeros(n_ways, dtype=np.int64)
-                np.cumsum(cnts[:-1], out=first_n[1:])
-                r_of = np.repeat(np.arange(n_ways), cnts)
-                i_of = np.arange(total, dtype=np.int64) - np.repeat(first_n, cnts)
-                base = (starts + 2)[r_of] + 3 * i_of
-
-                def segcum(d):
-                    c = np.cumsum(d)
-                    fi = np.clip(first_n, 0, max(total - 1, 0))
-                    return c - np.repeat(c[fi] - d[fi], cnts)
-
-                nid = segcum(zigzag_decode(vals[base]))
-                nla = segcum(zigzag_decode(vals[base + 1]))
-                nlo = segcum(zigzag_decode(vals[base + 2]))
-                out_ids.extend(wids.tolist())
-                cursor = 0
-                for c in cnts.tolist():
-                    out_nodes.append(
-                        [
-                            {"id": int(nid[k]), "ilat": int(nla[k]), "ilon": int(nlo[k])}
-                            for k in range(cursor, cursor + c)
-                        ]
-                    )
-                    cursor += c
-            yield pd.DataFrame({"id": out_ids, "nodes": out_nodes})
-
-    return rdf.repartitionByRange(len(splits), "start").mapInPandas(
-        decode, schema="id long, nodes array<struct<id:long,ilat:long,ilon:long>>"
+    return scan_ranges(
+        spark, splits, decode, "id long, nodes array<struct<id:long,ilat:long,ilon:long>>"
     )
 
 
@@ -265,8 +247,6 @@ def _skim_rels_boundaries(path: str, file_size: int, window_bytes: int):
     Record shape (hop walk): [dId, typeId, zz(minLat), zz(minLon),
     latSize, lonSize, cnt, cnt x 5 member values], all MSB varints.
     """
-    from osm_pbf_convert_spark.sources import fsio
-
     rec_starts: list[int] = []
     rec_ids: list[int] = []
     last_id = 0
@@ -348,95 +328,52 @@ def read_rels_file(
     and object-store URIs both work.
     Kept as the read direction that round-trips the ``.rels`` writer.
     """
-    from osm_pbf_convert_spark.sources import fsio
-
     with fsio.open_seekable(path + ".strs") as f:
-        roles = _parse_rels_strings(f.read())
+        role_arr = pa.array(_parse_rels_strings(f.read()), pa.string())
 
     file_size = fsio.file_size(path)
     rec_starts, rec_ids = _skim_rels_boundaries(path, file_size, skim_window_bytes)
-    splits = []  # (byte_start, byte_end, first_id, n_rels)
-    for i in range(0, len(rec_starts), rels_per_split):
-        j = min(i + rels_per_split, len(rec_starts))
-        be = rec_starts[j] if j < len(rec_starts) else file_size
-        splits.append((rec_starts[i], be, rec_ids[i], j - i))
-    if not splits:
-        return spark.createDataFrame(
-            [], schema="rel_id long, min_ilat long, min_ilon long, "
-                       "max_ilat long, max_ilon long, members array<struct<"
-                       "member_type:int,ref:long,role:string,mid_ilat:long,mid_ilon:long>>"
+    splits = _record_runs(rec_starts, rec_ids, file_size, rels_per_split)
+
+    def decode(start, end, first_id, n):
+        with fsio.open_seekable(path) as f:
+            f.seek(start)
+            vals = decode_varints_msb(f.read(end - start))
+        starts = np.empty(n, dtype=np.int64)
+        cnts = np.empty(n, dtype=np.int64)
+        p = 0
+        for r in range(n):
+            starts[r] = p
+            c = int(vals[p + 6])
+            cnts[r] = c
+            p += 7 + 5 * c
+        if p != vals.size:
+            raise ValueError("corrupt .rels range (trailing varints)")
+        dids = vals[starts].astype(np.int64)
+        min_lat = zigzag_decode(vals[starts + 2])
+        min_lon = zigzag_decode(vals[starts + 3])
+        base = np.repeat(starts + 7, cnts) + 5 * (
+            np.arange(int(cnts.sum()), dtype=np.int64) - np.repeat(np.cumsum(cnts) - cnts, cnts)
         )
-    rdf = spark.createDataFrame(
-        splits, schema="start long, end long, first_id long, n_rels long"
-    )
-    role_arr = np.asarray(roles, dtype=object)
+        yield pa.RecordBatch.from_pydict({
+            "rel_id": np.cumsum(dids) - dids[0] + first_id,
+            "min_ilat": min_lat,
+            "min_ilon": min_lon,
+            "max_ilat": min_lat + vals[starts + 4].astype(np.int64),
+            "max_ilon": min_lon + vals[starts + 5].astype(np.int64),
+            "members": _struct_lists(
+                cnts,
+                member_type=vals[base].astype(np.int32),
+                ref=_segcum(zigzag_decode(vals[base + 1]), cnts),
+                role=role_arr.take(pa.array(vals[base + 2].astype(np.int64))),
+                mid_ilat=_segcum(zigzag_decode(vals[base + 3]), cnts),
+                mid_ilon=_segcum(zigzag_decode(vals[base + 4]), cnts),
+            ),
+        })
 
-    def decode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            for start, end, first_id, n_rels in zip(
-                pdf["start"], pdf["end"], pdf["first_id"], pdf["n_rels"]
-            ):
-                from osm_pbf_convert_spark.sources import fsio
-
-                with fsio.open_seekable(path) as f:
-                    f.seek(int(start))
-                    vals = decode_varints_msb(f.read(int(end) - int(start)))
-                n_rels = int(n_rels)
-                starts = np.empty(n_rels, dtype=np.int64)
-                cnts = np.empty(n_rels, dtype=np.int64)
-                p = 0
-                for r in range(n_rels):
-                    starts[r] = p
-                    c = int(vals[p + 6])
-                    cnts[r] = c
-                    p += 7 + 5 * c
-                if p != vals.size:
-                    raise ValueError("corrupt .rels range (trailing varints)")
-                dids = vals[starts].astype(np.int64)
-                rel_ids = np.cumsum(dids) - dids[0] + int(first_id)
-                min_lat = zigzag_decode(vals[starts + 2])
-                min_lon = zigzag_decode(vals[starts + 3])
-                max_lat = min_lat + vals[starts + 4].astype(np.int64)
-                max_lon = min_lon + vals[starts + 5].astype(np.int64)
-                total_m = int(cnts.sum())
-                first_m = np.zeros(n_rels, dtype=np.int64)
-                np.cumsum(cnts[:-1], out=first_m[1:])
-                r_of = np.repeat(np.arange(n_rels), cnts)
-                i_of = np.arange(total_m, dtype=np.int64) - np.repeat(first_m, cnts)
-                base = (starts + 7)[r_of] + 5 * i_of
-                mtypes = vals[base].astype(np.int64)
-                role_ids = vals[base + 2].astype(np.int64)
-
-                def segcum(d):
-                    # per-relation chain reset: segmented cumsum
-                    c = np.cumsum(d)
-                    fi = np.clip(first_m, 0, max(total_m - 1, 0))
-                    return c - np.repeat(c[fi] - d[fi], cnts)
-
-                mids = segcum(zigzag_decode(vals[base + 1]))
-                mlats = segcum(zigzag_decode(vals[base + 3]))
-                mlons = segcum(zigzag_decode(vals[base + 4]))
-                mroles = role_arr[role_ids] if total_m else np.empty(0, object)
-                members = []
-                cursor = 0
-                for c in cnts.tolist():
-                    members.append([
-                        {"member_type": int(mtypes[k]), "ref": int(mids[k]),
-                         "role": mroles[k], "mid_ilat": int(mlats[k]),
-                         "mid_ilon": int(mlons[k])}
-                        for k in range(cursor, cursor + c)
-                    ])
-                    cursor += c
-                yield pd.DataFrame({
-                    "rel_id": rel_ids, "min_ilat": min_lat, "min_ilon": min_lon,
-                    "max_ilat": max_lat, "max_ilon": max_lon, "members": members,
-                })
-
-    return rdf.repartitionByRange(len(splits), "start").mapInPandas(
-        decode,
-        schema="rel_id long, min_ilat long, min_ilon long, max_ilat long, "
-               "max_ilon long, members array<struct<member_type:int,ref:long,"
-               "role:string,mid_ilat:long,mid_ilon:long>>",
+    return scan_ranges(
+        spark, splits, decode,
+        "rel_id long, min_ilat long, min_ilon long, max_ilat long, "
+        "max_ilon long, members array<struct<member_type:int,ref:long,"
+        "role:string,mid_ilat:long,mid_ilon:long>>",
     )

@@ -125,7 +125,7 @@ class TestDistributedSink:
 
     def test_segments_are_distributed(self, spark):
         """The encode stage itself is executor-side: one blob row per
-        batch, no driver collect in the plan (mapInPandas over range
+        batch, no driver collect in the plan (mapInArrow over range
         partitions)."""
         ids, lats, lons = _synth_nodes(1000, seed=5)
         df = spark.createDataFrame(
@@ -134,10 +134,47 @@ class TestDistributedSink:
         )
         seg = node_index_segments(df, num_chunks=4)
         plan = seg._jdf.queryExecution().executedPlan().toString()
-        assert "MapInPandas" in plan
+        assert "MapInArrow" in plan
         rows = seg.collect()
         # ids ship as raw little-endian int64 buffers (8 bytes per id)
         assert sum(len(r["ids"]) // 8 for r in rows) == 1000
         # every blob is pure varint bytes: last byte of each record has
         # the continuation bit clear
         assert all(r["blob"][-1] < 0x80 for r in rows)
+
+    def test_sink_leaves_nothing_persisted(self, spark, tmp_path):
+        """The ordered sink persists its segment frame only while it
+        streams: after a successful write, and after the splice raises
+        on a duplicate id at a segment seam, no RDD stays persisted and
+        no ``*.segments.tmp`` output is left behind."""
+        ids, lats, lons = _synth_nodes(1000, seed=23)
+
+        def persisted():
+            return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+        before = persisted()
+        ok = spark.createDataFrame(
+            list(zip(ids.tolist(), lats.tolist(), lons.tolist())),
+            schema="id long, ilat long, ilon long",
+        )
+        write_nodes_index_file(ok, str(tmp_path / "ok"), num_chunks=2)
+        assert persisted() == before
+        # id 499 twice: one partition, 500-row Arrow batches, one segment
+        # row per batch -> the second row starts at the first row's last id
+        dup = np.insert(ids, 500, ids[499])
+        bad = spark.createDataFrame(
+            list(zip(dup.tolist(), np.insert(lats, 500, 0).tolist(),
+                     np.insert(lons, 500, 0).tolist())),
+            schema="id long, ilat long, ilon long",
+        )
+        prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "500")
+        try:
+            with pytest.raises(ValueError, match="ids must be globally unique ascending"):
+                write_nodes_index_file(
+                    bad, str(tmp_path / "bad"), num_chunks=1, max_nodes_per_row=500
+                )
+        finally:
+            spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
+        assert persisted() == before
+        assert not list(tmp_path.rglob("*.segments.tmp"))

@@ -149,7 +149,7 @@ class TestDistributedRead:
         path, _, _, _ = _build_file(tmp_path)
         df = pbf_blob_frames(spark, path, split_bytes=4096)
         plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "MapInPandas" in plan
+        assert "MapInArrow" in plan
 
 
 @pytest.mark.spark

@@ -77,9 +77,11 @@ class TestDedup:
         assert all(a == 100 for a, _ in got)  # hot-prefix docs produce no pairs at 0.9
 
     def test_ngram_jaccard_lsh_matches_exact(self, spark):
-        """LSH-candidates + exact verify finds the same >= threshold pairs
-        as the exhaustive inverted-index path (surviving jaccard values are
-        exact; recall loss at these (r, b) is negligible for s >= 0.6)."""
+        """LSH-candidates + the window-hash verify (zero substrings end to
+        end) find the same >= threshold pairs, with the same exact jaccard
+        values, as the exhaustive inverted-index path (ASCII text: byte
+        k-grams == char k-grams; recall loss at these (r, b) is negligible
+        for s >= 0.6)."""
         base = "the quick brown fox jumps over the lazy sleeping dog tonight "
         rows = [(i, base + f"variant {i} unique tail content number {i}") for i in range(20)]
         rows += [(100, base * 3), (101, base * 3 + "x"), (102, base * 3 + "yz")]
@@ -93,7 +95,7 @@ class TestDedup:
         e = {(r["a"], r["b"]): round(r["jaccard"], 9) for _, r in exact.iterrows()}
         l = {(r["a"], r["b"]): round(r["jaccard"], 9) for _, r in lsh.iterrows()}
         assert set(l) == set(e)  # same pairs
-        assert l == e  # identical exact jaccard values
+        assert l == e and len(l) > 0  # identical exact jaccard values
 
     def test_bucket_cap_noop_when_large(self, docs_df):
         """max_bucket_size above every bucket's size must change nothing."""
@@ -141,25 +143,6 @@ class TestDedup:
         )._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
         assert "BroadcastHashJoin" not in plan
-
-    def test_full_rolling_lsh_matches_exact_path(self, spark):
-        """The window-hash verify (zero substrings end to end) finds the
-        same >= threshold pairs WITH the same exact jaccard values as the
-        exhaustive inverted-index path (ASCII text: byte k-grams == char
-        k-grams)."""
-        base = "the quick brown fox jumps over the lazy sleeping dog tonight "
-        rows = [(i, base + f"variant {i} unique tail content number {i}") for i in range(20)]
-        rows += [(100, base * 3), (101, base * 3 + "x"), (102, base * 3 + "yz")]
-        df = spark.createDataFrame(rows, schema="doc_id bigint, text string")
-        exact = dedup.ngram_jaccard_pairs(
-            df, shingle_k=5, threshold=0.6, max_doc_freq=None
-        ).toPandas()
-        roll = dedup.ngram_jaccard_lsh_pairs(
-            df, shingle_k=5, threshold=0.6, num_hashes=32, bands=16
-        ).toPandas()
-        e = {(r["a"], r["b"]): round(r["jaccard"], 9) for _, r in exact.iterrows()}
-        g = {(r["a"], r["b"]): round(r["jaccard"], 9) for _, r in roll.iterrows()}
-        assert g == e and len(g) > 0
 
     def test_lsh_jaccard_is_over_utf8_byte_windows(self, spark):
         """The verify intersects the k-byte window sets the signatures

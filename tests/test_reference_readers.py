@@ -124,8 +124,23 @@ class TestRelsFileReader:
         write_rels_file(TestDistributedSink._mk_df(spark, _synth_rels(120, seed=9)), out)
         df = read_rels_file(spark, out, rels_per_split=25)
         plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "MapInPandas" in plan
+        assert "MapInArrow" in plan
         assert df.count() == 120
+
+    def test_split_of_memberless_relations(self, spark, tmp_path):
+        """A split whose relations all have zero members decodes to empty
+        member lists (the per-relation chain sums run over no values)."""
+        from osm_pbf_convert_spark.operators.rel_store import encode_rels_file_py
+        from osm_pbf_convert_spark.sources.reference_files import read_rels_file
+
+        rels = [(5, None, []), (9, (1, 2, 3, 4), []), (12, None, [(0, 7, "a", 8, 9)])]
+        dat, strs, _ = encode_rels_file_py(rels)
+        out = tmp_path / "empty.rels"
+        out.write_bytes(dat)
+        (tmp_path / "empty.rels.strs").write_bytes(strs)
+        got = {r["rel_id"]: [tuple(m) for m in r["members"]]
+               for r in read_rels_file(spark, str(out), rels_per_split=2).collect()}
+        assert got == {5: [], 9: [], 12: [(0, 7, "a", 8, 9)]}
 
 
 @pytest.mark.spark

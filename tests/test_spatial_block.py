@@ -348,3 +348,18 @@ class TestRemoteSchemeSink:
         assert n_remote == n_local
         back = read_spatial_blocks(spark, str(tmp_path / "rem2"))
         assert {r["id"] for r in back.filter("kind = 0").collect()} == {i for i, *_ in nodes}
+
+        # the mock:// directory reads back through fsio, entity for entity
+        def tags(ts):  # tag dicts (input) and tag Rows (output) as tuples
+            return [tuple(t.values() if isinstance(t, dict) else t) for t in ts or []]
+
+        back = read_spatial_blocks(spark, fsio.mock_uri(str(tmp_path / "rem2")))
+        assert sorted(
+            (r["id"], r["v1"], r["v2"], tags(r["tags"])) for r in back.filter("kind = 0").collect()
+        ) == sorted((i, la, lo, tags(ts)) for i, la, lo, ts in nodes)
+        assert sorted(
+            (r["id"], r["v1"], r["v2"], r["v3"], r["v4"], r["v5"], r["item_type"], r["v6"],
+             tags(r["tags"]))
+            for r in back.filter("kind = 2").collect()
+        ) == sorted((i, p, rt, ro, la, lo, it, ii, tags(ts))
+                    for i, p, rt, ro, la, lo, it, ii, ts in rels)

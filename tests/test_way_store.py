@@ -138,6 +138,6 @@ class TestDistributedSink:
         ways = _synth_ways(200, seed=5)
         seg = way_segments(_mk_resolved_df(spark, ways), num_chunks=3)
         plan = seg._jdf.queryExecution().executedPlan().toString()
-        assert "MapInPandas" in plan
+        assert "MapInArrow" in plan
         rows = seg.collect()
         assert sum(len(r["ids"]) for r in rows) == 200
