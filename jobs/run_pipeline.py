@@ -31,7 +31,6 @@ from __future__ import annotations
 
 import argparse
 
-import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
@@ -60,6 +59,7 @@ def main():
     )
 
     from osm_pbf_convert_spark.plans.checkpoint import CheckpointTable, run_with_checkpoint
+    from osm_pbf_convert_spark.sources.byterange import _local_frame
     from osm_pbf_convert_spark.sources.pbf import decode_entities
 
     table = CheckpointTable(args.checkpoint)
@@ -102,13 +102,10 @@ def main():
         # partition_id=-1 row, so consumers must MAX/inspect per batch, not
         # SUM across the job. Exact counts, if ever needed, come from
         # per-partition row deltas (lineage n_rows vs input page counts).
-        # built from pandas (Arrow is on): a local relation, where a frame
-        # from a Python list would run a Python task when committed
-        metric = spark.createDataFrame(
-            pd.DataFrame({"partition_id": [-1], "n_rows": [0],
-                          "metric_name": ["n_bad_payloads_batch_approx"],
-                          "metric_value": [float(bad_acc.value)]}),
-            schema="partition_id bigint, n_rows bigint, metric_name string, metric_value double",
+        metric = _local_frame(
+            spark, "partition_id bigint, n_rows bigint, metric_name string, metric_value double",
+            partition_id=[-1], n_rows=[0], metric_name=["n_bad_payloads_batch_approx"],
+            metric_value=[float(bad_acc.value)],
         )
         table.commit(spark, f"{args.job_id}-decode", metric)
 

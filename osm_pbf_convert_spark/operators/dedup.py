@@ -33,6 +33,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from osm_pbf_convert_spark.sources.byterange import _local_frame
+
 
 def exact_dedup(df: DataFrame) -> DataFrame:
     """Keep one row (min id) per distinct content digest."""
@@ -71,7 +73,7 @@ def _kr_hash_arrays(df: DataFrame, k: int) -> DataFrame:
 
     def batches(it):
         for batch in it:
-            flat, off = batch_window_hash_segments(batch.column("text").to_pandas(), k)
+            flat, off = batch_window_hash_segments(batch.column("text"), k)
             shs = pa.ListArray.from_arrays(pa.array(off.astype(np.int32)),
                                            pa.array(flat.view(np.int64)))
             yield pa.RecordBatch.from_arrays([batch.column("doc_id"), shs],
@@ -113,7 +115,7 @@ def _minhash_signatures_rolling(df: DataFrame, num_hashes: int, shingle_k: int,
 
     def batches(it):
         for batch in it:
-            flat, off = rolling.batch_window_hashes(batch.column("text").to_pandas(), shingle_k)
+            flat, off = rolling.batch_window_hashes(batch.column("text"), shingle_k)
             nonempty = np.nonzero(np.diff(off))[0]
             if not nonempty.size:
                 continue  # no shingles -> no row
@@ -315,21 +317,21 @@ def simhash_signatures(df: DataFrame) -> DataFrame:
     0. Deterministic integer math mod 2^64 -- replayed by the DuckDB
     ``simhash_rolling`` oracle entry."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     from osm_pbf_convert_spark.operators import rolling
 
     def batches(it):
-        for pdf in it:
-            hashes, off = rolling.batch_token_hash_segments(pdf["text"])
+        for batch in it:
+            hashes, off = rolling.batch_token_hash_segments(batch.column("text"))
             sig = rolling.segment_bit_majority(hashes, off)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"].to_numpy(),
-                "simhash": sig.astype(np.int64),
-            })
+            yield pa.RecordBatch.from_arrays(
+                [batch.column("doc_id"), pa.array(sig.view(np.int64))],
+                names=["doc_id", "simhash"],
+            )
 
     id_type = df.schema["doc_id"].dataType.simpleString()
-    return df.select("doc_id", "text").mapInPandas(
+    return df.select("doc_id", "text").mapInArrow(
         batches, schema=f"doc_id {id_type}, simhash long"
     )
 
@@ -420,31 +422,21 @@ def _assign_hyperplane_buckets(df: DataFrame, signs: list) -> DataFrame:
     the sequential left fold (bit-identical to the Catalyst/DuckDB
     replays). Zero shuffle -- a map-only stage like rolling.py's."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+
+    from osm_pbf_convert_spark.operators.similarity import _vector_matrix
 
     S = np.asarray(signs, dtype=np.float64)  # planes x dim
     planes = S.shape[0]
     weights = (np.int64(1) << np.arange(planes, dtype=np.int64))
 
     def fn(it):
-        for pdf in it:
-            if not len(pdf):
+        for batch in it:
+            if not batch.num_rows:
                 continue
-            vecs = pdf["embedding"].to_numpy()
-            # robustness (ADVICE r7): a single null/ragged embedding must
-            # not crash the whole job -- name the offending id instead
-            # (the pre-r7 zip_with expression silently nulled such rows;
-            # an explicit error is the safer dedup-pipeline behavior)
-            lens = {len(v) if v is not None else -1 for v in vecs}
-            if len(lens) > 1 or -1 in lens:
-                bad = next(
-                    i for v, i in zip(vecs, pdf["vec_id"])
-                    if v is None or len(v) != max(lens)
-                )
-                raise ValueError(
-                    f"embedding_neardup: null or ragged embedding at vec_id={bad!r}"
-                )
-            V = np.stack(vecs)  # n x dim float64
+            # a null or ragged embedding fails the job naming its vec_id
+            # (the pre-r7 zip_with expression silently nulled such rows)
+            V = _vector_matrix(batch.column("embedding"), batch.column("vec_id"))
             n, d = V.shape
             k = min(d, S.shape[1])  # zip_with semantics: shorter side wins
             acc = np.zeros((n, planes), dtype=np.float64)
@@ -452,15 +444,13 @@ def _assign_hyperplane_buckets(df: DataFrame, signs: list) -> DataFrame:
                 # SEQUENTIAL over dims: ((0 + v0*s0) + v1*s1) + ...
                 acc += V[:, j, None] * S[None, :, j]
             bucket = ((acc > 0.0).astype(np.int64) * weights).sum(axis=1)
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"], "embedding": pdf["embedding"], "bucket": bucket}
-            )
+            yield batch.append_column("bucket", pa.array(bucket))
 
     in_schema = df.select("vec_id", "embedding").schema
     out_schema = T.StructType(
         list(in_schema.fields) + [T.StructField("bucket", T.LongType())]
     )
-    return df.select("vec_id", "embedding").mapInPandas(fn, schema=out_schema)
+    return df.select("vec_id", "embedding").mapInArrow(fn, schema=out_schema)
 
 
 def embedding_neardup_pairs(
@@ -482,7 +472,7 @@ def embedding_neardup_pairs(
     assignment a plain +- sum both engines evaluate in the same float64
     order); `planes`/`seed` are ignored when given.
 
-    Bucket assignment is ONE Arrow ``mapInPandas`` pass computing all
+    Bucket assignment is ONE ``mapInArrow`` pass computing all
     plane dots per batch (round-7 rework; the previous per-plane Catalyst
     ``aggregate``/``zip_with`` chains evaluated planes x dim expression
     nodes per row). The accumulation loops over dimensions SEQUENTIALLY
@@ -500,13 +490,9 @@ def embedding_neardup_pairs(
     else:
         row = df.select(F.size("embedding")).first()  # one-row driver probe
         if row is None:  # empty input: no pairs (ADVICE r7 guard)
-            return df.sparkSession.createDataFrame(
-                [], schema="a long, b long, cosine double"
-            ).select(
-                F.col("a").cast(df.schema["vec_id"].dataType).alias("a"),
-                F.col("b").cast(df.schema["vec_id"].dataType).alias("b"),
-                "cosine",
-            )
+            id_type = df.schema["vec_id"].dataType.simpleString()
+            return _local_frame(df.sparkSession, f"a {id_type}, b {id_type}, cosine double",
+                                a=[], b=[], cosine=[])
         dim = row[0]
         signs = _hyperplane_sign_matrix(df.sparkSession, planes, dim, seed)
     withb = _assign_hyperplane_buckets(df, signs)

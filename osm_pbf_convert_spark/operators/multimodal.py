@@ -1,5 +1,5 @@
 """Multimodal column plumbing: images as opaque binary columns with typed
-metadata, decoded into features inside ``mapInPandas``.
+metadata, decoded into features inside ``mapInArrow``.
 
 ``decode_image_np`` is a pure-numpy decoder for binary PPM (P6, maxval
 255), the uncompressed format the ``multimodal_features`` catalog query
@@ -12,7 +12,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 
@@ -63,21 +63,25 @@ def _pixel_feature(px: np.ndarray, dim: int) -> np.ndarray:
 def extract_features(df: DataFrame, dim: int = 32) -> DataFrame:
     """media -> (all columns..., feature array<float>).
 
-    ``mapInPandas`` with Arrow batches; batch shape = input batch rows, one
-    feature vector per row: each ``content`` payload is REALLY decoded
+    ``mapInArrow``; batch shape = input batch rows, one feature vector
+    per row: each ``content`` payload is REALLY decoded
     (``decode_image_np``) into pixels and summarized as a ``dim``-bin
     grayscale histogram.
     """
     out_schema = df.schema.simpleString()[7:-1] + ", feature array<float>"
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["feature"] = [_pixel_feature(decode_image_np(c), dim) for c in pdf["content"]]
-            yield pdf
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            feats = [_pixel_feature(decode_image_np(c), dim)
+                     for c in batch.column("content").to_pylist()]
+            flat = np.concatenate(feats) if feats else np.empty(0, dtype=np.float32)
+            offsets = np.arange(batch.num_rows + 1, dtype=np.int32) * dim
+            yield batch.append_column(
+                "feature", pa.ListArray.from_arrays(pa.array(offsets), pa.array(flat))
+            )
 
     from osm_pbf_convert_spark.plans.partitioning import fan_out
 
     # per-row image decode is the per-row-heavy class (guide §2.5): never
     # run it on the 1-2 splits a small media table scans as
-    return fan_out(df).mapInPandas(fn, out_schema)
+    return fan_out(df).mapInArrow(fn, out_schema)

@@ -268,13 +268,14 @@ def rel_segments(assembled: DataFrame, roles: list, num_chunks: int | None = Non
                 vals[base + 4] = chain(flat("m_lons"))
             blob = encode_varints_msb_np(vals)
             yield pa.RecordBatch.from_pydict(
-                {"first_id": [int(ids[0])], "ids": [ids], "blob": [blob], "fresh": [fresh]}
+                {"first_id": [int(ids[0])], "ids": [ids.astype("<i8").tobytes()],
+                 "blob": [blob], "fresh": [fresh]}
             )
             prev_id = int(ids[-1])
             fresh = False
 
     return df.mapInArrow(
-        encode, schema="first_id long, ids array<long>, blob binary, fresh boolean"
+        encode, schema="first_id long, ids binary, blob binary, fresh boolean"
     )
 
 
@@ -293,7 +294,7 @@ def write_rels_file(
         rel_segments(assembled, roles, num_chunks), "first_id", out_file, out_file + ".strs"
     ) as (rows, (dat_out, strs_out)):
         for row in rows:
-            ids = np.asarray(row["ids"], dtype=np.int64)
+            ids = np.frombuffer(row["ids"], dtype="<i8")
             blob = bytes(row["blob"])
             if seen and ids[0] <= prev_id:
                 raise ValueError("relation ids must be globally unique ascending")

@@ -33,6 +33,8 @@ from __future__ import annotations
 import random
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 KR_BASE = 1000003  # classic string-hash prime; < 2^20 so a DuckDB
 #                    HUGEINT Horner step (acc*BASE + byte) stays < 2^85
@@ -59,17 +61,29 @@ def window_powers(k: int) -> np.ndarray:
                     dtype=np.uint64)
 
 
-def _lowered_utf8(texts):
-    """``(buf, lens)``: the concatenated lower-cased UTF-8 bytes of a
-    pandas Series of strings (None -> "") and each row's byte length."""
-    raw = texts.fillna("").str.lower().str.encode("utf-8")
-    lens = raw.str.len().to_numpy(np.int64)
-    return np.frombuffer(b"".join(raw), dtype=np.uint8), lens
+def _lowered_utf8(texts: pa.Array):
+    """``(buf, lens)``: the concatenated lower-cased UTF-8 bytes of an
+    Arrow ``string`` or ``large_string`` array (null -> "") and each
+    row's byte length. The bytes are exactly Python's ``str.lower()``:
+    ASCII rows are lowered in Arrow (``ascii_lower``), the rest row by row
+    in Python, because ``utf8_lower`` differs from ``str.lower()`` (U+0130
+    and the Greek final sigma)."""
+    texts = pc.fill_null(texts, "")
+    low = pc.ascii_lower(texts)
+    wide = pc.invert(pc.string_is_ascii(texts))
+    if pc.any(wide).as_py():
+        fixed = [t.lower() for t in texts.filter(wide).to_pylist()]
+        low = pc.replace_with_mask(low, wide, pa.array(fixed, low.type))
+    _, offs, data = low.buffers()
+    width = np.int64 if pa.types.is_large_string(low.type) else np.int32
+    offs = np.frombuffer(offs, dtype=width)[low.offset:low.offset + len(low) + 1]
+    buf = np.frombuffer(data or b"", dtype=np.uint8)[offs[0]:offs[-1]]
+    return buf, np.diff(offs).astype(np.int64)
 
 
-def batch_window_hashes(texts, k: int):
-    """``(flat, offsets)`` for a pandas Series of strings: the per-row
-    slice ``flat[offsets[i]:offsets[i+1]]`` is EVERY in-document k-byte
+def batch_window_hashes(texts: pa.Array, k: int):
+    """``(flat, offsets)`` for an Arrow string array: the per-row slice
+    ``flat[offsets[i]:offsets[i+1]]`` is EVERY in-document k-byte
     window hash of row i's lower-cased UTF-8 bytes, in document order,
     duplicates kept (a row shorter than k has none). The one window
     front end: in-place Horner steps over the batch's concatenated
@@ -96,7 +110,7 @@ def batch_window_hashes(texts, k: int):
     return h[valid], offsets
 
 
-def batch_window_hash_segments(texts, k: int):
+def batch_window_hash_segments(texts: pa.Array, k: int):
     """``batch_window_hashes`` with each row's slice SORTED and UNIQUE
     (one global sort by (owner, hash) + boundary-diff dedupe, zero
     per-row Python) -- the set form the bottom-k fingerprint and the
@@ -179,9 +193,9 @@ def band_buckets(sig: np.ndarray, bands: int) -> np.ndarray:
     return out
 
 
-def batch_token_hash_segments(texts):
-    """``(flat, offsets)`` for a pandas Series of strings: the per-row
-    slice is the affine-finalized Karp-Rabin Horner hash
+def batch_token_hash_segments(texts: pa.Array):
+    """``(flat, offsets)`` for an Arrow string array: the per-row slice
+    is the affine-finalized Karp-Rabin Horner hash
     (``TOK_FIN_A * horner + TOK_FIN_B`` mod 2^64, base ``KR_BASE``) of
     every ASCII-whitespace-separated token OCCURRENCE of the lower-cased
     text, in document order (multiplicity preserved -- simhash weights

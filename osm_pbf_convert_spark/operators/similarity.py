@@ -11,10 +11,10 @@
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 
 def _dot(a, b):
@@ -27,6 +27,22 @@ def _norm(a):
 
 def cosine_col(a, b):
     return _dot(a, b) / (_norm(a) * _norm(b))
+
+
+def _vector_matrix(vecs: pa.Array, ids: pa.Array | None = None) -> np.ndarray:
+    """(rows, dim) float64 matrix of an Arrow ``list<float|double>``
+    array, one vector per row, built from the flat values with a
+    reshape. A null or ragged vector raises ``ValueError`` naming its
+    ``vec_id`` (``ids[row]``), or its row without ``ids``."""
+    lens = pc.fill_null(pc.list_value_length(vecs), -1).to_numpy()
+    dim = int(lens.max(initial=0))
+    bad = np.flatnonzero(lens != dim)
+    if bad.size:
+        i = int(bad[0])
+        at = f"vec_id={ids[i].as_py()!r}" if ids is not None else f"row {i}"
+        raise ValueError(f"null or ragged embedding at {at}")
+    flat = pc.list_flatten(vecs).to_numpy(zero_copy_only=False)
+    return flat.astype(np.float64).reshape(lens.size, dim)
 
 
 def brute_force_topk(
@@ -55,13 +71,13 @@ def train_centroids(
     """Driver-side Lloyd iterations on a deterministic sample (ORDER BY
     xxhash64(id) LIMIT sample). ncells is small (sqrt(N) rule); the model
     ships back as a broadcast literal array."""
-    pdf = (
+    sample_tbl = (
         vectors.select("embedding")
         .orderBy(F.xxhash64(F.col(vectors.columns[0]).cast("string"), F.lit(seed)))
         .limit(sample)
-        .toPandas()
+        .toArrow()
     )
-    X = np.asarray(pdf["embedding"].tolist(), dtype=np.float64)
+    X = _vector_matrix(sample_tbl.column("embedding").combine_chunks())
     rng = np.random.default_rng(seed)
     cents = X[rng.choice(len(X), size=min(ncells, len(X)), replace=False)]
     for _ in range(iters):
@@ -82,11 +98,11 @@ def _nearest_cells_udf(spark: SparkSession, cents: np.ndarray, nprobe: int):
     cells). Ties break by cell id, matching sort by (distance, cell)."""
     bc = spark.sparkContext.broadcast(np.ascontiguousarray(cents, dtype=np.float64))
 
-    @pandas_udf("array<int>")
-    def nearest(vecs: pd.Series) -> pd.Series:
+    @F.arrow_udf("array<int>")
+    def nearest(vecs: pa.Array) -> pa.Array:
         C = bc.value  # (ncells, dim)
         p = min(nprobe, C.shape[0])
-        X = np.asarray(vecs.tolist(), dtype=np.float64)  # (n, dim)
+        X = _vector_matrix(vecs)  # (n, dim)
         # squared euclid up to the |x|^2 constant (rank-invariant per row)
         d = X @ (-2.0 * C.T) + (C * C).sum(1)[None, :]
         if C.shape[0] > max(64, 8 * p):
@@ -109,7 +125,8 @@ def _nearest_cells_udf(spark: SparkSession, cents: np.ndarray, nprobe: int):
         else:
             # stable argsort of d breaks ties by cell id (array is in cell order)
             idx = np.argsort(d, axis=1, kind="stable")[:, :p]
-        return pd.Series(list(idx.astype(np.int32)))
+        offsets = np.arange(idx.shape[0] + 1, dtype=np.int32) * p
+        return pa.ListArray.from_arrays(pa.array(offsets), pa.array(idx.astype(np.int32).ravel()))
 
     return nearest
 

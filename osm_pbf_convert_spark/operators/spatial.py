@@ -8,7 +8,7 @@ broadcast packed cell-interval index, and kNN via tile ring expansion.
   descent (``SpatialIndex.cs:175-184``): polygons are compiled ONCE on the
   driver into per-zoom tile cover sets (full tiles: containment decided;
   edge tiles: exact ray-cast needed), broadcast as packed numpy arrays, and
-  probed with ``np.searchsorted`` inside an Arrow-batched pandas UDF. At
+  probed with ``np.searchsorted`` inside an Arrow UDF (``arrow_udf``). At
   100 TB the polygon side is a few MB broadcast -- no shuffle at all on the
   points side.
 - kNN: candidate generation by Morton-tile ring expansion (pure Column
@@ -21,15 +21,11 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from osm_pbf_convert_spark.functions.cells import (
-    _spread_col,
-    quantize_np,
-    tile_col,
-)
+from osm_pbf_convert_spark.functions.cells import _spread_col, quantize_np
 
 # ---------------------------------------------------------------------------
 # rect
@@ -221,40 +217,39 @@ def assign_polygons(
     polygon): all input columns + ``polygon_id``.
 
     The compiled index is broadcast (a few MB even for large admin sets);
-    the probe is a vectorized pandas UDF: searchsorted on the tile array,
-    exact ray-cast only for edge tiles.
+    the probe is a vectorized Arrow UDF: searchsorted on the tile array,
+    exact ray-cast only for edge tiles, the per-point polygon lists built
+    from offsets.
     """
     bc = spark.sparkContext.broadcast(index)
     from pyspark.sql.types import ArrayType, LongType
 
-    @F.pandas_udf(ArrayType(LongType()))
-    def probe(ilat: pd.Series, ilon: pd.Series) -> pd.Series:
+    @F.arrow_udf(ArrayType(LongType()))
+    def probe(ilat: pa.Array, ilon: pa.Array) -> pa.Array:
         idx: CompiledPolygons = bc.value
-        la = ilat.to_numpy(np.int64)
-        lo = ilon.to_numpy(np.int64)
+        la = ilat.to_numpy().astype(np.int64)
+        lo = ilon.to_numpy().astype(np.int64)
         tx, ty = _tile_xy(la, lo, idx.z)
         tiles = _xy_to_tile(tx, ty, idx.z)
         pos = np.searchsorted(idx.tiles, tiles)
         ok = (pos < len(idx.tiles)) & (idx.tiles[np.minimum(pos, len(idx.tiles) - 1)] == tiles)
-        out = [[] for _ in range(len(la))]
-        hit_rows = np.nonzero(ok)[0]
-        # group edge-test candidates per polygon for vectorized ray casting
-        edge_by_pid: dict[int, list[int]] = {}
-        for r in hit_rows:
-            s, e = idx.starts[pos[r]], idx.starts[pos[r] + 1]
-            for j in range(s, e):
-                pid = int(idx.poly_ids[j])
-                if idx.full[j]:
-                    out[r].append(pid)
-                else:
-                    edge_by_pid.setdefault(pid, []).append(r)
-        for pid, rows in edge_by_pid.items():
-            rows_a = np.asarray(rows)
-            rlat, rlon = idx.rings[pid]
-            inside = _ray_cast(la[rows_a], lo[rows_a], rlat, rlon)
-            for r in rows_a[inside]:
-                out[int(r)].append(pid)
-        return pd.Series(out)
+        # one candidate per (point, polygon entry of its tile): the
+        # tiles' [start, end) entry ranges concatenated
+        hit = np.flatnonzero(ok)
+        first = idx.starts[pos[hit]]
+        n = idx.starts[pos[hit] + 1] - first
+        row = np.repeat(hit, n)
+        j = np.arange(row.size) + np.repeat(first - np.cumsum(n) + n, n)
+        pid = idx.poly_ids[j]
+        keep = idx.full[j]
+        # edge-tile candidates: one vectorized ray cast per polygon
+        for p in np.unique(pid[~keep]).tolist():
+            m = np.flatnonzero(~idx.full[j] & (pid == p))
+            rlat, rlon = idx.rings[p]
+            keep[m] = _ray_cast(la[row[m]], lo[row[m]], rlat, rlon)
+        offsets = np.zeros(la.size + 1, dtype=np.int32)
+        np.cumsum(np.bincount(row[keep], minlength=la.size), out=offsets[1:])
+        return pa.ListArray.from_arrays(pa.array(offsets), pa.array(pid[keep]))
 
     with_pids = points.withColumn("_pids", probe(F.col("ilat"), F.col("ilon")))
     return (

@@ -25,7 +25,7 @@ readers consume as a zero id-delta terminator):
 Every block file's delta chains are SELF-CONTAINED (they reset per
 file), so unlike the node/ways/relations stores there is no cross-chunk
 seam at all: each tile's file encodes independently on an executor
-(groupBy(tile).applyInPandas) AND is written from that executor -- the
+(groupBy(tile).applyInArrow) AND is written from that executor -- the
 driver only counts files. The chain arithmetic is numpy-vectorized
 (golden-tested against the pure-Python port below). The engine's
 query-path spatial store remains the tile-partitioned Parquet table
@@ -44,7 +44,8 @@ rels on structural failure.
 from __future__ import annotations
 
 import numpy as np
-
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 
 from osm_pbf_convert_spark.codecs import (
@@ -62,28 +63,30 @@ def _vint(out: bytearray, v: int) -> None:
     out += encode_varints_msb([v])
 
 
+def _write_tag(out: bytearray, tag_id, key_id, key, value) -> None:
+    """One ``WriteTags`` record, in the first of the 3 marker forms its
+    fields allow."""
+    if tag_id is not None:
+        out.append(1)
+        _vint(out, int(tag_id))
+    elif key_id is not None and value is not None:
+        out.append(2)
+        _vint(out, int(key_id))
+        out += encode_dotnet_string(value)
+    elif key and value is not None:
+        out.append(3)
+        out += encode_dotnet_string(key)
+        out += encode_dotnet_string(value)
+    else:
+        raise ValueError(f"invalid tag record {(tag_id, key_id, key, value)!r}")
+
+
 def _write_tags(out: bytearray, tags) -> None:
     """``SpatialBlock.WriteTags``: count + 3-level marker records."""
     tags = tags or []
     _vint(out, len(tags))
     for t in tags:
-        tag_id = t.get("tag_id")
-        key_id = t.get("key_id")
-        key = t.get("key")
-        value = t.get("value")
-        if tag_id is not None:
-            out.append(1)
-            _vint(out, int(tag_id))
-        elif key_id is not None and value is not None:
-            out.append(2)
-            _vint(out, int(key_id))
-            out += encode_dotnet_string(value)
-        elif key and value is not None:
-            out.append(3)
-            out += encode_dotnet_string(key)
-            out += encode_dotnet_string(value)
-        else:
-            raise ValueError(f"invalid tag record {t!r}")
+        _write_tag(out, t.get("tag_id"), t.get("key_id"), t.get("key"), t.get("value"))
 
 
 def encode_spatial_block_py(nodes=(), ways=(), rels=()) -> bytes:
@@ -142,16 +145,23 @@ def encode_spatial_block_py(nodes=(), ways=(), rels=()) -> bytes:
     return bytes(out)
 
 
-def _tag_blob_list(tags_iter) -> list:
-    """Per-record ``WriteTags`` bytes (b'\\x00' = zero tags)."""
+def _tag_blob_list(tags: pa.ChunkedArray) -> list:
+    """Per-record ``WriteTags`` bytes (b'\\x00' = zero tags) of an Arrow
+    ``TAGS_SCHEMA`` column, read field by field: ``to_pylist`` would
+    build a dict per tag, about 8x slower."""
+    flat = pc.list_flatten(tags)
+    fields = []
+    for i, fill in enumerate((0, 0, "", "")):
+        f = pc.struct_field(flat, [i])
+        fields.append(np.where(f.is_valid().to_numpy(), f.fill_null(fill).to_numpy(), None))
+    recs = zip(*fields)
     out = []
-    for t in tags_iter:
-        if t is None or len(t) == 0:
-            out.append(b"\x00")
-        else:
-            buf = bytearray()
-            _write_tags(buf, list(t))
-            out.append(bytes(buf))
+    for n in pc.fill_null(pc.list_value_length(tags), 0).to_numpy().tolist():
+        buf = bytearray()
+        _vint(buf, n)
+        for _ in range(n):
+            _write_tag(buf, *next(recs))
+        out.append(bytes(buf))
     return out
 
 
@@ -255,10 +265,9 @@ def spatial_block_blobs(
     With ``out_dir`` set, each task writes ``block_<tile>.dat`` plus a
     ``.sections`` sidecar DIRECTLY from the executor and returns
     ``data=null`` (no blob bytes flow back through the plan); without
-    it, the blob is returned. Way node lists travel as three flat
-    ``array<long>`` columns, not ``array<struct>`` -- Arrow delivers
-    those as numpy arrays, so the encoder never touches per-node Python
-    objects.
+    it, the blob is returned. Way node lists travel as one Arrow
+    ``list<struct>`` column whose flat field buffers feed the encoder,
+    so it never touches per-node Python objects.
 
     Input schemas (nullable extras ignored):
     nodes(id, ilat, ilon, tags TAGS_SCHEMA?),
@@ -267,7 +276,6 @@ def spatial_block_blobs(
     rels(id, position, rel_type, role_id, mid_ilat, mid_ilon,
          item_type, item_id, tags?).
     """
-    import pandas as pd
     from pyspark.sql import functions as F
 
     from osm_pbf_convert_spark.functions.cells import morton_cell_col, tile_col
@@ -276,7 +284,7 @@ def spatial_block_blobs(
         return tile_col(morton_cell_col(lat.cast("int"), lon.cast("int")), z)
 
     null_long = F.lit(None).cast("long")
-    null_arr = F.lit(None).cast("array<long>")
+    no_nodes = F.lit(None).cast("array<struct<id:long,ilat:long,ilon:long>>").alias("wn")
 
     def tags_col(src):
         return (F.col("tags") if "tags" in src.columns else F.lit(None)).cast(
@@ -294,14 +302,11 @@ def spatial_block_blobs(
                 F.col("ilon").cast("long").alias("v2"),
                 null_long.alias("v3"), null_long.alias("v4"),
                 null_long.alias("v5"), null_long.alias("v6"),
-                null_long.alias("item_type"),
-                null_arr.alias("wn_ids"), null_arr.alias("wn_lats"),
-                null_arr.alias("wn_lons"),
+                null_long.alias("item_type"), no_nodes,
                 tags_col(nodes),
             )
         )
     if ways is not None:
-        wn = F.col("nodes")
         frames.append(
             ways.select(
                 F.lit(1).alias("kind"),
@@ -311,9 +316,8 @@ def spatial_block_blobs(
                 null_long.alias("v2"), null_long.alias("v3"),
                 null_long.alias("v4"), null_long.alias("v5"), null_long.alias("v6"),
                 null_long.alias("item_type"),
-                wn["id"].cast("array<long>").alias("wn_ids"),
-                wn["ilat"].cast("array<long>").alias("wn_lats"),
-                wn["ilon"].cast("array<long>").alias("wn_lons"),
+                F.transform("nodes", lambda n: F.struct(
+                    *(n[c].cast("long").alias(c) for c in ("id", "ilat", "ilon")))).alias("wn"),
                 tags_col(ways),
             )
         )
@@ -329,9 +333,7 @@ def spatial_block_blobs(
                 F.col("mid_ilat").cast("long").alias("v4"),
                 F.col("mid_ilon").cast("long").alias("v5"),
                 F.col("item_id").cast("long").alias("v6"),
-                F.col("item_type").cast("long").alias("item_type"),
-                null_arr.alias("wn_ids"), null_arr.alias("wn_lats"),
-                null_arr.alias("wn_lons"),
+                F.col("item_type").cast("long").alias("item_type"), no_nodes,
                 tags_col(rels),
             )
         )
@@ -341,58 +343,47 @@ def spatial_block_blobs(
     for f in frames[1:]:
         df = df.unionByName(f)
 
-    def encode(pdf: pd.DataFrame) -> pd.DataFrame:
-        tile = int(pdf["tile"].iloc[0])
-        pdf = pdf.sort_values(["kind", "id"])
-        kind = pdf["kind"].to_numpy()
+    out_schema = pa.schema([("tile", pa.int64()), ("n_bytes", pa.int64()),
+                            ("sections", pa.string()), ("path", pa.string()),
+                            ("data", pa.binary())])
+
+    def encode(tbl: pa.Table) -> pa.Table:
+        tile = tbl.column("tile")[0].as_py()
+        tbl = tbl.sort_by([("kind", "ascending"), ("id", "ascending")])
+        kind = tbl.column("kind").to_numpy()
         parts = []
         sections = ""
 
-        nd = pdf[kind == 0]
-        if len(nd):
+        def cols(t, *names):
+            return [t.column(c).to_numpy().astype(np.int64) for c in names]
+
+        nd = tbl.filter(pa.array(kind == 0))
+        if nd.num_rows:
             sections += "n"
             parts.append(_encode_nodes_np(
-                nd["id"].to_numpy(np.int64),
-                nd["v1"].to_numpy(np.int64),
-                nd["v2"].to_numpy(np.int64),
-                _tag_blob_list(nd["tags"]),
+                *cols(nd, "id", "v1", "v2"), _tag_blob_list(nd.column("tags")),
             ))
 
-        wy = pdf[kind == 1]
-        if len(wy):
+        wy = tbl.filter(pa.array(kind == 1))
+        if wy.num_rows:
             sections += "w"
-            lists = list(wy["wn_ids"])
-            cnts = np.fromiter(
-                (0 if a is None else len(a) for a in lists), np.int64, len(lists)
-            )
-
-            def flat(col):
-                arrs = [np.asarray(a, np.int64) for a in wy[col] if a is not None and len(a)]
-                return np.concatenate(arrs) if arrs else np.empty(0, np.int64)
-
+            cnts = pc.fill_null(pc.list_value_length(wy.column("wn")), 0)
+            flat = [f.to_numpy() for f in pc.list_flatten(wy.column("wn")).flatten()]
             parts.append(b"\x00" + _encode_ways_np(
-                wy["id"].to_numpy(np.int64),
-                wy["v1"].to_numpy(np.int64),
-                cnts, flat("wn_ids"), flat("wn_lats"), flat("wn_lons"),
-                _tag_blob_list(wy["tags"]),
+                *cols(wy, "id", "v1"), cnts.to_numpy().astype(np.int64), *flat,
+                _tag_blob_list(wy.column("tags")),
             ))
 
-        rl = pdf[kind == 2]
-        if len(rl):
+        rl = tbl.filter(pa.array(kind == 2))
+        if rl.num_rows:
             sections += "r"
             parts.append(b"\x00" + _encode_rels_np(
-                rl["id"].to_numpy(np.int64),
-                rl["v1"].to_numpy(np.int64),
-                rl["v2"].to_numpy(np.int64),
-                rl["v3"].to_numpy(np.int64),
-                rl["v4"].to_numpy(np.int64),
-                rl["v5"].to_numpy(np.int64),
-                rl["item_type"].to_numpy(np.int64),
-                rl["v6"].to_numpy(np.int64),
-                _tag_blob_list(rl["tags"]),
+                *cols(rl, "id", "v1", "v2", "v3", "v4", "v5", "item_type", "v6"),
+                _tag_blob_list(rl.column("tags")),
             ))
 
         data = b"".join(parts)
+        path = None
         if out_dir is not None:
             # executor-side write: overwrite-idempotent under task retry.
             # fsio routes local paths AND object-store URIs (pyarrow fs
@@ -404,16 +395,12 @@ def spatial_block_blobs(
                 f.write(data)
             with fsio.open_output(path + ".sections") as f:
                 f.write(sections.encode())
-            return pd.DataFrame({
-                "tile": [tile], "n_bytes": [len(data)],
-                "sections": [sections], "path": [path], "data": [None],
-            })
-        return pd.DataFrame({
-            "tile": [tile], "n_bytes": [len(data)],
-            "sections": [sections], "path": [None], "data": [data],
-        })
+        return pa.table({
+            "tile": [tile], "n_bytes": [len(data)], "sections": [sections],
+            "path": [path], "data": [None if path else data],
+        }, schema=out_schema)
 
-    return df.groupBy("tile").applyInPandas(
+    return df.groupBy("tile").applyInArrow(
         encode,
         schema="tile long, n_bytes long, sections string, path string, data binary",
     )
@@ -596,8 +583,6 @@ def read_spatial_blocks(spark, block_dir: str) -> DataFrame:
     unified entity frame (kind 0/1/2 with the writer's column roles).
     Kept as the read direction that round-trips the block writer."""
     import re as _re
-
-    import pyarrow as pa
 
     from osm_pbf_convert_spark.sources import fsio
     from osm_pbf_convert_spark.sources.byterange import _struct_lists, scan_ranges

@@ -29,6 +29,8 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from osm_pbf_convert_spark.sources.byterange import _local_frame
+
 # way-type mapping, exact copy of the reference CASE values
 HIGHWAY_TYPES = {
     "motorway": 3, "motorway_link": 3, "trunk": 4, "trunk_link": 4,
@@ -84,10 +86,12 @@ class TagDictionary:
             return cls(json.load(f))
 
     def _dim(self, spark: SparkSession, entries, idcol: str) -> DataFrame:
-        rows = [(e["Key"], e["Value"], e["TagId"]) for e in entries]
-        if not rows:
-            rows = [("\x00__none__", "\x00", -1)]
-        return spark.createDataFrame(rows, schema=f"key string, value string, {idcol} int")
+        entries = entries or [{"Key": "\x00__none__", "Value": "\x00", "TagId": -1}]
+        return _local_frame(
+            spark, f"key string, value string, {idcol} int",
+            key=[e["Key"] for e in entries], value=[e["Value"] for e in entries],
+            **{idcol: [e["TagId"] for e in entries]},
+        )
 
     def encode(self, spark: SparkSession, df: DataFrame, kind: str) -> DataFrame:
         """df(id, tags map) -> (id, pos, tag_id, key_id, value) rows; tags
@@ -104,9 +108,9 @@ class TagDictionary:
 
         d1 = self._dim(spark, level1, "tag_id1")
         d2 = self._dim(spark, self.tag_codes, "tag_id2")
-        kc = spark.createDataFrame(
-            list(self.key_codes.items()) or [("\x00__none__", -1)], schema="key string, key_id int"
-        )
+        codes = self.key_codes or {"\x00__none__": -1}
+        kc = _local_frame(spark, "key string, key_id int",
+                          key=list(codes), key_id=list(codes.values()))
         out = (
             exploded.join(F.broadcast(d1), ["key", "value"], "left")
             .join(F.broadcast(d2), ["key", "value"], "left")

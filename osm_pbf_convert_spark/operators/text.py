@@ -111,14 +111,8 @@ def fingerprint(df: DataFrame, shingle_k: int = 8, bottom_k: int = 8) -> DataFra
     highly likely near-identical content. Arrow batches in, one numpy
     polynomial pass per batch, zero substring materialization.
 
-    Round-4 profiling pinned ~90% of a substring-based fingerprint's
-    cost on materializing every k-char substring (`shingles_col`)
-    before hashing; this operator never builds a substring. All of a
-    batch's lower-cased texts are concatenated into ONE uint8 buffer,
-    every k-byte window hash is a Karp-Rabin polynomial computed with
-    vectorized Horner steps (mod 2^64 by natural uint64 wrap), windows
-    crossing document boundaries are masked out, and per-doc bottom-k of
-    the UNIQUE window hashes is combined into one long. Windows are over
+    The window hashes are the Karp-Rabin front end of
+    ``operators/rolling.py`` (no substring is built). Windows are over
     UTF-8 bytes, so k-gram boundaries shift on multi-byte text;
     fingerprint equality, the operator's contract, is unaffected. Docs
     with no window get fingerprint 0.
@@ -129,23 +123,20 @@ def fingerprint(df: DataFrame, shingle_k: int = 8, bottom_k: int = 8) -> DataFra
     the combine is deterministic mod-2^64 arithmetic the DuckDB
     ``fingerprint_rolling`` oracle entry replays in HUGEINT."""
     import numpy as np
+    import pyarrow as pa
+    from pyspark.sql import types as T
 
     from osm_pbf_convert_spark.operators.rolling import batch_window_hash_segments
+    from osm_pbf_convert_spark.plans.partitioning import fan_out
 
-    out_fields = list(df.schema.fields)
-    schema_str = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in out_fields)
-    schema_str += ", fingerprint long"
-    k = shingle_k
+    comb_pow = np.array(
+        [pow(_KR_COMBINE, bottom_k - 1 - j, 1 << 64) for j in range(bottom_k)],
+        dtype=np.uint64,
+    )
 
     def batches(it):
-        import pandas as pd
-
-        comb_pow = np.array(
-            [pow(_KR_COMBINE, bottom_k - 1 - j, 1 << 64) for j in range(bottom_k)],
-            dtype=np.uint64,
-        )
-        for pdf in it:
-            flat, off = batch_window_hash_segments(pdf["text"], k)
+        for batch in it:
+            flat, off = batch_window_hash_segments(batch.column("text"), shingle_k)
             cnt = np.diff(off)
             # per-doc bottom-k of the sorted-unique segment: gather the
             # first min(cnt, bottom_k) hashes, zero-pad the rest (a zero
@@ -159,10 +150,7 @@ def fingerprint(df: DataFrame, shingle_k: int = 8, bottom_k: int = 8) -> DataFra
             vals[mask] = flat[idx[mask]]
             with np.errstate(over="ignore"):
                 fps = (vals * comb_pow[None, :]).sum(axis=1, dtype=np.uint64)
-            out = pdf.copy()
-            out["fingerprint"] = pd.Series(fps.astype(np.int64), index=pdf.index)
-            yield out
+            yield batch.append_column("fingerprint", pa.array(fps.view(np.int64)))
 
-    from osm_pbf_convert_spark.plans.partitioning import fan_out
-
-    return fan_out(df, key="doc_id").mapInPandas(batches, schema=schema_str)
+    schema = T.StructType(df.schema.fields + [T.StructField("fingerprint", T.LongType())])
+    return fan_out(df, key="doc_id").mapInArrow(batches, schema=schema)

@@ -132,13 +132,13 @@ def export_heat_map_bytes(heat_df, rows: int = 16384, cols: int = 32768) -> byte
     below, byte-identical by golden test) for it. Kept as the golden the
     band sink is tested against.
     """
-    import numpy as np
-
     from osm_pbf_convert_spark.codecs import encode_varints_msb
 
-    pdf = heat_df.toPandas()
+    cells = heat_df.select("row", "col", "cnt").toArrow()
     grid = np.zeros((rows, cols), dtype=np.int64)
-    grid[pdf["row"].to_numpy(), pdf["col"].to_numpy()] = pdf["cnt"].to_numpy()
+    grid[cells.column("row").to_numpy(), cells.column("col").to_numpy()] = (
+        cells.column("cnt").to_numpy()
+    )
     return encode_varints_msb(grid.ravel().tolist())
 
 
@@ -163,7 +163,8 @@ def heat_map_bands(
     the byte dump LOOK complete while under-counting; "drop" restores the
     old filter semantics for callers that crop a larger grid on purpose.
     """
-    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
     from osm_pbf_convert_spark.codecs import encode_varints_msb_np
 
@@ -192,27 +193,29 @@ def heat_map_bands(
     if on_out_of_range == "error":
         full = full.unionByName(cells.filter(F.col("band") == -1))
 
-    def encode_band(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
+    out_schema = pa.schema([("band", pa.int32()), ("n_bytes", pa.int64()),
+                            ("data", pa.binary())])
 
-        band = int(pdf["band"].iloc[0])
+    def encode_band(tbl: pa.Table) -> pa.Table:
+        band = tbl.column("band")[0].as_py()
         if band < 0:
-            bad = pdf[["row", "col"]].head(3).to_dict("records")
+            bad = tbl.select(["row", "col"]).slice(0, 3).to_pylist()
             raise ValueError(
-                f"heat_map_bands: {len(pdf)} cell(s) outside [0,{rows})x[0,{cols}), "
+                f"heat_map_bands: {tbl.num_rows} cell(s) outside [0,{rows})x[0,{cols}), "
                 f"e.g. {bad}; pass on_out_of_range='drop' to crop"
             )
         grid = np.zeros((band_rows, cols), dtype=np.int64)
-        hit = pdf.dropna(subset=["row"])
-        if len(hit):
-            r = hit["row"].to_numpy(np.int64) - band * band_rows
-            grid[r, hit["col"].to_numpy(np.int64)] = hit["cnt"].to_numpy(np.int64)
+        hit = tbl.filter(pc.is_valid(tbl.column("row")))
+        if hit.num_rows:
+            r, c, n = (hit.column(k).to_numpy().astype(np.int64) for k in ("row", "col", "cnt"))
+            grid[r - band * band_rows, c] = n
         data = encode_varints_msb_np(grid.ravel())
-        return pd.DataFrame({"band": [band], "n_bytes": [len(data)], "data": [data]})
+        return pa.table({"band": [band], "n_bytes": [len(data)], "data": [data]},
+                        schema=out_schema)
 
     # range-partitioned by band, so the grouped output comes back in
     # band order (the sink streams it without another sort)
-    return full.repartitionByRange(n_bands, "band").groupBy("band").applyInPandas(
+    return full.repartitionByRange(n_bands, "band").groupBy("band").applyInArrow(
         encode_band, schema="band int, n_bytes long, data binary"
     )
 

@@ -208,14 +208,17 @@ def way_segments(ways_resolved: DataFrame, num_chunks: int | None = None) -> Dat
             tail_blob, tail_lens = _interleave(
                 [(fixed.ravel(), np.full(ids.size, 8, dtype=np.int64)), (zz_blob, zz_lens)]
             )
+            # arrays ship as raw little-endian int64 buffers, as in the
+            # node store: the driver np.frombuffer's them
             yield pa.RecordBatch.from_pydict(
                 {
                     "first_id": [int(ids[0])],
-                    "ids": [ids],
-                    "way_lens": [way_lens.astype(np.int64)],
+                    "ids": [ids.astype("<i8").tobytes()],
+                    "way_lens": [way_lens.astype("<i8").tobytes()],
                     "blob": [blob],
-                    "id_blob": [id_blob], "id_lens": [id_lens.astype(np.int32)],
-                    "tail_blob": [tail_blob.tobytes()], "tail_lens": [tail_lens.astype(np.int32)],
+                    "id_blob": [id_blob], "id_lens": [id_lens.astype("<i8").tobytes()],
+                    "tail_blob": [tail_blob.tobytes()],
+                    "tail_lens": [tail_lens.astype("<i8").tobytes()],
                     "fresh": [fresh],
                 }
             )
@@ -224,9 +227,9 @@ def way_segments(ways_resolved: DataFrame, num_chunks: int | None = None) -> Dat
 
     return df.mapInArrow(
         encode,
-        schema="first_id long, ids array<long>, way_lens array<long>, blob binary, "
-               "id_blob binary, id_lens array<int>, tail_blob binary, "
-               "tail_lens array<int>, fresh boolean",
+        schema="first_id long, ids binary, way_lens binary, blob binary, "
+               "id_blob binary, id_lens binary, tail_blob binary, "
+               "tail_lens binary, fresh boolean",
     )
 
 
@@ -268,8 +271,8 @@ def write_ways_file(
         way_segments(ways_resolved, num_chunks), "first_id", out_file, out_file + ".idx"
     ) as (rows, (dat_out, idx_out)):
         for row in rows:
-            ids = np.asarray(row["ids"], dtype=np.int64)
-            way_lens = np.asarray(row["way_lens"], dtype=np.int64)
+            ids = np.frombuffer(row["ids"], dtype="<i8")
+            way_lens = np.frombuffer(row["way_lens"], dtype="<i8")
             blob = bytes(row["blob"])
             if seen and ids[0] <= prev_id:
                 raise ValueError("way ids must be globally unique ascending")
@@ -288,11 +291,11 @@ def write_ways_file(
             off_lens = varint_lengths(offs)
             info, _ = _interleave(
                 [
-                    (np.frombuffer(bytes(row["id_blob"]), dtype=np.uint8),
-                     np.asarray(row["id_lens"], dtype=np.int64)),
+                    (np.frombuffer(row["id_blob"], dtype=np.uint8),
+                     np.frombuffer(row["id_lens"], dtype="<i8")),
                     (off_blob, off_lens),
-                    (np.frombuffer(bytes(row["tail_blob"]), dtype=np.uint8),
-                     np.asarray(row["tail_lens"], dtype=np.int64)),
+                    (np.frombuffer(row["tail_blob"], dtype=np.uint8),
+                     np.frombuffer(row["tail_lens"], dtype="<i8")),
                 ]
             )
             dat_out.write(blob)

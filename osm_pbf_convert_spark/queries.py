@@ -1384,8 +1384,8 @@ FROM sig GROUP BY simhash HAVING COUNT(*) > 1
 
 
 def q_simhash_pairs_stream(spark, sf_dir):
-    """The VERIFIED streaming dedup surface (streaming/dedup.py):
-    applyInPandasWithState carries (id, signature) in the bucket state
+    """The VERIFIED streaming dedup surface (streaming/dedup.py): its
+    stateful grouped map carries (id, signature) in the bucket state
     and emits only popcount-verified pairs -- the stream's output is
     final pairs, not candidates. availableNow replay under the RocksDB
     state store (the production provider); the oracle replays the full
@@ -1668,15 +1668,13 @@ def q_ivf_topk(spark, sf_dir):
     a DuckDB oracle can replay cell assignment + probing exactly. The
     k-means-trained production path (train_centroids) is exercised by the
     recall-bound pytest; the probe machinery (broadcast centroid matrix,
-    pandas_udf argmin assignment, nprobe cell join, exact in-cell cosine)
+    Arrow UDF argmin assignment, nprobe cell join, exact in-cell cosine)
     is identical here."""
-    import numpy as _np
     import pyarrow.parquet as _pq
 
-    t = _pq.read_table(f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"])
-    pdf = t.to_pandas()
-    pdf = pdf[pdf["vec_id"] < 8].sort_values("vec_id")
-    cents = _np.asarray(pdf["embedding"].tolist(), dtype=_np.float64)
+    t = _pq.read_table(f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"],
+                       filters=[("vec_id", "<", 8)]).sort_by("vec_id")
+    cents = similarity._vector_matrix(t.column("embedding").combine_chunks())
 
     emb = _t(spark, sf_dir, "embeddings")
     qs = emb.filter(F.col("vec_id") < 3).select(

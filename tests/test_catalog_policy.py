@@ -175,3 +175,35 @@ def test_no_test_only_public_surface():
     unjustified = {name for name in TEST_ONLY_ALLOWED
                    if "Kept" not in (ast.get_docstring(defs[name]) or "")}
     assert unjustified == set(), "allowed oracles need a 'Kept ...' docstring line"
+
+
+# The one module still on pandas: the stateful streaming dedup stage,
+# whose per-key grouped map is to be replaced, not ported.
+PANDAS_ALLOWED = {"streaming/dedup.py"}
+
+_PANDAS_PATTERNS = (
+    r"^\s*(import pandas\b|from pandas\b)",
+    r"mapInPandas", r"applyInPandas", r"pandas_udf", r"\.toPandas\(",
+)
+
+
+def test_python_boundary_is_arrow_only():
+    """Every batch stage crosses the Python boundary as Arrow: no package
+    module but ``PANDAS_ALLOWED`` imports pandas (at module level or
+    lazily) or uses ``mapInPandas``, ``applyInPandas``, ``pandas_udf`` or
+    ``toPandas``."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "osm_pbf_convert_spark"
+    bad = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        if rel in PANDAS_ALLOWED:
+            continue
+        src = path.read_text()
+        for pat in _PANDAS_PATTERNS:
+            for m in re.finditer(pat, src, flags=re.MULTILINE):
+                bad.append(f"{rel}:{src[:m.start()].count(chr(10)) + 1}: {m.group(0).strip()}")
+    assert bad == [], "pandas at the Python boundary"
+    assert all((pkg / rel).exists() for rel in PANDAS_ALLOWED), "stale allowlist entry"

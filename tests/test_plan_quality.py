@@ -13,7 +13,7 @@ PKG = os.path.join(os.path.dirname(__file__), "..", "osm_pbf_convert_spark")
 class TestNoSlowPath:
     def test_no_rdd_no_row_udf(self):
         """The engine must never drop to RDDs or row-at-a-time Python UDFs
-        (SURVEY.md §7 hard parts). pandas_udf / mapInArrow / mapInPandas
+        (SURVEY.md §7 hard parts). arrow_udf / mapInArrow / applyInArrow
         are the sanctioned vectorized escape hatches.
 
         collect() exemptions, each a bounded metadata collect (never
@@ -153,7 +153,7 @@ class TestPlanShape:
 
     def test_heat_band_sink_no_driver_collect(self, spark):
         """heat_map_bands encodes on executors: the plan is a grouped
-        Python (FlatMapGroupsInPandas) stage, not a driver-side toPandas."""
+        Arrow (FlatMapGroupsInArrow) stage, not a driver-side collect."""
         from osm_pbf_convert_spark.operators.tiling import heat_map_bands
 
         counts = spark.createDataFrame(
@@ -161,7 +161,17 @@ class TestPlanShape:
         )
         df = heat_map_bands(counts, rows=64, cols=64, band_rows=16)
         plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "FlatMapGroupsInPandas" in plan
+        assert "FlatMapGroupsInArrow" in plan
+
+    def test_text_signature_passes_are_map_in_arrow(self, spark):
+        """simhash_signatures and fingerprint cross the Python boundary
+        as one mapInArrow pass each."""
+        from osm_pbf_convert_spark.operators import dedup, text
+
+        df = spark.createDataFrame([(1, "a b c")], "doc_id bigint, text string")
+        for out in (dedup.simhash_signatures(df), text.fingerprint(df)):
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            assert "MapInArrow" in plan
 
     def test_pyramid_single_scan_rollup_from_finest(self, spark, sf_dir):
         """tile_pyramid scans the input ONCE, aggregates at the finest

@@ -4,7 +4,7 @@ the Spark-side parity of the SimHash, MinHash and fingerprint operators. These a
 truth the DuckDB ``*_rolling`` oracle replays are generated against."""
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 import pytest
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
@@ -44,7 +44,7 @@ def ref_all_window_hashes(text, k: int) -> list[int]:
 TEXTS = st.lists(
     st.one_of(
         st.none(),
-        st.text(alphabet=st.sampled_from("ab AB\n\u00e9\u20ac\U0001f600\u0130"),
+        st.text(alphabet=st.sampled_from("ab AB\n\u00e9\u20ac\U0001f600\u0130\u03a3"),
                 max_size=40),
     ),
     max_size=10,
@@ -81,6 +81,49 @@ def ref_token_hashes(text: str) -> list[int]:
     return out
 
 
+# texts whose lower-cased bytes Arrow's utf8_lower gets wrong: U+0130
+# (Python gives "i" + U+0307) and the Greek final sigma
+LOWER_PINS = ["\u0130", "\u039f\u0394\u039f\u03a3", None, "", "\u03a3\u0391\u03a3 x.",
+              "Stra\u00dfe \u01c5", "MiXeD ascii"]
+
+
+def expected_lowered(texts):
+    raw = [(t or "").lower().encode("utf-8") for t in texts]
+    return b"".join(raw), [len(r) for r in raw]
+
+
+class TestLoweredUtf8:
+    """The front end's bytes are exactly ``str.lower().encode()``."""
+
+    @pytest.mark.parametrize("typ", [pa.string(), pa.large_string()])
+    def test_pinned_cases(self, typ):
+        buf, lens = rolling._lowered_utf8(pa.array(LOWER_PINS, typ))
+        exp, exp_lens = expected_lowered(LOWER_PINS)
+        assert buf.tobytes() == exp and lens.tolist() == exp_lens
+        assert exp.startswith("i\u0307".encode())
+        assert "\u03bf\u03b4\u03bf\u03c2".encode() in exp  # final sigma
+
+    @pytest.mark.parametrize("typ", [pa.string(), pa.large_string()])
+    @pytest.mark.parametrize("texts", [LOWER_PINS, ["ASCII", "ONLY", None, ""]])
+    def test_sliced_array(self, typ, texts):
+        arr = pa.array(["PREFIX \u00c4"] + texts + ["SUFFIX"], typ).slice(1, len(texts))
+        assert arr.offset == 1
+        buf, lens = rolling._lowered_utf8(arr)
+        exp, exp_lens = expected_lowered(texts)
+        assert buf.tobytes() == exp and lens.tolist() == exp_lens
+
+    def test_front_ends_on_sliced_large_string(self):
+        texts = ["Ab \u0130", "\u039f\u0394\u039f\u03a3 x", None]
+        arr = pa.array(["ZZ"] + texts, pa.large_string()).slice(1)
+        # a 1-byte window's hash is the byte itself
+        flat, off = rolling.batch_window_hashes(arr, 1)
+        exp, exp_lens = expected_lowered(texts)
+        assert flat.astype(np.uint8).tobytes() == exp
+        assert np.diff(off).tolist() == exp_lens
+        flat, off = rolling.batch_token_hash_segments(arr)
+        assert flat.tolist() == [h for t in texts for h in ref_token_hashes(t or "")]
+
+
 class TestWindowSegments:
     @given(st.lists(st.text(alphabet=st.characters(codec="utf-8"), max_size=40),
                     max_size=12),
@@ -88,7 +131,7 @@ class TestWindowSegments:
     @example(EDGE_TEXTS, 8)
     @settings(max_examples=60, deadline=None)
     def test_matches_bruteforce(self, texts, k):
-        flat, off = rolling.batch_window_hash_segments(pd.Series(texts), k)
+        flat, off = rolling.batch_window_hash_segments(pa.array(texts, pa.string()), k)
         assert off.size == len(texts) + 1 and off[-1] == flat.size
         for i, t in enumerate(texts):
             got = flat[off[i]:off[i + 1]]
@@ -97,7 +140,7 @@ class TestWindowSegments:
     def test_boundary_windows_never_cross_docs(self):
         # "abcde"+"fghij" concatenated must NOT hash the "defg" window
         flat, off = rolling.batch_window_hash_segments(
-            pd.Series(["abcde", "fghij"]), 4)
+            pa.array(["abcde", "fghij"], pa.string()), 4)
         joined = set(ref_window_hashes("abcdefghij", 4))
         per_doc = set(flat)
         crossing = joined - set(ref_window_hashes("abcde", 4)) - set(
@@ -106,7 +149,7 @@ class TestWindowSegments:
 
     def test_empty_and_short_rows(self):
         flat, off = rolling.batch_window_hash_segments(
-            pd.Series(["", "ab", None, "abcdef"]), 3)
+            pa.array(["", "ab", None, "abcdef"], pa.string()), 3)
         assert list(np.diff(off)[:3]) == [0, 0, 0]
         assert off[4] - off[3] == 4  # 4 distinct 3-grams in "abcdef"
 
@@ -118,13 +161,13 @@ class TestWindowHashes:
     @given(TEXTS, st.integers(min_value=1, max_value=6))
     @settings(max_examples=80, deadline=None)
     def test_matches_bruteforce(self, texts, k):
-        flat, off = rolling.batch_window_hashes(pd.Series(texts, dtype=object), k)
+        flat, off = rolling.batch_window_hashes(pa.array(texts, pa.string()), k)
         assert off.size == len(texts) + 1 and off[-1] == flat.size
         for i, t in enumerate(texts):
             assert flat[off[i]:off[i + 1]].tolist() == ref_all_window_hashes(t, k), (i, t)
 
     def test_keeps_repeats_and_never_crosses_docs(self):
-        flat, off = rolling.batch_window_hashes(pd.Series(["aaaaa", "bbb", "ab"]), 3)
+        flat, off = rolling.batch_window_hashes(pa.array(["aaaaa", "bbb", "ab"], pa.string()), 3)
         assert np.diff(off).tolist() == [3, 1, 0]
         aaa, bbb = ref_all_window_hashes("aaa", 3)[0], ref_all_window_hashes("bbb", 3)[0]
         # "aaaaa"+"bbb" would add "aab" and "abb" if windows crossed
@@ -168,10 +211,10 @@ class TestSegmentAffineMin:
         """Minima over the duplicates-kept windows equal the minima over
         each doc's window SET, i.e. the sort-unique path's signatures."""
         A, B = rolling.affine_family(num_hashes)
-        series = pd.Series(texts, dtype=object)
-        got = rolling.segment_affine_min(*rolling.batch_window_hashes(series, k), A, B)
+        arr = pa.array(texts, pa.string())
+        got = rolling.segment_affine_min(*rolling.batch_window_hashes(arr, k), A, B)
         dedup = rolling.segment_affine_min(
-            *rolling.batch_window_hash_segments(series, k), A, B)
+            *rolling.batch_window_hash_segments(arr, k), A, B)
         assert (got == dedup).all()
         for i, t in enumerate(texts):
             exp = ref_minhash(t, k, A, B)
@@ -215,20 +258,20 @@ class TestTokenHashes:
         max_size=10))
     @settings(max_examples=60, deadline=None)
     def test_matches_bruteforce(self, texts):
-        flat, off = rolling.batch_token_hash_segments(pd.Series(texts))
+        flat, off = rolling.batch_token_hash_segments(pa.array(texts, pa.string()))
         for i, t in enumerate(texts):
             assert flat[off[i]:off[i + 1]].tolist() == ref_token_hashes(t), (i, t)
 
     def test_tokens_never_merge_across_docs(self):
         # no trailing whitespace: "ab"+"cd" must stay two tokens
-        flat, off = rolling.batch_token_hash_segments(pd.Series(["ab", "cd"]))
+        flat, off = rolling.batch_token_hash_segments(pa.array(["ab", "cd"], pa.string()))
         assert np.diff(off).tolist() == [1, 1]
         assert flat.tolist() == [ref_token_hashes("ab")[0], ref_token_hashes("cd")[0]]
 
     def test_long_token_chunking(self):
         # a token longer than the gather budget exercises the chunked path
         big = "x" * 300000
-        flat, off = rolling.batch_token_hash_segments(pd.Series([big, "x"]))
+        flat, off = rolling.batch_token_hash_segments(pa.array([big, "x"], pa.string()))
         assert np.diff(off).tolist() == [1, 1]
         h = 0
         for _ in range(300000):
@@ -263,7 +306,7 @@ class TestBitMajority:
         """Rolling SimHash of raw texts (None, empty, whitespace-only,
         repeated and multi-byte tokens) against the pure-Python
         token-hash majority."""
-        flat, off = rolling.batch_token_hash_segments(pd.Series(texts, dtype=object))
+        flat, off = rolling.batch_token_hash_segments(pa.array(texts, pa.string()))
         got = rolling.segment_bit_majority(flat, off)
         for i, t in enumerate(texts):
             toks = ref_token_hashes(t or "")

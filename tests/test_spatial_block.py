@@ -308,7 +308,7 @@ class TestDistributedSink:
         )
         df = spatial_block_blobs(nodes=ndf, z=3)
         plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "FlatMapGroupsInPandas" in plan or "MapGroups" in plan
+        assert "FlatMapGroupsInArrow" in plan
         assert df.count() == 1
 
 

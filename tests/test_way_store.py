@@ -140,4 +140,5 @@ class TestDistributedSink:
         plan = seg._jdf.queryExecution().executedPlan().toString()
         assert "MapInArrow" in plan
         rows = seg.collect()
-        assert sum(len(r["ids"]) for r in rows) == 200
+        # ids ship as raw little-endian int64 buffers (8 bytes per id)
+        assert sum(len(r["ids"]) // 8 for r in rows) == 200
