@@ -560,6 +560,35 @@ class TestCheckpoint:
         assert sorted(lineage["partition_id"]) == [0, 1, 2, 3]
         assert lineage["n_rows"].tolist() == [10, 10, 10, 10]
 
+    def test_readback_lists_only_pending_directories(self, spark, tmp_path, monkeypatch):
+        """The lineage read-back is rooted at the pending partition
+        directories (with ``basePath``), so its file index holds no file of
+        a committed one; with nothing pending the sink is not read at all."""
+        from pyspark.sql.readwriter import DataFrameReader
+
+        table = CheckpointTable(str(tmp_path / "ckpt8"))
+        sink = str(tmp_path / "out8")
+        reads, parquet = [], DataFrameReader.parquet
+
+        def spy(self, *paths, **options):
+            df = parquet(self, *paths, **options)
+            if any("out8" in str(p) for p in paths):  # the sink, not the table
+                reads.append(df)
+            return df
+
+        monkeypatch.setattr(DataFrameReader, "parquet", spy)
+        df = spark.range(40).withColumn("partition_id", F.pmod("id", F.lit(4)))
+        assert run_with_checkpoint(spark, df.filter("partition_id < 2"), lambda p: p,
+                                   sink, table, "job8") == 2
+        assert run_with_checkpoint(spark, df, lambda p: p, sink, table, "job8") == 2
+        files = reads[-1].inputFiles()
+        assert files and all("/partition_id=0/" not in f and "/partition_id=1/" not in f
+                             for f in files)
+        assert {r[0] for r in reads[-1].select("partition_id").distinct().collect()} == {2, 3}
+        n_reads = len(reads)
+        assert run_with_checkpoint(spark, df, lambda p: p, sink, table, "job8") == 0
+        assert len(reads) == n_reads
+
     def test_null_partition_ids_stay_pending(self, spark, tmp_path):
         """A null partition_id never counts as committed (the anti-join
         semantics): its rows are re-processed, replaced and re-counted on
